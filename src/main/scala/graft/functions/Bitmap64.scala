@@ -23,7 +23,7 @@ import org.apache.spark.sql.types._
   * delta varints] — ~1-2 bytes per clustered id (the deletion-vector
   * encoding lesson) and DETERMINISTIC: equal sets produce equal bytes at
   * any merge order, which is what makes the merge-engine fold and the
-  * window formulation emit identical column values. */
+  * rbmMerge aggregate emit identical column values. */
 object Bitmap64 {
   import org.apache.spark.sql.graft.Bridge.{column, expression}
 

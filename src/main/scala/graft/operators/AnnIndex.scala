@@ -118,7 +118,9 @@ object AnnIndex {
     // the merged count equals the manifest's per-file row counts —
     // driver-side metadata, no count job. (refresh() cannot use this:
     // its upserts overwrite existing keys, so it keeps the merged count.)
-    val n = aT.currentFiles(None).flatMap(_.rowCountOpt).sum
+    val n = aT.currentFiles(None).map(f => f.rowCountOpt.getOrElse(
+      throw new IllegalStateException(
+        s"assignment file ${f.path} carries no row count; the trained-on size needs one"))).sum
     aT.setOptions(Map(SnapshotProp -> snap.toString, TrainedOnProp -> n.toString))
   }
 

@@ -76,9 +76,7 @@ object ManifestEntry {
   * with millions of live files committable (Paimon/Iceberg's
   * manifest-list design; the reference reads the same structure through
   * Paimon's FileStoreScan). The chain folds into a single base manifest
-  * once it exceeds `manifest.merge-min-count` (amortized O(1) commits).
-  * `files` is the legacy inline list of pre-manifest-list snapshots,
-  * still readable. */
+  * once it exceeds `manifest.merge-min-count` (amortized O(1) commits). */
 final case class SnapshotMeta(
     id: Long,
     commitUser: String,
@@ -86,7 +84,6 @@ final case class SnapshotMeta(
     commitKind: String, // APPEND | OVERWRITE | COMPACT
     schemaId: Long,
     timestampMs: Long,
-    files: Seq[FileMeta] = null, // legacy inline manifest
     manifests: Seq[String] = null, // ordered manifest chain under manifest/
     // S48 dynamic bucket mode: ordered chain of key-hash→bucket
     // assignment delta directories under index/ (first assignment wins;
@@ -153,12 +150,14 @@ final case class ConsumerMeta(consumerId: String, nextSnapshot: Long, updateTime
   * PrestoSessionProperties.java:39 `scan_version`) Spark-first: the scan
   * is a plain vectorized parquet read of the pruned live-file list, so
   * Catalyst keeps predicate pushdown / column pruning / whole-stage
-  * codegen; merge-on-read is a declarative window dedup, not a row-merge
-  * loop like the reference's PrestoPageSourceBase.
+  * codegen; merge-on-read happens inside the scan's per-bucket reader
+  * (GraftMorReaderFactory) instead of behind a connector page source like
+  * the reference's PrestoPageSourceBase.
   *
   * Layout under `root`:
   *   schema/schema-<id>.json   table schema + keys + options
-  *   snapshot/snap-<id>.json   full live file list at version <id>
+  *   snapshot/snap-<id>.json   manifest chain of version <id>
+  *   manifest/<name>           ADD/DELETE file entries of one commit
   *   data/<k=v dirs>/<snap>-<bucket>-<uuid>.parquet
   *
   * PK tables carry hidden columns `__seq` (commit sequence = snapshot id)
@@ -541,9 +540,7 @@ class GraftTable private (
     catch { case scala.util.control.NonFatal(_) => None }
 
   private[sources] def filesOf(snap: SnapshotMeta): Seq[FileMeta] =
-    filesCache.getOrElseUpdate(snap.id,
-      if (snap.files != null) snap.files
-      else resolveChain(Option(snap.manifests).getOrElse(Seq.empty)))
+    filesCache.getOrElseUpdate(snap.id, resolveChain(manifestsOf(snap)))
 
   private def manifestsOf(snap: SnapshotMeta): Seq[String] =
     Option(snap.manifests).getOrElse(Seq.empty)
@@ -696,17 +693,7 @@ class GraftTable private (
     try {
       val baseChain: Seq[String] =
         if (rebase || id <= 1) Seq.empty
-        else {
-          val base = baseStrict
-          // check `files` FIRST: jackson materializes an ABSENT manifests
-          // field as an empty List (not null), so a legacy inline snapshot
-          // must be detected by its files, or migration silently drops them
-          if (base.files != null)
-            if (base.files.isEmpty) Seq.empty
-            // legacy inline snapshot: migrate its file list into one manifest
-            else Seq(writeManifest(base.files.map(ManifestEntry(ManifestEntry.Add, _))))
-          else Option(base.manifests).getOrElse(Seq.empty)
-        }
+        else manifestsOf(baseStrict)
       // S64 row-id assignment: allocate [nextRowId, nextRowId + rows) to
       // this commit's fresh files (re-adds — rollback — keep their
       // original ranges; ids are never reused) and stamp the committing
@@ -1373,17 +1360,11 @@ class GraftTable private (
       .groupBy(f => (f.partition, f.bucket)).values
       .filter(_.size >= trigger).toSeq.flatten
     if (triggered.isEmpty) return None
-    val paths = triggered.map(f => s"${root.stripSuffix("/")}/${f.path}")
-    val raw = spark.read
-      .option("basePath", s"${root.stripSuffix("/")}/data")
-      .schema(fileSchema)
-      .format(fileFormat).load(paths: _*)
-    // merging all triggered groups in one pass is sound: keys never
-    // cross groups, so the keyed fold touches exactly one group's rows.
+    // the V2 scan over exactly the triggered files folds each group in
+    // its own task; keys never cross groups, so every fold is complete.
     // S56: the rewrite also sheds this group's expired rows (dropping a
     // key's FOLDED newest version is exact — all its versions live here)
-    val merged = recordExpire(
-      mergeVersions(raw).select(schema.fieldNames.map(col).toSeq: _*))
+    val merged = recordExpire(scanV2(Some(base), Some(triggered)))
     val added = stageWrite(merged, rowKind = RowKind.Insert, seq = base + 1)
     Some(commitOrClean(base + 1, "COMPACT",
       added.files.map(_.copy(compacted = java.lang.Boolean.TRUE)),
@@ -2062,7 +2043,10 @@ class GraftTable private (
     val ord =
       if (sequenceFields.nonEmpty) sequenceFields.map(c => col(c).desc)
       else {
-        val orderable = df.schema.fields
+        // table-schema order, NOT the batch's column order: the winner
+        // must not depend on how the caller ordered its columns, and
+        // stageWrite's writer-side dedup (versionOrder) uses this order
+        val orderable = schema.fields
           .filter(f => !primaryKeys.contains(f.name) && RowOrdering.isOrderable(f.dataType))
           .map(f => col(f.name).desc).toSeq
         if (orderable.nonEmpty) orderable else Seq(lit(1).desc)
@@ -2102,11 +2086,15 @@ class GraftTable private (
     rel
   }
 
-  /** Resolved key-hash→bucket assignments of an index chain. The chain
-    * is append-only by protocol (a writer only emits keys absent from
-    * the base index), so duplicates exist only transiently around a
-    * fold; first-wins in chain order keeps resolution deterministic
-    * either way. */
+  /** Resolved key-hash→bucket assignments of an index chain. In
+    * per-partition mode the entries are pairwise DISJOINT by protocol: a
+    * writer's delta holds only keys absent from the resolved chain it
+    * was written against (the minting left_anti), and a commit-time fold
+    * replaces exactly the inherited prefix those deltas were disjoint
+    * from — so a plain union is the resolution, with no dedup. Nothing
+    * checks that disjointness at run time; a writer that broke it would
+    * resolve a key to two buckets. Cross-partition mode is not disjoint
+    * (a key's entry moves with it) and resolves latest-wins. */
   private def resolveIndexChain(chain: Seq[String]): DataFrame = {
     if (chain.isEmpty)
       // a LOCAL empty relation, not an emptyRDD-backed one: Catalyst's
@@ -2123,13 +2111,8 @@ class GraftTable private (
     if (chain.length == 1)
       return spark.read.schema(IdxSchema).parquet(s"$root/${chain.head}")
         .select("part", "kh", "bucket")
-    // Per-partition mode: chain entries are pairwise DISJOINT by
-    // protocol — a delta holds only keys absent from the resolved chain
-    // it was written against (the minting left_anti), and a commit-time
-    // fold replaces exactly the prefix those deltas were disjoint from —
-    // so first-wins dedup is a no-op and the union alone resolves the
-    // chain: no window, no per-key sort, at ANY chain length (r20; the
-    // window was a full shuffle of the whole key index per resolution).
+    // per-partition mode: disjoint entries (see above) — the union
+    // resolves the chain with no per-key sort, at ANY chain length
     if (!isCrossPartitionUpsert)
       return chain.map(p => spark.read.schema(IdxSchema).parquet(s"$root/$p"))
         .reduce(_ unionByName _)
@@ -3012,51 +2995,57 @@ class GraftTable private (
   }
 
   /** Read the table: latest (or time-travel) snapshot, manifest-pruned,
-    * merge-on-read for PK tables. The result is a plain parquet-backed
-    * DataFrame, so downstream filters/projections still push into the
-    * scan. PK tables route through the V2 scan, which merges inside each
-    * co-located (partition, bucket) split — zero Exchange in the plan;
-    * the legacy window-dedup path remains for bucket-targeted /
-    * skip-hinted reads (and as the general fallback). */
+    * merge-on-read for PK tables. PK tables (and dv-carrying append
+    * tables) read through the V2 scan, which merges versions inside each
+    * co-located (partition, bucket) split — zero Exchange in the plan; a
+    * `bucket`/`dataFilters` read plans its file set here and pins the
+    * scan to it. Other append tables read as plain parquet, so downstream
+    * filters/projections still push into the file scan. */
   def read(
       snapshotId: Option[Long] = None,
       partitionFilter: Option[Column] = None,
       bucket: Option[Int] = None,
       dataFilters: Seq[org.apache.spark.sql.sources.Filter] = Seq.empty): DataFrame = {
-    // V2 route: PK tables (per-bucket MOR merge inside the scan) and
-    // dv-carrying append tables (the scan masks sidecar positions
-    // per-file — see DvReaderFactory)
-    if (bucket.isEmpty && dataFilters.isEmpty &&
-        (isPkTable || currentFiles(snapshotId).exists(_.hasDv))) {
-      var reader = spark.read.format("graft")
-      snapshotId.foreach(id => reader = reader.option("snapshotId", id.toString))
-      // the V2 provider loads the ROOT table — a branch view must
-      // forward its ref or the scan would silently read main's log
-      branchName.foreach(b => reader = reader.option("branch", b))
-      var df = reader.load(root)
-      partitionFilter.foreach(f => df = df.filter(f))
-      return df
-    }
-    val files = planFiles(snapshotId, partitionFilter, bucket, dataFilters)
-    if (files.isEmpty)
-      return spark.createDataFrame(new java.util.ArrayList[Row](), schema)
-    val paths = files.map(f => s"${root.stripSuffix("/")}/${f.path}")
-    var raw = spark.read
-      .option("basePath", s"${root.stripSuffix("/")}/data")
-      .schema(fileSchema)
-      .format(fileFormat).load(paths: _*)
-    // rare fallback (bucket/dataFilters read of a dv table): mask deleted
-    // positions with an anti-join on (filename, row position) against the
-    // sidecars, read in a parallelized executor job — never collected
-    raw = maskByDv(raw, files.filter(_.hasDv))
-    var merged = if (isPkTable) mergeVersions(raw) else raw
+    val pruned = bucket.isDefined || dataFilters.nonEmpty
+    var df =
+      if (isPkTable || (!pruned && currentFiles(snapshotId).exists(_.hasDv)))
+        scanV2(snapshotId,
+          if (pruned) Some(planFiles(snapshotId, partitionFilter, bucket, dataFilters))
+          else None)
+      else {
+        val files = planFiles(snapshotId, partitionFilter, bucket, dataFilters)
+        if (files.isEmpty)
+          return spark.createDataFrame(new java.util.ArrayList[Row](), schema)
+        val paths = files.map(f => s"${root.stripSuffix("/")}/${f.path}")
+        val raw = spark.read
+          .option("basePath", s"${root.stripSuffix("/")}/data")
+          .schema(fileSchema)
+          .format(fileFormat).load(paths: _*)
+        // rare fallback (bucket/dataFilters read of a dv table): mask
+        // deleted positions with an anti-join on (filename, row position)
+        // against the sidecars, read in a parallelized executor job —
+        // never collected
+        maskByDv(raw, files.filter(_.hasDv)).select(schema.fieldNames.map(col).toSeq: _*)
+      }
     // POST-merge row filter keeps partitionFilter semantics exact even
     // when file-level pruning was skipped as version-unsafe (see
     // partitionPruneSafe); when pruning did apply this is a no-op the
-    // parquet reader absorbs
-    partitionFilter.foreach(f => merged = merged.filter(f))
-    merged.select(schema.fieldNames.map(col).toSeq: _*)
+    // reader absorbs
+    partitionFilter.foreach(f => df = df.filter(f))
+    df
   }
+
+  /** This table through the V2 scan ([[GraftScan]]) as a DataFrame —
+    * the one merge-on-read path: PK versions resolve in the per-bucket
+    * reader ([[GraftMorReaderFactory]]). `pinned` hands the scan a file
+    * set the caller already planned. */
+  private def scanV2(snapshotId: Option[Long], pinned: Option[Seq[FileMeta]]): DataFrame =
+    org.apache.spark.sql.graft.Bridge.v2Frame(spark,
+      new GraftV2Table(root, GraftTable.load(spark, root).schema, pinnedFiles = pinned),
+      // the V2 table loads the ROOT table — a branch view must forward
+      // its ref or the scan would silently read main's log
+      snapshotId.map(id => "snapshotId" -> id.toString).toMap ++
+        branchName.map(b => "branch" -> b))
 
   /** S60 read-optimized view (Paimon's `$ro` system table / ReadOptimized
     * Table): serve a PK table WITHOUT paying the merge-on-read by reading
@@ -3164,115 +3153,6 @@ class GraftTable private (
       .withColumn("__gpos", col("_metadata.row_index"))
       .join(dvPositionsDf(dvFiles), Seq("__gfile", "__gpos"), "left_anti")
       .drop("__gfile", "__gpos")
-  }
-
-  /** Resolve multiple row versions per primary key according to the
-    * table's merge-engine — the declarative window formulation of the
-    * fold (one keyed shuffle; the V2 scan performs the same fold inside
-    * the per-bucket reader, so SQL reads never shuffle a bucketed table).
-    * Input is the raw file rows including the hidden __seq/__kind. */
-  private[sources] def mergeVersions(raw: DataFrame): DataFrame = {
-    val pk = primaryKeys.map(col)
-    val seqAsc = (sequenceFields :+ SeqCol).map(c => col(c).asc)
-    val seqDesc = (sequenceFields :+ SeqCol).map(c => col(c).desc)
-    // -U pre-images are changelog markers, not row versions
-    val live = raw.filter(col(KindCol) =!= RowKind.UpdateBefore)
-    def winnerByOrder(ord: Seq[Column]): DataFrame = {
-      val w = Window.partitionBy(pk: _*).orderBy(ord: _*)
-      live.withColumn("__rn", row_number().over(w))
-        .filter(col("__rn") === 1 && col(KindCol) =!= RowKind.Delete)
-        .drop("__rn", SeqCol, KindCol)
-    }
-    mergeEngine match {
-      case "deduplicate" =>
-        // equal-sequence tiebreak: a row version outranks a delete. The
-        // only same-key same-seq pair any write path produces is a
-        // cross-partition MOVE (S61: tombstone + row in one commit) —
-        // semantically delete-then-insert, so the row wins. (The V2
-        // bucket-local folds never see the pair together: the two rows
-        // live in different groups by construction.)
-        winnerByOrder(seqDesc :+
-          when(col(KindCol) === RowKind.Delete, 0).otherwise(1).desc)
-      case "first-row" => winnerByOrder(seqAsc)
-      case engine => // partial-update | aggregation
-        val seqStruct = struct((sequenceFields :+ SeqCol).map(col): _*)
-        val wKey = Window.partitionBy(pk: _*)
-        // a -D RESETS the key: only versions after the latest delete fold
-        val alive = live
-          .withColumn("__del",
-            max(when(col(KindCol) === RowKind.Delete, seqStruct)).over(wKey))
-          .filter(col("__del").isNull || seqStruct > col("__del"))
-          .drop("__del")
-        val wAsc = Window.partitionBy(pk: _*).orderBy(seqAsc: _*)
-          .rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
-        val wDesc = Window.partitionBy(pk: _*).orderBy(seqDesc: _*)
-          .rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
-        val wRn = Window.partitionBy(pk: _*).orderBy(seqDesc: _*)
-        // S49 sequence groups: replicate foldAscending's per-row accept
-        // decision exactly — processing versions in ascending global
-        // order, a row updates group g's columns iff no non-null g was
-        // seen on an earlier row, or its g is non-null and >= the running
-        // max of earlier g values. A REJECTED (stale-group-seq) row
-        // contributes NOTHING for the group's columns — masked to null
-        // here so a late-committed stale row can't resurrect a value the
-        // newest group row set to null (ADVICE r10).
-        val colGroups = if (engine == "partial-update") columnSequenceGroup else Map.empty[String, String]
-        val wPrior = Window.partitionBy(pk: _*).orderBy(seqAsc: _*)
-          .rowsBetween(Window.unboundedPreceding, -1)
-        val aliveMasked = colGroups.foldLeft(alive) { case (df, (c, g)) =>
-          val priorMax = max(col(g)).over(wPrior)
-          val accepted = priorMax.isNull || (col(g).isNotNull && col(g) >= priorMax)
-          df.withColumn(s"__grp_$c", when(accepted, col(c)))
-        }
-        def folded(c: String): Column = {
-          if (colGroups.contains(c))
-            return first(col(s"__grp_$c"), ignoreNulls = true).over(wDesc)
-              .cast(schema(schema.fieldIndex(c)).dataType).as(c)
-          val fn =
-            if (engine == "partial-update") "last_non_null_value"
-            else fieldAggregates.getOrElse(c, "last_non_null_value")
-          val f = fn match {
-            case "sum" => sum(col(c)).over(wKey)
-            case "min" => min(col(c)).over(wKey)
-            case "max" => max(col(c)).over(wKey)
-            // XOR-fold (T30 checksum maintenance): commutative,
-            // associative AND self-inverse — re-applying a row's value
-            // RETRACTS it, so a CDC relay can maintain a live content
-            // checksum under inserts and deletes with +I rows alone
-            case "bit_xor" => call_function("bit_xor", col(c)).over(wKey)
-            case "bool_and" => min(col(c)).over(wKey) // false < true
-            case "bool_or" => max(col(c)).over(wKey)
-            case "listagg" => array_join(collect_list(col(c)).over(wAsc), ",")
-            case "first_value" => first(col(c), ignoreNulls = false).over(wAsc)
-            case "first_non_null_value" => first(col(c), ignoreNulls = true).over(wAsc)
-            case "last_value" => first(col(c), ignoreNulls = false).over(wDesc)
-            case "last_non_null_value" => first(col(c), ignoreNulls = true).over(wDesc)
-            // product computes via Spark's double aggregate and the cast
-            // below restores the declared type (exact within the
-            // double-exact range; overflow undefined, as in the fold)
-            case "product" => product(col(c)).over(wKey)
-            case "collect" => flatten(collect_list(col(c)).over(wAsc))
-            // sketch columns merge through the L63 aggregates; the wAsc
-            // frame feeds versions in ascending order — the same left
-            // fold as the V2 path, so the bytes come out identical
-            case "kmv_merge" => graft.functions.SketchState.kmvMerge(col(c)).over(wAsc)
-            case "kll_merge" => graft.functions.SketchState.kllMerge(col(c)).over(wAsc)
-            case "mg_merge" => graft.functions.SketchState.mgMerge(col(c)).over(wAsc)
-            // S26d exact id-set union (order-insensitive: equal sets
-            // serialize to equal bytes, so frame order is immaterial)
-            case "rbm64_merge" => graft.functions.Bitmap64.rbmMerge(col(c)).over(wAsc)
-            case other => throw new IllegalArgumentException(
-              s"unsupported aggregate-function for $c: $other")
-          }
-          // keep the DECLARED type (Spark's sum widens int -> long;
-          // Paimon's aggregation engine preserves the field type)
-          f.cast(schema(schema.fieldIndex(c)).dataType).as(c)
-        }
-        val nonKey = schema.fieldNames.toSeq.filterNot(primaryKeys.contains)
-        aliveMasked
-          .select(pk ++ nonKey.map(folded) :+ row_number().over(wRn).as("__rn"): _*)
-          .filter(col("__rn") === 1).drop("__rn")
-    }
   }
 
   /** The schema of changelog-shaped outputs (auditLog, changelog

@@ -34,7 +34,10 @@ import java.util.OptionalLong
   */
 final class GraftV2Table(
     path: String, tableSchema: StructType, writeOptions: Map[String, String] = Map.empty,
-    identName: Option[String] = None, pinnedSnapshot: Option[Long] = None)
+    identName: Option[String] = None, pinnedSnapshot: Option[Long] = None,
+    // library reads that already planned their file set (bucket- or
+    // data-filter-pruned reads, targeted compaction) scan exactly it
+    pinnedFiles: Option[Seq[FileMeta]] = None)
     extends Table with SupportsRead with SupportsWrite
     with org.apache.spark.sql.connector.catalog.SupportsDeleteV2
     with org.apache.spark.sql.connector.catalog.SupportsRowLevelOperations
@@ -398,7 +401,7 @@ final class GraftV2Table(
     // a view sharing root/schema/manifests, so everything downstream
     // (pruning, MOR, pushdown) is unchanged
     val t = Option(options.get("branch")).map(loaded.forBranch).getOrElse(loaded)
-    new GraftScanBuilder(SparkSession.active, t, options, pinnedSnapshot)
+    new GraftScanBuilder(SparkSession.active, t, options, pinnedSnapshot, pinnedFiles)
   }
 }
 
@@ -430,6 +433,7 @@ final case class SubscriptPredicate(col: String, key: String, op: String, value:
 final class GraftScanBuilder(
     spark: SparkSession, table: GraftTable, options: CaseInsensitiveStringMap,
     pinnedSnapshot: Option[Long] = None,
+    pinnedFiles: Option[Seq[FileMeta]] = None,
     // row-level replace reads (UPDATE/MERGE/rewrite-DELETE): the built
     // scan is reported to the operation (its files get replaced at
     // commit) and reader-level row-group pruning is disabled — a skipped
@@ -743,7 +747,7 @@ final class GraftScanBuilder(
   override def build(): Scan = aggScan.getOrElse {
     val s = new GraftScan(spark, table, snapshotId, requiredSchema, pushed,
       partitionPrune, dataSkip, rowLevelReplace, subscriptFilters, claimed,
-      sampleBps, sampleKeyMode)
+      sampleBps, sampleKeyMode, pinnedFiles)
     onBuild(s)
     s
   }
@@ -964,7 +968,10 @@ final class GraftScan(
     // S69 TABLESAMPLE SYSTEM: basis points of files kept (10000 = off)
     // and the sample-key mode ("path" | "partition")
     sampleBps: Int = 10000,
-    sampleKeyMode: String = "path")
+    sampleKeyMode: String = "path",
+    // a file set the caller already planned: scanned as given — no
+    // manifest planning, no runtime filtering
+    pinnedFiles: Option[Seq[FileMeta]] = None)
     extends Scan with Batch with SupportsReportStatistics with SupportsReportPartitioning
     with SupportsRuntimeFiltering {
 
@@ -980,7 +987,7 @@ final class GraftScan(
   def withSubscriptFilters(subs: Seq[SubscriptPredicate]): GraftScan =
     new GraftScan(spark, table, snapshotId, requiredSchema, pushed,
       partitionPrune, dataSkip, rowLevelReplace, subs, claimed,
-      sampleBps, sampleKeyMode)
+      sampleBps, sampleKeyMode, pinnedFiles)
 
   private val partKeySet = table.partitionKeys.toSet
   // S44/S65: metadata columns (`_file`, and on row-tracking tables
@@ -1040,7 +1047,7 @@ final class GraftScan(
     else planned.filter(f => GraftScan.sampleKeep(table, f, sampleBps, sampleKeyMode))
   }
 
-  private lazy val basePlanned: Seq[FileMeta] = planWith(pushed.toSeq)
+  private lazy val basePlanned: Seq[FileMeta] = pinnedFiles.getOrElse(planWith(pushed.toSeq))
 
   // ---- runtime filtering (join-driven dynamic pruning) -----------------
 
@@ -1088,7 +1095,8 @@ final class GraftScan(
 
   override def filterAttributes(): Array[org.apache.spark.sql.connector.expressions.NamedReference] = {
     val cols =
-      if (!table.isPkTable) table.schema.fieldNames.toSeq
+      if (pinnedFiles.isDefined) Seq.empty[String]
+      else if (!table.isPkTable) table.schema.fieldNames.toSeq
       else (table.primaryKeys ++
         (if (table.partitionPruneSafe) table.partitionKeys else Seq.empty)).distinct
     // Only columns in the PRUNED output: Spark's dynamic-pruning rule
@@ -1419,13 +1427,12 @@ final class GraftScan(
     * verbatim instead of re-plumbing it.
     *
     * `vectorized = false` builds a row-based (parquet-mr / ORC row)
-    * factory instead — required by the streaming k-way merge, which holds
-    * MANY readers of one group open at once and interleaves them:
-    * interleaved vectorized readers from one factory corrupt each other's
-    * batches (observed empirically: the second read of a run returns
-    * zeroed rows once another reader has opened), while row-based readers
-    * are independent. The sequential paths (non-PK scan, hash merge) keep
-    * the vectorized factory. */
+    * factory instead, for the streaming k-way merge: it holds MANY readers
+    * of one group open at once and consumes one row per advance. A parquet
+    * factory instance closes its previous file's reader whenever it opens
+    * the next one, so the merge opens each run through its own copy of the
+    * factory (see GraftMorReaderFactory.Run). The sequential paths (non-PK
+    * scan, hash merge) keep the vectorized factory. */
   private def fileFactory(
       readData: StructType, readPart: StructType, filters: Array[Filter],
       vectorized: Boolean = true,
@@ -1831,10 +1838,26 @@ final class GraftMorReaderFactory(
 
   /** One open sub-reader per run with a buffered head row; `-U`
     * changelog markers are skipped on advance (they are not row
-    * versions). Head rows are copies — the vectorized reader reuses its
-    * row — so resident memory is runs × one row. */
+    * versions). Head rows are copies — the reader reuses its row — so
+    * resident memory is runs × one row.
+    *
+    * Each run reads through its OWN copy of the parquet factory: a
+    * ParquetPartitionReaderFactory instance closes its current file's
+    * reader when it opens the next (Spark's ParquetReaderCallback), so
+    * through one shared instance every run but the last would be closed
+    * while the merge still reads it — failing on its next row group, or
+    * on snappy pages once its pooled decompressor is leased to a
+    * concurrent task. */
   private final class Run(file: PartitionedFile, idx: Int) {
-    private val reader = rowBased.createReader(FilePartition(idx, Array(file)))
+    // a serialization round trip, not copy(): the factory's constructor
+    // reads the SQLConf, which is unreadable once shipped to an executor
+    private val factory = rowBased match {
+      case p: ParquetPartitionReaderFactory =>
+        val ser = org.apache.spark.SparkEnv.get.closureSerializer.newInstance()
+        ser.deserialize[PartitionReaderFactory](ser.serialize(p))
+      case other => other
+    }
+    private val reader = factory.createReader(FilePartition(idx, Array(file)))
     private val updateBefore = UTF8String.fromString(GraftTable.RowKind.UpdateBefore)
     private var closed = false
     var head: InternalRow = _
@@ -2037,10 +2060,10 @@ final class GraftMorReaderFactory(
   }
 }
 
-/** Per-column combine functions for the fold merge engines. Null
-  * handling matches the window formulation in GraftTable.mergeVersions:
-  * sum/min/max/bool/listagg skip nulls; *_value functions take the row
-  * value as-is; *_non_null_value only overwrite/keep non-null. */
+/** Per-column combine functions for the fold merge engines (Paimon's
+  * field aggregates): sum/min/max/bool/listagg skip nulls; *_value
+  * functions take the row value as-is; *_non_null_value only
+  * overwrite/keep non-null. */
 private[sources] object MergeFns {
   import org.apache.spark.sql.types._
 
@@ -2119,9 +2142,7 @@ private[sources] object MergeFns {
     case other => throw new IllegalArgumentException(s"bit_xor unsupported for type $other")
   }
 
-  /** product keeps the declared integral/floating type (the window
-    * formulation computes via Spark's double `product` and casts back —
-    * identical while magnitudes stay in the double-exact range; overflow
+  /** product keeps the declared integral/floating type (overflow
     * behavior is undefined, as in Paimon's field agg). Decimal products
     * change precision/scale mid-fold and are rejected. */
   private def mult(dt: DataType): (Any, Any) => Any = dt match {

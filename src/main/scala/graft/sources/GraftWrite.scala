@@ -520,15 +520,18 @@ final class GraftTaskWriter(spec: GraftWriteSpec, taskUniq: String) {
         nn += 1
       }
     }
-    checkNotNull(notNullKeyIdx)
-    val isTombstone = kindOrd >= 0 && !row.isNullAt(kindOrd) &&
-      row.getUTF8String(kindOrd) == deleteKind
-    if (!isTombstone) checkNotNull(notNullNonKeyIdx)
+    // the consecutive-key skip comes FIRST: a losing duplicate is never
+    // stored, so its values must not fail the write (a NULL in a NOT NULL
+    // column of a row the dedup drops anyway)
     keyProj.foreach { kp =>
       val k = kp(row)
       if (lastKey != null && k == lastKey) return // later version of a key already written
       lastKey = k.copy()
     }
+    checkNotNull(notNullKeyIdx)
+    val isTombstone = kindOrd >= 0 && !row.isNullAt(kindOrd) &&
+      row.getUTF8String(kindOrd) == deleteKind
+    if (!isTombstone) checkNotNull(notNullNonKeyIdx)
     val partVals: Seq[String] = partProj match {
       case None => Nil
       case Some(p) =>

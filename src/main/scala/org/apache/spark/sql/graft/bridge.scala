@@ -28,6 +28,22 @@ object Bridge {
       : Array[org.apache.spark.sql.sources.Filter] =
     org.apache.spark.sql.internal.connector.PredicateUtils.toV1(ps)
 
+  /** A DataFrame over a DataSource V2 table instance — what
+    * `spark.read.format(...)` builds for a provider, for callers that
+    * construct the Table themselves (e.g. to hand it internal state no
+    * read option can carry). Re-exposes the private[sql] Dataset.ofRows. */
+  def v2Frame(
+      spark: org.apache.spark.sql.SparkSession,
+      table: org.apache.spark.sql.connector.catalog.Table,
+      options: Map[String, String]): org.apache.spark.sql.DataFrame = {
+    import scala.jdk.CollectionConverters._
+    val classic = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+    org.apache.spark.sql.classic.Dataset.ofRows(classic,
+      org.apache.spark.sql.execution.datasources.v2.DataSourceV2Relation.create(
+        table, None, None,
+        new org.apache.spark.sql.util.CaseInsensitiveStringMap(options.asJava)))
+  }
+
   /** Clone a session: an isolated copy of the SQLConf (and session state)
     * sharing the SparkContext — re-exposes the private[sql] cloneSession.
     * Used to build row-based reader factories without flipping

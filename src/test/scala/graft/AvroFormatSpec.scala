@@ -77,7 +77,7 @@ class AvroFormatSpec extends AnyFunSuite {
     val want = Seq((1, "a"), (2, "b2"), (4, "d"))
     assert(state(t.read()) == want) // V2 in-scan fold
     assert(state(t.read(dataFilters =
-      Seq(org.apache.spark.sql.sources.IsNotNull("k")))) == want) // window path
+      Seq(org.apache.spark.sql.sources.IsNotNull("k")))) == want) // pruned read
     assert(state(spark.read.format("graft").load(t.root)) == want) // SQL
     t.compact()
     assert(state(t.read()) == want)

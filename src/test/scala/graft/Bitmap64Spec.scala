@@ -63,7 +63,7 @@ class Bitmap64Spec extends AnyFunSuite {
       .collect().map(r => (r.getString(0), r.getLong(1))).sorted.toSeq
     // V2 in-scan fold
     assert(card(t.read()) == Seq(("g1", 3L), ("g2", 2L)))
-    // V1 window formulation (dataFilters forces the fallback path)
+    // a pruned library read pins the same fold to its planned files
     assert(card(t.read(dataFilters =
       Seq(org.apache.spark.sql.sources.IsNotNull("k")))) == Seq(("g1", 3L), ("g2", 2L)))
     // -D resets the folded set

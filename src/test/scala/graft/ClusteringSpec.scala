@@ -160,6 +160,44 @@ class ClusteringSpec extends AnyFunSuite {
     assert(t.compactBuckets(trigger = 5).isEmpty)
   }
 
+  test("Z6: compactBuckets folds an aggregation table's group in the per-bucket reader") {
+    import graft.sources.GraftMorReaderFactory
+    val t = GraftTable.create(spark, TestSpark.tmpDir("lsmagg"),
+      StructType(Seq(StructField("k", LongType), StructField("total", LongType),
+        StructField("hi", IntegerType))),
+      primaryKeys = Seq("k"),
+      options = Map("bucket" -> "2", "merge-engine" -> "aggregation",
+        "fields.total.aggregate-function" -> "sum",
+        "fields.hi.aggregate-function" -> "max"))
+    val byBucket = (0L until 50L).groupBy(k => t.bucketOf(Seq(k)))
+    val Seq(a, b) = byBucket(0).take(2)
+    val cold = byBucket(1).head
+    t.upsert(Seq((a, 10L, 1), (b, 5L, 7), (cold, 1L, 1)).toDF("k", "total", "hi"))
+    t.upsert(Seq((a, 20L, 4), (b, 5L, 2)).toDF("k", "total", "hi"))
+    // a -D resets b: only its later versions fold
+    t.delete(Seq((b, 0L, 0)).toDF("k", "total", "hi"))
+    t.upsert(Seq((a, 3L, 2), (b, 8L, 3)).toDF("k", "total", "hi"))
+    def state() = t.read().orderBy("k").collect()
+      .map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).toSeq
+    val want = Seq((a, 33L, 4), (b, 8L, 3), (cold, 1L, 1)).sortBy(_._1)
+    assert(state() == want)
+
+    val folds0 = GraftMorReaderFactory.streamedGroups.get() + GraftMorReaderFactory.hashGroups.get()
+    assert(t.compactBuckets(trigger = 4).isDefined)
+    // the triggered group (bucket 0) folded in ONE merge-on-read task
+    assert(GraftMorReaderFactory.streamedGroups.get() +
+      GraftMorReaderFactory.hashGroups.get() - folds0 == 1)
+    assert(state() == want)
+    // the rewritten files hold the folded rows themselves ($ro reads them
+    // without a merge); the cold bucket was never compacted
+    val ro = t.readOptimized().orderBy("k").collect()
+      .map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).toSeq
+    assert(ro == want.filterNot(_._1 == cold))
+    // further aggregation folds on top of the compacted state
+    t.upsert(Seq((a, 1L, 9)).toDF("k", "total", "hi"))
+    assert(state().contains((a, 34L, 9)))
+  }
+
   test("Z5: num-sorted-run.compaction-trigger auto-folds write backlog") {
     val t = GraftTable.create(spark, TestSpark.tmpDir("lsmauto"),
       StructType(Seq(StructField("k", LongType), StructField("v", StringType))),

@@ -35,7 +35,7 @@ class CrossPartitionSpec extends AnyFunSuite {
     // the old partition no longer serves the key (post-merge filter path)
     assert(t.read(partitionFilter = Some(col("status") === "open"))
       .collect().map(_.getInt(0)).toSeq == Seq(2))
-    // V1 global-merge path agrees with the V2 bucket-local folds
+    // a pruned library read pins the same bucket-local folds
     val v1 = t.read(dataFilters = Seq(org.apache.spark.sql.sources.IsNotNull("id")))
       .collect().map(r => (r.getInt(0), r.getString(1), r.getString(2))).sorted.toSeq
     assert(v1 == rows(t))

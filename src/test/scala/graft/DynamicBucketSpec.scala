@@ -300,6 +300,25 @@ class DynamicBucketSpec extends AnyFunSuite {
     assert(snap.manifests == Seq("m-1") && snap.id == 1L)
   }
 
+  test("S48m: without sequence.field the batch-dedup winner ignores the batch's column order") {
+    // the fallback version order is the non-key columns desc in TABLE
+    // schema order — on both dedup paths: the pre-write dedup (fixed
+    // buckets) and the task writer's consecutive-key skip (dynamic)
+    val abSchema = StructType(Seq(StructField("k", IntegerType),
+      StructField("a", IntegerType), StructField("b", IntegerType)))
+    val batch = Seq((1, 1, 9), (1, 2, 0), (2, 5, 5)).toDF("k", "a", "b")
+    for (bucket <- Seq("2", "-1")) {
+      val winners = Seq(batch, batch.select("k", "b", "a")).map { df =>
+        val t = GraftTable.create(spark, TestSpark.tmpDir(s"dyn-colorder$bucket"), abSchema,
+          primaryKeys = Seq("k"), options = Map("bucket" -> bucket))
+        t.upsert(df)
+        t.read().orderBy("k").collect().map(r => (r.getInt(0), r.getInt(1), r.getInt(2))).toSeq
+      }
+      assert(winners.distinct.size == 1, s"bucket=$bucket: winners differ: $winners")
+      assert(winners.head == Seq((1, 2, 0), (2, 5, 5)), s"bucket=$bucket: ${winners.head}")
+    }
+  }
+
   test("S48f: rescale is rejected; dynamic requires primary keys") {
     val t = dynTable("dyn-guard", target = 3)
     t.upsert(Seq((1, "a")).toDF("k", "v"))

@@ -6,8 +6,8 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** Delta-manifest snapshot chains: commits write O(delta) metadata, the
   * chain folds past manifest.merge-min-count, expiry reclaims orphan
-  * manifests, and pre-manifest (inline `files`) snapshots stay readable
-  * and migrate on the next commit. */
+  * manifests, and a pre-manifest (inline `files`) snapshot is refused
+  * rather than read as an empty table. */
 class ManifestSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
   import spark.implicits._
@@ -61,7 +61,7 @@ class ManifestSpec extends AnyFunSuite {
     intercept[Exception] { t.readIncrement(0, 1) }
   }
 
-  test("M4: legacy inline-files snapshots read fine and migrate on the next commit") {
+  test("M4: a pre-manifest inline-files snapshot fails to load instead of reading as empty") {
     val path = TestSpark.tmpDir("mf4")
     val t = GraftTable.create(spark, path, new StructType().add("k", "int"))
     t.append(Seq(1, 2).toDF("k"))
@@ -77,17 +77,15 @@ class ManifestSpec extends AnyFunSuite {
     entries.forEach(e => files.add(e.get("file")))
     node.remove("manifests"); node.set("files", files)
     java.nio.file.Files.write(snapPath, mapper.writeValueAsBytes(node))
-    java.nio.file.Files.delete(java.nio.file.Paths.get(path, "manifest", mfName))
-    // raw rewrite bypassed Hadoop's checksummed FS: drop the stale .crc sidecars
+    // raw rewrite bypassed Hadoop's checksummed FS: drop the stale .crc sidecar
     java.nio.file.Files.deleteIfExists(
       java.nio.file.Paths.get(path, "snapshot", ".snap-1.json.crc"))
-    java.nio.file.Files.deleteIfExists(
-      java.nio.file.Paths.get(path, "manifest", s".$mfName.crc"))
 
     val t2 = GraftTable.load(spark, path) // fresh instance: no caches
-    assert(t2.read().count() == 2) // legacy snapshot readable
-    t2.append(Seq(3).toDF("k")) // next commit migrates the inline list
-    assert(snapJson(path, 2).contains("\"manifests\""))
-    assert(spark.read.format("graft").load(path).count() == 3)
+    val e = intercept[Exception](t2.read().count())
+    def msgs(x: Throwable): Seq[String] =
+      if (x == null) Seq.empty else Option(x.getMessage).toSeq ++ msgs(x.getCause)
+    assert(msgs(e).exists(_.contains("\"files\"")),
+      s"expected the unknown `files` field to be named, got: ${msgs(e)}")
   }
 }

@@ -6,9 +6,8 @@ import org.apache.spark.sql.types._
 import org.scalatest.funsuite.AnyFunSuite
 
 /** SURVEY §2.1 S26: Paimon merge engines beyond deduplicate —
-  * first-row, partial-update, aggregation — resolved identically by the
-  * window formulation (GraftTable.mergeVersions) and the V2 in-scan fold
-  * (GraftMorReaderFactory), with -D resetting folded keys.
+  * first-row, partial-update, aggregation — resolved by the V2 in-scan
+  * fold (GraftMorReaderFactory), with -D resetting folded keys.
   * (ref: Paimon CoreOptions MERGE_ENGINE; the reference connector reads
   * tables produced under all of these engines.)
   */
@@ -16,16 +15,7 @@ class MergeEngineSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
   import spark.implicits._
 
-  /** Both read paths must agree: read() routes PK tables through the V2
-    * scan (in-scan fold); read(dataFilters=...) takes the library window
-    * path. Returns the V2-path rows after asserting parity. */
-  private def readBoth(t: GraftTable): Seq[Row] = {
-    val v2 = t.read().orderBy("k").collect().toSeq
-    val window = t.read(dataFilters =
-      Seq(org.apache.spark.sql.sources.IsNotNull("k"))).orderBy("k").collect().toSeq
-    assert(v2 == window, s"V2 fold and window merge disagree:\n  v2=$v2\n  win=$window")
-    v2
-  }
+  private def readSorted(t: GraftTable): Seq[Row] = t.read().orderBy("k").collect().toSeq
 
   test("first-row: earliest version per key wins") {
     val schema = StructType(Seq(
@@ -34,7 +24,7 @@ class MergeEngineSpec extends AnyFunSuite {
       primaryKeys = Seq("k"), options = Map("merge-engine" -> "first-row"))
     t.append(Seq((1, "first"), (2, "b")).toDF("k", "v"))
     t.append(Seq((1, "second"), (3, "c")).toDF("k", "v"))
-    val rows = readBoth(t).map(r => (r.getInt(0), r.getString(1)))
+    val rows = readSorted(t).map(r => (r.getInt(0), r.getString(1)))
     assert(rows == Seq((1, "first"), (2, "b"), (3, "c")))
   }
 
@@ -48,7 +38,7 @@ class MergeEngineSpec extends AnyFunSuite {
     t.append(Seq((1, Some("a1"), None: Option[String])).toDF("k", "a", "b"))
     t.append(Seq((1, None: Option[String], Some("b2"))).toDF("k", "a", "b"))
     t.append(Seq((1, None: Option[String], None: Option[String])).toDF("k", "a", "b"))
-    val rows = readBoth(t).map(r => (r.getInt(0), r.getString(1), r.getString(2)))
+    val rows = readSorted(t).map(r => (r.getInt(0), r.getString(1), r.getString(2)))
     assert(rows == Seq((1, "a1", "b2")))
   }
 
@@ -61,10 +51,10 @@ class MergeEngineSpec extends AnyFunSuite {
       primaryKeys = Seq("k"), options = Map("merge-engine" -> "partial-update"))
     t.append(Seq((1, Some("a1"), Some("b1"))).toDF("k", "a", "b"))
     t.delete(Seq((1, Some("a1"), Some("b1"))).toDF("k", "a", "b"))
-    assert(readBoth(t).isEmpty) // delete wins
+    assert(readSorted(t).isEmpty) // delete wins
     t.append(Seq((1, None: Option[String], Some("b3"))).toDF("k", "a", "b"))
     // pre-delete a1 must NOT resurrect: fold restarts after the -D
-    val rows = readBoth(t).map(r => (r.getInt(0), r.getString(1), r.getString(2)))
+    val rows = readSorted(t).map(r => (r.getInt(0), r.getString(1), r.getString(2)))
     assert(rows == Seq((1, null, "b3")))
   }
 
@@ -88,7 +78,7 @@ class MergeEngineSpec extends AnyFunSuite {
       .toDF("k", "total", "hi", "tags", "any_err", "last_v"))
     t.append(Seq((1, 7, 3L, "y", true, "v2")).toDF("k", "total", "hi", "tags", "any_err", "last_v"))
     t.append(Seq((1, 5, 8L, "z", false, "v3")).toDF("k", "total", "hi", "tags", "any_err", "last_v"))
-    val rows = readBoth(t).map(r =>
+    val rows = readSorted(t).map(r =>
       (r.getInt(0), r.getInt(1), r.getLong(2), r.getString(3), r.getBoolean(4), r.getString(5)))
     assert(rows == Seq(
       (1, 22, 8L, "x,y,z", true, "v3"), // sum, max, listagg in commit order, bool_or, last
@@ -112,7 +102,7 @@ class MergeEngineSpec extends AnyFunSuite {
     t.upsert(Seq((1, Option.empty[Long], Option.empty[Seq[String]]))
       .toDF("k", "p", "tags"))
     t.upsert(Seq((1, 2L, Seq("a"))).toDF("k", "p", "tags"))
-    val rows = readBoth(t).map(r =>
+    val rows = readSorted(t).map(r =>
       (r.getInt(0), r.getLong(1), r.getSeq[String](2).toList))
     assert(rows == Seq((1, 24L, List("a", "b", "c", "a"))),
       "product multiplies non-null versions; collect appends elements in version order")
@@ -138,7 +128,7 @@ class MergeEngineSpec extends AnyFunSuite {
     val bIds = (300L until 700L) // overlaps a: union = 700 distinct
     t.upsert(Seq((1, sketchOf(aIds))).toDF("k", "sk"))
     t.upsert(Seq((1, sketchOf(bIds))).toDF("k", "sk"))
-    val merged = readBoth(t).head.getAs[Array[Byte]](1)
+    val merged = readSorted(t).head.getAs[Array[Byte]](1)
     // the stored merged sketch estimates the UNION's distinct count;
     // compare against a one-pass sketch of the union — KMV merges are
     // lossless, so the bytes must be identical, not just close
@@ -157,10 +147,10 @@ class MergeEngineSpec extends AnyFunSuite {
     t.append(Seq((1, Some(10L))).toDF("k", "total"))
     t.append(Seq((1, None: Option[Long])).toDF("k", "total"))
     t.append(Seq((1, Some(4L))).toDF("k", "total"))
-    assert(readBoth(t).map(r => (r.getInt(0), r.getLong(1))) == Seq((1, 14L)))
+    assert(readSorted(t).map(r => (r.getInt(0), r.getLong(1))) == Seq((1, 14L)))
     t.delete(Seq((1, Some(0L))).toDF("k", "total"))
     t.append(Seq((1, Some(3L))).toDF("k", "total"))
-    assert(readBoth(t).map(r => (r.getInt(0), r.getLong(1))) == Seq((1, 3L)))
+    assert(readSorted(t).map(r => (r.getInt(0), r.getLong(1))) == Seq((1, 3L)))
   }
 
   test("merge engines survive SQL reads and compaction") {
@@ -180,7 +170,7 @@ class MergeEngineSpec extends AnyFunSuite {
     // and post-compact appends fold on top of the compacted base
     t.compact()
     t.append(Seq((1, 1L)).toDF("k", "total"))
-    assert(readBoth(t).map(r => (r.getInt(0), r.getLong(1))) == Seq((1, 6L), (2, 5L)))
+    assert(readSorted(t).map(r => (r.getInt(0), r.getLong(1))) == Seq((1, 6L), (2, 5L)))
   }
 
   test("changelog-producer=lookup rejects non-deduplicate engines") {
@@ -220,53 +210,53 @@ class MergeEngineSpec extends AnyFunSuite {
     // status feed advances, but its price copy is STALE (150 < 200):
     // without groups commit order would clobber price back to 11.0
     t.append(Seq((1, 11.0, 150L, "shipped", 300L)).toDF("k", "price", "price_ts", "status", "status_ts"))
-    assert(readBoth(t).map(sgRow) == Seq((1, 12.0, 200L, "shipped", 300L)))
+    assert(readSorted(t).map(sgRow) == Seq((1, 12.0, 200L, "shipped", 300L)))
     // fully stale late row: nothing moves
     t.append(Seq((1, 9.0, 50L, "stale", 50L)).toDF("k", "price", "price_ts", "status", "status_ts"))
-    assert(readBoth(t).map(sgRow) == Seq((1, 12.0, 200L, "shipped", 300L)))
+    assert(readSorted(t).map(sgRow) == Seq((1, 12.0, 200L, "shipped", 300L)))
     // hash-strategy path must agree too: a non-key clustering compaction
     // leaves unsorted files, forcing foldReader on the next read
     t.compact(sortBy = Seq("status"))
-    assert(readBoth(t).map(sgRow) == Seq((1, 12.0, 200L, "shipped", 300L)))
+    assert(readSorted(t).map(sgRow) == Seq((1, 12.0, 200L, "shipped", 300L)))
   }
 
   test("S49: a stale-group-seq row cannot resurrect a value the newest group row nulled") {
     // ADVICE r10 repro: the newest group-seq row carries NULL in the
     // grouped column; a late-committed STALE row (lower group seq) holds
-    // a non-null value. foldAscending rejects the whole stale row — the
-    // window path (mergeVersions, which also backs compact()) must too.
+    // a non-null value. foldAscending rejects the whole stale row, on the
+    // read and in the compaction that materializes the fold.
     val t = seqGroupTable("me-sg-stale-null")
     t.append(Seq((1, Option.empty[Double], Some(200L), Some("new"), Some(200L)))
       .toDF("k", "price", "price_ts", "status", "status_ts"))
     t.append(Seq((1, Some(9.0), Some(150L), Option.empty[String], Option.empty[Long]))
       .toDF("k", "price", "price_ts", "status", "status_ts"))
     def check(): Unit = {
-      val rows = readBoth(t)
+      val rows = readSorted(t)
       assert(rows.map(r => (r.getInt(0), Option(r.get(1)), r.getLong(2), r.getString(3))) ==
         Seq((1, None, 200L, "new")))
     }
     check()
-    // compaction materializes via mergeVersions — result must not change
+    // compaction materializes the fold — result must not change
     t.compact()
     check()
     // an accepted EQUAL group seq still updates (>= semantics)
     t.append(Seq((1, Some(7.5), Some(200L), Option.empty[String], Option.empty[Long]))
       .toDF("k", "price", "price_ts", "status", "status_ts"))
-    assert(readBoth(t).map(sgRow) == Seq((1, 7.5, 200L, "new", 200L)))
+    assert(readSorted(t).map(sgRow) == Seq((1, 7.5, 200L, "new", 200L)))
   }
 
   test("S49: delete resets group state; null group-seq sorts oldest") {
     val t = seqGroupTable("me-sg-del")
     t.append(Seq((1, 10.0, 500L, "new", 500L)).toDF("k", "price", "price_ts", "status", "status_ts"))
     t.delete(Seq((1, 0.0, 0L, "", 0L)).toDF("k", "price", "price_ts", "status", "status_ts"))
-    assert(readBoth(t).isEmpty)
+    assert(readSorted(t).isEmpty)
     // re-insert with OLDER group seqs: the delete reset forgot them
     t.append(Seq((1, 5.0, 10L, "reborn", 10L)).toDF("k", "price", "price_ts", "status", "status_ts"))
-    assert(readBoth(t).map(sgRow) == Seq((1, 5.0, 10L, "reborn", 10L)))
+    assert(readSorted(t).map(sgRow) == Seq((1, 5.0, 10L, "reborn", 10L)))
     // a null group-seq row cannot override a non-null one
     t.append(Seq((1, Some(99.0), Option.empty[Long], Some("ghost"), Option.empty[Long]))
       .toDF("k", "price", "price_ts", "status", "status_ts"))
-    assert(readBoth(t).map(sgRow) == Seq((1, 5.0, 10L, "reborn", 10L)))
+    assert(readSorted(t).map(sgRow) == Seq((1, 5.0, 10L, "reborn", 10L)))
   }
 
   test("S49: sequence-group validation") {

@@ -256,16 +256,32 @@ class V2ScanSpec extends AnyFunSuite {
     t.upsert((1L to 100L).map(i => (i, s"v2-$i", 2L)).toDF("id", "v", "seq"))
     t.delete(Seq((5L, "", 3L)).toDF("id", "v", "seq"))
 
+    def assertMergedInScan(df: org.apache.spark.sql.DataFrame): Unit = {
+      val p = df.queryExecution.executedPlan.toString
+      assert(!p.contains("Exchange"), s"MOR must not shuffle a bucketed PK table:\n$p")
+      assert(!p.contains("Window"), s"MOR must merge inside the scan, not via window:\n$p")
+    }
     val df = spark.read.format("graft").load(path)
-    val p = df.queryExecution.executedPlan.toString
-    assert(!p.contains("Exchange"), s"MOR must not shuffle a bucketed PK table:\n$p")
-    assert(!p.contains("Window"), s"MOR must merge inside the scan, not via window:\n$p")
+    assertMergedInScan(df)
     // parallelism = one task per (partition, bucket) group
     assert(df.rdd.getNumPartitions == 4)
 
     val got = df.collect().map(r => (r.getLong(0), r.getString(1))).toMap
     assert(got.size == 199 && !got.contains(5L))
     assert(got(3L) == "v2-3" && got(150L) == "v1-150")
+
+    // the library's pruned reads (one bucket; pk data skipping) pin the
+    // same scan to their planned files — same in-scan merge
+    val b = t.bucketOf(Seq(150L))
+    val inBucket = t.read(bucket = Some(b))
+    assertMergedInScan(inBucket)
+    val bucketRows = inBucket.collect().map(r => (r.getLong(0), r.getString(1))).toMap
+    assert(bucketRows.nonEmpty && bucketRows == got.filter { case (k, _) => t.bucketOf(Seq(k)) == b })
+    import org.apache.spark.sql.sources.EqualTo
+    val skipped = t.read(dataFilters = Seq(EqualTo("id", 3L)))
+    assertMergedInScan(skipped)
+    assert(skipped.filter($"id" === 3L).collect().map(_.getString(1)).toSeq == Seq("v2-3"))
+    assert(t.read(dataFilters = Seq(EqualTo("id", 5L))).filter($"id" === 5L).isEmpty)
   }
 
   test("PK table whose sequence field is a partition column reads through V2") {
@@ -302,11 +318,32 @@ class V2ScanSpec extends AnyFunSuite {
       "expected both bucket groups to take the streaming k-way merge")
     assert(GraftMorReaderFactory.hashGroups.get() == h0,
       "no group should fall back to the hash merge on all-sorted runs")
-    // results identical to the window-formulation read
-    val oracle = t.read().collect().map(r => (r.getLong(0), r.getString(1))).toMap
-    assert(got == oracle)
     assert(got.size == 197 && !got.contains(10L) && !got.contains(11L))
     assert(got(3L) == "v2-3" && got(2L) == "v1-2" && got(150L) == "v1-150")
+  }
+
+  test("sorted-run MOR: every run of a k-way merge stays readable until drained") {
+    // Each run must own its parquet factory: a factory instance closes its
+    // previous file's reader when it opens the next, so through a shared
+    // one every run but the last is closed while the merge still reads
+    // it. The first run here spans many row groups (tiny block size), so
+    // a closed run fails on its next row group — deterministically, on
+    // any codec and any thread count.
+    import graft.sources.GraftMorReaderFactory
+    val path = TestSpark.tmpDir("v2streamrg")
+    val t = GraftTable.create(spark, path,
+      StructType(Seq(StructField("id", LongType), StructField("v", StringType))),
+      primaryKeys = Seq("id"), options = Map("bucket" -> "1"))
+    spark.conf.set("parquet.block.size", "4096")
+    try t.upsert((1L to 5000L).map(i => (i, s"a-$i")).toDF("id", "v"))
+    finally spark.conf.unset("parquet.block.size")
+    t.upsert((1L to 5000L by 500).map(i => (i, s"b-$i")).toDF("id", "v"))
+    val s0 = GraftMorReaderFactory.streamedGroups.get()
+    val got = spark.read.format("graft").load(path)
+      .collect().map(r => (r.getLong(0), r.getString(1))).toMap
+    assert(GraftMorReaderFactory.streamedGroups.get() - s0 == 1)
+    assert(got.size == 5000)
+    assert(got(1L) == "b-1" && got(501L) == "b-501" && got(4999L) == "a-4999")
   }
 
   test("unsorted files (clustered compaction) fall back to the hash merge, same results") {

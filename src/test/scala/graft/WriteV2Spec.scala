@@ -215,6 +215,31 @@ class WriteV2Spec extends AnyFunSuite {
       s"expected a NOT NULL violation naming 'v', got: ${msgs(e)}")
   }
 
+  test("S70d: a within-batch duplicate the writer dedup drops is not NOT NULL-checked") {
+    import org.apache.spark.sql.types._
+    val path = TestSpark.tmpDir("w2notnulldup")
+    // dynamic buckets: the upsert dedups in the task writer (consecutive
+    // keys, newest version first), not in a pre-write window
+    val t = GraftTable.create(spark, path, StructType(Seq(
+      StructField("id", LongType, nullable = false),
+      StructField("v", StringType, nullable = false),
+      StructField("seq", LongType, nullable = false))),
+      primaryKeys = Seq("id"), options = Map("bucket" -> "-1", "sequence.field" -> "seq"))
+    // the losing (older) version of id=1 carries NULL in the NOT NULL `v`
+    t.upsert(Seq((1L, Option("win"), 2L), (1L, Option.empty[String], 1L), (2L, Option("b"), 1L))
+      .toDF("id", "v", "seq"))
+    assert(t.read().orderBy("id").collect().map(r => (r.getLong(0), r.getString(1))).toSeq ==
+      Seq((1L, "win"), (2L, "b")))
+    // a NULL on the WINNING version still fails the write
+    val e = intercept[Exception] {
+      t.upsert(Seq((3L, Option.empty[String], 5L), (3L, Option("old"), 4L)).toDF("id", "v", "seq"))
+    }
+    def msgs(x: Throwable): Seq[String] =
+      if (x == null) Seq.empty else Option(x.getMessage).toSeq ++ msgs(x.getCause)
+    assert(msgs(e).exists(m => m.contains("NOT NULL") && m.contains("'v'")),
+      s"expected a NOT NULL violation naming 'v', got: ${msgs(e)}")
+  }
+
   test("W8: CHAR padding is applied by the executor writer on the V2 path") {
     val path = TestSpark.tmpDir("w2char")
     val schema = org.apache.spark.sql.types.StructType(Seq(
