@@ -61,7 +61,7 @@ class ManifestSpec extends AnyFunSuite {
     intercept[Exception] { t.readIncrement(0, 1) }
   }
 
-  test("M4: a pre-manifest inline-files snapshot fails to load instead of reading as empty") {
+  test("M5: a pre-manifest inline-files snapshot fails to load instead of reading as empty") {
     val path = TestSpark.tmpDir("mf4")
     val t = GraftTable.create(spark, path, new StructType().add("k", "int"))
     t.append(Seq(1, 2).toDF("k"))
