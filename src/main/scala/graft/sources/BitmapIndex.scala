@@ -11,8 +11,8 @@ import java.io.{DataInputStream, DataOutputStream}
   * (BitmapFileIndex in Paimon core; the reference connector inherits it
   * through FileStoreScan planning).
   *
-  * The write task records, for each configured column, every distinct
-  * STORED value and the ascending row positions holding it (positions in
+  * The [[FileIndexBuilder]] records, for each configured column, every
+  * distinct STORED value and the ascending row positions holding it (positions in
   * the file's physical row order, 0-based — the same convention as
   * deletion vectors and parquet's `_metadata.row_index`). Because the
   * posting map is value-complete for the file, ABSENCE of a predicate
@@ -83,16 +83,6 @@ object BitmapIndex {
          org.apache.spark.sql.types.DateType => true
     case _: org.apache.spark.sql.types.CharType | _: org.apache.spark.sql.types.VarcharType => true
     case _ => false
-  }
-
-  /** Executor-side accumulator for rewriteBitmapIndex — top-level so the
-    * rebuild closure stays serializable (a method-local class would
-    * capture the enclosing GraftTable via $outer). */
-  final class RebuildAcc(n: Int) {
-    val bufs: Array[scala.collection.mutable.HashMap[String, scala.collection.mutable.ArrayBuilder.ofLong]] =
-      Array.fill(n)(scala.collection.mutable.HashMap.empty)
-    val over: Array[Boolean] = new Array[Boolean](n)
-    var rows: Long = 0L
   }
 
   private def writeVarLong(out: DataOutputStream, v0: Long): Unit = {
@@ -225,8 +215,9 @@ object BitmapIndex {
   }
 
   /** The (column, matching values) shape of a CLAIMABLE filter — the one
-    * contract shared by the builder's eligibility check, the executor
-    * mask, and the filtered COUNT pushdown. None = not claimable.
+    * contract shared by the scan builder's eligibility check, the
+    * executor mask, the filtered COUNT pushdown and the bloom, bitmap and
+    * BSI file pruning. None = not claimable.
     * Semantics note: `x IN (…nulls…)` matches only the non-null values
     * (a null comparison is UNKNOWN and filtered), so dropping nulls
     * here is exact; an all-null/empty list matches no row. */

@@ -9,11 +9,12 @@ import java.io.{DataInputStream, DataOutputStream}
   * columns). Spark-first re-expression of Paimon's
   * `file-index.bloom-filter.columns` file index (which the reference
   * connector inherits through Paimon's FileStoreScan planning): the
-  * write task hashes each non-null value of the configured columns with
-  * the SAME XxHash64 expression the planner later applies to predicate
-  * literals, sizes a filter for the file's actual row count at build
-  * time, and writes one small sidecar (`<data-file>.bfidx`) next to the
-  * data file. Planning stays driver-side and metadata-only: the sidecar
+  * [[FileIndexBuilder]] (shared by the write task and
+  * `rewrite_file_index`) hashes each value of the configured columns
+  * with the SAME XxHash64 expression the planner later applies to
+  * predicate literals, sizes a filter for the file's actual row count,
+  * and writes one small sidecar (`<data-file>.bfidx`) next to the data
+  * file. Planning stays driver-side and metadata-only: the sidecar
   * is opened lazily, only when an equality predicate on an indexed
   * column survives partition/stats pruning, and is memoized per path.
   *
@@ -23,32 +24,27 @@ import java.io.{DataInputStream, DataOutputStream}
 object BloomIndex {
 
   val Suffix = ".bfidx"
-  private val Magic = 0x47424631 // "GBF1" — blooms only (legacy, still read)
-  private val Magic2 = 0x47424632 // "GBF2" — blooms + per-entry min/max stats
-  private val Magic3 = 0x47424633 // "GBF3" — v2 + declared entry-hashed columns
+  // "GBF3", the one format (blooms, entry stats, entry-hashed columns);
+  // any other magic reads as no sidecar
+  private val Magic = 0x47424633
 
-  /** One file's sidecar: per-column blooms, plus (format v2) per-column
-    * per-ENTRY-KEY min/max of integral map/array values — the range half
-    * of subscript pruning (`props['k'] > 5`; ref session property
-    * range_filters_on_subscripts_enabled). A column appears in
-    * `entryStats` ONLY when the writer saw every row (no key-cap
-    * overflow) and every non-null value was integral — so key ABSENCE
-    * from a present column map proves no row in the file carries that
-    * key, and the (min,max) bounds are file-complete.
+  /** One file's sidecar: per-column blooms, plus per-column per-ENTRY-KEY
+    * min/max of integral map/array/struct-leaf values and of variant
+    * shred paths — the range half of subscript pruning (`props['k'] > 5`;
+    * ref session property range_filters_on_subscripts_enabled). A column
+    * appears in `entryStats` ONLY when the builder saw every row (no
+    * key-cap overflow) — so key ABSENCE from a present column map proves
+    * no row in the file carries that key, and the (min,max) bounds are
+    * file-complete.
     *
-    * `entryCols` (format v3) declares WHICH columns' blooms hold
-    * per-ENTRY hashes rather than whole-value hashes. The hash kind is
-    * otherwise invisible in the bits, and it changed for struct columns
-    * when struct-leaf subscript pushdown landed: a pre-v3 struct bloom
-    * holds whole-value hashes, so probing it with an entry hash would
-    * return a FALSE NEGATIVE and prune a file that matches. None =
-    * legacy sidecar (v1/v2): map/array blooms were always entry-hashed
-    * there, struct blooms never were — the reader must decline struct
-    * claims for them. */
+    * `entryCols` declares WHICH columns' blooms hold per-ENTRY hashes
+    * rather than whole-value hashes. The hash kind is otherwise invisible
+    * in the bits, and probing a bloom with the other kind of hash would
+    * return a FALSE NEGATIVE and prune a file that matches. */
   final case class Sidecar(
       blooms: Map[String, Bloom],
       entryStats: Map[String, Map[String, (Long, Long)]],
-      entryCols: Option[Set[String]] = None)
+      entryCols: Set[String])
 
   /** ~1% false-positive rate: m ≈ 9.6 bits/item, k = 7. */
   private val BitsPerItem = 10
@@ -97,7 +93,10 @@ object BloomIndex {
       entryStats: Seq[(String, Map[String, (Long, Long)])] = Seq.empty,
       entryCols: Set[String] = Set.empty): Unit =
     SidecarIO.publish(fs, path) { out =>
-      out.writeInt(Magic3)
+      out.writeInt(Magic)
+      // entry keys and entry columns are written sorted: deterministic
+      // bytes whatever the row order (speculative attempts publish the
+      // same file, and a rebuilt sidecar equals the written one)
       out.writeInt(cols.size)
       cols.foreach { case (name, b) =>
         out.writeUTF(name)
@@ -108,20 +107,18 @@ object BloomIndex {
       entryStats.foreach { case (name, keys) =>
         out.writeUTF(name)
         out.writeInt(keys.size)
-        keys.foreach { case (k, (mn, mx)) =>
+        keys.toSeq.sortBy(_._1).foreach { case (k, (mn, mx)) =>
           out.writeUTF(k)
           out.writeLong(mn)
           out.writeLong(mx)
         }
       }
-      // sorted for deterministic bytes (speculative-attempt + rebuild
-      // bit-compat contracts)
       out.writeInt(entryCols.size)
       entryCols.toSeq.sorted.foreach(out.writeUTF)
     }
 
-  /** None for a missing/unreadable/foreign sidecar (legacy files — no
-    * pruning claim can be made). */
+  /** None for a missing/unreadable/foreign sidecar (no pruning claim
+    * can be made). */
   def read(fs: FileSystem, path: Path): Option[Sidecar] =
     try {
       if (!fs.exists(path)) return None
@@ -132,8 +129,7 @@ object BloomIndex {
       val fileLen = fs.getFileStatus(path).getLen
       val in = new DataInputStream(fs.open(path))
       try {
-        val magic = in.readInt()
-        if (magic != Magic && magic != Magic2 && magic != Magic3) return None
+        if (in.readInt() != Magic) return None
         val n = in.readInt()
         if (n < 0 || n > 10000) return None
         val blooms = (0 until n).map { _ =>
@@ -144,28 +140,19 @@ object BloomIndex {
           val words = Array.fill(wordCount)(in.readLong())
           name -> new Bloom(words)
         }.toMap
-        val stats =
-          if (magic == Magic) Map.empty[String, Map[String, (Long, Long)]]
-          else {
-            val nc = in.readInt()
-            if (nc < 0 || nc > 10000) return None
-            (0 until nc).map { _ =>
-              val name = in.readUTF()
-              val nk = in.readInt()
-              if (nk < 0 || nk.toLong * 16 > fileLen) return None
-              name -> (0 until nk).map { _ =>
-                in.readUTF() -> (in.readLong(), in.readLong())
-              }.toMap
-            }.toMap
-          }
-        val entryCols =
-          if (magic != Magic3) None
-          else {
-            val ne = in.readInt()
-            if (ne < 0 || ne > 10000) return None
-            Some((0 until ne).map(_ => in.readUTF()).toSet)
-          }
-        Some(Sidecar(blooms, stats, entryCols))
+        val nc = in.readInt()
+        if (nc < 0 || nc > 10000) return None
+        val stats = (0 until nc).map { _ =>
+          val name = in.readUTF()
+          val nk = in.readInt()
+          if (nk < 0 || nk.toLong * 16 > fileLen) return None
+          name -> (0 until nk).map { _ =>
+            in.readUTF() -> (in.readLong(), in.readLong())
+          }.toMap
+        }.toMap
+        val ne = in.readInt()
+        if (ne < 0 || ne > 10000) return None
+        Some(Sidecar(blooms, stats, (0 until ne).map(_ => in.readUTF()).toSet))
       } finally in.close()
     } catch { case scala.util.control.NonFatal(_) => None }
 

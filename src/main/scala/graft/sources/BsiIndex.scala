@@ -321,9 +321,9 @@ object BsiIndex {
       } finally in.close()
     } catch { case scala.util.control.NonFatal(_) => None }
 
-  /** Streaming per-(file, column) accumulator shared by the write task
-    * and the rebuild job: appends (position, value) pairs for non-null
-    * rows; [[result]] computes min/width and packs the slices. */
+  /** Streaming per-(file, column) accumulator of [[FileIndexBuilder]]:
+    * appends (position, value) pairs for non-null rows; [[result]]
+    * computes min/width and packs the slices. */
   final class BsiBuf {
     private val poss = new scala.collection.mutable.ArrayBuilder.ofLong
     private val vals = new scala.collection.mutable.ArrayBuilder.ofLong
@@ -357,16 +357,6 @@ object BsiIndex {
       }
       Some(BsiCol(mn, width, nonNull, slices))
     }
-  }
-
-  /** Catalyst INTERNAL value of a supported column → Long key order
-    * (Int carries both IntegerType and DateType epoch days). */
-  def internalToLong(v: Any): Long = v match {
-    case i: java.lang.Integer => i.longValue
-    case l: java.lang.Long => l.longValue
-    case s: java.lang.Short => s.longValue
-    case b: java.lang.Byte => b.longValue
-    case other => throw new IllegalStateException(s"non-integral BSI value $other")
   }
 }
 

@@ -228,21 +228,15 @@ class GraftSparkCatalog extends TableCatalog with SupportsNamespaces with Functi
         else { t.deleteConsumer(id); t.commitConsumer(id, next); okRow(true) }
       }),
     "rewrite_file_index" -> new GraftProcedure("rewrite_file_index",
-      // Paimon's rewrite_file_index (S47 + S55): build bloom AND bitmap
-      // sidecars for live files that predate their index options
-      // (legacy / migrated / ALTERed tables) — executor-side jobs, no
-      // data rewritten, no commit (sidecars are derived metadata keyed
-      // to immutable files). Reports the larger of the two counts (each
-      // kind converges independently).
+      // Paimon's rewrite_file_index (S47 + S55 + S66): build every
+      // missing bloom, bitmap and BSI sidecar of live files that predate
+      // their index options (legacy / migrated / ALTERed tables) in one
+      // executor-side job — no data rewritten, no commit (sidecars are
+      // derived metadata keyed to immutable files). Reports the number
+      // of files that got at least one sidecar (0 = nothing to do).
       Seq(pStr("table")), StructType(Seq(
         org.apache.spark.sql.types.StructField("files", org.apache.spark.sql.types.LongType))),
-      in => {
-        val t = loadByName(in.getString(0))
-        val blooms = if (t.bloomIndexCols.nonEmpty) t.rewriteFileIndex() else 0L
-        val bitmaps = if (t.bitmapIndexCols.nonEmpty) t.rewriteBitmapIndex() else 0L
-        val bsis = if (t.bsiIndexCols.nonEmpty) t.rewriteBsiIndex() else 0L
-        InternalRow(math.max(blooms, math.max(bitmaps, bsis)))
-      }),
+      in => InternalRow(loadByName(in.getString(0)).rewriteFileIndex())),
     "expire_partitions" -> new GraftProcedure("expire_partitions",
       // Paimon's expire_partitions (S46): calendar retention — drop
       // every partition whose key value sorts strictly below `upto` as

@@ -1525,239 +1525,53 @@ class GraftTable private (
     }
   }
 
-  /** S47: rebuild missing bloom-filter sidecars (Paimon's
-    * `rewrite_file_index` procedure) for live data files that predate
-    * the index option — legacy commits, option flips via ALTER (S43),
-    * S45-migrated adoptions. ONE Spark job reads the target files where
-    * the rows are (repartitioned so each file's rows land in one task)
-    * and builds the SAME XxHash64 blooms the write path builds: scalar
-    * columns hash one stored value per row (identical count → identical
-    * sizing → a bit-compatible sidecar); map/array columns hash every
-    * non-null entry via the shared MapEntryHashes expression, restoring
-    * subscript EQUALITY pruning. The v2 per-entry range stats need
-    * write-time observation and are NOT reconstructed — a rebuilt
-    * sidecar makes no range claim, which is sound (planning keeps the
-    * file). Sidecars write from the executors; the planner discovers
-    * them lazily by path, so no commit is needed (sidecars are derived
-    * metadata keyed to immutable files, not manifest state). Returns
-    * the number of files indexed. */
-  def rewriteFileIndex(): Long = {
-    // same eligibility gate as the write path (GraftWrite.writeSpec):
-    // nested columns index their ENTRIES, and only when the entry
-    // rendering is provably plan-replayable — rebuilding a bloom the
-    // writer would have REFUSED would hand subscriptMayMatch a filter
-    // whose stored rendering can differ from the plan-side literal
-    // rendering: a bloom false negative, i.e. unsound pruning
-    val cols = bloomIndexCols.filter(fileDataSchema.fieldNames.contains)
-      .filter { c =>
-        schema(c).dataType match {
-          case n @ (_: MapType | _: ArrayType) =>
-            graft.functions.MapEntryHashesImpl.subscriptSafe(n)
-          case _ => true
-        }
-      }
-    require(cols.nonEmpty,
-      s"table at $root declares no (index-eligible) file-index.bloom-filter.columns")
-    val base = latestSnapshotId.getOrElse(0L)
-    if (base == 0L) return 0L
-    val missing = filesAt(base).filter(f =>
-      !fs.exists(new Path(root, f.path + BloomIndex.Suffix)))
-    if (missing.isEmpty) return 0L
-
-    val rootStr = root.stripSuffix("/")
-    // MUST mirror GraftTaskWriter.isNested exactly: the hash KIND per
-    // column (whole-value vs per-entry) is part of the sidecar contract,
-    // and subscript-safe STRUCT columns are entry-hashed by the writer
-    val nested: Array[Boolean] = cols.toArray.map(c => schema(c).dataType match {
-      case _: MapType | _: ArrayType => true
-      case s: StructType => graft.functions.MapEntryHashesImpl.subscriptSafe(s)
-      case _ => false
-    })
-    val entryColSet = cols.zip(nested).collect { case (c, true) => c }.toSet
-    val hashCols = cols.zip(nested).map { case (c, isN) =>
-      if (isN) graft.functions.HashExpr.mapEntryHashes(col(c)).as(s"__h_$c")
-      else xxhash64(col(c)).as(s"__h_$c")
-    }
-    val df = spark.read
-      .option("basePath", s"$rootStr/data")
-      .schema(fileSchema).format(fileFormat)
-      .load(missing.map(f => s"$rootStr/${f.path}"): _*)
-      .select(substring_index(col("_metadata.file_path"), "/", -1).as("__f") +: hashCols: _*)
-
-    val serConf = new org.apache.spark.util.SerializableConfiguration(hadoopConf)
-    val colNames = cols.toArray
-    val relByName = missing.map(f => f.path.substring(f.path.lastIndexOf('/') + 1) -> f.path).toMap
-    // the executor job keys row→file attribution by BASENAME — every
-    // graft write path (and S45 migrate's unique-rename adoption)
-    // guarantees table-wide unique names, but a hand-assembled layout
-    // could collide, which would silently merge two files' blooms; fail
-    // loudly instead
-    require(relByName.size == missing.size,
-      s"duplicate data-file basenames under $root — cannot attribute rows to files: " +
-        missing.map(_.path).groupBy(p => p.substring(p.lastIndexOf('/') + 1))
-          .filter(_._2.size > 1).values.flatten.mkString(", "))
-    val suffix = BloomIndex.Suffix
-    df.repartition(missing.size, col("__f")).foreachPartition {
-      (it: Iterator[Row]) =>
-        val bufs = mutable.HashMap.empty[String, Array[mutable.ArrayBuilder.ofLong]]
-        it.foreach { row =>
-          val arr = bufs.getOrElseUpdate(row.getString(0),
-            Array.fill(colNames.length)(new mutable.ArrayBuilder.ofLong))
-          var i = 0
-          while (i < colNames.length) {
-            if (!row.isNullAt(i + 1)) {
-              if (nested(i)) row.getSeq[Long](i + 1).foreach(arr(i) += _)
-              else arr(i) += row.getLong(i + 1)
-            }
-            i += 1
-          }
-        }
-        if (bufs.nonEmpty) {
-          val fsx = new Path(rootStr).getFileSystem(serConf.value)
-          bufs.foreach { case (fname, colBufs) =>
-            val blooms = colNames.toSeq.zip(colBufs).map { case (c, b) =>
-              val hashes = b.result()
-              c -> BloomIndex.build(hashes, hashes.length)
-            }
-            BloomIndex.write(fsx, new Path(rootStr, relByName(fname) + suffix), blooms,
-              entryCols = entryColSet)
-          }
-        }
-    }
-    // zero-row files produce no executor rows, hence no sidecar above —
-    // write them an empty bloom here (all-zero words: mightContain is
-    // always false, which is exactly sound for a file with no rows), so
-    // the rebuild CONVERGES (a maintenance loop stopping on 0 must not
-    // re-plan the same empty file forever)
-    missing.foreach { f =>
-      val p = new Path(root, f.path + BloomIndex.Suffix)
-      if (!fs.exists(p))
-        BloomIndex.write(fs, p,
-          cols.map(c => c -> BloomIndex.build(Array.empty[Long], 0)),
-          entryCols = entryColSet)
-    }
-    missing.size.toLong
-  }
-
-  /** S55 half of `rewrite_file_index`: rebuild missing BITMAP sidecars
-    * for live files that predate `file-index.bitmap.columns`. Positions
-    * must be the file's physical row order, and a shuffled rebuild job
-    * cannot observe that order by arrival — parquet's
-    * `_metadata.row_index` carries it explicitly, so the rebuild is
-    * parquet-only (orc/avro sidecars come from the write path, which
-    * counts rows itself; a missing sidecar there just means no claim).
-    * The same completeness rules as the writer apply: a file exceeding
-    * MaxDistinct values (or holding an unrenderable value) gets the
-    * column OMITTED, and zero-row files write an empty sidecar so a
-    * maintenance loop converges. Returns the number of files indexed. */
-  def rewriteBitmapIndex(): Long = {
-    val cols = bitmapIndexCols.filter(fileDataSchema.fieldNames.contains)
-      .filter(c => BitmapIndex.supportedType(schema(c).dataType))
-    if (cols.isEmpty) return 0L
-    val base = latestSnapshotId.getOrElse(0L)
-    if (base == 0L) return 0L
-    val missing = filesAt(base).filter(f =>
-      !fs.exists(new Path(root, f.path + BitmapIndex.Suffix)))
-    if (missing.isEmpty) return 0L
-    // non-parquet formats carry no _metadata.row_index, so a rebuild
-    // cannot observe physical row order — degrade to "nothing rebuilt"
-    // (missing sidecars already mean "no claim"; throwing here would
-    // fail the whole CALL sys.rewrite_file_index and discard the
-    // bloom half's completed work)
-    if (fileFormat != "parquet") {
-      org.slf4j.LoggerFactory.getLogger(getClass).warn(
-        s"bitmap index rebuild skipped for ${missing.size} $fileFormat " +
-          s"file(s) under $root: positions require parquet _metadata.row_index; " +
-          "sidecars for this format are written only by the write path")
-      return 0L
-    }
-
-    val rootStr = root.stripSuffix("/")
-    val relByName = missing.map(f => f.path.substring(f.path.lastIndexOf('/') + 1) -> f.path).toMap
-    require(relByName.size == missing.size,
-      s"duplicate data-file basenames under $root — cannot attribute rows to files")
-    val df = spark.read
-      .option("basePath", s"$rootStr/data")
-      .schema(fileSchema).format(fileFormat)
-      .load(missing.map(f => s"$rootStr/${f.path}"): _*)
-      .select(
-        substring_index(col("_metadata.file_path"), "/", -1).as("__f") +:
-          col("_metadata.row_index").as("__pos") +: cols.map(col): _*)
-    val serConf = new org.apache.spark.util.SerializableConfiguration(hadoopConf)
-    val colNames = cols.toArray
-    df.repartition(missing.size, col("__f")).foreachPartition { (it: Iterator[Row]) =>
-      // per file: per column value → positions (unsorted on arrival —
-      // the shuffle breaks row order; sorted before writing)
-      val files = mutable.HashMap.empty[String, BitmapIndex.RebuildAcc]
-      it.foreach { row =>
-        val acc = files.getOrElseUpdate(row.getString(0),
-          new BitmapIndex.RebuildAcc(colNames.length))
-        acc.rows += 1
-        val pos = row.getLong(1)
-        var i = 0
-        while (i < colNames.length) {
-          if (!acc.over(i) && !row.isNullAt(i + 2)) {
-            BitmapIndex.render(row.get(i + 2)) match {
-              case Some(k) =>
-                val m = acc.bufs(i)
-                m.get(k) match {
-                  case Some(b) => b += pos
-                  case None =>
-                    if (m.size >= BitmapIndex.MaxDistinct) { acc.over(i) = true; m.clear() }
-                    else { val b = new mutable.ArrayBuilder.ofLong; b += pos; m.put(k, b) }
-                }
-              case None => acc.over(i) = true; acc.bufs(i).clear()
-            }
-          }
-          i += 1
-        }
-      }
-      if (files.nonEmpty) {
-        val fsx = new Path(rootStr).getFileSystem(serConf.value)
-        files.foreach { case (fname, acc) =>
-          val sidecarCols = colNames.toSeq.zipWithIndex.collect {
-            case (c, i) if !acc.over(i) =>
-              c -> acc.bufs(i).view.mapValues(b => b.result().sorted).toMap
-          }
-          BitmapIndex.write(fsx,
-            new Path(rootStr, relByName(fname) + BitmapIndex.Suffix), acc.rows, sidecarCols)
-        }
-      }
-    }
-    // zero-row files produced no executor rows: write an empty (still
-    // value-complete) sidecar so the rebuild converges
-    missing.foreach { f =>
-      val p = new Path(root, f.path + BitmapIndex.Suffix)
-      if (!fs.exists(p))
-        BitmapIndex.write(fs, p, 0L, cols.map(c => c -> Map.empty[String, Array[Long]]))
-    }
-    missing.size.toLong
-  }
-
-  /** S66 half of `rewrite_file_index`: rebuild missing BSI sidecars for
-    * live files that predate `file-index.bsi.columns`. Same contract as
-    * [[rewriteBitmapIndex]]: positions come from parquet's
-    * `_metadata.row_index` (parquet-only — other formats' sidecars come
-    * from the write path), a column whose range overflows is OMITTED,
-    * zero-row files write an empty sidecar so a maintenance loop
-    * converges. Returns the number of files indexed.
+  /** S47/S55/S66: Paimon's `rewrite_file_index` procedure — build the
+    * missing index sidecars of live data files that predate their index
+    * options (legacy commits, option flips via ALTER (S43), S45-migrated
+    * adoptions). ONE Spark job reads every file missing any configured
+    * sidecar once, repartitioned by file and sorted within the partition
+    * by `_metadata.row_index`, and feeds each file's rows in physical
+    * order through the write path's own [[FileIndexBuilder]], bound to
+    * plain column references — so a rebuilt sidecar of every kind (scalar,
+    * map and struct blooms with entry stats, variant shreds, bitmap, BSI)
+    * is byte-identical to a written one. Only the absent sidecars are
+    * written. A zero-row file runs the same builder with no rows, so a
+    * maintenance loop stopping on 0 converges.
     *
-    * MEMORY BOUND: the rebuild task buffers every (position, value)
+    * The positional kinds (bitmap, BSI) need parquet's
+    * `_metadata.row_index`: on other formats they are skipped with a
+    * WARN (their sidecars come from the write path only; a missing one
+    * means "no claim"), while blooms, which no row order changes, are
+    * still rebuilt. Sidecars write from the executors; the planner
+    * discovers them lazily by path, so no commit is needed (they are
+    * derived metadata keyed to immutable files). Returns the number of
+    * files that got at least one sidecar; 0 when no index is configured.
+    *
+    * MEMORY BOUND: a BSI rebuild task buffers every (position, value)
     * pair of ONE whole file per indexed column (~16 B/row/col in
     * BsiBuf) before packing — bounded in practice because the write
     * path's file-roll policy caps data-file size; a legacy file far
-    * above the roll size is logged at WARN below before the job runs
-    * so an operator can compact first (the alternative — a two-pass
-    * min/max-then-stream-bits pack — is not worth the complexity until
-    * such files exist). */
-  def rewriteBsiIndex(): Long = {
-    val cols = bsiIndexCols.filter(fileDataSchema.fieldNames.contains)
-      .filter(c => BsiIndex.supportedType(schema(c).dataType))
-    if (cols.isEmpty) return 0L
+    * above the roll size is logged at WARN before the job runs so an
+    * operator can compact first. */
+  def rewriteFileIndex(): Long = {
+    val configured = FileIndexBuilder.spec(this, _ => true)
     val base = latestSnapshotId.getOrElse(0L)
-    if (base == 0L) return 0L
-    val missing = filesAt(base).filter(f =>
-      !fs.exists(new Path(root, f.path + BsiIndex.Suffix)))
+    if (configured.isEmpty || base == 0L) return 0L
+    val parquet = fileFormat == "parquet"
+    val spec =
+      if (parquet) configured else configured.copy(bitmapCols = Seq.empty, bsiCols = Seq.empty)
+    val absent = filesAt(base).map(f =>
+      f -> configured.suffixes.filterNot(s => fs.exists(new Path(root, f.path + s))))
+    val log = org.slf4j.LoggerFactory.getLogger(getClass)
+    if (!parquet) {
+      val positional = absent.count(_._2.exists(s => !spec.suffixes.contains(s)))
+      if (positional > 0)
+        log.warn(s"bitmap/BSI index rebuild skipped for $positional $fileFormat " +
+          s"file(s) under $root: positions require parquet _metadata.row_index; " +
+          "sidecars for this format are written only by the write path")
+    }
+    val missing = absent.map { case (f, ks) => f -> ks.filter(spec.suffixes.contains) }
+      .filter(_._2.nonEmpty)
     if (missing.isEmpty) return 0L
     // per-file buffer bound (see Scaladoc): warn on legacy files far
     // beyond the roll policy, whose in-task (pos, value) buffers could
@@ -1765,73 +1579,53 @@ class GraftTable private (
     locally {
       val targetBytes = options.get("target-file-size")
         .map(GraftTable.parseBytes).getOrElse(128L * 1024 * 1024)
-      val oversized = missing.filter(_.sizeBytes > 4 * targetBytes)
+      val oversized = missing.collect {
+        case (f, ks) if ks.contains(BsiIndex.Suffix) && f.sizeBytes > 4 * targetBytes => f
+      }
       if (oversized.nonEmpty)
-        org.slf4j.LoggerFactory.getLogger(getClass).warn(
+        log.warn(
           s"BSI rebuild will buffer ~16 B/row/col per file in one task; " +
             s"${oversized.size} file(s) exceed 4x target-file-size " +
             s"(largest ${oversized.map(_.sizeBytes).max} B, e.g. " +
             s"${oversized.head.path}) — consider compacting before rebuilding")
     }
-    if (fileFormat != "parquet") {
-      org.slf4j.LoggerFactory.getLogger(getClass).warn(
-        s"BSI index rebuild skipped for ${missing.size} $fileFormat " +
-          s"file(s) under $root: positions require parquet _metadata.row_index; " +
-          "sidecars for this format are written only by the write path")
-      return 0L
-    }
+
     val rootStr = root.stripSuffix("/")
-    val relByName = missing.map(f => f.path.substring(f.path.lastIndexOf('/') + 1) -> f.path).toMap
+    def baseName(rel: String): String = rel.substring(rel.lastIndexOf('/') + 1)
+    val relByName = missing.map { case (f, _) => baseName(f.path) -> f.path }.toMap
+    // the executor job keys row→file attribution by BASENAME — every
+    // graft write path (and S45 migrate's unique-rename adoption)
+    // guarantees table-wide unique names, but a hand-assembled layout
+    // could collide, which would silently merge two files' indexes; fail
+    // loudly instead
     require(relByName.size == missing.size,
-      s"duplicate data-file basenames under $root — cannot attribute rows to files")
+      s"duplicate data-file basenames under $root — cannot attribute rows to files: " +
+        missing.map(_._1.path).groupBy(baseName)
+          .filter(_._2.size > 1).values.flatten.mkString(", "))
+    val kindsByName = missing.map { case (f, ks) => baseName(f.path) -> ks }.toMap
+    val cols = (spec.bloomCols ++ spec.variantSpecs.map(_._1) ++ spec.bitmapCols ++
+      spec.bsiCols).distinct
+    val pos = if (parquet) Seq(col("_metadata.row_index").as("__pos")) else Nil
     val df = spark.read
       .option("basePath", s"$rootStr/data")
       .schema(fileSchema).format(fileFormat)
-      .load(missing.map(f => s"$rootStr/${f.path}"): _*)
-      .select(
-        substring_index(col("_metadata.file_path"), "/", -1).as("__f") +:
-          col("_metadata.row_index").as("__pos") +:
-          // dates render as epoch days (unix_date — the renderLong key
-          // order; ANSI forbids a direct date→long cast), integrals widen
-          cols.map { c =>
-            if (schema(c).dataType == org.apache.spark.sql.types.DateType)
-              unix_date(col(c)).cast("long")
-            else col(c).cast("long")
-          }: _*)
+      .load(missing.map { case (f, _) => s"$rootStr/${f.path}" }: _*)
+      .select((substring_index(col("_metadata.file_path"), "/", -1).as("__f") +: pos) ++
+        cols.map(col): _*)
+      .repartition(missing.size, col("__f"))
+      .sortWithinPartitions((col("__f") +: pos.map(_ => col("__pos"))): _*)
+    val rowSchema = df.schema
     val serConf = new org.apache.spark.util.SerializableConfiguration(hadoopConf)
-    val colNames = cols.toArray
-    df.repartition(missing.size, col("__f")).foreachPartition { (it: Iterator[Row]) =>
-      // per file: per column (position, value) pairs + row count; the
-      // shuffle breaks arrival order but slice words are positional, so
-      // no sort is needed (unlike the bitmap's posting lists)
-      class Acc { val bufs = Array.fill(colNames.length)(new BsiIndex.BsiBuf); var rows = 0L }
-      val files = mutable.HashMap.empty[String, Acc]
-      it.foreach { row =>
-        val acc = files.getOrElseUpdate(row.getString(0), new Acc)
-        acc.rows += 1
-        val pos = row.getLong(1)
-        var i = 0
-        while (i < colNames.length) {
-          if (!row.isNullAt(i + 2)) acc.bufs(i).add(pos, row.getLong(i + 2))
-          i += 1
-        }
-      }
-      if (files.nonEmpty) {
-        val fsx = new Path(rootStr).getFileSystem(serConf.value)
-        files.foreach { case (fname, acc) =>
-          BsiIndex.write(fsx,
-            new Path(rootStr, relByName(fname) + BsiIndex.Suffix), acc.rows,
-            colNames.toSeq.zip(acc.bufs.toSeq).map { case (c, b) => c -> b.result(acc.rows) })
-        }
-      }
-    }
-    // zero-row files produced no executor rows: write an empty (still
-    // complete) sidecar so the rebuild converges
-    missing.foreach { f =>
-      val p = new Path(root, f.path + BsiIndex.Suffix)
-      if (!fs.exists(p))
-        BsiIndex.write(fs, p, 0L,
-          cols.map(c => c -> Some(BsiIndex.BsiCol(0L, 0, Array.empty, Array.empty))))
+    val indexed: Set[String] = df.queryExecution.toRdd.mapPartitions(
+      FileIndexBuilder.rebuildPartition(spec, rowSchema, parquet, rootStr, relByName,
+        kindsByName, serConf)).collect().toSet
+    // zero-row files produce no executor rows: the same builder writes
+    // their sidecars with 0 rows (empty blooms claim "no value", empty
+    // posting lists and slices claim "no row" — exact for no rows)
+    val empty = missing.filterNot { case (f, _) => indexed(baseName(f.path)) }
+    if (empty.nonEmpty) {
+      val builder = new FileIndexBuilder(spec, FileIndexBuilder.bind(rowSchema))
+      empty.foreach { case (f, ks) => builder.newFile().write(fs, new Path(root, f.path), ks) }
     }
     missing.size.toLong
   }
@@ -2193,92 +1987,22 @@ class GraftTable private (
     * index entries per partition, which under moves is a soft bound on
     * bucket fill — a placement approximation, never a correctness issue
     * (merges key on the real primary key). */
-  /** Vintage-2 tables ([[GraftTable.EscapeVintageKey]] stamped at
-    * CREATE) render fully injectively; unstamped tables predate the
-    * stamp and are classified ONCE per loaded instance from their own
-    * persisted index entries (see [[inferEscapeVintage]]) — a fixed
-    * default in either direction mis-renders one era: raw-'%' legacy
-    * tables must keep '%' raw, but tables written by the intermediate
-    * escape-without-stamp build hold %25-escaped entries and a legacy
-    * rendering would miss every '%'-bearing entry on the next upsert
-    * (fresh mint → bucket-local stale resurrection, the mirror of the
-    * bug the vintage scheme guards against). */
-  private lazy val escapeV2: Boolean =
-    options.getOrElse(GraftTable.EscapeVintageKey, inferEscapeVintage()) == "2"
-
-  /** Classify an UNSTAMPED table's escape vintage from the '%' shapes in
-    * its persisted dynamic-bucket index (bounded metadata: distinct part
-    * strings ≤ partition count, the same driver-side scale as the
-    * occupancy collect):
-    *  - any '%' NOT forming %25/%2F/%5F ⇒ only the raw legacy encoder
-    *    writes those ⇒ vintage 1. (A mixed-era chain keeps the
-    *    majority-legacy reading; its escape-era entries need the
-    *    documented manual index rebuild — both readings are wrong for
-    *    one era's entries there, and legacy preserves the older data.)
-    *  - otherwise any "%25" ⇒ the escaping-era encoder ⇒ vintage 2 (a
-    *    legacy value LITERALLY containing "%25" was already ambiguous
-    *    under the legacy contract; the injective reading round-trips).
-    *  - no '%' anywhere, incl. an empty index ⇒ both vintages render
-    *    every existing entry identically ⇒ vintage 2, making future
-    *    '%' values injective from here on.
-    * The verdict is a stable fixpoint without a persisted stamp:
-    * vintage 2 never writes a raw '%', vintage 1 never writes a new
-    * escape, so re-inference on any later load reaches the same answer.
-    */
-  private def inferEscapeVintage(): String = {
-    if (partitionKeys.isEmpty) return "2" // part is always "" — no '%' possible
-    val chain = latestSnapshotId.map(readSnapshot).map(bucketIndexChainOf).getOrElse(Seq.empty)
-    if (chain.isEmpty) return "2"
-    // every chain entry (including superseded ones) was written by SOME
-    // era's encoder — read them all raw, no resolution needed
-    val parts = spark.read.schema(IdxSchema)
-      .parquet(chain.map(p => s"$root/$p"): _*)
-      .select(col("part")).filter(col("part").contains("%")).distinct()
-      .collect().map(_.getString(0))
-    val rawPct = java.util.regex.Pattern.compile("%(?!25|2F|5F)")
-    if (parts.exists(p => rawPct.matcher(p).find())) "1"
-    else {
-      // the '%25-present ⇒ vintage 2' branch is inherently ambiguous for
-      // a legacy value LITERALLY containing "%25" — surface the verdict
-      // and its evidence so a misclassified table is diagnosable before
-      // the next upsert mints fresh buckets under the new rendering
-      if (parts.nonEmpty)
-        org.slf4j.LoggerFactory.getLogger(getClass).warn(
-          s"unstamped table at $root: inferred escape vintage 2 from " +
-            s"escape-only '%' shapes in ${parts.length} index part string(s) " +
-            s"(e.g. ${parts.take(3).mkString(", ")}); if these are LEGACY " +
-            s"values literally containing %25/%2F/%5F, stamp " +
-            s"${GraftTable.EscapeVintageKey}=1 and rebuild the bucket index")
-      "2"
-    }
-  }
-
   /** Injective rendering of ONE partition value inside the index's
-    * `k=v/k2=v2` part string: '%'→%25 (vintage 2 only) and '/'→%2F so a
-    * value can never split or forge a segment, and a value LITERALLY
-    * equal to the null sentinel escapes its first '_' (→%5F) so only
-    * true NULLs render as "__GRAFT_NULL__". Values without %, / or the
-    * sentinel render byte-identically across vintages AND to the
-    * pre-escape scheme, so existing persisted index entries keep their
-    * identity. Legacy vintage keeps '%' raw (pre-escape identity for
-    * '%' values, which always rendered fine); its known residual
-    * ambiguity — a value literally containing "%2F"/"%5F" collides with
-    * an escape — is exactly the pre-escape contract. */
+    * `k=v/k2=v2` part string: '%'→%25 and '/'→%2F so a value can never
+    * split or forge a segment, and a value LITERALLY equal to the null
+    * sentinel escapes its first '_' (→%5F) so only true NULLs render as
+    * "__GRAFT_NULL__". */
   private def escPartVal(c: Column): Column = {
-    val pct = if (escapeV2) regexp_replace(c, lit("%"), lit("%25")) else c
-    val e = regexp_replace(pct, lit("/"), lit("%2F"))
+    val e = regexp_replace(regexp_replace(c, lit("%"), lit("%25")), lit("/"), lit("%2F"))
     when(e === "__GRAFT_NULL__", lit("%5F_GRAFT_NULL__")).otherwise(e)
   }
 
-  /** Inverse of [[escPartVal]]. Vintage-2 decoding is unambiguous:
-    * every '%' is followed by exactly one of 25/2F/5F, and the inserted
-    * '/', '_' and '%' can never re-form an escape sequence. Legacy
-    * decoding must NOT decode %25 (never produced by its encoder). */
-  private def unescPartVal(c: Column): Column = {
-    val base = regexp_replace(regexp_replace(
-      c, lit("%2F"), lit("/")), lit("%5F"), lit("_"))
-    if (escapeV2) regexp_replace(base, lit("%25"), lit("%")) else base
-  }
+  /** Inverse of [[escPartVal]], unambiguous: every '%' is followed by
+    * exactly one of 25/2F/5F, and the inserted '/', '_' and '%' can
+    * never re-form an escape sequence. */
+  private def unescPartVal(c: Column): Column =
+    regexp_replace(regexp_replace(regexp_replace(
+      c, lit("%2F"), lit("/")), lit("%5F"), lit("_")), lit("%25"), lit("%"))
 
   /** The `k=v/k2=v2` part string for the incoming row, value-escaped. */
   private def renderedPart: Column =
@@ -2839,26 +2563,19 @@ class GraftTable private (
   /** Bitmap pruning of one filter against one file — exact: a key
     * absent from a PRESENT column map proves no row matches. Missing
     * sidecars/columns (legacy files, overflowed cardinality) and
-    * unrenderable literals keep the file; non-equality shapes make no
-    * claim. Residual-safe either way (the Filter stays in the plan). */
-  private def bitmapMayMatch(fl: org.apache.spark.sql.sources.Filter, f: FileMeta): Boolean = {
-    import org.apache.spark.sql.sources.{EqualNullSafe, EqualTo, In}
-    val cols = bitmapIndexCols.toSet
-    def mayMatch(c: String, values: Seq[Any]): Boolean =
-      bitmapKeysOf(f).flatMap { case (_, cols) =>
-        val rendered = values.map(BitmapIndex.render)
-        if (rendered.exists(_.isEmpty)) None // unrenderable literal: no claim
-        else cols.get(c).map(keys => rendered.flatten.exists(keys.contains))
-      }.getOrElse(true)
-    fl match {
-      case EqualTo(c, v) if cols(c) && v != null => mayMatch(c, Seq(v))
-      case EqualNullSafe(c, v) if cols(c) && v != null => mayMatch(c, Seq(v))
-      case In(c, vs) if cols(c) && vs != null =>
-        val nn = vs.filter(_ != null)
-        nn.isEmpty || mayMatch(c, nn)
+    * unrenderable literals keep the file; non-equality shapes and
+    * all-NULL IN lists make no claim. Residual-safe either way (the
+    * Filter stays in the plan). */
+  private def bitmapMayMatch(fl: org.apache.spark.sql.sources.Filter, f: FileMeta): Boolean =
+    BitmapIndex.filterValues(fl) match {
+      case Some((c, values)) if values.nonEmpty && bitmapIndexCols.contains(c) =>
+        bitmapKeysOf(f).flatMap { case (_, cols) =>
+          val rendered = values.map(BitmapIndex.render)
+          if (rendered.exists(_.isEmpty)) None // unrenderable literal: no claim
+          else cols.get(c).map(keys => rendered.flatten.exists(keys.contains))
+        }.getOrElse(true)
       case _ => true
     }
-  }
 
   // sidecar (blooms + entry stats) memoized per data-file path (files
   // are immutable)
@@ -2870,33 +2587,19 @@ class GraftTable private (
 
   /** Bloom pruning of one filter against one file: false ONLY when the
     * sidecar proves no stored value hashes to the literal (blooms have
-    * no false negatives). Missing sidecars and non-equality shapes keep
-    * the file. */
-  private def bloomMayMatch(fl: org.apache.spark.sql.sources.Filter, f: FileMeta): Boolean = {
-    import org.apache.spark.sql.sources.{EqualNullSafe, EqualTo, In}
-    val cols = bloomIndexCols.toSet
-    // columns the writer ENTRY-hashes hold no whole-value hashes — a
-    // whole-value probe against them would false-negative (mis-prune)
-    def entryHashedType(c: String): Boolean = schema(c).dataType match {
-      case _: MapType | _: ArrayType => true
-      case s: StructType => graft.functions.MapEntryHashesImpl.subscriptSafe(s)
-      case _ => false
-    }
-    def probe(c: String, v: Any): Boolean =
-      if (entryHashedType(c)) true
-      else sidecarOf(f).flatMap(_.blooms.get(c)) match {
-        case Some(b) => BloomIndex.hashLiteral(v, schema(c).dataType).forall(b.mightContain)
-        case None => true
-      }
-    fl match {
-      case EqualTo(c, v) if cols(c) && v != null => probe(c, v)
-      case EqualNullSafe(c, v) if cols(c) && v != null => probe(c, v)
-      case In(c, vs) if cols(c) && vs != null =>
-        val nn = vs.filter(_ != null)
-        nn.isEmpty || nn.exists(probe(c, _))
+    * no false negatives). Missing sidecars, entry-hashed blooms (a
+    * whole-value probe would false-negative), non-equality shapes and
+    * all-NULL IN lists keep the file. */
+  private def bloomMayMatch(fl: org.apache.spark.sql.sources.Filter, f: FileMeta): Boolean =
+    BitmapIndex.filterValues(fl) match {
+      case Some((c, values)) if values.nonEmpty && bloomIndexCols.contains(c) =>
+        sidecarOf(f) match {
+          case Some(sc) if !sc.entryCols.contains(c) => sc.blooms.get(c).forall(b =>
+            values.exists(v => BloomIndex.hashLiteral(v, schema(c).dataType).forall(b.mightContain)))
+          case _ => true
+        }
       case _ => true
     }
-  }
 
   /** Manifest planning shared by the library read path and the V2 scan:
     * partition prune → bucket prune → min/max data skipping → bloom
@@ -2956,27 +2659,17 @@ class GraftTable private (
         !variantIndexSpecs.exists { case (c, paths) => c == p.col && paths.contains(p.key) })
       return true
     sidecarOf(f) match {
-      case None => true // legacy file without a sidecar
+      case None => true // file without a (readable) sidecar
       case Some(sc) =>
-        // only claim when the sidecar's bloom for this column provably
-        // holds ENTRY hashes: v3 sidecars declare it (variant shreds,
-        // S68, exist only as declared v3 entries); v1/v2 sidecars
-        // predate the declaration and always entry-hashed maps/arrays
-        // but NEVER structs (whole-value hashes there — an entry probe
-        // against them would false-negative and prune a matching file)
-        val entryHashed = sc.entryCols match {
-          case Some(declared) => declared.contains(p.col)
-          case None => schema(p.col).dataType match {
-            case _: MapType | _: ArrayType => true
-            case _ => false
-          }
-        }
-        if (!entryHashed) true
+        // only claim when the sidecar declares this column's bloom
+        // ENTRY-hashed: an entry probe against whole-value hashes would
+        // false-negative and prune a matching file
+        if (!sc.entryCols.contains(p.col)) true
         else if (p.op == "=")
           sc.blooms.get(p.col).forall(
             _.mightContain(graft.functions.MapEntryHashesImpl.hashEntry(p.key, p.value)))
         else sc.entryStats.get(p.col) match {
-          case None => true // no stats claim (overflow / non-integral / legacy)
+          case None => true // no stats claim (key-cap overflow / non-integral)
           case Some(stats) => stats.get(p.key) match {
             case None => false // key never present in this file
             case Some((mn, mx)) =>
@@ -3592,22 +3285,17 @@ class GraftTable private (
   def deleteConsumer(consumerId: String): Boolean =
     consumerFiles(consumerId).map { case (p, _) => fs.delete(p, false) }.exists(identity)
 
-  /** This id's pin files as (path, version). Matched EXACTLY —
-    * `consumer-<id>-<n>.json` plus the unversioned `consumer-<id>.json`
-    * vintage (version 0) — so ids where one is a '-'-prefix of another
+  /** This id's pin files `consumer-<id>-<n>.json` as (path, version).
+    * Matched EXACTLY, so ids where one is a '-'-prefix of another
     * ("job" / "job-eu", both legal) never collide. */
   private def consumerFiles(consumerId: String): Seq[(Path, Long)] = {
     val dir = new Path(root, consumerDirRel)
     if (!fs.exists(dir)) return Seq.empty
     val versioned = s"consumer-${java.util.regex.Pattern.quote(consumerId)}-(\\d+)\\.json".r
-    val legacy = s"consumer-$consumerId.json"
-    fs.listStatus(dir).toSeq.map(_.getPath).flatMap { p =>
-      p.getName match {
-        case versioned(v) => Some((p, v.toLong))
-        case n if n == legacy => Some((p, 0L))
-        case _ => None
-      }
-    }
+    fs.listStatus(dir).toSeq.map(_.getPath).flatMap(p => p.getName match {
+      case versioned(v) => Some((p, v.toLong))
+      case _ => None
+    })
   }
 
   def consumers: Seq[ConsumerMeta] = {
@@ -3890,14 +3578,10 @@ class GraftTable private (
       val st = it.next()
       if (st.isFile) {
         val rel = st.getPath.toString.stripPrefix(rootQ).stripPrefix("/")
-        // an index sidecar (bloom/bitmap) lives and dies with its data
-        // file: it is orphaned iff the data file it indexes is
-        // unreferenced
-        val base =
-          if (rel.endsWith(BloomIndex.Suffix)) rel.dropRight(BloomIndex.Suffix.length)
-          else if (rel.endsWith(BitmapIndex.Suffix)) rel.dropRight(BitmapIndex.Suffix.length)
-          else if (rel.endsWith(BsiIndex.Suffix)) rel.dropRight(BsiIndex.Suffix.length)
-          else rel
+        // an index sidecar lives and dies with its data file: it is
+        // orphaned iff the data file it indexes is unreferenced
+        val base = FileIndexBuilder.Suffixes.find(rel.endsWith)
+          .map(sfx => rel.dropRight(sfx.length)).getOrElse(rel)
         // >= so ttlMs=0 means "all unreferenced": with strict >, a file
         // whose modification time lands in the SAME millisecond as `now`
         // survives a ttl-0 sweep (observed as a suite flake — data file
@@ -3942,15 +3626,8 @@ class GraftTable private (
   }
 
   /** Delete a data file together with its index sidecars (best-effort). */
-  private def deleteDataFile(rel: String): Unit = {
-    try fs.delete(new Path(root, rel), false) catch { case _: java.io.IOException => () }
-    try fs.delete(new Path(root, rel + BloomIndex.Suffix), false)
-    catch { case _: java.io.IOException => () }
-    try fs.delete(new Path(root, rel + BitmapIndex.Suffix), false)
-    catch { case _: java.io.IOException => () }
-    try fs.delete(new Path(root, rel + BsiIndex.Suffix), false)
-    catch { case _: java.io.IOException => () }
-  }
+  private def deleteDataFile(rel: String): Unit =
+    FileIndexBuilder.deleteWithSidecars(fs, new Path(root, rel))
 
   // ---- schema evolution ----------------------------------------------
 
@@ -4112,13 +3789,6 @@ object GraftTable {
   // into rewritten files (appended files derive ids positionally)
   val RowIdCol = "__row_id"
 
-  /** Table option stamping the dynamic-bucket index value-escaping
-    * vintage at CREATE: "2" = fully-injective rendering ('%', '/' and
-    * the null sentinel escaped); absent/"1" = legacy rendering ('%'
-    * kept raw so pre-escape persisted index entries keep matching —
-    * only '/'-and-sentinel values were ever broken under it, and those
-    * stay fixed in both vintages). */
-  val EscapeVintageKey = "index.value-escape"
   val RowSeqCol = "__row_seq"
   /** Data-column names a row-tracking table may not use: they would
     * shadow the lineage metadata columns (S65). */
@@ -4331,15 +4001,7 @@ object GraftTable {
     fs.mkdirs(new Path(root, "snapshot"))
     val fields = if (stampIds) stampFieldIds(schema) else StructType(
       schema.fields.map(f => f.copy(metadata = org.apache.spark.sql.types.Metadata.empty)))
-    // stamp the dynamic-bucket index value-escaping vintage at birth:
-    // tables created from here on render '%' escaped (fully injective
-    // part strings); unstamped (pre-existing) tables keep the legacy
-    // '%'-unescaped rendering so their persisted index entries keep
-    // matching — see escPartVal
-    val opts =
-      if (options.contains(EscapeVintageKey)) options
-      else options + (EscapeVintageKey -> "2")
-    val meta = SchemaMeta(0L, fields.json, partitionKeys, primaryKeys, opts)
+    val meta = SchemaMeta(0L, fields.json, partitionKeys, primaryKeys, options)
     writeString(fs, new Path(root, "schema/schema-0.json"), mapper.writeValueAsString(meta))
     new GraftTable(spark, root, meta)
   }

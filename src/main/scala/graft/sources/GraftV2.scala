@@ -869,13 +869,9 @@ final class GraftReplaceBatchWrite(
     // deletion entirely (orphan GC over corruption).
     val live = table.publishedDataPaths.getOrElse(return)
     messages.toSeq.filter(_ != null).flatMap { case GraftCommitMessage(f) => f }
-      .filterNot(f => live.contains(f.path)).foreach { f =>
-        try {
-          fsys.delete(new org.apache.hadoop.fs.Path(table.root, f.path), false)
-          fsys.delete(new org.apache.hadoop.fs.Path(table.root, f.path + BloomIndex.Suffix), false)
-          fsys.delete(new org.apache.hadoop.fs.Path(table.root, f.path + BitmapIndex.Suffix), false)
-        } catch { case _: java.io.IOException => () }
-      }
+      .filterNot(f => live.contains(f.path))
+      .foreach(f => FileIndexBuilder.deleteWithSidecars(fsys,
+        new org.apache.hadoop.fs.Path(table.root, f.path)))
   }
 }
 

@@ -53,10 +53,6 @@ final case class GraftWriteSpec(
     // this task writes is a sorted run (any subsequence of a sorted
     // stream is sorted), recorded in FileMeta for the streaming merge
     keySorted: Boolean = false,
-    // columns with a per-file bloom-filter sidecar (file-index.bloom-
-    // filter.columns): the task hashes each stored value and writes
-    // <file>.bfidx on close — see BloomIndex
-    bloomCols: Seq[String] = Seq.empty,
     // S48 dynamic bucket mode: rows arrive with a PRE-ASSIGNED bucket in
     // this writeSchema column (computed driver-plan-side from the
     // key-hash→bucket index); the writer routes by it and never stores
@@ -75,22 +71,10 @@ final case class GraftWriteSpec(
     // by the merge, so rejecting a NULL placeholder there would break
     // the documented API (ADVICE r18)
     pkCols: Seq[String] = Seq.empty,
-    // columns with a per-file bitmap sidecar (file-index.bitmap.columns,
-    // S55): the task records value → ascending row positions and writes
-    // <file>.bmidx on close — see BitmapIndex
-    bitmapCols: Seq[String] = Seq.empty,
-    // columns with a per-file bit-slice sidecar (file-index.bsi.columns,
-    // S66): the task records (position, value) pairs and packs the bit
-    // slices into <file>.bsidx on close — see BsiIndex
-    bsiCols: Seq[String] = Seq.empty,
-    // S68 variant shredding (file-index.variant.columns): per STRING
-    // JSON column, the configured `$.name` paths — each row contributes
-    // the entry hash of the raw extracted text (equality claims) and,
-    // when the text parses as a plain integral token, the per-path
-    // (min, max) bound (range claims); any non-null unparsable value
-    // widens that path's bounds to the full Long range — present but
-    // claiming nothing (see GraftTable.variantIndexSpecs)
-    variantSpecs: Seq[(String, Seq[String])] = Seq.empty)
+    // the index sidecars each written file gets (bloom, variant shreds,
+    // bitmap, BSI), computed by a FileIndexBuilder bound to the stored
+    // values; empty = no sidecar and no per-row index work
+    index: FileIndexSpec = FileIndexSpec())
 
 object GraftWrite {
 
@@ -151,23 +135,7 @@ object GraftWrite {
       notNullCols = table.schema.fields.filterNot(_.nullable).map(_.name).toSeq
         .filter(writeSchema.fieldNames.contains),
       pkCols = table.primaryKeys.filter(writeSchema.fieldNames.contains),
-      bloomCols = table.bloomIndexCols.filter(writeSchema.fieldNames.contains)
-        .filter { c =>
-          table.schema(c).dataType match {
-            // map/array columns index their ENTRIES (subscript pruning)
-            // and only when entry rendering is provably plan-replayable
-            case n @ (_: org.apache.spark.sql.types.MapType |
-                      _: org.apache.spark.sql.types.ArrayType) =>
-              graft.functions.MapEntryHashesImpl.subscriptSafe(n)
-            case _ => true
-          }
-        },
-      bitmapCols = table.bitmapIndexCols.filter(writeSchema.fieldNames.contains)
-        .filter(c => BitmapIndex.supportedType(table.schema(c).dataType)),
-      bsiCols = table.bsiIndexCols.filter(writeSchema.fieldNames.contains)
-        .filter(c => BsiIndex.supportedType(table.schema(c).dataType)),
-      variantSpecs = table.variantIndexSpecs
-        .filter { case (c, _) => writeSchema.fieldNames.contains(c) })
+      index = FileIndexBuilder.spec(table, writeSchema.fieldNames.contains))
   }
 
   /** mapPartitions body for the library write path (static method so the
@@ -187,8 +155,8 @@ object GraftWrite {
 }
 
 /** Growable primitive long buffer (no boxing on the per-row path) —
-  * shared by the task writer's sidecar builders (1024 initial: files
-  * hold many positions) and the delta writer's per-file delete buffers
+  * shared by the file-index builder (1024 initial: files hold many
+  * hashes and positions) and the delta writer's per-file delete buffers
   * (16 initial: sparse changes touch many files with few rows each). */
 private[sources] final class LongBuf(initial: Int = 1024) {
   var arr = new Array[Long](initial)
@@ -230,8 +198,8 @@ final class GraftTaskWriter(spec: GraftWriteSpec, taskUniq: String) {
   }
 
   /** Stored value of a write-schema column (CHAR pad / VARCHAR truncate
-    * applied) — shared by the data projection and the bloom hashes, so
-    * the index always hashes exactly the bytes the file holds. */
+    * applied) — shared by the data projection and the file index, so
+    * the index always covers exactly the bytes the file holds. */
   private def storedValue(name: String): Expression =
     spec.charPad.get(name)
       .map(n => StringRPad(ref(name), Literal(n), Literal(" ")): Expression)
@@ -251,204 +219,10 @@ final class GraftTaskWriter(spec: GraftWriteSpec, taskUniq: String) {
     else storedValue(f.name)
   })
 
-  // one XxHash64 per indexed column, over the stored (padded) value —
-  // the planner hashes predicate literals with the same expression.
-  // Map columns contribute an array of per-ENTRY hashes instead (the
-  // subscript file index; see MapEntryHashes).
-  private def isNested(c: String): Boolean = ref(c).dataType match {
-    case _: org.apache.spark.sql.types.MapType => true
-    case _: org.apache.spark.sql.types.ArrayType => true
-    // struct columns index (field, value) entries only when some leaf is
-    // rendering-safe; otherwise they keep the whole-value hash
-    case s: org.apache.spark.sql.types.StructType =>
-      graft.functions.MapEntryHashesImpl.subscriptSafe(s)
-    case _ => false
-  }
-  private val bloomIsMap: Array[Boolean] = spec.bloomCols.toArray.map(isNested)
-  private val bloomProj: Option[UnsafeProjection] =
-    if (spec.bloomCols.isEmpty) None
-    else Some(UnsafeProjection.create(spec.bloomCols.toIndexedSeq.map { c =>
-      if (isNested(c))
-        graft.functions.MapEntryHashes(ref(c)): Expression
-      else
-        new org.apache.spark.sql.catalyst.expressions.XxHash64(Seq(storedValue(c))): Expression
-    }))
-
-  // S55 bitmap index: STORED values (pad/truncate applied) of the
-  // configured low-cardinality columns, rendered per row with the same
-  // BitmapIndex.render convention the planner applies to predicate
-  // literals; the recorded position is the file's physical row order.
-  private val bitmapProj: Option[UnsafeProjection] =
-    if (spec.bitmapCols.isEmpty) None
-    else Some(UnsafeProjection.create(spec.bitmapCols.toIndexedSeq.map(storedValue)))
-  private val bitmapTypes: Array[org.apache.spark.sql.types.DataType] =
-    spec.bitmapCols.toArray.map(c => storedValue(c).dataType)
-
-  // S66 BSI index: raw integral values of the configured columns
-  // (dates are epoch-day ints internally — BsiIndex.renderLong's key
-  // order); the recorded position is the file's physical row order.
-  private val bsiProj: Option[UnsafeProjection] =
-    if (spec.bsiCols.isEmpty) None
-    else Some(UnsafeProjection.create(spec.bsiCols.toIndexedSeq.map(ref)))
-  // typed accessors avoid per-row boxing on the hot write path:
-  // 0 = Int/Date, 1 = Long, 2 = Short, 3 = Byte
-  private val bsiTypeCodes: Array[Int] = spec.bsiCols.toArray.map(c => ref(c).dataType match {
-    case org.apache.spark.sql.types.IntegerType | org.apache.spark.sql.types.DateType => 0
-    case org.apache.spark.sql.types.LongType => 1
-    case org.apache.spark.sql.types.ShortType => 2
-    case org.apache.spark.sql.types.ByteType => 3
-    case other => throw new IllegalStateException(s"unsupported BSI type $other")
-  })
-
-  // S68 variant shredding: one flat (column ordinal into variantSpecs,
-  // path) list; the projection yields TWO fields per entry — the RAW
-  // extracted text (GetJsonObject, hashed with the shared entry-hash
-  // convention for equality claims) and its TRY-cast Long (range-stat
-  // bounds; a non-null text that fails the cast INVALIDATES the
-  // path's stats to the full Long range — the path then claims nothing,
-  // so a stats prune can never disagree with variant_get's numeric cast
-  // or suppress its error). Cost: one JSON-path evaluation per
-  // (row, path) — paid only on tables that opt into the option.
-  private val variantFlat: Seq[(Int, String)] =
-    spec.variantSpecs.zipWithIndex.flatMap { case ((_, paths), i) => paths.map(i -> _) }
-  private val variantProj: Option[UnsafeProjection] =
-    if (variantFlat.isEmpty) None
-    else Some(UnsafeProjection.create(variantFlat.flatMap { case (ci, p) =>
-      val raw = org.apache.spark.sql.catalyst.expressions.GetJsonObject(
-        storedValue(spec.variantSpecs(ci)._1), Literal(p))
-      Seq(raw,
-        Cast(raw, org.apache.spark.sql.types.LongType, None,
-          org.apache.spark.sql.catalyst.expressions.EvalMode.TRY): Expression)
-    }.toIndexedSeq))
-
-  /** Per-(file, column) value → ascending positions. A non-null value
-    * that fails to render (over-long) OVERFLOWS the whole column — a
-    * silently skipped value would break the "absent key proves no row"
-    * claim. Nulls are skipped soundly (no equality literal matches
-    * null, and IS NULL pruning is S39's null counts). */
-  private final class BitmapBuf {
-    val m = mutable.HashMap[String, LongBuf]()
-    var overflow = false
-    // last-value memo: low-cardinality columns repeat (and often
-    // cluster), so most rows skip the render (String + toString
-    // allocations) entirely. UTF8Strings from the projection point into
-    // a reused buffer — the memo holds a COPY.
-    private var lastRaw: Any = _
-    private var lastKey: String = _
-    def addRaw(v: Any, pos: Long): Unit = {
-      if (overflow) return
-      if (lastRaw != null && lastRaw == v) { add(lastKey, pos); return }
-      BitmapIndex.render(v) match {
-        case Some(k) =>
-          lastRaw = v match {
-            case u: org.apache.spark.unsafe.types.UTF8String => u.copy()
-            case x => x
-          }
-          lastKey = k
-          add(k, pos)
-        case None => invalidate() // over-long value
-      }
-    }
-    def add(key: String, pos: Long): Unit = {
-      if (overflow) return
-      m.get(key) match {
-        case Some(b) => b.add(pos)
-        case None =>
-          if (m.size >= BitmapIndex.MaxDistinct) { overflow = true; m.clear() }
-          else { val b = new LongBuf; b.add(pos); m.put(key, b) }
-      }
-    }
-    def invalidate(): Unit = { overflow = true; m.clear() }
-  }
-
-  // Per-entry min/max collection for nested bloom columns whose map
-  // value / array element type is integral — the RANGE half of subscript
-  // pruning (`props['k'] > 5`, ref range_filters_on_subscripts_enabled):
-  // the bloom entry hashes can only answer equality, so the sidecar's v2
-  // format adds per-(entry key) (min, max) bounds. Entry keys render with
-  // the same toString convention the hashes use. A file whose column
-  // exceeds MaxEntryStatKeys distinct keys writes NO stats for it (an
-  // incomplete key set would turn "key absent → prune" unsound).
-  private val MaxEntryStatKeys = 64
-  private def integralType(dt: org.apache.spark.sql.types.DataType): Boolean = dt match {
-    case org.apache.spark.sql.types.IntegerType | org.apache.spark.sql.types.LongType |
-         org.apache.spark.sql.types.ShortType | org.apache.spark.sql.types.ByteType => true
-    case _ => false
-  }
-  /** (bloom col name, writeSchema ordinal, column type) for each nested
-    * bloom column eligible for entry range stats. */
-  private val entryStatSpecs: Seq[(String, Int, org.apache.spark.sql.types.DataType)] =
-    spec.bloomCols.filter { c =>
-      ref(c).dataType match {
-        case m: org.apache.spark.sql.types.MapType => integralType(m.valueType)
-        case a: org.apache.spark.sql.types.ArrayType => integralType(a.elementType)
-        // struct: integral leaves get (field name → min/max) range stats
-        case s: org.apache.spark.sql.types.StructType =>
-          s.fields.exists(f => integralType(f.dataType))
-        case _ => false
-      }
-    }.map(c => (c, spec.writeSchema.fieldIndex(c), ref(c).dataType))
-
-  private final class EntryStatBuf {
-    val m = mutable.HashMap[String, Array[Long]]() // key -> [min, max]
-    var overflow = false
-    def add(key: String, v: Long): Unit = {
-      if (overflow) return
-      m.get(key) match {
-        case Some(b) =>
-          if (v < b(0)) b(0) = v
-          if (v > b(1)) b(1) = v
-        case None =>
-          if (m.size >= MaxEntryStatKeys) { overflow = true; m.clear() }
-          else m.put(key, Array(v, v))
-      }
-    }
-  }
-
-  private def asLong(v: Any): Long = v match {
-    case i: java.lang.Integer => i.longValue
-    case l: java.lang.Long => l.longValue
-    case s: java.lang.Short => s.longValue
-    case b: java.lang.Byte => b.longValue
-    case other => throw new IllegalStateException(s"non-integral entry value $other")
-  }
-
-  private def collectEntryStats(row: InternalRow, o: Open): Unit = {
-    var s = 0
-    while (s < entryStatSpecs.length) {
-      val (_, ord, dt) = entryStatSpecs(s)
-      if (!row.isNullAt(ord)) dt match {
-        case m: org.apache.spark.sql.types.MapType =>
-          val md = row.getMap(ord)
-          val ks = md.keyArray(); val vs = md.valueArray()
-          var i = 0
-          while (i < md.numElements()) {
-            if (!vs.isNullAt(i)) // null values can never match a subscript predicate
-              o.entryStatBufs(s).add(ks.get(i, m.keyType).toString, asLong(vs.get(i, m.valueType)))
-            i += 1
-          }
-        case a: org.apache.spark.sql.types.ArrayType =>
-          val ad = row.getArray(ord)
-          var i = 0
-          while (i < ad.numElements()) {
-            if (!ad.isNullAt(i)) // entry key = 1-based position, like the hashes
-              o.entryStatBufs(s).add((i + 1).toString, asLong(ad.get(i, a.elementType)))
-            i += 1
-          }
-        case st: org.apache.spark.sql.types.StructType =>
-          val sr = row.getStruct(ord, st.length)
-          var i = 0
-          while (i < st.length) {
-            val f = st.fields(i)
-            if (integralType(f.dataType) && !sr.isNullAt(i))
-              o.entryStatBufs(s).add(f.name, asLong(sr.get(i, f.dataType)))
-            i += 1
-          }
-        case _ => ()
-      }
-      s += 1
-    }
-  }
+  // sidecar contents of every file this task writes; None (no index
+  // configured) keeps the per-row path to one Option check
+  private val index: Option[FileIndexBuilder] =
+    if (spec.index.isEmpty) None else Some(new FileIndexBuilder(spec.index, storedValue))
 
   // consecutive-key dedup (see GraftWriteSpec.dedupKeys)
   private val keyProj: Option[UnsafeProjection] =
@@ -478,13 +252,7 @@ final class GraftTaskWriter(spec: GraftWriteSpec, taskUniq: String) {
       val relPath: String,
       val partition: Map[String, String],
       val bucket: Int) {
-    val bloomBufs: Array[LongBuf] = Array.fill(spec.bloomCols.size)(new LongBuf)
-    val entryStatBufs: Array[EntryStatBuf] = Array.fill(entryStatSpecs.size)(new EntryStatBuf)
-    val variantBloomBufs: Array[LongBuf] = Array.fill(spec.variantSpecs.size)(new LongBuf)
-    val variantStatBufs: Array[EntryStatBuf] = Array.fill(spec.variantSpecs.size)(new EntryStatBuf)
-    val bitmapBufs: Array[BitmapBuf] = Array.fill(spec.bitmapCols.size)(new BitmapBuf)
-    val bsiBufs: Array[BsiIndex.BsiBuf] = Array.fill(spec.bsiCols.size)(new BsiIndex.BsiBuf)
-    var rowsWritten: Long = 0L
+    val index: Option[FileIndexBuilder#File] = GraftTaskWriter.this.index.map(_.newFile())
     // avro has no harvestable footer: the writer's own count becomes
     // FileMeta.rowCount (captured at close — see closeOne)
     var rowCount: Long = -1L
@@ -552,69 +320,11 @@ final class GraftTaskWriter(spec: GraftWriteSpec, taskUniq: String) {
     val o = open.getOrElseUpdate(key, newWriter(partVals, bucket))
     if (open.size > spec.maxOpenWriters)
       open.keysIterator.find(_ != key).foreach(k => closeOne(open.remove(k).get))
-    bloomProj.foreach { bp =>
-      val hashes = bp(row)
-      var i = 0
-      while (i < o.bloomBufs.length) {
-        if (bloomIsMap(i)) {
-          if (!hashes.isNullAt(i)) {
-            val a = hashes.getArray(i)
-            var j = 0
-            while (j < a.numElements()) { o.bloomBufs(i).add(a.getLong(j)); j += 1 }
-          }
-        } else o.bloomBufs(i).add(hashes.getLong(i))
-        i += 1
-      }
-    }
-    if (entryStatSpecs.nonEmpty) collectEntryStats(row, o)
-    variantProj.foreach { vp =>
-      val r = vp(row)
-      var i = 0
-      while (i < variantFlat.length) {
-        val si = i * 2 // raw text at si, TRY-cast long at si + 1
-        if (!r.isNullAt(si)) {
-          val (ci, path) = variantFlat(i)
-          o.variantBloomBufs(ci).add(graft.functions.MapEntryHashesImpl.hashEntry(
-            path, r.getUTF8String(si).toString))
-          if (r.isNullAt(si + 1)) {
-            // non-integral text: widen THIS path's bounds to full range —
-            // the path claims nothing (any numeric predicate "may match")
-            // while staying PRESENT in the stats map, so absent-path
-            // pruning and the other paths' exact bounds are untouched
-            o.variantStatBufs(ci).add(path, Long.MinValue)
-            o.variantStatBufs(ci).add(path, Long.MaxValue)
-          } else o.variantStatBufs(ci).add(path, r.getLong(si + 1))
-        }
-        i += 1
-      }
-    }
-    bitmapProj.foreach { bp =>
-      val r = bp(row)
-      var i = 0
-      while (i < o.bitmapBufs.length) {
-        if (!r.isNullAt(i))
-          o.bitmapBufs(i).addRaw(r.get(i, bitmapTypes(i)), o.rowsWritten)
-        i += 1
-      }
-    }
-    bsiProj.foreach { bp =>
-      val r = bp(row)
-      var i = 0
-      while (i < o.bsiBufs.length) {
-        if (!r.isNullAt(i)) {
-          val v = bsiTypeCodes(i) match {
-            case 0 => r.getInt(i).toLong
-            case 1 => r.getLong(i)
-            case 2 => r.getShort(i).toLong
-            case _ => r.getByte(i).toLong
-          }
-          o.bsiBufs(i).add(o.rowsWritten, v)
-        }
-        i += 1
-      }
+    o.index match {
+      case Some(ix) => ix.add(row)
+      case None => ()
     }
     o.writer.write(dataProj(row))
-    o.rowsWritten += 1
   }
 
   private def newWriter(partVals: Seq[String], bucket: Int): Open = {
@@ -639,38 +349,7 @@ final class GraftTaskWriter(spec: GraftWriteSpec, taskUniq: String) {
       case _ => ()
     }
     o.writer.close()
-    if (spec.bloomCols.nonEmpty || spec.variantSpecs.nonEmpty)
-      BloomIndex.write(fs, new Path(root, o.relPath + BloomIndex.Suffix),
-        spec.bloomCols.zip(o.bloomBufs).map { case (c, buf) =>
-          c -> BloomIndex.build(buf.arr, buf.n)
-        } ++
-          // S68: variant shreds are entry-hash blooms over the raw
-          // extracted text of the configured paths
-          spec.variantSpecs.map(_._1).zip(o.variantBloomBufs).map { case (c, buf) =>
-            c -> BloomIndex.build(buf.arr, buf.n)
-          },
-        entryStatSpecs.zip(o.entryStatBufs).collect {
-          case ((c, _, _), buf) if !buf.overflow =>
-            c -> buf.m.view.mapValues(b => (b(0), b(1))).toMap
-        } ++
-          spec.variantSpecs.map(_._1).zip(o.variantStatBufs).collect {
-            case (c, buf) if !buf.overflow =>
-              c -> buf.m.view.mapValues(b => (b(0), b(1))).toMap
-          },
-        // declare which blooms hold ENTRY hashes: probing a whole-value
-        // bloom with an entry hash (or vice versa) is a false negative —
-        // unsound pruning (see BloomIndex.Sidecar.entryCols)
-        spec.bloomCols.zip(bloomIsMap).collect { case (c, true) => c }.toSet ++
-          spec.variantSpecs.map(_._1))
-    if (spec.bitmapCols.nonEmpty)
-      BitmapIndex.write(fs, new Path(root, o.relPath + BitmapIndex.Suffix), o.rowsWritten,
-        spec.bitmapCols.zip(o.bitmapBufs).collect {
-          case (c, buf) if !buf.overflow =>
-            c -> buf.m.view.mapValues(b => java.util.Arrays.copyOf(b.arr, b.n)).toMap
-        })
-    if (spec.bsiCols.nonEmpty)
-      BsiIndex.write(fs, new Path(root, o.relPath + BsiIndex.Suffix), o.rowsWritten,
-        spec.bsiCols.zip(o.bsiBufs).map { case (c, buf) => c -> buf.result(o.rowsWritten) })
+    o.index.foreach(_.write(fs, new Path(root, o.relPath)))
     closed += o
   }
 
@@ -693,14 +372,8 @@ final class GraftTaskWriter(spec: GraftWriteSpec, taskUniq: String) {
 
   def abort(): Unit = {
     open.values.foreach(o => try o.writer.close() catch { case _: Exception => () })
-    (open.values ++ closed).foreach { o =>
-      try {
-        fs.delete(new Path(root, o.relPath), false)
-        fs.delete(new Path(root, o.relPath + BloomIndex.Suffix), false)
-        fs.delete(new Path(root, o.relPath + BitmapIndex.Suffix), false)
-        fs.delete(new Path(root, o.relPath + BsiIndex.Suffix), false)
-      } catch { case _: java.io.IOException => () }
-    }
+    (open.values ++ closed).foreach(o =>
+      FileIndexBuilder.deleteWithSidecars(fs, new Path(root, o.relPath)))
     open.clear(); closed.clear()
   }
 }
@@ -841,12 +514,8 @@ final class GraftBatchWrite(
     // not delete files a durable snapshot references
     val live = table.publishedDataPaths.getOrElse(return)
     messages.toSeq.filter(_ != null).flatMap { case GraftCommitMessage(f) => f }
-      .filterNot(f => live.contains(f.path)).foreach { f =>
-        try {
-          fsys.delete(new Path(table.root, f.path), false)
-          fsys.delete(new Path(table.root, f.path + BloomIndex.Suffix), false)
-        } catch { case _: java.io.IOException => () }
-      }
+      .filterNot(f => live.contains(f.path))
+      .foreach(f => FileIndexBuilder.deleteWithSidecars(fsys, new Path(table.root, f.path)))
   }
 }
 

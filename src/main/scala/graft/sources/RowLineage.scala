@@ -305,13 +305,8 @@ final class GraftDeltaBatchWrite(table: GraftTable) extends DeltaBatchWrite {
     // published snapshot references; unknown state skips deletion
     val live = table.publishedDataPaths.getOrElse(return)
     messages.toSeq.filter(_ != null).foreach { case m: GraftDeltaCommitMessage =>
-      (m.lineageFiles ++ m.plainFiles).filterNot(f => live.contains(f.path)).foreach { f =>
-        try {
-          fsys.delete(new Path(table.root, f.path), false)
-          fsys.delete(new Path(table.root, f.path + BloomIndex.Suffix), false)
-          fsys.delete(new Path(table.root, f.path + BitmapIndex.Suffix), false)
-        } catch { case _: java.io.IOException => () }
-      }
+      (m.lineageFiles ++ m.plainFiles).filterNot(f => live.contains(f.path))
+        .foreach(f => FileIndexBuilder.deleteWithSidecars(fsys, new Path(table.root, f.path)))
       // partial dvs are pre-commit scratch — EXCEPT when commitDelta's
       // direct fast path adopted one AS the snapshot-referenced final
       // and a post-publish throwable routed us here: live now carries

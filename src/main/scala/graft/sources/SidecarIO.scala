@@ -4,9 +4,9 @@ import org.apache.hadoop.fs.{FileSystem, Path}
 
 import java.io.DataOutputStream
 
-/** Atomic publish for per-file index sidecars (bloom/bitmap).
+/** Atomic publish for per-file index sidecars (bloom/bitmap/BSI).
   *
-  * The index-REBUILD paths (S47/S55 `rewrite_file_index`) write sidecars
+  * The index REBUILD (`rewrite_file_index`) writes sidecars
   * from executors to a FIXED path derived from the data file — unlike the
   * data-write path, whose file names carry the task attempt id. A
   * speculative or retried task interleaving `fs.create(overwrite = true)`

@@ -334,7 +334,7 @@ class BitmapIndexSpec extends AnyFunSuite {
       val p = it.next().getPath
       if (p.getName.endsWith(BitmapIndex.Suffix)) fs.delete(p, false)
     }
-    assert(t.rewriteBitmapIndex() == 0L)
+    assert(t.rewriteFileIndex() == 0L)
     // and reads stay correct with no sidecar (no claim)
     assert(spark.read.format("graft").load(path)
       .filter($"lang" === "en").count() == 1L)
@@ -366,7 +366,7 @@ class BitmapIndexSpec extends AnyFunSuite {
     assert(df.collect().map(_.getLong(0)).sorted.toSeq == Seq(2L, 4L))
   }
 
-  test("S55i: rewriteBitmapIndex rebuilds a byte-identical sidecar") {
+  test("S55i: rewriteFileIndex rebuilds a byte-identical bitmap sidecar") {
     val path = TestSpark.tmpDir("bmrw")
     val t = GraftTable.create(spark, path,
       StructType(Seq(StructField("id", LongType), StructField("lang", StringType))),
@@ -383,11 +383,11 @@ class BitmapIndexSpec extends AnyFunSuite {
     assert(sidecar != null)
     val written = java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(sidecar.toUri))
     fs.delete(sidecar, false)
-    assert(t.rewriteBitmapIndex() == 1L)
+    assert(t.rewriteFileIndex() == 1L)
     val rebuilt = java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(sidecar.toUri))
     assert(java.util.Arrays.equals(written, rebuilt),
       "rebuilt sidecar must be byte-identical to the written one")
-    assert(t.rewriteBitmapIndex() == 0L, "second pass must converge to no work")
+    assert(t.rewriteFileIndex() == 0L, "second pass must converge to no work")
     // rebuilt index prunes like the original
     val t2 = GraftTable.load(spark, path)
     import org.apache.spark.sql.sources.EqualTo

@@ -161,6 +161,32 @@ class BloomIndexSpec extends AnyFunSuite {
     }
     assert(fs.listStatus(tblData).map(_.getPath.getName).toSet == beforeAbort,
       "aborted V2 write must delete its files and sidecars")
+    // ... and the JOB-level abort reclaims every sidecar kind of the
+    // files that tasks which SUCCEEDED before the job died had written:
+    // four write tasks, the last one failing after the other three
+    // committed their files with bloom, bitmap and BSI sidecars
+    spark.udf.register("fail_late_at", (id: Long, bad: Long) => {
+      if (id == bad) { Thread.sleep(2000); throw new IllegalStateException("boom") }
+      id.toString
+    })
+    spark.sql("""CREATE TABLE graftbl.db.t3 (id BIGINT, u STRING, c STRING)
+                |TBLPROPERTIES ('file-index.bloom-filter.columns'='u',
+                |  'file-index.bitmap.columns'='c', 'file-index.bsi.columns'='id')
+                |""".stripMargin)
+    spark.sql("INSERT INTO graftbl.db.t3 VALUES (1, 'a', 'x')")
+    val t3Data = new org.apache.hadoop.fs.Path(s"$wh/db.db/t3", "data")
+    val beforeJobAbort = fs.listStatus(t3Data).map(_.getPath.getName).toSet
+    assert(Seq(BloomIndex.Suffix, graft.sources.BitmapIndex.Suffix,
+      graft.sources.BsiIndex.Suffix).forall(sfx => beforeJobAbort.exists(_.endsWith(sfx))),
+      s"precondition: the committed file carries all three sidecars: $beforeJobAbort")
+    intercept[Exception] {
+      spark.sql("""INSERT INTO graftbl.db.t3
+                  |SELECT id, fail_late_at(id, 99), CAST(id % 3 AS STRING)
+                  |FROM range(0, 100, 1, 4)""".stripMargin)
+    }
+    val afterJobAbort = fs.listStatus(t3Data).map(_.getPath.getName).toSet
+    assert(afterJobAbort == beforeJobAbort,
+      s"job abort left files behind: ${afterJobAbort.diff(beforeJobAbort)}")
 
     // 3. EXPIRY: compaction + retain-1 reclaims superseded files with
     // their sidecars
@@ -190,16 +216,25 @@ class BloomIndexSpec extends AnyFunSuite {
   }
 
   test("S47: rewrite_file_index builds bit-compatible sidecars for pre-index files") {
-    // table WITHOUT the index option: files land sidecar-less
+    // table WITHOUT the index options: files land sidecar-less. Besides
+    // the scalar bloom column it has a map with integral values (entry
+    // hashes + per-entry range stats) and a JSON column (variant shreds)
     val path = TestSpark.tmpDir("rwidx")
-    val schema = StructType(Seq(StructField("id", LongType), StructField("u", StringType)))
+    val schema = StructType(Seq(StructField("id", LongType), StructField("u", StringType),
+      StructField("props", MapType(StringType, IntegerType)), StructField("js", StringType)))
+    val indexOptions = Map(
+      "file-index.bloom-filter.columns" -> "u,props",
+      "file-index.variant.columns" -> "js",
+      "file-index.variant.js.paths" -> "$.n,$.tag")
+    // file c: props['k'] in [10c, 10c + 9], js $.n in [100c, 100c + 49]
+    def batch(c: Int) = (0 until 500).map(i => (c * 1000L + i, s"u-${i * 7 % 500}-$c",
+      Map("k" -> (c * 10 + i % 10)), s"""{"n": ${c * 100 + i % 50}, "tag": "t$c"}"""))
+      .toDF("id", "u", "props", "js").coalesce(1)
     val t = GraftTable.create(spark, path, schema)
-    for (c <- 0 until 4)
-      t.append((0 until 500).map(i => (c * 1000L + i, s"u-${i * 7 % 500}-$c"))
-        .toDF("id", "u").coalesce(1))
+    for (c <- 0 until 4) t.append(batch(c))
 
-    // flip the option on (S43), then rebuild the index (S47)
-    t.setOptions(Map("file-index.bloom-filter.columns" -> "u"))
+    // flip the options on (S43), then rebuild the index (S47)
+    t.setOptions(indexOptions)
     assert(t.rewriteFileIndex() == 4L)
     assert(t.rewriteFileIndex() == 0L, "second call finds nothing missing")
 
@@ -208,27 +243,53 @@ class BloomIndexSpec extends AnyFunSuite {
     import org.apache.spark.sql.sources.EqualTo
     assert(fresh.read(dataFilters = Seq(EqualTo("u", "u-14-2"))).inputFiles.length == 1)
     assert(fresh.read(dataFilters = Seq(EqualTo("u", "nope"))).inputFiles.isEmpty)
+    // ... including the range half of subscript pruning and the variant
+    // shreds, whose entry stats the rebuild computes like the writer
+    val key = "spark.graft.subscriptFilters.enabled"
+    spark.experimental.extraOptimizations =
+      spark.experimental.extraOptimizations :+ graft.plans.SubscriptFilterRule(() =>
+        spark.conf.get(key, "false").toBoolean)
+    try {
+      spark.conf.set(key, "true")
+      def load = spark.read.format("graft").load(path)
+      val k = load.filter(element_at(col("props"), "k") > 25)
+      assert(plannedOfTotal(k) == ((2, 4)), "props['k'] > 25 must plan files 2 and 3 only")
+      assert(k.count() == 200 + 500)
+      val n = load.filter(expr("variant_get(parse_json(js), '$.n', 'bigint') > 250"))
+      assert(plannedOfTotal(n) == ((1, 4)), "$.n > 250 must plan only file 3")
+      assert(n.count() == 500)
+      val tag = load.filter(expr("get_json_object(js, '$.tag') = 't1'"))
+      assert(plannedOfTotal(tag) == ((1, 4)), "$.tag = 't1' must plan only file 1")
+    } finally {
+      spark.conf.unset(key)
+      spark.experimental.extraOptimizations =
+        spark.experimental.extraOptimizations
+          .filterNot(_.isInstanceOf[graft.plans.SubscriptFilterRule])
+    }
 
-    // bit-compatibility: a twin table written WITH the option from day
-    // one produces byte-identical bloom words for the same rows (same
-    // hashes, same row-count sizing — order-independent bit OR)
+    // bit-compatibility: a twin table written WITH the options from day
+    // one produces byte-identical sidecars for the same rows (same
+    // builder: same hashes, sizing, entry stats and shreds)
     val twin = GraftTable.create(spark, TestSpark.tmpDir("rwidx-twin"), schema,
-      options = Map("file-index.bloom-filter.columns" -> "u"))
-    for (c <- 0 until 4)
-      twin.append((0 until 500).map(i => (c * 1000L + i, s"u-${i * 7 % 500}-$c"))
-        .toDF("id", "u").coalesce(1))
+      options = indexOptions)
+    for (c <- 0 until 4) twin.append(batch(c))
     val fs = org.apache.hadoop.fs.FileSystem.getLocal(spark.sessionState.newHadoopConf())
-    def bloomByMinId(root: String): Map[Long, Seq[Long]] = {
+    def sidecarByMinId(root: String): Map[Long, Seq[Byte]] = {
       val tt = GraftTable.load(spark, root)
       tt.system("files").select("file_path").collect().map(_.getString(0)).map { rel =>
         val abs = s"$root/$rel"
         val minId = spark.read.parquet(abs).agg(min("id")).head.getLong(0)
-        val sc = BloomIndex.read(fs, new org.apache.hadoop.fs.Path(abs + BloomIndex.Suffix))
-        minId -> sc.get.blooms("u").words.toSeq
+        val sc = new org.apache.hadoop.fs.Path(abs + BloomIndex.Suffix)
+        val bytes = new Array[Byte](fs.getFileStatus(sc).getLen.toInt)
+        val in = fs.open(sc)
+        try in.readFully(bytes) finally in.close()
+        minId -> bytes.toSeq
       }.toMap
     }
-    assert(bloomByMinId(path) == bloomByMinId(twin.root),
-      "rebuilt sidecars must carry the exact bloom words the write path builds")
+    val rebuilt = sidecarByMinId(path)
+    assert(rebuilt.keySet == Set(0L, 1000L, 2000L, 3000L))
+    assert(rebuilt == sidecarByMinId(twin.root),
+      "rebuilt sidecars must carry the exact bytes the write path writes")
   }
 
   test("S28f: hash-KIND safety — a legacy (pre-v3) sidecar makes no struct " +
@@ -245,11 +306,11 @@ class BloomIndexSpec extends AnyFunSuite {
       .select(col("i1"), struct(col("n").as("name"), col("s").as("score")).as("r"))
       .coalesce(1))
 
-    // current write path declares the struct column entry-hashed (v3)
+    // the write path declares the struct column entry-hashed
     val fs = org.apache.hadoop.fs.FileSystem.getLocal(spark.sessionState.newHadoopConf())
     val rel = t.system("files").select("file_path").head.getString(0)
     val scPath = new org.apache.hadoop.fs.Path(s"$path/$rel" + BloomIndex.Suffix)
-    assert(BloomIndex.read(fs, scPath).get.entryCols.contains(Set("r")),
+    assert(BloomIndex.read(fs, scPath).get.entryCols == Set("r"),
       "fresh sidecars must declare their entry-hashed columns")
 
     // forge the sidecar back to what the PRE-v3 writer produced for a
@@ -265,11 +326,6 @@ class BloomIndexSpec extends AnyFunSuite {
     out.writeLong(0L)
     out.writeInt(0) // no entry stats
     out.close()
-    val forged = BloomIndex.read(fs, scPath).get
-    assert(forged.entryCols.isEmpty, "legacy sidecar reads back with no declaration")
-    assert(!forged.blooms("r").mightContain(
-      graft.functions.MapEntryHashesImpl.hashEntry("name", "dd")),
-      "precondition: the forged bloom would reject the entry probe")
 
     val key = "spark.graft.subscriptFilters.enabled"
     spark.experimental.extraOptimizations =

@@ -276,14 +276,14 @@ class BsiIndexSpec extends AnyFunSuite {
       .filter($"v" >= 100L && $"v" < 300L)
     assert(df.count() == 200L) // correctness with partial coverage (residual path)
     // after the rebuild every file is covered and the claim masks
-    assert(t2.rewriteBsiIndex() == 1L)
+    assert(t2.rewriteFileIndex() == 1L)
     val df2 = spark.read.format("graft").option("bsi.claim-filters", "true").load(path)
       .filter($"v" >= 100L && $"v" < 300L)
     assertNoResidual(df2)
     assert(df2.count() == 200L)
   }
 
-  test("S66i: rewriteBsiIndex rebuilds a byte-identical sidecar") {
+  test("S66i: rewriteFileIndex rebuilds a byte-identical BSI sidecar") {
     val path = TestSpark.tmpDir("bsirewrite")
     val t = GraftTable.create(spark, path,
       StructType(Seq(StructField("id", LongType), StructField("v", LongType),
@@ -301,7 +301,7 @@ class BsiIndexSpec extends AnyFunSuite {
       in.readFully(bytes); in.close(); bytes.toSeq
     }
     fs.delete(sp, false)
-    assert(t.rewriteBsiIndex() == 1L)
+    assert(t.rewriteFileIndex() == 1L)
     val rebuilt = {
       val in = fs.open(sp)
       val bytes = new Array[Byte](fs.getFileStatus(sp).getLen.toInt)
@@ -335,7 +335,7 @@ class BsiIndexSpec extends AnyFunSuite {
         rnd.nextInt(4) match {
           case 0 => appendBatch()
           case 1 => t.compact()
-          case 2 => t.rewriteBsiIndex()
+          case 2 => t.rewriteFileIndex()
           case 3 => t.dvDelete(col("id") % (2 + rnd.nextInt(9)) === 0)
         }
         val lo = rnd.nextInt(8000) - 4000L
@@ -426,7 +426,7 @@ class BsiIndexSpec extends AnyFunSuite {
       assert(live.contains(base), s"stray file survived the sweep: $rel")
     }
     // rebuilt index over the compacted file serves claims again
-    t.rewriteBsiIndex()
+    t.rewriteFileIndex()
     val dfc = spark.read.format("graft").option("bsi.claim-filters", "true").load(path)
       .filter($"v" < 50L)
     assertNoResidual(dfc)

@@ -148,80 +148,10 @@ class CrossPartitionSpec extends AnyFunSuite {
     assert(parts == Set("status=even", "status=odd", "status=three"))
   }
 
-  /** Strip the CREATE-stamped escape vintage from the latest schema
-    * json, simulating tables written by builds that predate the stamp. */
-  private def unstamp(root: String): Unit = {
-    val fs = GraftTable.fileSystem(spark, root)
-    val dir = new org.apache.hadoop.fs.Path(root, "schema")
-    val latest = fs.listStatus(dir).map(_.getPath)
-      .maxBy(p => p.getName.stripPrefix("schema-").stripSuffix(".json").toLong)
-    val in = fs.open(latest)
-    val json = scala.io.Source.fromInputStream(in).mkString; in.close()
-    val k = GraftTable.EscapeVintageKey
-    val stripped = json
-      .replace(s""","$k":"2"""", "").replace(s""""$k":"2",""", "")
-      .replace(s""","$k":"1"""", "").replace(s""""$k":"1",""", "")
-    assert(stripped != json, "vintage stamp not found in schema json")
-    val out = fs.create(latest, true)
-    out.write(stripped.getBytes("UTF-8")); out.close()
-  }
-
-  test("S61i: unstamped tables classify their escape vintage from their own index") {
-    // ADVICE r15 window: intermediate builds escaped '%'→%25 WITHOUT
-    // stamping the vintage — those tables load unstamped but hold
-    // escaped index entries, and a fixed legacy default would miss every
-    // '%'-bearing entry on the next upsert (fresh mint → bucket-local
-    // stale resurrection). Simulate by stripping the stamp post-write.
-    val eb = mk("xp-unstamped-esc")
-    eb.upsert(Seq((1, "100%", "v1"), (2, "plain", "v1")).toDF("id", "status", "v"))
-    unstamp(eb.root)
-    val ebr = GraftTable.load(spark, eb.root)
-    assert(!ebr.options.contains(GraftTable.EscapeVintageKey))
-    ebr.upsert(Seq((1, "100%", "v2")).toDF("id", "status", "v"))
-    assert(rows(ebr) == Seq((1, "100%", "v2"), (2, "plain", "v1")),
-      "stale '%' version resurrected on an escape-era unstamped table")
-
-    // true legacy (raw-'%' entries) infers vintage 1 and keeps raw rendering
-    val lg = mk("xp-unstamped-raw", Map(GraftTable.EscapeVintageKey -> "1"))
-    lg.upsert(Seq((1, "100%", "v1")).toDF("id", "status", "v"))
-    unstamp(lg.root)
-    val lgr = GraftTable.load(spark, lg.root)
-    lgr.upsert(Seq((1, "100%", "v2")).toDF("id", "status", "v"))
-    assert(rows(lgr) == Seq((1, "100%", "v2")),
-      "stale '%' version resurrected on a raw-legacy unstamped table")
-    val parts = lgr.system("partitions").select("partition").as[String].collect().toSet
-    assert(parts.contains("status=100%"), s"legacy raw rendering changed: $parts")
-
-    // no '%' anywhere in the index: unstamped infers vintage 2, so
-    // future '%' values render injectively and keep matching
-    val np = mk("xp-unstamped-clean")
-    np.upsert(Seq((1, "plain", "v1")).toDF("id", "status", "v"))
-    unstamp(np.root)
-    val npr = GraftTable.load(spark, np.root)
-    npr.upsert(Seq((2, "100%", "v1")).toDF("id", "status", "v"))
-    npr.upsert(Seq((2, "100%", "v2")).toDF("id", "status", "v"))
-    assert(rows(npr) == Seq((1, "plain", "v1"), (2, "100%", "v2")),
-      "'%'-valued key written after the inferred-v2 upgrade resurrected")
-  }
-
-  test("S61h: legacy escape vintage keeps '%'-valued index entries matching") {
-    // a table WITHOUT the CREATE-stamped vintage option predates the
-    // escaping: its persisted index entries rendered '%' raw, and the
-    // upgraded code must keep rendering it raw (a changed rendering
-    // would miss the entry on the next upsert, mint a second bucket,
-    // and resurrect the stale version bucket-locally)
-    val legacy = mk("xp-legacy", Map(GraftTable.EscapeVintageKey -> "1"))
-    legacy.upsert(Seq((1, "100%", "v1")).toDF("id", "status", "v"))
-    legacy.upsert(Seq((1, "100%", "v2")).toDF("id", "status", "v"))
-    assert(rows(legacy) == Seq((1, "100%", "v2")), "stale '%' version resurrected")
-    // the legacy part string is byte-identical to the pre-escape scheme
-    val parts = legacy.system("partitions")
-      .select("partition").as[String].collect().toSet
-    assert(parts.contains("status=100%"), s"legacy rendering changed: $parts")
-    // fresh tables are stamped vintage 2 at CREATE and render injectively
+  test("S61h: percent-valued partitions stay injective in the index") {
+    // '%' is always escaped in the index's part strings, so a value
+    // literally containing an escape sequence cannot forge a '/'
     val v2 = mk("xp-v2")
-    assert(v2.system("options").filter(col("key") === GraftTable.EscapeVintageKey)
-      .select("value").as[String].collect().toSeq == Seq("2"))
     v2.upsert(Seq((1, "100%", "v1"), (2, "a%2Fb", "v1")).toDF("id", "status", "v"))
     v2.upsert(Seq((1, "100%", "v2")).toDF("id", "status", "v"))
     assert(rows(v2) == Seq((1, "100%", "v2"), (2, "a%2Fb", "v1")))

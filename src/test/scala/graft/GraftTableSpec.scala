@@ -61,9 +61,8 @@ class GraftTableSpec extends AnyFunSuite {
     val fsum = t.system("files").agg(sum("record_count")).first().getLong(0)
     assert(fsum == 2L)
     assert(t.system("partitions").count() == 2)
-    // user options plus the CREATE-stamped escape vintage (S61h)
     assert(t.system("options").collect().map(r => (r.getString(0), r.getString(1))).toSeq
-      == Seq((GraftTable.EscapeVintageKey, "2"), ("write.batch", "x")))
+      == Seq(("write.batch", "x")))
     assert(t.system("schemas").count() == 1)
   }
 
