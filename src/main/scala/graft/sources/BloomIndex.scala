@@ -40,11 +40,19 @@ object BloomIndex {
     * `entryCols` declares WHICH columns' blooms hold per-ENTRY hashes
     * rather than whole-value hashes. The hash kind is otherwise invisible
     * in the bits, and probing a bloom with the other kind of hash would
-    * return a FALSE NEGATIVE and prune a file that matches. */
+    * return a FALSE NEGATIVE and prune a file that matches.
+    *
+    * `variantPaths` records, per variant column, the paths this sidecar
+    * shredded (S68). A variant claim is answerable only for a recorded
+    * path: the table's path list may have grown since the file was
+    * written, and a path the sidecar never shredded is neither in its
+    * bloom nor in its stats. A sidecar written before the record existed
+    * reads with no recorded paths, so it makes no variant claim. */
   final case class Sidecar(
       blooms: Map[String, Bloom],
       entryStats: Map[String, Map[String, (Long, Long)]],
-      entryCols: Set[String])
+      entryCols: Set[String],
+      variantPaths: Map[String, Set[String]] = Map.empty)
 
   /** ~1% false-positive rate: m ≈ 9.6 bits/item, k = 7. */
   private val BitsPerItem = 10
@@ -91,7 +99,8 @@ object BloomIndex {
 
   def write(fs: FileSystem, path: Path, cols: Seq[(String, Bloom)],
       entryStats: Seq[(String, Map[String, (Long, Long)])] = Seq.empty,
-      entryCols: Set[String] = Set.empty): Unit =
+      entryCols: Set[String] = Set.empty,
+      variantPaths: Seq[(String, Seq[String])] = Seq.empty): Unit =
     SidecarIO.publish(fs, path) { out =>
       out.writeInt(Magic)
       // entry keys and entry columns are written sorted: deterministic
@@ -115,6 +124,12 @@ object BloomIndex {
       }
       out.writeInt(entryCols.size)
       entryCols.toSeq.sorted.foreach(out.writeUTF)
+      out.writeInt(variantPaths.size)
+      variantPaths.sortBy(_._1).foreach { case (name, paths) =>
+        out.writeUTF(name)
+        out.writeInt(paths.size)
+        paths.sorted.foreach(out.writeUTF)
+      }
     }
 
   /** None for a missing/unreadable/foreign sidecar (no pruning claim
@@ -152,7 +167,21 @@ object BloomIndex {
         }.toMap
         val ne = in.readInt()
         if (ne < 0 || ne > 10000) return None
-        Some(Sidecar(blooms, stats, (0 until ne).map(_ => in.readUTF()).toSet))
+        val entryCols = (0 until ne).map(_ => in.readUTF()).toSet
+        // the shredded-path record ends the file; a sidecar written
+        // before it existed ends here and records no paths
+        val variantPaths =
+          try {
+            val nv = in.readInt()
+            if (nv < 0 || nv > 10000) return None
+            (0 until nv).map { _ =>
+              val name = in.readUTF()
+              val np = in.readInt()
+              if (np < 0 || np.toLong * 2 > fileLen) return None
+              name -> (0 until np).map(_ => in.readUTF()).toSet
+            }.toMap
+          } catch { case _: java.io.EOFException => Map.empty[String, Set[String]] }
+        Some(Sidecar(blooms, stats, entryCols, variantPaths))
       } finally in.close()
     } catch { case scala.util.control.NonFatal(_) => None }
 

@@ -408,7 +408,8 @@ final class FileIndexBuilder(spec: FileIndexSpec, value: String => Expression) {
           // bloom with an entry hash (or vice versa) is a false negative —
           // unsound pruning (see BloomIndex.Sidecar.entryCols)
           spec.bloomCols.zip(bloomIsEntry).collect { case (c, true) => c }.toSet ++
-            spec.variantSpecs.map(_._1))
+            spec.variantSpecs.map(_._1),
+          spec.variantSpecs)
       if (kinds.contains(BitmapIndex.Suffix))
         BitmapIndex.write(fs, at(BitmapIndex.Suffix), rows,
           spec.bitmapCols.zip(bitmapBufs).collect {

@@ -174,11 +174,14 @@ class GraftTable private (
       * — all immutable/content-addressed) and differ ONLY in where the
       * snapshot log lives, so every read/write/commit path is
       * branch-local for free via [[snapDirRel]]. */
-    val branchName: Option[String] = None) {
+    val branchName: Option[String],
+    /** The handle's one Hadoop configuration (a copy of every Hadoop
+      * property, so built once by `create`/`load`) and the FileSystem of
+      * `root` made from it; branch views share both. */
+    hadoopConf: Configuration,
+    private val fs: FileSystem) {
 
   import GraftTable._
-
-  private val fs: FileSystem = fileSystem(spark, root)
 
   /** Opt-in phase profiler for the write/commit paths (guide §1 measure
     * first): -Dgraft.write.profile=true prints per-phase seconds. Zero
@@ -195,7 +198,6 @@ class GraftTable private (
   /** Snapshot-log directory of this view's ref, relative to root. */
   private def snapDirRel: String =
     branchName.map(b => s"branch/$b/snapshot").getOrElse("snapshot")
-  private def hadoopConf = spark.sessionState.newHadoopConf()
 
   /** Declared type lattice — may contain CHAR(n)/VARCHAR(n), which Spark
     * forbids in runtime DataFrame schemas (ref: the char/varchar/time
@@ -2651,13 +2653,6 @@ class GraftTable private (
   private def subscriptMayMatch(p: SubscriptPredicate, f: FileMeta): Boolean = {
     if (!bloomIndexCols.contains(p.col) && !variantIndexCols.contains(p.col))
       return true
-    // S68: a variant claim is answerable ONLY for a CONFIGURED path —
-    // an unconfigured path was never hashed or bounded, so its absence
-    // from the sidecar proves nothing (a claim there would prune
-    // matching files)
-    if (variantIndexCols.contains(p.col) &&
-        !variantIndexSpecs.exists { case (c, paths) => c == p.col && paths.contains(p.key) })
-      return true
     sidecarOf(f) match {
       case None => true // file without a (readable) sidecar
       case Some(sc) =>
@@ -2665,6 +2660,12 @@ class GraftTable private (
         // ENTRY-hashed: an entry probe against whole-value hashes would
         // false-negative and prune a matching file
         if (!sc.entryCols.contains(p.col)) true
+        // S68: a variant claim is answerable ONLY for a path THIS sidecar
+        // shredded — never by the current path list, which may have grown
+        // since the file was written. An unshredded path was never hashed
+        // or bounded, so its absence from the sidecar proves nothing.
+        else if (variantIndexCols.contains(p.col) &&
+            !sc.variantPaths.get(p.col).exists(_.contains(p.key))) true
         else if (p.op == "=")
           sc.blooms.get(p.col).forall(
             _.mightContain(graft.functions.MapEntryHashesImpl.hashEntry(p.key, p.value)))
@@ -3400,15 +3401,14 @@ class GraftTable private (
   def forBranch(name: String): GraftTable = {
     requireValidBranchName(name)
     require(fs.exists(new Path(branchDir(name), "snapshot")), s"no such branch: $name")
-    new GraftTable(spark, root, schemaMeta, Some(name))
+    new GraftTable(spark, root, schemaMeta, Some(name), hadoopConf, fs)
   }
 
   /** Every OTHER ref sharing this root, as table views (fresh instances:
     * the id-keyed snapshot/file memos must not mix refs). */
   private def siblingRefs: Seq[GraftTable] =
     (None +: branches.map(Option(_))).filterNot(_ == branchName).map {
-      case Some(b) => new GraftTable(spark, root, schemaMeta, Some(b))
-      case None => new GraftTable(spark, root, schemaMeta, None)
+      case b => new GraftTable(spark, root, schemaMeta, b, hadoopConf, fs)
     }
 
   /** Paimon's fast_forward: main adopts branch `name`'s history. Main
@@ -3865,7 +3865,13 @@ object GraftTable {
   }
 
   private[graft] def fileSystem(spark: SparkSession, root: String): FileSystem =
-    new Path(root).getFileSystem(spark.sessionState.newHadoopConf())
+    handleFs(spark, root)._2
+
+  /** A new handle's Hadoop configuration and the FileSystem of `root`. */
+  private def handleFs(spark: SparkSession, root: String): (Configuration, FileSystem) = {
+    val conf = spark.sessionState.newHadoopConf()
+    (conf, new Path(root).getFileSystem(conf))
+  }
 
   private[sources] def readString(fs: FileSystem, p: Path): String = {
     val in = fs.open(p)
@@ -3994,7 +4000,7 @@ object GraftTable {
         s"row-tracking tables reserve column name(s) ${clash.mkString(", ")} " +
           "for lineage metadata")
     }
-    val fs = fileSystem(spark, root)
+    val (conf, fs) = handleFs(spark, root)
     val schemaDir = new Path(root, "schema")
     require(!fs.exists(schemaDir), s"table already exists at $root")
     fs.mkdirs(schemaDir)
@@ -4003,18 +4009,18 @@ object GraftTable {
       schema.fields.map(f => f.copy(metadata = org.apache.spark.sql.types.Metadata.empty)))
     val meta = SchemaMeta(0L, fields.json, partitionKeys, primaryKeys, options)
     writeString(fs, new Path(root, "schema/schema-0.json"), mapper.writeValueAsString(meta))
-    new GraftTable(spark, root, meta)
+    new GraftTable(spark, root, meta, None, conf, fs)
   }
 
   def load(spark: SparkSession, root: String): GraftTable = {
-    val fs = fileSystem(spark, root)
+    val (conf, fs) = handleFs(spark, root)
     val dir = new Path(root, "schema")
     require(fs.exists(dir), s"no graft table at $root")
     val latest = fs.listStatus(dir).toSeq.map(_.getPath.getName)
       .collect { case SchemaRe(id) => id.toLong }.max
     val meta = mapper.readValue(
       readString(fs, new Path(root, s"schema/schema-$latest.json")), classOf[SchemaMeta])
-    new GraftTable(spark, root, meta)
+    new GraftTable(spark, root, meta, None, conf, fs)
   }
 
   def exists(spark: SparkSession, root: String): Boolean =

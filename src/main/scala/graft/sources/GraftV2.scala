@@ -3,9 +3,11 @@ package graft.sources
 import org.apache.spark.paths.SparkPath
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{Ascending, BoundReference, Descending, InterpretedOrdering, SortOrder, UnsafeProjection, UnsafeRow}
+import org.apache.spark.sql.catalyst.expressions.{Ascending, BaseOrdering, BasePredicate, BoundReference, Descending, Expression, InterpretedOrdering, Predicate, SortDirection, SortOrder, UnsafeProjection, UnsafeRow}
+import org.apache.spark.sql.catalyst.expressions.codegen.GenerateOrdering
 import org.apache.spark.sql.connector.catalog.{SupportsRead, SupportsWrite, Table, TableCapability}
 import org.apache.spark.sql.connector.expressions.aggregate.Aggregation
+import org.apache.spark.sql.connector.metric.{CustomMetric, CustomTaskMetric}
 import org.apache.spark.sql.connector.read._
 import org.apache.spark.sql.execution.datasources.{FilePartition, PartitionedFile}
 import org.apache.spark.sql.execution.datasources.parquet.ParquetOptions
@@ -13,6 +15,7 @@ import org.apache.spark.sql.execution.datasources.v2.parquet.ParquetPartitionRea
 import org.apache.spark.sql.sources.Filter
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
+import org.apache.spark.sql.vectorized.ColumnarBatch
 import org.apache.spark.unsafe.types.UTF8String
 
 import java.util.OptionalLong
@@ -903,6 +906,11 @@ final class GraftManifestAggScan(
   * per-task working set is one bucket's live keys, which is exactly what
   * bucket sizing bounds. */
 object GraftScan {
+  // test observability: file reader factories built and sessions cloned
+  // (for a row-based factory) by scans of this JVM
+  val fileFactoriesBuilt = new java.util.concurrent.atomic.AtomicLong(0)
+  val sessionClones = new java.util.concurrent.atomic.AtomicLong(0)
+
   /** S69 TABLESAMPLE SYSTEM keep rule — a pure function of the MANIFEST
     * entry, so the decision costs zero data I/O and is DETERMINISTIC for
     * a given table state (unlike Trino's per-split coin flip):
@@ -1415,6 +1423,12 @@ final class GraftScan(
 
   // ---- reader factories -------------------------------------------------
 
+  /** The scan's one Hadoop configuration: every reader factory and every
+    * shipped `SerializableConfiguration` of this scan share it. */
+  private lazy val hadoopConf = spark.sessionState.newHadoopConf()
+  private lazy val serializableConf =
+    new org.apache.spark.util.SerializableConfiguration(hadoopConf)
+
   /** Build the vectorized reader factory by delegating to a real
     * ParquetScan/OrcScan (over an empty file index — createReaderFactory
     * never touches it): it installs every reader conf key (read-support
@@ -1423,12 +1437,9 @@ final class GraftScan(
     * verbatim instead of re-plumbing it.
     *
     * `vectorized = false` builds a row-based (parquet-mr / ORC row)
-    * factory instead, for the streaming k-way merge: it holds MANY readers
-    * of one group open at once and consumes one row per advance. A parquet
-    * factory instance closes its previous file's reader whenever it opens
-    * the next one, so the merge opens each run through its own copy of the
-    * factory (see GraftMorReaderFactory.Run). The sequential paths (non-PK
-    * scan, hash merge) keep the vectorized factory. */
+    * factory instead, for the per-file row paths that count physical
+    * positions (`_file`, lineage, claim masks). The PK merge uses the
+    * vectorized factory and clones it per run (see GraftMorReaderFactory). */
   private def fileFactory(
       readData: StructType, readPart: StructType, filters: Array[Filter],
       vectorized: Boolean = true,
@@ -1436,6 +1447,7 @@ final class GraftScan(
       // stored __row_id/__row_seq) — declared in dataSchema so the
       // format resolves them by name and null-fills files lacking them
       extraDataCols: Seq[StructField] = Seq.empty): PartitionReaderFactory = {
+    GraftScan.fileFactoriesBuilt.incrementAndGet()
     val dataSchema = StructType(table.fileDataSchema.fields ++ extraDataCols)
     // The vectorized flag is captured into a FINAL factory field during
     // createReaderFactory() (driver-side), read from the session's SQLConf.
@@ -1444,16 +1456,13 @@ final class GraftScan(
     // DataFileReader (safe for the MOR k-way merge's interleaving);
     // pushed filters are ignored because the scan declares them residual
     if (table.fileFormat == "avro")
-      return new GraftAvroReaderFactory(
-        new org.apache.spark.util.SerializableConfiguration(
-          spark.sessionState.newHadoopConf()),
-        readData, readPart)
+      return new GraftAvroReaderFactory(serializableConf, readData, readPart)
     def build(s: SparkSession): PartitionReaderFactory = {
       val emptyIndex = new org.apache.spark.sql.execution.datasources.InMemoryFileIndex(
         s, Seq.empty, Map.empty, None)
       if (table.fileFormat == "orc")
         new org.apache.spark.sql.execution.datasources.v2.orc.OrcScan(
-          s, s.sessionState.newHadoopConf(), emptyIndex,
+          s, hadoopConf, emptyIndex,
           dataSchema = dataSchema,
           readDataSchema = readData,
           readPartitionSchema = readPart,
@@ -1464,7 +1473,7 @@ final class GraftScan(
           dataFilters = Seq.empty).createReaderFactory()
       else
         new org.apache.spark.sql.execution.datasources.v2.parquet.ParquetScan(
-          s, s.sessionState.newHadoopConf(), emptyIndex,
+          s, hadoopConf, emptyIndex,
           dataSchema = dataSchema,
           readDataSchema = readData,
           readPartitionSchema = readPart,
@@ -1483,11 +1492,32 @@ final class GraftScan(
       val vecKey =
         if (table.fileFormat == "orc") "spark.sql.orc.enableVectorizedReader"
         else "spark.sql.parquet.enableVectorizedReader"
+      GraftScan.sessionClones.incrementAndGet()
       val cloned = org.apache.spark.sql.graft.Bridge.cloneSession(spark)
       cloned.sessionState.conf.setConfString(vecKey, "false")
       build(cloned)
     }
   }
+
+  /** The pushed predicates over primary-key columns, bound to the merge
+    * row: the merge drops a row failing them before it enters the k-way
+    * merge. `readerFilters` already keeps only key columns on a PK table
+    * (and nothing for a row-level rewrite, which must see every row). */
+  private def keyPredicate(mergeSchema: StructType): Option[Expression] = {
+    val pk = table.primaryKeys.toSet
+    readerFilters.toSeq.flatMap(GraftFilters.toColumn(_, pk)).reduceOption(_ && _)
+      .flatMap { c =>
+        // an optimization only (Spark re-applies every pushed filter): a
+        // predicate the analyzer cannot resolve is simply not pushed
+        try Some(org.apache.spark.sql.graft.Bridge.boundPredicate(spark, c, mergeSchema))
+        catch { case scala.util.control.NonFatal(_) => None }
+      }
+  }
+
+  override def supportedCustomMetrics(): Array[CustomMetric] =
+    if (!table.isPkTable) Array.empty
+    else Array(new MergeRowsDecodedMetric, new MergeRowsKeyFilteredMetric,
+      new MergeVersionsMergedMetric)
 
   override def createReaderFactory(): PartitionReaderFactory = {
     // S65: lineage scans read per-file, row-based, unsplit, with NO
@@ -1517,8 +1547,7 @@ final class GraftScan(
           vectorized = false, extraDataCols = storedCols),
         readDataFields.map(_.dataType), readPartFields.map(_.dataType),
         metaFields.map(_.name), claimed.toSeq, table.root,
-        new org.apache.spark.util.SerializableConfiguration(
-          spark.sessionState.newHadoopConf()))
+        serializableConf)
     }
     // S44: _file scans read row-based (uniformly — a mixed columnar
     // answer is illegal) and wrap every partition's reader to append
@@ -1534,16 +1563,14 @@ final class GraftScan(
             fileFactory(StructType(readDataFields), StructType(readPartFields),
               Array.empty[Filter], vectorized = false),
             claimed.toSeq,
-            new org.apache.spark.util.SerializableConfiguration(
-              spark.sessionState.newHadoopConf()))
+            serializableConf)
         else if (!plannedFiles.exists(_.hasDv)) plain
         else new DvReaderFactory(
           plain,
           fileFactory(StructType(readDataFields), StructType(readPartFields),
             Array.empty[Filter], vectorized = false),
           table.root,
-          new org.apache.spark.util.SerializableConfiguration(
-            spark.sessionState.newHadoopConf()))
+          serializableConf)
       return new FileColFactory(masked, metaFields.map(_.name))
     }
     // S55/S66 claimed filters: every file reads row-based/unsplit through
@@ -1554,8 +1581,7 @@ final class GraftScan(
         fileFactory(StructType(readDataFields), StructType(readPartFields),
           Array.empty[Filter], vectorized = false),
         claimed.toSeq,
-        new org.apache.spark.util.SerializableConfiguration(
-          spark.sessionState.newHadoopConf()))
+        serializableConf)
     val inner =
       if (!table.isPkTable) {
         val plain =
@@ -1570,8 +1596,7 @@ final class GraftScan(
             fileFactory(StructType(readDataFields), StructType(readPartFields),
               Array.empty[Filter]),
             table.root,
-            new org.apache.spark.util.SerializableConfiguration(
-              spark.sessionState.newHadoopConf()))
+            serializableConf)
       } else {
         // merge rows materialize as [mergeDataFields ++ mergePartFields]
         val mergeSchema = StructType(mergeDataFields ++ mergePartFields)
@@ -1580,8 +1605,6 @@ final class GraftScan(
           table.primaryKeys ++ table.sequenceFields
         new GraftMorReaderFactory(
           fileFactory(StructType(mergeDataFields), StructType(mergePartFields), readerFilters),
-          fileFactory(StructType(mergeDataFields), StructType(mergePartFields), readerFilters,
-            vectorized = false),
           mergeSchema,
           keyIdx = table.primaryKeys.map(idx).toArray,
           seqIdx = (table.sequenceFields :+ GraftTable.SeqCol).map(idx).toArray,
@@ -1599,7 +1622,8 @@ final class GraftScan(
           groupSeqIdx = mergeSchema.fields.map { f =>
             if (metaCols.contains(f.name)) -1
             else table.columnSequenceGroup.get(f.name).map(idx).getOrElse(-1)
-          })
+          },
+          keyFilter = keyPredicate(mergeSchema))
       }
     if (bucketGrouped) new UnwrapBucketFactory(inner) else inner
   }
@@ -1712,20 +1736,59 @@ object GraftMorReaderFactory {
   // (local-mode executors share the JVM, so specs can assert the path)
   val streamedGroups = new java.util.concurrent.atomic.AtomicLong(0)
   val hashGroups = new java.util.concurrent.atomic.AtomicLong(0)
+
+  /** Names of the streaming merge's task metrics, declared by
+    * [[GraftScan.supportedCustomMetrics]]: rows the run readers decoded,
+    * rows the key predicate dropped before the merge, and versions the
+    * merge folded away (a key's versions minus one). */
+  val RowsDecoded = "mergeRowsDecoded"
+  val RowsKeyFiltered = "mergeRowsKeyFiltered"
+  val VersionsMerged = "mergeVersionsMerged"
 }
+
+/** The streaming merge's scan metrics. Spark re-creates a metric from
+  * its class name to aggregate it, so each is a concrete no-arg class. */
+sealed abstract class MergeMetric(metricName: String, desc: String)
+    extends org.apache.spark.sql.connector.metric.CustomSumMetric {
+  override def name(): String = metricName
+  override def description(): String = desc
+}
+final class MergeRowsDecodedMetric
+    extends MergeMetric(GraftMorReaderFactory.RowsDecoded, "merge: rows decoded")
+final class MergeRowsKeyFilteredMetric
+    extends MergeMetric(GraftMorReaderFactory.RowsKeyFiltered, "merge: rows dropped by key filter")
+final class MergeVersionsMergedMetric
+    extends MergeMetric(GraftMorReaderFactory.VersionsMerged, "merge: versions merged away")
 
 /** Executor-side merge-on-read: consume every row version of one
   * co-located file group, keep the winner per primary key (greatest
   * sequence.field values, then greatest commit __seq), drop deletes, and
   * emit survivors projected to the requested schema.
   *
-  * Two strategies, chosen per file group:
+  * `files` is the scan's one file reader factory (vectorized whenever the
+  * format and schema allow). Two strategies, chosen per file group:
   *
   * STREAMING (every file in the group is a sorted run — FileMeta.sorted,
   * the normal state since all PK write paths key-sort): a k-way merge
-  * across the runs advances key by key; memory is O(runs) buffered head
-  * rows plus ONE key's live versions — the bounded contract of Paimon's
-  * sorted-run LSM merge, independent of how many keys the bucket holds.
+  * across the runs advances key by key. Each run reads `ColumnarBatch`es
+  * through its own copy of `files` and its head is a view into the
+  * current batch. When the factory cannot read columnar (its
+  * `supportColumnarReads` answers false — Avro, a disabled vectorized
+  * reader, types the vectorized reader does not support) each run reads
+  * rows through `createReader` of that same copy, and its head is the
+  * reader's reused row. Either way a head stays valid only until its run advances, so
+  * the merge copies just the versions it keeps: the winner (or, for a
+  * folding engine, the key's versions). Rows are dropped before they
+  * enter the merge when they are `-U` changelog markers or fail
+  * `keyFilter` — the scan's pushed predicates over primary-key columns,
+  * bound to `mergeSchema` and compiled once per task. That is sound
+  * because every version of a key carries the same key, and Spark
+  * re-applies the pushed filters above the scan. Resident memory is
+  * runs × read columns × batch rows (`columnarReaderBatchSize`, 4,096 by
+  * default) of column vectors, plus each open reader's current row
+  * group pages, plus ONE key's versions — independent of how many keys
+  * the bucket holds, the bounded contract of Paimon's sorted-run LSM
+  * merge.
   *
   * HASH (legacy/unsorted files present, e.g. a compaction clustered by
   * non-key columns): buffer the group's live keys in an UnsafeRow-keyed
@@ -1734,8 +1797,7 @@ object GraftMorReaderFactory {
   * RecordReader merge in PrestoPageSourceBase pulls an already-merged
   * Paimon reader; here the merge IS the reader). */
 final class GraftMorReaderFactory(
-    parquet: PartitionReaderFactory,
-    rowBased: PartitionReaderFactory,
+    files: PartitionReaderFactory,
     mergeSchema: StructType,
     keyIdx: Array[Int],
     seqIdx: Array[Int],
@@ -1745,9 +1807,17 @@ final class GraftMorReaderFactory(
     aggFns: Array[String] = Array.empty,
     // S49 sequence groups: for each mergeSchema ordinal, the ordinal of
     // its group's sequence column (-1 = ungrouped/global order)
-    groupSeqIdx: Array[Int] = Array.empty) extends PartitionReaderFactory {
+    groupSeqIdx: Array[Int] = Array.empty,
+    // pushed primary-key predicates, bound to mergeSchema
+    keyFilter: Option[Expression] = None) extends PartitionReaderFactory {
 
   override def supportColumnarReads(partition: InputPartition): Boolean = false
+
+  // asked at construction, on the driver: some factories (ORC) read the
+  // SQLConf to answer, which is unreadable once shipped to an executor;
+  // file factories answer the same for every partition
+  private val columnarRuns: Boolean =
+    files.supportColumnarReads(FilePartition(0, Array.empty))
 
   private def ref(i: Int) = BoundReference(i, mergeSchema(i).dataType, mergeSchema(i).nullable)
 
@@ -1767,7 +1837,7 @@ final class GraftMorReaderFactory(
     * update the partial non-null-wins rule still applies per column. */
   private def foldAscending(
       rows: scala.collection.mutable.ArrayBuffer[InternalRow],
-      ordAsc: InterpretedOrdering,
+      ordAsc: Ordering[InternalRow],
       combine: Array[(Any, Any) => Any]): InternalRow = {
     val n = mergeSchema.length
     val fieldTypes = mergeSchema.fields.map(_.dataType)
@@ -1832,10 +1902,25 @@ final class GraftMorReaderFactory(
 
   // ---- streaming k-way merge over sorted runs ---------------------------
 
-  /** One open sub-reader per run with a buffered head row; `-U`
-    * changelog markers are skipped on advance (they are not row
-    * versions). Head rows are copies — the reader reuses its row — so
-    * resident memory is runs × one row.
+  /** The streaming merge's counters, reported as task metrics. */
+  private final class MergeCounts {
+    var decoded = 0L
+    var keyFiltered = 0L
+    var merged = 0L
+    private def metric(n: String, v: Long): CustomTaskMetric = new CustomTaskMetric {
+      override def name(): String = n
+      override def value(): Long = v
+    }
+    def values: Array[CustomTaskMetric] = Array(
+      metric(GraftMorReaderFactory.RowsDecoded, decoded),
+      metric(GraftMorReaderFactory.RowsKeyFiltered, keyFiltered),
+      metric(GraftMorReaderFactory.VersionsMerged, merged))
+  }
+
+  /** One open sub-reader per run with its head: the next row that is
+    * neither a `-U` changelog marker (not a row version) nor rejected by
+    * the key predicate. The head is a view — a batch row, or the row
+    * reader's reused row — valid only until the next `advance()`.
     *
     * Each run reads through its OWN copy of the parquet factory: a
     * ParquetPartitionReaderFactory instance closes its current file's
@@ -1844,29 +1929,61 @@ final class GraftMorReaderFactory(
     * while the merge still reads it — failing on its next row group, or
     * on snappy pages once its pooled decompressor is leased to a
     * concurrent task. */
-  private final class Run(file: PartitionedFile, idx: Int) {
+  private final class Run(
+      file: PartitionedFile, idx: Int, keep: BasePredicate, counts: MergeCounts) {
     // a serialization round trip, not copy(): the factory's constructor
     // reads the SQLConf, which is unreadable once shipped to an executor
-    private val factory = rowBased match {
+    private val factory = files match {
       case p: ParquetPartitionReaderFactory =>
         val ser = org.apache.spark.SparkEnv.get.closureSerializer.newInstance()
         ser.deserialize[PartitionReaderFactory](ser.serialize(p))
       case other => other
     }
-    private val reader = factory.createReader(FilePartition(idx, Array(file)))
+    private val part = FilePartition(idx, Array(file))
+    private val batches: PartitionReader[ColumnarBatch] =
+      if (columnarRuns) factory.createColumnarReader(part) else null
+    private val rows: PartitionReader[InternalRow] =
+      if (batches == null) factory.createReader(part) else null
+    private var batch: ColumnarBatch = _
+    private var rowId = 0
     private val updateBefore = UTF8String.fromString(GraftTable.RowKind.UpdateBefore)
     private var closed = false
     var head: InternalRow = _
     advance()
+
+    /** The run's next decoded row, or null once it is drained. */
+    private def nextRow(): InternalRow =
+      if (batches == null) { if (rows.next()) rows.get() else null }
+      else {
+        while (batch == null || rowId >= batch.numRows()) {
+          if (!batches.next()) return null
+          batch = batches.get()
+          rowId = 0
+        }
+        rowId += 1
+        batch.getRow(rowId - 1)
+      }
+
     def advance(): Unit = {
       head = null
-      while (head == null && !closed && reader.next()) {
-        val r = reader.get()
-        if (r.getUTF8String(kindIdx) != updateBefore) head = r.copy()
+      while (head == null && !closed) {
+        val r = nextRow()
+        if (r == null) close()
+        else {
+          counts.decoded += 1
+          if (r.getUTF8String(kindIdx) != updateBefore) {
+            if (keep == null || keep.eval(r)) head = r
+            else counts.keyFiltered += 1
+          }
+        }
       }
-      if (head == null && !closed) { closed = true; reader.close() }
     }
-    def close(): Unit = if (!closed) { closed = true; reader.close() }
+
+    def close(): Unit = if (!closed) {
+      closed = true
+      batch = null
+      if (batches != null) batches.close() else rows.close()
+    }
   }
 
   /** Advance all runs past the globally-least key, combining that key's
@@ -1876,13 +1993,11 @@ final class GraftMorReaderFactory(
     * versions are visited in the same per-file order the concatenated
     * scan would produce (runs drain in file-list order). */
   private def streamingReader(fp: FilePartition): PartitionReader[InternalRow] = {
-    val keyOrd = new InterpretedOrdering(
-      keyIdx.toSeq.map(i => SortOrder(ref(i), Ascending)))
-    val winnerDir = if (engine == "first-row") Ascending else Descending
-    val winnerOrd = new InterpretedOrdering(
-      seqIdx.toSeq.map(i => SortOrder(ref(i), winnerDir)))
-    val ordAsc = new InterpretedOrdering(
-      seqIdx.toSeq.map(i => SortOrder(ref(i), Ascending)))
+    def ordering(idx: Array[Int], dir: SortDirection): BaseOrdering =
+      GenerateOrdering.generate(idx.toSeq.map(i => SortOrder(ref(i), dir)))
+    val keyOrd = ordering(keyIdx, Ascending)
+    val winnerOrd = ordering(seqIdx, if (engine == "first-row") Ascending else Descending)
+    val ordAsc = ordering(seqIdx, Ascending)
     val winnerEngine = engine == "deduplicate" || engine == "first-row"
     val combine: Array[(Any, Any) => Any] =
       if (winnerEngine) null
@@ -1890,14 +2005,26 @@ final class GraftMorReaderFactory(
         MergeFns.combiner(if (i < aggFns.length) aggFns(i) else "", f.dataType)
       }
     val delete = UTF8String.fromString(GraftTable.RowKind.Delete)
-    val runs = fp.files.zipWithIndex.map { case (f, i) => new Run(f, i) }
+    val keep = keyFilter.map { e =>
+      val p = Predicate.create(e)
+      p.initialize(fp.index)
+      p
+    }.orNull
+    val counts = new MergeCounts
+    val runs = fp.files.zipWithIndex.map { case (f, i) => new Run(f, i, keep, counts) }
+    // a kept version: heads are views, so whatever outlives an advance
+    // is copied out of its run
+    val copyVersion = UnsafeProjection.create(mergeSchema.indices.map(ref))
     val outProj = UnsafeProjection.create(outIdx.map(ref).toSeq)
 
     new PartitionReader[InternalRow] {
       private var current: InternalRow = _
       private val buf = new scala.collection.mutable.ArrayBuffer[InternalRow](4)
 
-      /** Merge the least key across runs; null = key fully deleted. */
+      /** Merge the least key across runs; null = key fully deleted.
+        * `least` is a view into its run, valid until that run advances;
+        * every version carries the key, so from the first kept copy on
+        * the runs compare against that copy instead. */
       private def mergeLeastKey(): InternalRow = {
         var least: InternalRow = null
         var i = 0
@@ -1907,40 +2034,42 @@ final class GraftMorReaderFactory(
           i += 1
         }
         if (least == null) return null // all runs exhausted → sentinel handled by caller
+        var versions = 0
         if (winnerEngine) {
           var winner: InternalRow = null
           i = 0
           while (i < runs.length) {
             val run = runs(i)
-            while (run.head != null && keyOrd.compare(run.head, least) == 0) {
+            while (run.head != null &&
+                keyOrd.compare(run.head, if (winner == null) least else winner) == 0) {
               // strict <: ties keep the first-encountered row, the same
               // tie-break as the hash strategy's concatenated scan
-              if (winner == null || winnerOrd.compare(run.head, winner) < 0) winner = run.head
+              if (winner == null || winnerOrd.compare(run.head, winner) < 0)
+                winner = copyVersion(run.head).copy()
+              versions += 1
               run.advance()
             }
             i += 1
           }
+          counts.merged += versions - 1
           if (winner.getUTF8String(kindIdx) == delete) null else winner
         } else {
           buf.clear()
           i = 0
           while (i < runs.length) {
             val run = runs(i)
-            while (run.head != null && keyOrd.compare(run.head, least) == 0) {
-              buf += run.head
+            while (run.head != null &&
+                keyOrd.compare(run.head, if (buf.isEmpty) least else buf(0)) == 0) {
+              buf += copyVersion(run.head).copy()
               run.advance()
             }
             i += 1
           }
-          foldVersions(buf)
+          counts.merged += buf.length - 1
+          // the SHARED group-aware ascending fold (S49)
+          foldAscending(buf, ordAsc, combine)
         }
       }
-
-      /** Ascending stable sort + left fold — the SHARED foldAscending,
-        * so the streamed and hash strategies are row-for-row identical
-        * (incl. S49 sequence groups). */
-      private def foldVersions(rows: scala.collection.mutable.ArrayBuffer[InternalRow]): InternalRow =
-        foldAscending(rows, ordAsc, combine)
 
       override def next(): Boolean = {
         while (runs.exists(_.head != null)) {
@@ -1953,6 +2082,7 @@ final class GraftMorReaderFactory(
         false
       }
       override def get(): InternalRow = current
+      override def currentMetricsValues(): Array[CustomTaskMetric] = counts.values
       override def close(): Unit = runs.foreach(_.close())
     }
   }
@@ -1966,7 +2096,7 @@ final class GraftMorReaderFactory(
     val ord = new InterpretedOrdering(seqIdx.toSeq.map(i => SortOrder(ref(i), dir)))
     val best = new java.util.HashMap[UnsafeRow, InternalRow]()
     val updateBefore = UTF8String.fromString(GraftTable.RowKind.UpdateBefore)
-    val in = parquet.createReader(partition)
+    val in = files.createReader(partition)
     try {
       while (in.next()) {
         val row = in.get().copy()
@@ -2015,7 +2145,7 @@ final class GraftMorReaderFactory(
       }
     val versions = new java.util.HashMap[UnsafeRow, scala.collection.mutable.ArrayBuffer[InternalRow]]()
     val updateBefore = UTF8String.fromString(GraftTable.RowKind.UpdateBefore)
-    val in = parquet.createReader(partition)
+    val in = files.createReader(partition)
     try {
       while (in.next()) {
         val row = in.get().copy()

@@ -44,6 +44,23 @@ object Bridge {
         new org.apache.spark.sql.util.CaseInsensitiveStringMap(options.asJava)))
   }
 
+  /** A predicate Column resolved against `schema` (analyzer type
+    * coercion and time zones applied) and bound to its ordinals — ready
+    * for Catalyst's `Predicate.create` over rows of that layout. */
+  def boundPredicate(
+      spark: org.apache.spark.sql.SparkSession,
+      cond: Column,
+      schema: org.apache.spark.sql.types.StructType): Expression = {
+    import org.apache.spark.sql.catalyst.plans.logical
+    val rel = logical.LocalRelation(
+      org.apache.spark.sql.catalyst.types.DataTypeUtils.toAttributes(schema))
+    val classic = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+    val analyzed = classic.sessionState.analyzer.execute(logical.Filter(
+      org.apache.spark.sql.classic.ColumnNodeToExpressionConverter(cond.node), rel))
+    val resolved = analyzed.collectFirst { case f: logical.Filter => f.condition }.get
+    org.apache.spark.sql.catalyst.expressions.BindReferences.bindReference(resolved, rel.output)
+  }
+
   /** Clone a session: an isolated copy of the SQLConf (and session state)
     * sharing the SparkContext — re-exposes the private[sql] cloneSession.
     * Used to build row-based reader factories without flipping

@@ -1,7 +1,8 @@
 package graft
 
-import graft.sources.GraftTable
-import org.apache.spark.sql.Row
+import graft.sources.{GraftMorReaderFactory, GraftTable, MergeTestAccess}
+import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -293,5 +294,119 @@ class MergeEngineSpec extends AnyFunSuite {
     t.append(Seq((1, "a", 1L)).toDF("k", "v", "ts"))
     intercept[IllegalArgumentException](t.renameColumn("ts", "ts2"))
     intercept[IllegalArgumentException](t.dropColumn("v"))
+  }
+
+  // ---- the streaming k-way merge against every other read of it --------
+
+  private val diffSchema = StructType(Seq(
+    StructField("s", StringType), StructField("n", IntegerType),
+    StructField("ts", LongType), StructField("a", IntegerType),
+    StructField("b", StringType), StructField("g_ts", LongType)))
+
+  /** One CDC run of 15,000 rows over 5,000 composite (string, int) keys:
+    * every key three times, at distinct `ts` within the run and tying
+    * with other runs, so a sorted run's key triples straddle its 4,096-row
+    * batch boundaries. Every tenth row is a `-D`, every tenth a `-U`. */
+  private def cdcRun(r: Int): DataFrame = {
+    val kidx = (col("id") * 7 + r * 13) % 5000
+    spark.range(15000).select(
+      concat(lit("k"), (kidx % 625).cast("string")).as("s"),
+      (kidx / 625).cast("int").as("n"),
+      ((col("id") + r) % 3).as("ts"),
+      (col("id") % 97).cast("int").as("a"),
+      when(col("id") % 11 === 0, lit(null).cast("string"))
+        .otherwise(concat(lit(s"r$r-"), col("id").cast("string"))).as("b"),
+      ((col("id") * 31 + r) % 5).as("g_ts"),
+      when(col("id") % 10 === 0, "-D").when(col("id") % 10 === 1, "-U")
+        .when(col("id") % 10 === 2, "+U").otherwise("+I").as("rowkind"))
+  }
+
+  private def rowsOf(df: DataFrame): Seq[Seq[Any]] =
+    df.select(diffSchema.fieldNames.map(col).toSeq: _*).collect().map(_.toSeq).toSeq
+      .sortBy(r => (r(0).asInstanceOf[String], r(1).asInstanceOf[Int]))
+
+  /** Three CDC runs (the middle one in many small row groups) into a
+    * 2-bucket table; the streamed merge must equal the hash strategy over
+    * the same files, the row-based fallback, and an unfiltered read
+    * filtered afterwards for key lookups. */
+  private def differential(engine: String, extra: Map[String, String] = Map.empty): Unit = {
+    val t = GraftTable.create(spark, TestSpark.tmpDir(s"me-diff-$engine"), diffSchema,
+      primaryKeys = Seq("s", "n"),
+      options = Map("merge-engine" -> engine, "sequence.field" -> "ts",
+        "changelog-producer" -> "input", "bucket" -> "2") ++ extra)
+    t.writeCdc(cdcRun(0))
+    spark.conf.set("parquet.block.size", "4096")
+    try t.writeCdc(cdcRun(1)) finally spark.conf.unset("parquet.block.size")
+    t.writeCdc(cdcRun(2))
+
+    val s0 = GraftMorReaderFactory.streamedGroups.get()
+    val h0 = GraftMorReaderFactory.hashGroups.get()
+    val streamed = rowsOf(t.read())
+    assert(GraftMorReaderFactory.streamedGroups.get() - s0 == 2, engine)
+    assert(GraftMorReaderFactory.hashGroups.get() == h0, engine)
+    assert(streamed.size > 1000 && streamed.size < 5000, s"$engine: ${streamed.size} keys")
+
+    val h1 = GraftMorReaderFactory.hashGroups.get()
+    assert(rowsOf(MergeTestAccess.hashRead(t)) == streamed, s"$engine: hash strategy differs")
+    assert(GraftMorReaderFactory.hashGroups.get() - h1 == 2, engine)
+
+    spark.conf.set("spark.sql.parquet.enableVectorizedReader", "false")
+    try assert(rowsOf(t.read()) == streamed, s"$engine: row-based fallback differs")
+    finally spark.conf.unset("spark.sql.parquet.enableVectorizedReader")
+
+    def load = spark.read.format("graft").load(t.root)
+    val keys = Seq("k1", "k77", "k300", "k624", "nope")
+    val lookup = rowsOf(load.filter(col("s").isin(keys: _*)))
+    assert(lookup.nonEmpty && lookup == streamed.filter(r => keys.contains(r(0))),
+      s"$engine: key IN read differs")
+    val one = rowsOf(load.filter(col("s") === "k77" && col("n") > 3))
+    assert(one == streamed.filter(r => r(0) == "k77" && r(1).asInstanceOf[Int] > 3),
+      s"$engine: composite key read differs")
+  }
+
+  test("merge differential: deduplicate") {
+    differential("deduplicate")
+  }
+
+  test("merge differential: first-row") {
+    differential("first-row")
+  }
+
+  test("merge differential: partial-update with a sequence group") {
+    differential("partial-update", Map("fields.g_ts.sequence-group" -> "b"))
+  }
+
+  test("merge differential: aggregation") {
+    differential("aggregation", Map(
+      "fields.a.aggregate-function" -> "sum",
+      "fields.b.aggregate-function" -> "max"))
+  }
+
+  test("merge: a non-key filter matching only an older version returns nothing") {
+    val t = GraftTable.create(spark, TestSpark.tmpDir("me-oldver"),
+      StructType(Seq(StructField("k", StringType), StructField("v", StringType))),
+      primaryKeys = Seq("k"))
+    t.upsert(Seq(("a", "old"), ("b", "old")).toDF("k", "v"))
+    t.upsert(Seq(("a", "new")).toDF("k", "v"))
+    def load = spark.read.format("graft").load(t.root)
+    assert(load.filter(col("v") === "old").collect().map(_.getString(0)).toSeq == Seq("b"))
+    assert(load.filter(col("k") === "a" && col("v") === "old").isEmpty)
+    assert(load.filter(col("k") === "a").collect().map(_.getString(1)).toSeq == Seq("new"))
+  }
+
+  test("merge: a 64-run group streams within the test heap") {
+    val t = GraftTable.create(spark, TestSpark.tmpDir("me-64runs"),
+      StructType(Seq(StructField("k", LongType), StructField("v", StringType))),
+      primaryKeys = Seq("k"), options = Map("bucket" -> "1"))
+    (0 until 64).foreach { r =>
+      t.upsert(spark.range(r * 50L, r * 50L + 600)
+        .select(col("id").as("k"), concat(lit(s"r$r-"), col("id").cast("string")).as("v")))
+    }
+    val s0 = GraftMorReaderFactory.streamedGroups.get()
+    val got = t.read().collect().map(r => r.getLong(0) -> r.getString(1)).toMap
+    assert(GraftMorReaderFactory.streamedGroups.get() - s0 == 1)
+    // key k's newest version comes from the last run covering it
+    assert(got.size == 63 * 50 + 600)
+    assert(got.forall { case (k, v) => v == s"r${math.min(63L, k / 50)}-$k" })
   }
 }

@@ -346,6 +346,37 @@ class V2ScanSpec extends AnyFunSuite {
     assert(got(1L) == "b-1" && got(501L) == "b-501" && got(4999L) == "a-4999")
   }
 
+  test("sorted-run MOR: merge metrics count decoded, key-filtered and merged-away rows") {
+    import graft.sources.GraftMorReaderFactory
+    val path = TestSpark.tmpDir("v2mormetrics")
+    val t = GraftTable.create(spark, path,
+      StructType(Seq(StructField("id", LongType), StructField("v", StringType))),
+      primaryKeys = Seq("id"), options = Map("bucket" -> "1"))
+    t.upsert((1L to 100L).map(i => (i, s"a-$i")).toDF("id", "v"))
+    t.upsert((1L to 100L by 10).map(i => (i, s"b-$i")).toDF("id", "v"))
+    val df = spark.read.format("graft").load(path).filter($"id".isin(11L, 12L))
+    val scan = graftScan(df)
+    // one vectorized factory for the whole merge: no row-based twin, so
+    // no session clone to disable the vectorized reader
+    val f0 = GraftScan.fileFactoriesBuilt.get()
+    val c0 = GraftScan.sessionClones.get()
+    scan.toBatch.createReaderFactory()
+    assert(GraftScan.fileFactoriesBuilt.get() - f0 == 1)
+    assert(GraftScan.sessionClones.get() == c0)
+
+    assert(df.collect().map(r => (r.getLong(0), r.getString(1))).sortBy(_._1).toSeq ==
+      Seq((11L, "b-11"), (12L, "a-12")))
+    val metrics = df.queryExecution.executedPlan.collectFirst {
+      case b: BatchScanExec => b.metrics
+    }.get
+    def metric(name: String) = metrics(name).value
+    // both runs decode whole (110 rows); all but ids 11 (twice) and 12
+    // fail the key filter; 11's older version is merged away
+    assert(metric(GraftMorReaderFactory.RowsDecoded) == 110)
+    assert(metric(GraftMorReaderFactory.RowsKeyFiltered) == 107)
+    assert(metric(GraftMorReaderFactory.VersionsMerged) == 1)
+  }
+
   test("unsorted files (clustered compaction) fall back to the hash merge, same results") {
     import graft.sources.GraftMorReaderFactory
     val path = TestSpark.tmpDir("v2streamfb")
@@ -459,6 +490,44 @@ class V2ScanSpec extends AnyFunSuite {
       // stats invalidated -> no claim -> file kept (and the row set right)
       assert(plannedOfTotal(df) == ((1, 1)))
       assert(df.count() == 0)
+    } finally {
+      spark.conf.unset(key)
+      spark.experimental.extraOptimizations =
+        spark.experimental.extraOptimizations
+          .filterNot(_.isInstanceOf[graft.plans.SubscriptFilterRule])
+    }
+  }
+
+  test("S68b: a variant path added after a file was written makes no claim on its sidecar") {
+    val path = TestSpark.tmpDir("varstale")
+    val t = GraftTable.create(spark, path,
+      StructType(Seq(StructField("js", StringType), StructField("x", IntegerType))),
+      options = Map(
+        "file-index.variant.columns" -> "js",
+        "file-index.variant.js.paths" -> "$.n"))
+    t.append(Seq(("""{"n":1,"tag":"a"}""", 1)).toDF("js", "x").repartition(1))
+    t.setOptions(Map("file-index.variant.js.paths" -> "$.n,$.tag"))
+    // a file written under the new list shreds both paths
+    t.append(Seq(("""{"n":2,"tag":"b"}""", 2)).toDF("js", "x").repartition(1))
+
+    val key = "spark.graft.subscriptFilters.enabled"
+    spark.experimental.extraOptimizations =
+      spark.experimental.extraOptimizations :+ graft.plans.SubscriptFilterRule(() =>
+        spark.conf.get(key, "false").toBoolean)
+    try {
+      spark.conf.set(key, "true")
+      def load = spark.read.format("graft").load(path)
+      // the first sidecar never shredded $.tag: its file stays planned
+      val a = load.filter(expr("get_json_object(js, '$.tag') = 'a'"))
+      assert(a.count() == 1)
+      assert(plannedOfTotal(a) == ((1, 2)), "only the second file's sidecar may claim")
+      val b = load.filter(expr("get_json_object(js, '$.tag') = 'b'"))
+      assert(plannedOfTotal(b) == ((2, 2)))
+      assert(b.collect().map(_.getInt(1)).toSeq == Seq(2))
+      // $.n was shredded by both sidecars and still prunes
+      val n = load.filter(expr("variant_get(parse_json(js), '$.n', 'bigint') > 1"))
+      assert(plannedOfTotal(n) == ((1, 2)))
+      assert(n.collect().map(_.getInt(1)).toSeq == Seq(2))
     } finally {
       spark.conf.unset(key)
       spark.experimental.extraOptimizations =
