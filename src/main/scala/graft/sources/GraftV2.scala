@@ -1813,9 +1813,9 @@ final class GraftMorReaderFactory(
 
   override def supportColumnarReads(partition: InputPartition): Boolean = false
 
-  // asked at construction, on the driver: some factories (ORC) read the
-  // SQLConf to answer, which is unreadable once shipped to an executor;
-  // file factories answer the same for every partition
+  // asked once at construction, where the SQLConf is readable: some
+  // factories (ORC) read it to answer, and it is unreadable once shipped
+  // to an executor; file factories answer the same for every partition
   private val columnarRuns: Boolean =
     files.supportColumnarReads(FilePartition(0, Array.empty))
 
