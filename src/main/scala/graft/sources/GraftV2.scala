@@ -3,7 +3,7 @@ package graft.sources
 import org.apache.spark.paths.SparkPath
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{Ascending, BaseOrdering, BasePredicate, BoundReference, Descending, Expression, InterpretedOrdering, Predicate, SortDirection, SortOrder, UnsafeProjection, UnsafeRow}
+import org.apache.spark.sql.catalyst.expressions.{Ascending, BaseOrdering, BasePredicate, BoundReference, Descending, Expression, In, InSet, InterpretedOrdering, Predicate, SortDirection, SortOrder, UnsafeProjection, UnsafeRow}
 import org.apache.spark.sql.catalyst.expressions.codegen.GenerateOrdering
 import org.apache.spark.sql.connector.catalog.{SupportsRead, SupportsWrite, Table, TableCapability}
 import org.apache.spark.sql.connector.expressions.aggregate.Aggregation
@@ -1512,6 +1512,13 @@ final class GraftScan(
         try Some(org.apache.spark.sql.graft.Bridge.boundPredicate(spark, c, mergeSchema))
         catch { case scala.util.control.NonFatal(_) => None }
       }
+      // an IN list as a set (what Spark's OptimizeIn does): `In` inlines
+      // its literals into the generated class, so every distinct key set
+      // would compile a new predicate; `InSet` shares one class
+      .map(_.transform {
+        case In(v, list) if list.nonEmpty && list.forall(_.foldable) =>
+          InSet(v, list.map(_.eval()).toSet)
+      })
   }
 
   override def supportedCustomMetrics(): Array[CustomMetric] =
