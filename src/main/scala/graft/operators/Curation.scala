@@ -4,6 +4,7 @@ import graft.{QDef, Tables => T}
 import graft.functions.{HashExpr, Text}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.Bridge
 
 /** Corpus-curation operators beyond the dedup/decontamination family
   * (SURVEY §2.3 L28–L31): per-source quota caps, corpus-adaptive
@@ -336,16 +337,14 @@ object Curation {
         val len = st.getField("len")
         val alnum = st.getField("alnum")
         // the doc-stats pass feeds three branches of one action —
-        // materialize it once (4 scalars/doc, the "doc stats" table a
-        // real pipeline stages; a lazy frame recomputes the text scan
-        // per branch)
-        val t = T.documents(s, d).select(
+        // stage it once (4 scalars/doc, the "doc stats" table a real
+        // pipeline stages; a lazy frame recomputes the text scan per
+        // branch)
+        val t = Bridge.stage(T.documents(s, d).select(
           col("lang"), col("doc_id"),
           st.getField("ntok").as("ntok"),
           when(len > 0, floor(lit(1000.0) * (alnum.cast("double") / len.cast("double"))))
-            .otherwise(lit(0L)).cast("long").as("b"))
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        t.count()
+            .otherwise(lit(0L)).cast("long").as("b")))
         val bands = t.groupBy("lang", "b")
           .agg(sum("ntok").as("toks"), count(lit(1)).as("docs"))
         val wCum = Window.partitionBy("lang").orderBy(desc("b"))
@@ -429,7 +428,7 @@ object Curation {
     // shingle-equality join of the (5%) test explosion against the
     // vocabulary-bounded DISTINCT train-shingle presence set — never
     // doc×doc pairs, never a corpus self-join. Consumes the SHARED
-    // persisted shingle stage; split assignment replays L37's salted
+    // staged shingle frame; split assignment replays L37's salted
     // hash exactly. Counts exact integers; leak_rate one division.
     QDef(
       "q_split_leakage",
@@ -646,7 +645,7 @@ object Curation {
     // salt "mix:" decorrelates the draw from L31's). Reports per lang
     // the survivor count, derived threshold, kept docs and kept
     // whitespace tokens — the export manifest. Three corpus passes
-    // (trainer, survivor counts, final pass) + the persisted pair
+    // (trainer, survivor counts, final pass) + the staged pair
     // stage; every selection is a pure hash/integer function, and the
     // threshold derivation is the L31 IEEE-exact single-op sequence
     // replayed in SQL from the survivor counts.

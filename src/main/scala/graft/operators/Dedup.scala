@@ -3,6 +3,7 @@ package graft.operators
 import graft.{QDef, Tables => T}
 import graft.functions.{HashExpr, ShingleExpr, Text}
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.graft.Bridge
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -81,17 +82,15 @@ object Dedup {
     * co-partition on one shuffle key. Used by the L3 batch path and the
     * L68 persisted-index path (same oracle fragment: [[bandCandSql]]).
     *
-    * The band frame is persisted EAGERLY for the build (the standard
-    * multi-branch discipline): FOUR consumers reference it (bucket
-    * stats, the semi-join, the self-join pair, the star join), and
-    * unpersisted they would each recompute the signature aggregation
-    * upstream (measured 1.5× on the sf0.1 bench when the star branch
-    * grew the consumer count from 2 to 4). The returned candidate frame
-    * is STAGED (persist + count) under `owner` before the bands cache
-    * is released, so no consumer ever recomputes the subtree. */
+    * The band frame is staged ([[Bridge.stage]]) for the build: FOUR
+    * consumers reference it (bucket stats, the semi-join, the self-join
+    * pair, the star join), and unstaged they would each recompute the
+    * signature aggregation upstream (measured 1.5× on the sf0.1 bench
+    * when the star branch grew the consumer count from 2 to 4). The
+    * returned candidate frame is staged under `owner` before the bands
+    * stage is released, so no consumer ever recomputes the subtree. */
   private[operators] def bandCandidates(owner: String, bands0: DataFrame): DataFrame = {
-    val bands = bands0.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    bands.count()
+    val bands = Bridge.stage(bands0)
     try {
       val stats = bands.groupBy("band")
         .agg(count(lit(1)).as("bn"), min(col("doc_id")).as("rep"))
@@ -108,7 +107,7 @@ object Dedup {
         .filter(col("doc_id") > col("rep"))
         .select(col("rep").as("d1"), col("doc_id").as("d2"))
       stageCandTracked(owner, small.union(star).distinct())
-    } finally { bands.unpersist(blocking = false); () }
+    } finally Bridge.release(bands)
   }
 
   /** DuckDB mirror of [[bandCandidates]]: expects a CTE `er(doc_id, g)`
@@ -147,32 +146,24 @@ object Dedup {
   /** (doc_id, shingles) — the tokenize→shingle stage is the expensive
     * text pass and feeds candidate generation, verification sizes and the
     * minhash signatures, so it is computed once per (session, dir) and
-    * persisted. At 100 TB this is the stage a pipeline materializes to a
-    * staged table; here the same sharing is an in-memory persist. */
+    * staged ([[Bridge.stage]]): the cascade reads it from several
+    * branches of ONE action (prefix, verify semi-join, sizes). At 100 TB
+    * this is the stage a pipeline materializes to a staged table; here
+    * the same sharing is an in-memory cache. */
   private val shingleCache = scala.collection.concurrent.TrieMap[String, DataFrame]()
   private[graft] def docsWithShingles(s: SparkSession, d: String): DataFrame =
-    shingleCache.getOrElseUpdate(cacheKey(s, d), {
-      val df = T.documents(s, d)
-        .select(col("doc_id"), Text.words(col("text")).as("w"))
-        .select(col("doc_id"), ShingleExpr.shingles3(col("w")).as("sh"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      // materialize EAGERLY: the cascade references this frame from
-      // several branches of ONE action (prefix, verify semi-join, sizes);
-      // a lazy persist lets those branches race-compute the shingle pass
-      // in parallel before any block lands in the cache (measured ~2× on
-      // the cold pair build) — one up-front pass pins it.
-      df.count()
-      df
-    })
+    shingleCache.getOrElseUpdate(cacheKey(s, d), Bridge.stage(T.documents(s, d)
+      .select(col("doc_id"), Text.words(col("text")).as("w"))
+      .select(col("doc_id"), ShingleExpr.shingles3(col("w")).as("sh"))))
 
   /** The verified Jaccard pair set is a STAGED intermediate: the pair
     * diagnostics (q_dedup_jaccard) and the apply operator (q_dedup_apply)
     * both consume it, so it is computed once per (session, dir) and
-    * persisted — the in-memory analogue of materializing the candidate
+    * staged — the in-memory analogue of materializing the candidate
     * table between pipeline stages at 100 TB scale, where re-running the
     * shingle/candidate/verify cascade per consumer would double the cost. */
   /** Cache key: application id + session identity + dir. Entries live for
-    * the JVM (one persisted DF per benchmarked dir — bounded and small);
+    * the JVM (one staged DF per benchmarked dir — bounded and small);
     * the app-id component keeps a restarted SparkContext from colliding
     * with a dead session's entries. */
   private def cacheKey(s: SparkSession, d: String): String =
@@ -181,7 +172,7 @@ object Dedup {
   private val pairsCache = scala.collection.concurrent.TrieMap[String, DataFrame]()
   private[operators] def jaccardPairsStaged(s: SparkSession, d: String): DataFrame =
     pairsCache.getOrElseUpdate(cacheKey(s, d),
-      jaccardPairs(s, d).persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+      Bridge.stage(jaccardPairs(s, d)))
 
   /** Exact Jaccard on prefix-filtered candidate pairs.
     *
@@ -239,30 +230,27 @@ object Dedup {
       .distinct()
   }
 
-  /** Materialize a candidate-pair frame before verification: verify
-    * references it three times (the id semi-join twice, the
-    * intersection join once) inside ONE action, so an unmaterialized
-    * subtree re-runs the whole candidate cascade per reference. This is
-    * the in-memory analogue of writing the candidate table between
-    * pipeline stages at 100 TB (candidates ≪ corpus by construction). */
-  private[operators] def stageCand(cand: DataFrame): DataFrame = {
-    val c = cand.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    c.count()
-    c
-  }
+  /** Materialize a candidate-pair frame before verification
+    * ([[Bridge.stage]]): verify references it three times (the id
+    * semi-join twice, the intersection join once) inside ONE action, so
+    * an unmaterialized subtree re-runs the whole candidate cascade per
+    * reference. This is the in-memory analogue of writing the candidate
+    * table between pipeline stages at 100 TB (candidates ≪ corpus by
+    * construction). */
+  private[graft] def stageCand(cand: DataFrame): DataFrame = Bridge.stage(cand)
 
   /** [[stageCand]] with per-owner tracking: staging a new frame under an
-    * owner key unpersists the owner's PREVIOUS staged frame, so callers
+    * owner key releases the owner's PREVIOUS staged frame, so callers
     * that re-stage per invocation (DedupIndex.pairs — a long-lived
     * session verifying after every index refresh) hold at most ONE
     * staged block set per owner instead of accumulating MEMORY_AND_DISK
-    * blocks unboundedly (ADVICE r15). Unpersisting the superseded frame
+    * blocks unboundedly (ADVICE r15). Releasing the superseded frame
     * is always safe: a straggling consumer recomputes, never misreads. */
   private val stagedByOwner =
     scala.collection.concurrent.TrieMap[String, DataFrame]()
   private[operators] def stageCandTracked(owner: String, cand: DataFrame): DataFrame = {
     val c = stageCand(cand)
-    stagedByOwner.put(owner, c).foreach(_.unpersist(blocking = false))
+    stagedByOwner.put(owner, c).foreach(Bridge.release)
     c
   }
 
@@ -670,7 +658,7 @@ object Dedup {
     // export. The benchmark side (here the deterministic doc_id % 97
     // slice; in production the eval sets) is orders of magnitude smaller
     // than the corpus, so its exploded shingles BROADCAST and the corpus
-    // side stays one linear pass over the shared persisted shingle
+    // side stays one linear pass over the shared staged shingle
     // stage — no shuffle of the 100 TB side, no all-pairs product.
     QDef(
       "q_decontaminate",

@@ -4,6 +4,7 @@ import graft.{QDef, Tables => T}
 import graft.functions.Text
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.Bridge
 
 /** Second-wave dedup operators (SURVEY §2.3 L33–L34): sub-document
   * granularity and incremental batch-vs-corpus dedup — the two shapes
@@ -69,10 +70,8 @@ object Dedup2 {
         // presence set twice, verify) — materialize it once (the staged
         // shingle-occurrence table; a lazy frame re-runs the
         // union/shingle/explode per branch)
-        val ex = all.select(col("doc_id"), col("lang"), col("sz"),
-          explode(col("sh")).as("g"))
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        ex.count()
+        val ex = Bridge.stage(all.select(col("doc_id"), col("lang"), col("sz"),
+          explode(col("sh")).as("g")))
         // df as a map-combinable groupBy joined back (AQE-skew-safe), not
         // a window over the Zipfian shingle key — see Dedup.jaccardPairs.
         val dfreq = ex.groupBy("g").agg(count(lit(1)).as("c"))
@@ -119,7 +118,7 @@ object Dedup2 {
         try {
           val rows = result.collect() // bounded (langs) — release the stage
           s.createDataFrame(s.sparkContext.parallelize(rows.toSeq, 1), result.schema)
-        } finally ex.unpersist()
+        } finally Bridge.release(ex)
       },
       Some(s"""WITH base AS (SELECT doc_id, lang, ${Dedup.ShSql} AS sh FROM documents),
               |exc0 AS (SELECT doc_id, lang,
@@ -274,7 +273,7 @@ object Dedup2 {
     // dropped if it exact-dups (md5 content key) or near-dups (the
     // staged Jaccard pair set) any corpus doc, or a SMALLER-id new doc
     // (keep-first within the batch). Exact-before-near precedence makes
-    // the drop-reason counts disjoint. Reuses the SHARED persisted
+    // the drop-reason counts disjoint. Reuses the SHARED staged
     // shingle + pair stages — at 100 TB the directional form broadcasts
     // only the new batch's PPJoin prefixes and makes ONE pass over the
     // corpus; the semantics here are identical on the symmetric pair
@@ -441,7 +440,7 @@ object Dedup2 {
     // the number of DISTINCT 3-shingles present in both (the corpus-
     // mixing diagnostic: a pair sharing a fat slice of its shingle
     // vocabulary is mirrored/scraped-from-each-other content and its
-    // docs double-count in the mixture). Consumes the SHARED persisted
+    // docs double-count in the mixture). Consumes the SHARED staged
     // shingle stage (the r8/r9 lesson — no second tokenize pass); the
     // presence set is distinct (source, shingle) — vocabulary-bounded,
     // sublinear in the corpus — and the pair counts come from a shingle
@@ -571,7 +570,7 @@ object Dedup2 {
     // doc's distinct word-trigrams FIRST seen in that doc under the
     // corpus's ingest order (doc_id): the marginal-novelty diagnostic
     // behind "is source X still adding new content or re-crawling the
-    // same material?". Consumes the SHARED persisted shingle stage
+    // same material?". Consumes the SHARED staged shingle stage
     // (Dedup.docsWithShingles — no second tokenize pass); first-seen is
     // a map-combinable groupBy min on the shingle key (NOT a window over
     // g — Zipfian hot-key buffering, see Dedup.jaccardPairs), the novel
@@ -670,7 +669,7 @@ object Dedup2 {
     // against the TRUE Jaccard: the index-tuning diagnostic that says
     // whether the deployed band/row geometry still tracks reality
     // (E[agree/k] = J; a drifting gap means the permutation count is
-    // wrong for the corpus). Reuses the SHARED persisted pair stage and
+    // wrong for the corpus). Reuses the SHARED staged pair stage and
     // the L3 signature permutations; per-pair rows only (pair-set
     // sized) with NO cross-row float aggregation — every value is a
     // single-division derivation both engines (§5).

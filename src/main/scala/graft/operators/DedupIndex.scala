@@ -5,6 +5,7 @@ import graft.functions.{HashExpr, ShingleExpr, Text}
 import graft.sources.GraftTable
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.Bridge
 import org.apache.spark.sql.types._
 
 /** L68: persisted, incrementally-maintained MinHash/LSH dedup index —
@@ -96,15 +97,15 @@ object DedupIndex {
     val delta = s.read.format("graft")
       .option("incremental-between", s"$from,$latest").load(source.root)
       .select(col("doc_id"), col("text"))
-    // persisted so the diagnostic count below reads the cached delta
-    // signatures instead of re-running the tokenize/hash pipeline
-    val sigs = signaturesOf(delta)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    // staged so the upsert and the diagnostic count below read the
+    // cached delta signatures instead of re-running the tokenize/hash
+    // pipeline
+    val sigs = Bridge.stage(signaturesOf(delta))
     try {
       t.upsert(sigs)
       t.setOptions(Map(SnapshotProp -> latest.toString))
       sigs.count() // O(delta) diagnostic — never the corpus
-    } finally sigs.unpersist(blocking = false)
+    } finally Bridge.release(sigs)
   }
 
   /** Verified near-dup pairs FROM the persisted index: band-equality

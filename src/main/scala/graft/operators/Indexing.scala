@@ -5,6 +5,7 @@ import graft.functions.Text
 import org.apache.spark.sql.Row
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.Bridge
 
 /** Inverted-index construction over the documents corpus (SURVEY §2.3
   * L24) — the retrieval-side complement of decontamination (L20): term →
@@ -53,12 +54,11 @@ object Indexing {
       (s, d) => {
         val maxDf = T.metadataRowCount(s, d, "documents") * 9 / 10
         // pairs feeds the df pass AND the posting materialization — one
-        // persisted stage, not two corpus tokenizations (shared-stage
-        // rule; the distinct is the expensive half)
-        val pairs = T.documents(s, d)
+        // staged frame, not two corpus tokenizations (shared-stage rule;
+        // the distinct is the expensive half)
+        val pairs = Bridge.stage(T.documents(s, d)
           .select(col("doc_id"), explode(Text.words(col("text"))).as("term"))
-          .distinct() // presence, not tf: one (doc, term) pair each
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+          .distinct()) // presence, not tf: one (doc, term) pair each
         try {
           val kept = pairs.groupBy("term").agg(count(lit(1)).as("df"))
             .filter(col("df") >= MinDf && col("df") <= maxDf)
@@ -85,7 +85,7 @@ object Indexing {
             .limit(Top)
           val rows = result.collect() // bounded (Top) — release the stage
           s.createDataFrame(s.sparkContext.parallelize(rows.toSeq, 1), result.schema)
-        } finally pairs.unpersist()
+        } finally Bridge.release(pairs)
       },
       Some(s"""WITH pairs AS (SELECT DISTINCT doc_id, term FROM (
               |    SELECT doc_id, unnest(string_split_regex(trim(text),'\\s+')) AS term
@@ -202,13 +202,12 @@ object Indexing {
       s: org.apache.spark.sql.SparkSession, d: String): org.apache.spark.sql.DataFrame = {
         // ONE tokenize pass + ONE (doc,term) shuffle: every statistic —
         // dl (sum of tf per doc), df (row count per term), tf (filtered
-        // rows) — derives from the persisted tf frame. Naively deriving
+        // rows) — derives from the staged tf frame. Naively deriving
         // the three from the raw token stream re-tokenizes the corpus
         // three times; at 100 TB those are three full scans.
-        val grouped = T.documents(s, d)
+        val grouped = Bridge.stage(T.documents(s, d)
           .select(col("doc_id"), explode(Text.words(col("text"))).as("term"))
-          .groupBy("doc_id", "term").agg(count(lit(1)).as("tf"))
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+          .groupBy("doc_id", "term").agg(count(lit(1)).as("tf")))
         try {
           val dl = grouped.groupBy("doc_id").agg(sum("tf").as("dl"))
           val nDocs = T.metadataRowCount(s, d, "documents")
@@ -239,7 +238,7 @@ object Indexing {
           val rows = result.collect()
           s.createDataFrame(
             s.sparkContext.parallelize(rows.toSeq, 1), result.schema)
-        } finally grouped.unpersist()
+        } finally Bridge.release(grouped)
   }
 
   /** The BM25 oracle CTE chain (ends at `sc`), shared by the q_rank_bm25

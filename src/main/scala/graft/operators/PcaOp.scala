@@ -4,6 +4,7 @@ import graft.{QDef, Tables => T}
 import graft.functions.VectorExpr
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.Bridge
 import org.apache.spark.sql.types.{ArrayType, DoubleType}
 
 /** Distributed PCA — top principal component by power iteration over the
@@ -16,7 +17,7 @@ import org.apache.spark.sql.types.{ArrayType, DoubleType}
   * Scale shape (the k-means L26 pattern applied to the gramian):
   *  - the component vector lives on the DRIVER as d doubles (bounded
   *    metadata); each round broadcasts it into the plan as a literal,
-  *    so every per-round frame derives fresh from the persisted
+  *    so every per-round frame derives fresh from the staged
   *    quantized input — no growing lineage.
   *  - one power-iteration round is ONE corpus pass: a codegen'd
   *    sequential-fold projection (VectorExpr.dot — not an interpreted
@@ -61,7 +62,7 @@ object PcaOp {
       .cast(DoubleType)
 
   /** (μ per dim, n) then `PcaIters` power-iteration rounds; returns the
-    * final unit component. `q` must be the persisted quantized frame. */
+    * final unit component. `q` must be the staged quantized frame. */
   private def powerIterate(q: DataFrame): (Array[Double], Array[Double]) = {
     val stats = q
       .select(posexplode(col("qv")).as(Seq("p", "x")))
@@ -110,11 +111,11 @@ object PcaOp {
       Some(pcaOracle))
   )
 
-  /** Quantized (vec_id, label, qv) frame, persisted per (session, dir) —
-    * the KMeansOp/Dedup staged-cache pattern. An eager per-invocation
-    * unpersist would release the cache BEFORE the returned projection
+  /** Quantized (vec_id, label, qv) frame, staged per (session, dir) —
+    * the Dedup staged-cache pattern. An eager per-invocation
+    * release would drop the cache BEFORE the returned projection
     * frame (the largest pass) ever executes, re-quantizing the corpus
-    * for exactly the consumer the persist exists to serve; entries are
+    * for exactly the consumer the stage exists to serve; entries are
     * bounded (one small frame per benchmarked dir) and live for the
     * session. */
   private val qCache =
@@ -122,12 +123,11 @@ object PcaOp {
   private def quantizedLabeled(s: SparkSession, d: String): DataFrame =
     qCache.getOrElseUpdate(
       s"${s.sparkContext.applicationId}:${System.identityHashCode(s)}:$d",
-      T.embeddings(s, d)
+      Bridge.stage(T.embeddings(s, d)
         .select(col("vec_id"), col("label"),
           VectorExpr.quantize(
             col("embedding").cast(ArrayType(DoubleType)), Scale).as("qv"))
-        .filter(col("qv").isNotNull)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+        .filter(col("qv").isNotNull)))
 
   /** DuckDB replay: quantize → μ/n → v0 = 1/√d → PcaIters unrolled
     * rounds (z fold, yq quantize, Σyq·x / Σyq per dim, center, normalize)

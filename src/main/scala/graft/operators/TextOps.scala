@@ -3,6 +3,7 @@ package graft.operators
 import graft.{QDef, Tables => T}
 import graft.functions.{CharStatsExpr, HashExpr, Text}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.Bridge
 
 /** Text-analysis operators over `documents` (SURVEY §2.3 L8–L11).
   * All are single-pass scans with map-side partial aggregation — linear
@@ -58,12 +59,11 @@ object TextOps {
       (s, d) => {
         import graft.functions.ShingleExpr
         // pairs feeds BOTH the corpus counts and the per-doc fold — one
-        // persisted stage instead of tokenizing the corpus twice (the
-        // same shared-stage rule as the dedup shingles and BM25)
-        val pairs = T.documents(s, d)
+        // staged frame instead of tokenizing the corpus twice (the same
+        // shared-stage rule as the dedup shingles and BM25)
+        val pairs = Bridge.stage(T.documents(s, d)
           .select(col("doc_id"),
-            explode(ShingleExpr.bigrams(Text.words(col("text")))).as("bg"))
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+            explode(ShingleExpr.bigrams(Text.words(col("text")))).as("bg")))
         try {
           val counts = pairs.groupBy("bg").agg(count(lit(1)).as("cnt"))
           val result = pairs.join(counts, "bg")
@@ -76,7 +76,7 @@ object TextOps {
             .select("doc_id", "n_bigrams", "fam_sum", "familiarity")
           val rows = result.collect() // bounded (100) — release the stage
           s.createDataFrame(s.sparkContext.parallelize(rows.toSeq, 1), result.schema)
-        } finally pairs.unpersist()
+        } finally Bridge.release(pairs)
       },
       Some("""WITH toks AS (SELECT doc_id,
              |    string_split_regex(trim(text),'\s+') AS t FROM documents),
@@ -99,18 +99,17 @@ object TextOps {
     // identically for filtering. Shapes: two map-combinable groupBys +
     // equality joins back on the bigram/left-context keys
     // (AQE-skew-splittable — stopword-headed contexts are the hot keys);
-    // the tokenize pass is ONE persisted stage (the L39 rule); output is
+    // the tokenize pass is ONE staged frame (the L39 rule); output is
     // the per-lang quality mix (low-quality = mean scaled transition < 33000, ~the corpus p10-p25).
     QDef(
       "q_lm_score",
       (s, d) => {
         import graft.functions.ShingleExpr
-        val pairs = T.documents(s, d)
+        // three branches of one action read it
+        val pairs = Bridge.stage(T.documents(s, d)
           .select(col("doc_id"), col("lang"),
-            explode(ShingleExpr.bigrams(Text.words(col("text")))).as("bg"))
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+            explode(ShingleExpr.bigrams(Text.words(col("text")))).as("bg")))
         try {
-          pairs.count() // eager: three branches of one action read it
           val cb = pairs.groupBy("bg").agg(count(lit(1)).as("cb"))
           val cl = pairs
             .select(substring_index(col("bg"), " ", 1).as("w1"))
@@ -146,7 +145,7 @@ object TextOps {
             .orderBy("lang")
           val rows = result.collect() // bounded (langs) — release the stage
           s.createDataFrame(s.sparkContext.parallelize(rows.toSeq, 1), result.schema)
-        } finally pairs.unpersist()
+        } finally Bridge.release(pairs)
       },
       Some("""WITH toks AS (SELECT doc_id, lang,
              |    string_split_regex(trim(text),'\s+') AS t FROM documents),

@@ -911,6 +911,33 @@ object GraftScan {
   val fileFactoriesBuilt = new java.util.concurrent.atomic.AtomicLong(0)
   val sessionClones = new java.util.concurrent.atomic.AtomicLong(0)
 
+  /** The file index handed to the ParquetScan/OrcScan that build reader
+    * factories. `createReaderFactory` never reads it, but constructing an
+    * `InMemoryFileIndex` copies the Hadoop conf and runs a listing
+    * refresh, once per factory. One empty index per SparkContext serves
+    * every scan (a cloned session shares its parent's context). */
+  @volatile private var noFiles: NoFilesIndex = _
+  private[sources] def noFilesIndex(s: SparkSession)
+      : org.apache.spark.sql.execution.datasources.PartitioningAwareFileIndex = {
+    val cur = noFiles
+    if (cur != null && (cur.context eq s.sparkContext)) cur
+    else { val fresh = new NoFilesIndex(s); noFiles = fresh; fresh }
+  }
+
+  private final class NoFilesIndex(s: SparkSession)
+      extends org.apache.spark.sql.execution.datasources.PartitioningAwareFileIndex(
+        s, Map.empty, None) {
+    import org.apache.hadoop.fs.{FileStatus, Path}
+    val context: org.apache.spark.SparkContext = s.sparkContext
+    override def partitionSpec() =
+      org.apache.spark.sql.execution.datasources.PartitionSpec.emptySpec
+    override protected def leafFiles =
+      scala.collection.mutable.LinkedHashMap.empty[Path, FileStatus]
+    override protected def leafDirToChildrenFiles = Map.empty[Path, Array[FileStatus]]
+    override def rootPaths: Seq[Path] = Seq.empty
+    override def refresh(): Unit = ()
+  }
+
   /** S69 TABLESAMPLE SYSTEM keep rule — a pure function of the MANIFEST
     * entry, so the decision costs zero data I/O and is DETERMINISTIC for
     * a given table state (unlike Trino's per-split coin flip):
@@ -1430,8 +1457,9 @@ final class GraftScan(
     new org.apache.spark.util.SerializableConfiguration(hadoopConf)
 
   /** Build the vectorized reader factory by delegating to a real
-    * ParquetScan/OrcScan (over an empty file index — createReaderFactory
-    * never touches it): it installs every reader conf key (read-support
+    * ParquetScan/OrcScan (over the shared empty file index
+    * [[GraftScan.noFilesIndex]] — createReaderFactory never touches
+    * it): it installs every reader conf key (read-support
     * class, requested schema, timezone, rebase modes) exactly as the
     * built-in source does, so we inherit Spark's columnar read path
     * verbatim instead of re-plumbing it.
@@ -1458,8 +1486,7 @@ final class GraftScan(
     if (table.fileFormat == "avro")
       return new GraftAvroReaderFactory(serializableConf, readData, readPart)
     def build(s: SparkSession): PartitionReaderFactory = {
-      val emptyIndex = new org.apache.spark.sql.execution.datasources.InMemoryFileIndex(
-        s, Seq.empty, Map.empty, None)
+      val emptyIndex = GraftScan.noFilesIndex(s)
       if (table.fileFormat == "orc")
         new org.apache.spark.sql.execution.datasources.v2.orc.OrcScan(
           s, hadoopConf, emptyIndex,

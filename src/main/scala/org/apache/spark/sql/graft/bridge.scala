@@ -71,6 +71,53 @@ object Bridge {
       : org.apache.spark.sql.SparkSession =
     spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession].cloneSession()
 
+  /** Persisted frames behind the frames [[stage]] returned, keyed by the
+    * staged frame's RDD, so [[release]] can drop the CacheManager entry. */
+  private val staged = new java.util.concurrent.ConcurrentHashMap[
+    org.apache.spark.rdd.RDD[_], org.apache.spark.sql.DataFrame]()
+
+  /** Materialize `df` once (MEMORY_AND_DISK + one count) and return a
+    * frame over the cached scan, for intermediates that several branches
+    * of one action read. The returned plan is a `LogicalRDD` over the
+    * cached scan's RDD, the construction `Dataset.checkpoint` uses:
+    *  - lineage stays (unlike `localCheckpoint`), so a lost block
+    *    recomputes;
+    *  - the CacheManager entry stays, so [[release]] can unpersist it;
+    *  - AQE canonicalizes the leaf, so it reuses exchanges above it. On
+    *    Spark 4.1 it never reuses an exchange whose subtree scans an
+    *    `InMemoryRelation`: a self-join of an aggregate over a plain
+    *    persisted frame runs the aggregate's shuffle once per side.
+    * A lazy persist is no substitute either: the branches race-compute
+    * the whole subtree before any block lands in the cache. */
+  def stage(df: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
+    df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val classic = df.sparkSession.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+    // fresh Datasets over the same plan: each looks the cache up when it
+    // is planned, so it scans the blocks even if `df`'s own plan was
+    // resolved before the persist
+    def overCache() = org.apache.spark.sql.classic.Dataset.ofRows(classic,
+      df.queryExecution.analyzed)
+    // fill every block in one pass over the cached scan (Dataset.count
+    // would add a job to build the cache and a shuffle to sum counts)
+    overCache().queryExecution.toRdd.count()
+    // planned after the fill, so the leaf carries the cache's measured size
+    val scan = overCache()
+    val rdd = scan.queryExecution.toRdd
+    staged.put(rdd, df)
+    org.apache.spark.sql.classic.Dataset.ofRows(classic,
+      org.apache.spark.sql.execution.LogicalRDD.fromDataset(rdd, scan, isStreaming = false))
+  }
+
+  /** Unpersist the frame behind a [[stage]]d frame (no-op for any other
+    * frame). A plan already built over it stays valid: it recomputes
+    * from lineage instead of reading blocks. */
+  def release(df: org.apache.spark.sql.DataFrame): Unit =
+    df.queryExecution.analyzed match {
+      case lr: org.apache.spark.sql.execution.LogicalRDD =>
+        Option(staged.remove(lr.rdd)).foreach(_.unpersist(blocking = false))
+      case _ => ()
+    }
+
   /** The RDD backing a localCheckpoint'd Dataset (a LogicalRDD plan).
     * Dataset.unpersist goes through the CacheManager, which does NOT
     * track localCheckpoint blocks — freeing them before the
