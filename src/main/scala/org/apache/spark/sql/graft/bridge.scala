@@ -99,7 +99,10 @@ object Bridge {
       df.queryExecution.analyzed)
     // fill every block in one pass over the cached scan (Dataset.count
     // would add a job to build the cache and a shuffle to sum counts)
-    overCache().queryExecution.toRdd.count()
+    val fill = overCache().queryExecution
+    org.apache.spark.sql.execution.SQLExecution.withNewExecutionId(fill, Some("stage")) {
+      fill.toRdd.count()
+    }
     // planned after the fill, so the leaf carries the cache's measured size
     val scan = overCache()
     val rdd = scan.queryExecution.toRdd

@@ -10,9 +10,10 @@ execution that ran it) or a stage attempt of a job ("spark.stage": task
 metrics summed over the stage's tasks).
 
 For each op name it prints the number of ops and, per op: Spark jobs,
-stages that ran, tasks, shuffle bytes written, executor run seconds,
-op wall seconds and the driver gap (op seconds no job of the op
-covered: planning, driver-side collects, commit work).
+the SQL executions those jobs ran in, stages that ran, tasks, shuffle
+bytes written, executor run seconds, op wall seconds and the driver gap
+(op seconds no job of the op covered: planning, driver-side collects,
+commit work).
 
 It then flags shuffle stages of one SQL execution that wrote identical
 byte counts. Two map stages writing the same bytes in one execution
@@ -76,6 +77,7 @@ def op_rows(spans, jobs, stages):
             for j in js)
         rows.append({
             "name": sp["name"], "id": sp["id"], "jobs": js, "stages": st,
+            "execs": len({j["attrs"]["sql_execution"] for j in js} - {-1}),
             "wall_s": (end - start) / 1e3,
             "gap_s": max(0.0, (end - start - covered) / 1e3),
             "tasks": sum(s["attrs"]["tasks"] for s in st),
@@ -107,7 +109,7 @@ def main(argv):
         return 2
     rows = op_rows(*load(argv[1]))
     names = sorted({r["name"] for r in rows})
-    print(f"{'op':24s} {'n':>3s} {'jobs':>7s} {'stages':>7s} {'tasks':>7s} "
+    print(f"{'op':24s} {'n':>3s} {'jobs':>7s} {'sql':>5s} {'stages':>7s} {'tasks':>7s} "
           f"{'shuffle_MB':>10s} {'exec_run_s':>10s} {'wall_s':>7s} {'gap_s':>7s}   (per op)")
     for name in names:
         rs = [r for r in rows if r["name"] == name]
@@ -115,7 +117,7 @@ def main(argv):
 
         def per(f):
             return sum(f(r) for r in rs) / n
-        print(f"{name:24s} {n:3d} {per(lambda r: len(r['jobs'])):7.2f} "
+        print(f"{name:24s} {n:3d} {per(lambda r: len(r['jobs'])):7.2f} {per(lambda r: r['execs']):5.2f} "
               f"{per(lambda r: len(r['stages'])):7.2f} {per(lambda r: r['tasks']):7.1f} "
               f"{per(lambda r: r['shuffle_write']) / 1e6:10.3f} {per(lambda r: r['run_s']):10.3f} "
               f"{per(lambda r: r['wall_s']):7.3f} {per(lambda r: r['gap_s']):7.3f}")
