@@ -72,9 +72,12 @@ object Bridge {
     spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession].cloneSession()
 
   /** Persisted frames behind the frames [[stage]] returned, keyed by the
-    * staged frame's RDD, so [[release]] can drop the CacheManager entry. */
-  private val staged = new java.util.concurrent.ConcurrentHashMap[
-    org.apache.spark.rdd.RDD[_], org.apache.spark.sql.DataFrame]()
+    * staged frame's RDD, so [[release]] can drop the CacheManager entry.
+    * Weak keys: a staged frame nobody releases (a per-call intermediate
+    * whose result stays lazy) drops its entry once no plan references it;
+    * the persisted frame does not reference the staged RDD. */
+  private val staged = java.util.Collections.synchronizedMap(new java.util.WeakHashMap[
+    org.apache.spark.rdd.RDD[_], org.apache.spark.sql.DataFrame]())
 
   /** Materialize `df` once (MEMORY_AND_DISK + one count) and return a
     * frame over the cached scan, for intermediates that several branches
