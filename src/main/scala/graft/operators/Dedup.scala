@@ -87,9 +87,11 @@ object Dedup {
     * pair, the star join), and unstaged they would each recompute the
     * signature aggregation upstream (measured 1.5× on the sf0.1 bench
     * when the star branch grew the consumer count from 2 to 4). The
-    * returned candidate frame is staged under `owner` before the bands
-    * stage is released, so no consumer ever recomputes the subtree. */
-  private[operators] def bandCandidates(owner: String, bands0: DataFrame): DataFrame = {
+    * returned candidate frame is staged as `name` of `d` ([[DirFrames]])
+    * before the bands stage is released, so no consumer ever recomputes
+    * the subtree. */
+  private[operators] def bandCandidates(
+      s: SparkSession, d: String, name: String, bands0: DataFrame): DataFrame = {
     val bands = Bridge.stage(bands0)
     try {
       val stats = bands.groupBy("band")
@@ -106,7 +108,7 @@ object Dedup {
         Seq("band"))
         .filter(col("doc_id") > col("rep"))
         .select(col("rep").as("d1"), col("doc_id").as("d2"))
-      stageCandTracked(owner, small.union(star).distinct())
+      DirFrames.replace(s, d, name, small.union(star).distinct())
     } finally Bridge.release(bands)
   }
 
@@ -150,11 +152,10 @@ object Dedup {
     * branches of ONE action (prefix, verify semi-join, sizes). At 100 TB
     * this is the stage a pipeline materializes to a staged table; here
     * the same sharing is an in-memory cache. */
-  private val shingleCache = scala.collection.concurrent.TrieMap[String, DataFrame]()
   private[graft] def docsWithShingles(s: SparkSession, d: String): DataFrame =
-    shingleCache.getOrElseUpdate(cacheKey(s, d), Bridge.stage(T.documents(s, d)
+    DirFrames.staged(s, d, "shingles")(T.documents(s, d)
       .select(col("doc_id"), Text.words(col("text")).as("w"))
-      .select(col("doc_id"), ShingleExpr.shingles3(col("w")).as("sh"))))
+      .select(col("doc_id"), ShingleExpr.shingles3(col("w")).as("sh")))
 
   /** The verified Jaccard pair set is a STAGED intermediate: the pair
     * diagnostics (q_dedup_jaccard) and the apply operator (q_dedup_apply)
@@ -162,17 +163,8 @@ object Dedup {
     * staged — the in-memory analogue of materializing the candidate
     * table between pipeline stages at 100 TB scale, where re-running the
     * shingle/candidate/verify cascade per consumer would double the cost. */
-  /** Cache key: application id + session identity + dir. Entries live for
-    * the JVM (one staged DF per benchmarked dir — bounded and small);
-    * the app-id component keeps a restarted SparkContext from colliding
-    * with a dead session's entries. */
-  private def cacheKey(s: SparkSession, d: String): String =
-    s"${s.sparkContext.applicationId}:${System.identityHashCode(s)}:$d"
-
-  private val pairsCache = scala.collection.concurrent.TrieMap[String, DataFrame]()
   private[operators] def jaccardPairsStaged(s: SparkSession, d: String): DataFrame =
-    pairsCache.getOrElseUpdate(cacheKey(s, d),
-      Bridge.stage(jaccardPairs(s, d)))
+    DirFrames.staged(s, d, "pairs")(jaccardPairs(s, d))
 
   /** Exact Jaccard on prefix-filtered candidate pairs.
     *
@@ -185,8 +177,7 @@ object Dedup {
     */
   private def jaccardPairs(s: SparkSession, d: String): DataFrame = {
     val docs = docsWithShingles(s, d)
-    verifyJaccard(stageCandTracked(s"ppjoin:${cacheKey(s, d)}",
-      jaccardCandidates(docs)), docs)
+    verifyJaccard(DirFrames.replace(s, d, "ppjoin", jaccardCandidates(docs)), docs)
   }
 
   /** The PPJoin candidate stage alone (exposed for scale probes). */
@@ -238,21 +229,6 @@ object Dedup {
     * table between pipeline stages at 100 TB (candidates ≪ corpus by
     * construction). */
   private[graft] def stageCand(cand: DataFrame): DataFrame = Bridge.stage(cand)
-
-  /** [[stageCand]] with per-owner tracking: staging a new frame under an
-    * owner key releases the owner's PREVIOUS staged frame, so callers
-    * that re-stage per invocation (DedupIndex.pairs — a long-lived
-    * session verifying after every index refresh) hold at most ONE
-    * staged block set per owner instead of accumulating MEMORY_AND_DISK
-    * blocks unboundedly (ADVICE r15). Releasing the superseded frame
-    * is always safe: a straggling consumer recomputes, never misreads. */
-  private val stagedByOwner =
-    scala.collection.concurrent.TrieMap[String, DataFrame]()
-  private[operators] def stageCandTracked(owner: String, cand: DataFrame): DataFrame = {
-    val c = stageCand(cand)
-    stagedByOwner.put(owner, c).foreach(Bridge.release)
-    c
-  }
 
   /** Exact-Jaccard verification as a distributed set-similarity join:
     * |A∩B| is a count over the exploded shingle table restricted to
@@ -411,8 +387,9 @@ object Dedup {
     val bands = sig.select(col("doc_id"), explode(array(bandCols: _*)).as("band"))
     // BandCap star rule: small buckets self-join, crowded buckets emit a
     // linear star to the bucket representative (see the val doc);
-    // bandCandidates stages the returned frame under the owner key
-    verifyJaccard(bandCandidates(s"minhash:${cacheKey(s, d)}", bands), docs)
+    // bandCandidates stages the returned frame as this directory's
+    // "minhash" frame
+    verifyJaccard(bandCandidates(s, d, "minhash", bands), docs)
   }
 
   private[operators] def minhashOracle: String = {
@@ -462,7 +439,7 @@ object Dedup {
       explode(array((0 until 4).map(c =>
         concat_ws("_", lit(c), shiftright(col("sim"), 16 * c).bitwiseAND(0xFFFFL))): _*))
         .as("band"))
-    val cand = bandCandidates(s"simhash:${cacheKey(s, d)}", chunks)
+    val cand = bandCandidates(s, d, "simhash", chunks)
     cand
       .join(docs.select(col("doc_id").as("d1"), col("sim").as("s1")), Seq("d1"))
       .join(docs.select(col("doc_id").as("d2"), col("sim").as("s2")), Seq("d2"))

@@ -125,11 +125,11 @@ object DedupIndex {
     // the oracle is verbatim the L3 oracle, so the crowded-bucket rule
     // must match — and the index path has the same quadratic
     // family-bucket exposure. bandCandidates STAGES the candidate frame
-    // under the owner key, so repeated pairs() calls (verify-after-
-    // every-refresh in a long-lived session) release the previous
-    // invocation's staged blocks instead of leaking them (ADVICE r15)
-    val cand = Dedup.bandCandidates(
-      s"${s.sparkContext.applicationId}:$root", bands)
+    // as the index root's "index" frame (DirFrames.replace), so repeated
+    // pairs() calls (verify-after-every-refresh in a long-lived session)
+    // release the previous invocation's staged blocks instead of leaking
+    // them (ADVICE r15)
+    val cand = Dedup.bandCandidates(s, root, "index", bands)
     val docs = source.read()
       .select(col("doc_id"), ShingleExpr.shingles3(Text.words(col("text"))).as("sh"))
       .filter(size(col("sh")) > 0)

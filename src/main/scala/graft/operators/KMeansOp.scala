@@ -229,7 +229,7 @@ object KMeansOp {
       s: org.apache.spark.sql.SparkSession, d: String,
       k: Int, iters: Int = KmIters, sampleDivisor: Long = 1L): Array[Array[Double]] =
     centCache.getOrElseUpdate(
-      s"${s.sparkContext.applicationId}:${System.identityHashCode(s)}:$d:$k:$iters:$sampleDivisor",
+      s"${DirFrames.key(s, d)}:$k:$iters:$sampleDivisor",
       fitReplayable(quantizedEmbeddings(s, d), "vec_id", "qv", k, iters, sampleDivisor))
 
   /** DuckDB replay of the full quantized Lloyd's run (r8 verdict #3 —

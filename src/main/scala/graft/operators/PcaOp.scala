@@ -4,7 +4,6 @@ import graft.{QDef, Tables => T}
 import graft.functions.VectorExpr
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.graft.Bridge
 import org.apache.spark.sql.types.{ArrayType, DoubleType}
 
 /** Distributed PCA — top principal component by power iteration over the
@@ -111,23 +110,17 @@ object PcaOp {
       Some(pcaOracle))
   )
 
-  /** Quantized (vec_id, label, qv) frame, staged per (session, dir) —
-    * the Dedup staged-cache pattern. An eager per-invocation
-    * release would drop the cache BEFORE the returned projection
-    * frame (the largest pass) ever executes, re-quantizing the corpus
-    * for exactly the consumer the stage exists to serve; entries are
-    * bounded (one small frame per benchmarked dir) and live for the
-    * session. */
-  private val qCache =
-    scala.collection.concurrent.TrieMap[String, DataFrame]()
+  /** Quantized (vec_id, label, qv) frame, staged per (session, dir)
+    * ([[DirFrames]]). An eager per-invocation release would drop the
+    * cache BEFORE the returned projection frame (the largest pass) ever
+    * executes, re-quantizing the corpus for exactly the consumer the
+    * stage exists to serve. */
   private def quantizedLabeled(s: SparkSession, d: String): DataFrame =
-    qCache.getOrElseUpdate(
-      s"${s.sparkContext.applicationId}:${System.identityHashCode(s)}:$d",
-      Bridge.stage(T.embeddings(s, d)
-        .select(col("vec_id"), col("label"),
-          VectorExpr.quantize(
-            col("embedding").cast(ArrayType(DoubleType)), Scale).as("qv"))
-        .filter(col("qv").isNotNull)))
+    DirFrames.staged(s, d, "pca")(T.embeddings(s, d)
+      .select(col("vec_id"), col("label"),
+        VectorExpr.quantize(
+          col("embedding").cast(ArrayType(DoubleType)), Scale).as("qv"))
+      .filter(col("qv").isNotNull))
 
   /** DuckDB replay: quantize → μ/n → v0 = 1/√d → PcaIters unrolled
     * rounds (z fold, yq quantize, Σyq·x / Σyq per dim, center, normalize)

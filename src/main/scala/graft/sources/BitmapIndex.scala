@@ -338,78 +338,3 @@ object BitmapIndex {
       }
     }.map(p => if (p == null) Array.empty[Long] else p)
 }
-
-/** Keeps only the listed ascending positions of ONE whole data file's
-  * row stream (planned unsplit, read with no pushdown so the physical
-  * row counter sees every row — the DvSkipReader discipline, inverted).
-  */
-final class BitmapKeepReader(
-    inner: org.apache.spark.sql.connector.read.PartitionReader[
-      org.apache.spark.sql.catalyst.InternalRow],
-    keep: Array[Long])
-    extends org.apache.spark.sql.connector.read.PartitionReader[
-      org.apache.spark.sql.catalyst.InternalRow] {
-  private var pos = -1L
-  private var i = 0
-  override def next(): Boolean = {
-    while (i < keep.length && inner.next()) {
-      pos += 1
-      if (keep(i) == pos) { i += 1; return true }
-    }
-    false
-  }
-  override def get(): org.apache.spark.sql.catalyst.InternalRow = inner.get()
-  override def close(): Unit = inner.close()
-}
-
-/** Enforces CLAIMED filters (bitmap.claim-filters / bsi.claim-filters)
-  * by masking each file's rows to its sidecars' matching positions
-  * (IndexClaims: bitmap first, BSI second, per filter). The scan plans
-  * claimed files unsplit and this factory reads them file-by-file
-  * through the no-pushdown `clean` factory (sequential single-file
-  * sub-readers — the same shape as DvReaderFactory), so the position
-  * counter is exact. Planner eligibility guarantees every planned file
-  * carries a sidecar covering every claimed column; a missing claim
-  * here is an invariant breach (e.g. a sidecar reclaimed mid-query) and
-  * fails loudly rather than returning unfiltered rows.
-  */
-final class ClaimMaskReaderFactory(
-    clean: org.apache.spark.sql.connector.read.PartitionReaderFactory,
-    claimed: Seq[org.apache.spark.sql.sources.Filter],
-    conf: org.apache.spark.util.SerializableConfiguration)
-    extends org.apache.spark.sql.connector.read.PartitionReaderFactory {
-
-  import org.apache.spark.sql.catalyst.InternalRow
-  import org.apache.spark.sql.connector.read.{InputPartition, PartitionReader}
-  import org.apache.spark.sql.execution.datasources.FilePartition
-
-  override def supportColumnarReads(p: InputPartition): Boolean = false
-
-  override def createReader(p: InputPartition): PartitionReader[InternalRow] = p match {
-    case fp: FilePartition =>
-      new PartitionReader[InternalRow] {
-        private var i = 0
-        private var cur: PartitionReader[InternalRow] = _
-        private def open(): Boolean = {
-          if (i >= fp.files.length) return false
-          val pf = fp.files(i); i += 1
-          val dataPath = new Path(pf.filePath.toString)
-          val fs = dataPath.getFileSystem(conf.value)
-          val keep = IndexClaims.keepFor(fs, dataPath, claimed)
-          cur = new BitmapKeepReader(
-            clean.createReader(FilePartition(fp.index, Array(pf))), keep)
-          true
-        }
-        override def next(): Boolean = {
-          while (cur != null || open()) {
-            if (cur.next()) return true
-            cur.close(); cur = null
-          }
-          false
-        }
-        override def get(): InternalRow = cur.get()
-        override def close(): Unit = if (cur != null) { cur.close(); cur = null }
-      }
-    case _ => clean.createReader(p)
-  }
-}

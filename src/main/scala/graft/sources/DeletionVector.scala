@@ -31,6 +31,11 @@ import org.apache.hadoop.fs.Path
 object DeletionVector {
   val Magic = 0x47445631 // "GDV1"
   val DirRel = "data/dv"
+  /** PartitionedFile metadata key carrying the file's deletion-vector
+    * sidecar path (table-root-relative). Like GraftMorReaderFactory's
+    * SortedKey this is never surfaced as a real metadata column — the
+    * scan requests no `_metadata` fields. */
+  val DvKey = "__graft_dv"
 
   /** Write ascending positions as a new immutable sidecar; returns the
     * table-root-relative path. Callable from executor tasks (the delete
@@ -84,112 +89,4 @@ object DeletionVector {
     while (it.hasNext) { arr(i) = it.next(); i += 1 }
     arr
   }
-}
-
-object DvReaderFactory {
-  /** PartitionedFile metadata key carrying the file's deletion-vector
-    * sidecar path (table-root-relative). Like GraftMorReaderFactory's
-    * SortedKey this is never surfaced as a real metadata column — the
-    * scan requests no `_metadata` fields. */
-  val DvKey = "__graft_dv"
-}
-
-/** Wraps the non-PK file reader factory to mask deletion-vector rows.
-  *
-  * Partitions holding NO dv-carrying file delegate wholesale — including
-  * columnar reads, so the vectorized/codegen path of the ordinary scan
-  * is untouched. A partition WITH dv files is read file-by-file
-  * (sequential single-file sub-partitions — the interleaved-vectorized
-  * corruption documented on GraftMorReaderFactory only bites
-  * concurrently-open readers): dv files stream through `clean` (a
-  * factory built with NO pushed filters — parquet row-group skipping
-  * would desynchronize the physical row counter the mask is keyed on;
-  * Spark re-applies every predicate above the scan, so dropping the
-  * pushdown costs only I/O on the dv'd files) and a merge-skip against
-  * the sidecar's ascending positions; plain files in the same partition
-  * keep the filtered delegate.
-  */
-final class DvReaderFactory(
-    filtered: org.apache.spark.sql.connector.read.PartitionReaderFactory,
-    clean: org.apache.spark.sql.connector.read.PartitionReaderFactory,
-    tableRoot: String,
-    conf: org.apache.spark.util.SerializableConfiguration)
-    extends org.apache.spark.sql.connector.read.PartitionReaderFactory {
-
-  import org.apache.spark.sql.catalyst.InternalRow
-  import org.apache.spark.sql.connector.read.{InputPartition, PartitionReader}
-  import org.apache.spark.sql.execution.datasources.FilePartition
-
-  private def dvOf(pf: org.apache.spark.sql.execution.datasources.PartitionedFile): Option[String] =
-    pf.otherConstantMetadataColumnValues.get(DvReaderFactory.DvKey).map(_.toString)
-
-  private def hasDv(p: InputPartition): Boolean = p match {
-    case fp: FilePartition => fp.files.exists(f => dvOf(f).isDefined)
-    case _ => false
-  }
-
-  // Spark requires a scan's partitions to be uniformly columnar or
-  // row-based (DataSourceV2ScanExecBase.supportsColumnar) — a dv'd file
-  // anywhere in the snapshot makes the whole scan row-based. Compaction
-  // (which purges vectors) restores the columnar path.
-  override def supportColumnarReads(p: InputPartition): Boolean = false
-
-  override def createColumnarReader(p: InputPartition)
-      : PartitionReader[org.apache.spark.sql.vectorized.ColumnarBatch] =
-    filtered.createColumnarReader(p)
-
-  override def createReader(p: InputPartition): PartitionReader[InternalRow] = p match {
-    case fp: FilePartition if hasDv(p) =>
-      new PartitionReader[InternalRow] {
-        private var i = 0
-        private var cur: PartitionReader[InternalRow] = _
-        private def open(): Boolean = {
-          if (i >= fp.files.length) return false
-          val pf = fp.files(i); i += 1
-          cur = dvOf(pf) match {
-            case Some(rel) =>
-              val positions = DeletionVector.read(conf.value, tableRoot, rel)
-              new DvSkipReader(
-                clean.createReader(FilePartition(fp.index, Array(pf))), positions)
-            case None =>
-              filtered.createReader(FilePartition(fp.index, Array(pf)))
-          }
-          true
-        }
-        override def next(): Boolean = {
-          while (cur != null || open()) {
-            if (cur.next()) return true
-            cur.close(); cur = null
-          }
-          false
-        }
-        override def get(): InternalRow = cur.get()
-        override def close(): Unit = if (cur != null) { cur.close(); cur = null }
-      }
-    case _ => filtered.createReader(p)
-  }
-}
-
-/** Skips the sidecar's positions while streaming one WHOLE data file
-  * (the scan plans dv files unsplit and unfiltered, so the row stream is
-  * exactly physical positions 0..n-1). Both streams are ascending — one
-  * pointer, O(1) per row, no hashing. */
-final class DvSkipReader(
-    inner: org.apache.spark.sql.connector.read.PartitionReader[
-      org.apache.spark.sql.catalyst.InternalRow],
-    positions: Array[Long])
-    extends org.apache.spark.sql.connector.read.PartitionReader[
-      org.apache.spark.sql.catalyst.InternalRow] {
-  private var pos = -1L
-  private var i = 0
-  override def next(): Boolean = {
-    while (inner.next()) {
-      pos += 1
-      while (i < positions.length && positions(i) < pos) i += 1
-      if (i >= positions.length || positions(i) != pos) return true
-    }
-    false
-  }
-  override def get(): org.apache.spark.sql.catalyst.InternalRow = inner.get()
-  override def close(): Unit = inner.close()
 }

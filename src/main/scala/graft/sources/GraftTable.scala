@@ -183,18 +183,6 @@ class GraftTable private (
 
   import GraftTable._
 
-  /** Opt-in phase profiler for the write/commit paths (guide §1 measure
-    * first): -Dgraft.write.profile=true prints per-phase seconds. Zero
-    * cost when off; no behavior change ever. */
-  @inline private def prof[T](label: String)(body: => T): T =
-    if (!ProfileWrites) body
-    else {
-      val t0 = System.nanoTime()
-      val r = body
-      println(f"[gprof] $label%-38s ${(System.nanoTime() - t0) / 1e9}%8.3f s")
-      r
-    }
-
   /** Snapshot-log directory of this view's ref, relative to root. */
   private def snapDirRel: String =
     branchName.map(b => s"branch/$b/snapshot").getOrElse("snapshot")
@@ -1387,11 +1375,11 @@ class GraftTable private (
       commitUser: String = "graft", commitIdentifier: Option[Long] = None,
       watermark: Option[Long] = None, dedupInWriter: Boolean = false): Long = {
     val base = latestSnapshotId.getOrElse(0L)
-    val added = prof("stageWrite")(stageWrite(df, rowKind, seq = base + 1,
-      coalesceSmall = true, dedupInWriter = dedupInWriter))
-    val id = prof("commit")(commitOrClean(base + 1, kind, added.files,
+    val added = stageWrite(df, rowKind, seq = base + 1,
+      coalesceSmall = true, dedupInWriter = dedupInWriter)
+    val id = commitOrClean(base + 1, kind, added.files,
       commitUser = commitUser, commitIdentifier = commitIdentifier,
-      indexDirs = added.indexDirs, watermark = watermark))
+      indexDirs = added.indexDirs, watermark = watermark)
     // opt-in write-amortized maintenance (Paimon's writer-side
     // compaction): fold any bucket whose run count reached the trigger.
     // Not under lookup changelog (compaction folds the -U/+U history
@@ -2105,8 +2093,8 @@ class GraftTable private (
     val idx = resolveIndexChain(chain)
       .select(col("part").as(P), col("kh").as(KH), col("bucket").as(GraftTable.DynBucketCol))
     // occupancy: one row per partition (sequential fill ⇒ count says it all)
-    val occ: Seq[(String, Long)] = prof("assign: occupancy")(idx.groupBy(P).count()
-      .collect().map(r => (r.getString(0), r.getLong(1))).toSeq)
+    val occ: Seq[(String, Long)] = idx.groupBy(P).count()
+      .collect().map(r => (r.getString(0), r.getLong(1))).toSeq
     val occDf = {
       import spark.implicits._
       occ.toDF(P, "__base")
@@ -2140,11 +2128,11 @@ class GraftTable private (
         row_number().over(Window.partitionBy(P).orderBy(col(KH))).cast("long"))
       .select(col(P).as("part"), col(KH).as("kh"),
         expr(s"CAST((__base + __rn - 1) DIV ${target}L AS INT)").as("bucket"))
-    val rel = prof("assign: index delta write")(writeIndexDelta(newKeys))
+    val rel = writeIndexDelta(newKeys)
     // read the PERSISTED delta back for the row join: what the files say
     // IS the assignment (no second evaluation of the assignment plan)
     val delta = spark.read.schema(IdxSchema).parquet(s"$root/$rel")
-    val hasNew = prof("assign: delta row check")(deltaHasRows(rel))
+    val hasNew = deltaHasRows(rel)
     val dirs =
       if (hasNew) Seq(rel)
       else { fs.delete(new Path(root, rel), true); Seq.empty }
@@ -2251,7 +2239,7 @@ class GraftTable private (
     var indexDirs: Seq[String] = Seq.empty
     if (isDynamicBucket) {
       require(isPkTable, "dynamic bucket mode (bucket = -1) requires primary keys")
-      val (withBucket, dirs) = prof("assign: total")(assignDynamicBuckets(out))
+      val (withBucket, dirs) = assignDynamicBuckets(out)
       // co-locate each (partition, bucket)'s rows in one task: buckets
       // are assigned in HASH order while rows arrive in input order, so
       // an unshuffled write would evict a task writer on nearly every
@@ -2306,9 +2294,9 @@ class GraftTable private (
       extraDataCols =
         if (lineage) Seq(StructField(RowIdCol, LongType), StructField(RowSeqCol, LongType))
         else Seq.empty)
-    val files = prof("stage: data write job")(out.queryExecution.toRdd
+    val files = out.queryExecution.toRdd
       .mapPartitions(GraftWrite.writePartition(spec))
-      .collect().flatten.toSeq)
+      .collect().flatten.toSeq
     StagedWrite(files, indexDirs)
   }
 
@@ -3783,8 +3771,6 @@ object GraftTable {
   val SeqCol = "__seq"
   val KindCol = "__kind"
 
-  /** -Dgraft.write.profile=true prints per-phase write/commit seconds. */
-  val ProfileWrites: Boolean = java.lang.Boolean.getBoolean("graft.write.profile")
   // S64: physical lineage columns a row-tracking COMPACT materializes
   // into rewritten files (appended files derive ids positionally)
   val RowIdCol = "__row_id"

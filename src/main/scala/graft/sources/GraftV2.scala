@@ -906,16 +906,14 @@ final class GraftManifestAggScan(
   * per-task working set is one bucket's live keys, which is exactly what
   * bucket sizing bounds. */
 object GraftScan {
-  // test observability: file reader factories built and sessions cloned
-  // (for a row-based factory) by scans of this JVM
+  // test observability: file reader factories built by scans of this JVM
   val fileFactoriesBuilt = new java.util.concurrent.atomic.AtomicLong(0)
-  val sessionClones = new java.util.concurrent.atomic.AtomicLong(0)
 
   /** The file index handed to the ParquetScan/OrcScan that build reader
     * factories. `createReaderFactory` never reads it, but constructing an
     * `InMemoryFileIndex` copies the Hadoop conf and runs a listing
     * refresh, once per factory. One empty index per SparkContext serves
-    * every scan (a cloned session shares its parent's context). */
+    * every scan. */
   @volatile private var noFiles: NoFilesIndex = _
   private[sources] def noFilesIndex(s: SparkSession)
       : org.apache.spark.sql.execution.datasources.PartitioningAwareFileIndex = {
@@ -1283,10 +1281,10 @@ final class GraftScan(
       // piggyback the sorted-run flag and the deletion-vector pointer on
       // the metadata-column map (never read as a metadata column — the
       // scan requests no _metadata fields); the MOR factory reads the
-      // former, DvReaderFactory the latter
+      // former, PositionalReaderFactory the latter
       (if (f.isSorted) Map[String, Any](GraftMorReaderFactory.SortedKey -> true)
        else Map.empty[String, Any]) ++
-        (if (f.hasDv) Map[String, Any](DvReaderFactory.DvKey -> f.dvPath)
+        (if (f.hasDv) Map[String, Any](DeletionVector.DvKey -> f.dvPath)
          else Map.empty[String, Any]) ++
         // S65: the file's commit-assigned id range for the lineage read
         // (absent on compacted files — their ids are stored columns)
@@ -1388,8 +1386,9 @@ final class GraftScan(
     val splits = plannedFiles.flatMap { f =>
       // a dv-carrying file is planned UNSPLIT: its reader masks sidecar
       // positions against a physical row counter that must start at 0
-      // and see every row (DvSkipReader). Claimed bitmap filters mask
-      // the same way, so every file of a claimed scan plans unsplit.
+      // and see every row (PositionalReaderFactory). Claimed bitmap
+      // filters mask the same way, so every file of a claimed scan plans
+      // unsplit.
       if (f.hasDv || claimed.nonEmpty)
         Seq(toPartitionedFile(f, readPartFields, 0L, f.sizeBytes))
       else (0L until math.max(1L, f.sizeBytes) by maxSplit).map { off =>
@@ -1462,68 +1461,44 @@ final class GraftScan(
     * it): it installs every reader conf key (read-support
     * class, requested schema, timezone, rebase modes) exactly as the
     * built-in source does, so we inherit Spark's columnar read path
-    * verbatim instead of re-plumbing it.
-    *
-    * `vectorized = false` builds a row-based (parquet-mr / ORC row)
-    * factory instead, for the per-file row paths that count physical
-    * positions (`_file`, lineage, claim masks). The PK merge uses the
-    * vectorized factory and clones it per run (see GraftMorReaderFactory). */
+    * verbatim instead of re-plumbing it. Row reads go through the same
+    * factory's `createReader` (the positional paths, see
+    * [[PositionalReaderFactory]]); the PK merge clones it per run (see
+    * GraftMorReaderFactory). */
   private def fileFactory(
       readData: StructType, readPart: StructType, filters: Array[Filter],
-      vectorized: Boolean = true,
       // S65: extra physical columns some files carry (the lineage read's
       // stored __row_id/__row_seq) — declared in dataSchema so the
       // format resolves them by name and null-fills files lacking them
       extraDataCols: Seq[StructField] = Seq.empty): PartitionReaderFactory = {
     GraftScan.fileFactoriesBuilt.incrementAndGet()
     val dataSchema = StructType(table.fileDataSchema.fields ++ extraDataCols)
-    // The vectorized flag is captured into a FINAL factory field during
-    // createReaderFactory() (driver-side), read from the session's SQLConf.
-    // S54 avro: row-based by nature, so the vectorized flag is moot —
-    // every reader opened from this factory is an independent
-    // DataFileReader (safe for the MOR k-way merge's interleaving);
-    // pushed filters are ignored because the scan declares them residual
+    // S54 avro: row-based by nature; every reader opened from this
+    // factory is an independent DataFileReader (safe for the MOR k-way
+    // merge's interleaving); pushed filters are ignored because the scan
+    // declares them residual
     if (table.fileFormat == "avro")
       return new GraftAvroReaderFactory(serializableConf, readData, readPart)
-    def build(s: SparkSession): PartitionReaderFactory = {
-      val emptyIndex = GraftScan.noFilesIndex(s)
-      if (table.fileFormat == "orc")
-        new org.apache.spark.sql.execution.datasources.v2.orc.OrcScan(
-          s, hadoopConf, emptyIndex,
-          dataSchema = dataSchema,
-          readDataSchema = readData,
-          readPartitionSchema = readPart,
-          options = CaseInsensitiveStringMap.empty(),
-          pushedAggregate = None,
-          pushedFilters = filters,
-          partitionFilters = Seq.empty,
-          dataFilters = Seq.empty).createReaderFactory()
-      else
-        new org.apache.spark.sql.execution.datasources.v2.parquet.ParquetScan(
-          s, hadoopConf, emptyIndex,
-          dataSchema = dataSchema,
-          readDataSchema = readData,
-          readPartitionSchema = readPart,
-          pushedFilters = filters,
-          options = CaseInsensitiveStringMap.empty()).createReaderFactory()
-    }
-    if (vectorized) build(spark)
-    else {
-      // NEVER flip the live session conf: a concurrent scan (e.g. a
-      // streaming micro-batch's vectorized V1 parquet read) planning or
-      // creating its reader during the flip window would capture the
-      // disabled flag and fail at runtime with
-      // `UnsafeRow cannot be cast to ColumnarBatch` (observed: T4b-full).
-      // cloneSession() copies the SQLConf, so the flag is disabled on an
-      // isolated conf no other scan can observe.
-      val vecKey =
-        if (table.fileFormat == "orc") "spark.sql.orc.enableVectorizedReader"
-        else "spark.sql.parquet.enableVectorizedReader"
-      GraftScan.sessionClones.incrementAndGet()
-      val cloned = org.apache.spark.sql.graft.Bridge.cloneSession(spark)
-      cloned.sessionState.conf.setConfString(vecKey, "false")
-      build(cloned)
-    }
+    val emptyIndex = GraftScan.noFilesIndex(spark)
+    if (table.fileFormat == "orc")
+      new org.apache.spark.sql.execution.datasources.v2.orc.OrcScan(
+        spark, hadoopConf, emptyIndex,
+        dataSchema = dataSchema,
+        readDataSchema = readData,
+        readPartitionSchema = readPart,
+        options = CaseInsensitiveStringMap.empty(),
+        pushedAggregate = None,
+        pushedFilters = filters,
+        partitionFilters = Seq.empty,
+        dataFilters = Seq.empty).createReaderFactory()
+    else
+      new org.apache.spark.sql.execution.datasources.v2.parquet.ParquetScan(
+        spark, hadoopConf, emptyIndex,
+        dataSchema = dataSchema,
+        readDataSchema = readData,
+        readPartitionSchema = readPart,
+        pushedFilters = filters,
+        options = CaseInsensitiveStringMap.empty()).createReaderFactory()
   }
 
   /** The pushed predicates over primary-key columns, bound to the merge
@@ -1554,84 +1529,13 @@ final class GraftScan(
       new MergeVersionsMergedMetric)
 
   override def createReaderFactory(): PartitionReaderFactory = {
-    // S65: lineage scans read per-file, row-based, unsplit, with NO
-    // reader pushdown (a skipped row group would desync the physical
-    // position counter) — stored __row_id/__row_seq columns ride along
-    // for compacted files, dv/claim masks apply after the position is
-    // taken. Subsumes the _file wrapper when both are requested.
-    if (wantLineage) {
-      // `_pos`/`_file` alone (the delta write's row identity on a plain
-      // dv-append table) need only the positional read; id/seq
-      // additionally need the tracking vintage
-      if (metaFields.exists(f =>
-        f.name == RowLineage.IdCol || f.name == RowLineage.SeqCol)) {
-        require(table.rowTracking,
-          s"lineage metadata columns require row-tracking.enabled at ${table.root}")
-        plannedFiles.foreach(f => require(
-          (f.firstRowId != null && f.rowSeq != null) || f.isCompacted,
-          s"file ${f.path} predates row tracking — enable row-tracking.enabled " +
-            "at table creation"))
-      }
-      val storedCols = Seq(
-        StructField(GraftTable.RowIdCol, LongType),
-        StructField(GraftTable.RowSeqCol, LongType))
-      val readData = StructType(readDataFields ++ storedCols)
-      return new LineageReaderFactory(
-        fileFactory(readData, StructType(readPartFields), Array.empty[Filter],
-          vectorized = false, extraDataCols = storedCols),
-        readDataFields.map(_.dataType), readPartFields.map(_.dataType),
-        metaFields.map(_.name), claimed.toSeq, table.root,
-        serializableConf)
-    }
-    // S44: _file scans read row-based (uniformly — a mixed columnar
-    // answer is illegal) and wrap every partition's reader to append
-    // the per-partition constant path
-    if (wantFile) {
-      val plain = fileFactory(StructType(readDataFields), StructType(readPartFields),
-        readerFilters, vectorized = false)
-      val masked =
-        if (claimed.nonEmpty)
-          // claim eligibility excludes dv-carrying snapshots, so the
-          // index mask is the only wrapper needed here
-          new ClaimMaskReaderFactory(
-            fileFactory(StructType(readDataFields), StructType(readPartFields),
-              Array.empty[Filter], vectorized = false),
-            claimed.toSeq,
-            serializableConf)
-        else if (!plannedFiles.exists(_.hasDv)) plain
-        else new DvReaderFactory(
-          plain,
-          fileFactory(StructType(readDataFields), StructType(readPartFields),
-            Array.empty[Filter], vectorized = false),
-          table.root,
-          serializableConf)
-      return new FileColFactory(masked, metaFields.map(_.name))
-    }
-    // S55/S66 claimed filters: every file reads row-based/unsplit through
-    // a NO-pushdown factory (parquet row-group skipping would desync the
-    // position counter) and a keep-mask from its index sidecars
-    if (claimed.nonEmpty && !table.isPkTable)
-      return new ClaimMaskReaderFactory(
-        fileFactory(StructType(readDataFields), StructType(readPartFields),
-          Array.empty[Filter], vectorized = false),
-        claimed.toSeq,
-        serializableConf)
     val inner =
-      if (!table.isPkTable) {
-        val plain =
-          fileFactory(StructType(readDataFields), StructType(readPartFields), readerFilters)
-        if (!plannedFiles.exists(_.hasDv)) plain
-        else
-          // dv-masked scan (S37): partitions without dv files keep the
-          // plain (columnar) path; dv files read through a NO-pushdown
-          // factory so the physical row counter sees every row
-          new DvReaderFactory(
-            plain,
-            fileFactory(StructType(readDataFields), StructType(readPartFields),
-              Array.empty[Filter]),
-            table.root,
-            serializableConf)
-      } else {
+      if (wantFile || wantLineage ||
+        (!table.isPkTable && (claimed.nonEmpty || plannedFiles.exists(_.hasDv))))
+        positionalFactory()
+      else if (!table.isPkTable)
+        fileFactory(StructType(readDataFields), StructType(readPartFields), readerFilters)
+      else {
         // merge rows materialize as [mergeDataFields ++ mergePartFields]
         val mergeSchema = StructType(mergeDataFields ++ mergePartFields)
         def idx(name: String): Int = mergeSchema.fieldIndex(name)
@@ -1660,6 +1564,37 @@ final class GraftScan(
           keyFilter = keyPredicate(mergeSchema))
       }
     if (bucketGrouped) new UnwrapBucketFactory(inner) else inner
+  }
+
+  /** S37/S44/S55/S65/S66: the per-file positional read. Files that need
+    * every physical position (dv files, every file of a claimed or
+    * lineage scan) read through a factory with no pushed filters; the
+    * rest keep the filtered one. A scan builds at most these two. */
+  private def positionalFactory(): PartitionReaderFactory = {
+    // `_pos`/`_file` alone (the delta write's row identity on a plain
+    // dv-append table) need only the positional read; id/seq
+    // additionally need the tracking vintage
+    if (metaFields.exists(f => f.name == RowLineage.IdCol || f.name == RowLineage.SeqCol)) {
+      require(table.rowTracking,
+        s"lineage metadata columns require row-tracking.enabled at ${table.root}")
+      plannedFiles.foreach(f => require(
+        (f.firstRowId != null && f.rowSeq != null) || f.isCompacted,
+        s"file ${f.path} predates row tracking — enable row-tracking.enabled " +
+          "at table creation"))
+    }
+    // a lineage read carries the stored __row_id/__row_seq of compacted files
+    val stored =
+      if (!wantLineage) Seq.empty
+      else Seq(StructField(GraftTable.RowIdCol, LongType), StructField(GraftTable.RowSeqCol, LongType))
+    def files(filters: Array[Filter]) = fileFactory(StructType(readDataFields ++ stored),
+      StructType(readPartFields), filters, extraDataCols = stored)
+    val positional = wantLineage || claimed.nonEmpty
+    val filtered = files(if (positional) Array.empty[Filter] else readerFilters)
+    val unfiltered =
+      if (positional || !plannedFiles.exists(_.hasDv)) filtered else files(Array.empty[Filter])
+    new PositionalReaderFactory(filtered, unfiltered,
+      readDataFields.map(_.dataType), readPartFields.map(_.dataType),
+      metaFields.map(_.name), claimed.toSeq, table.root, serializableConf)
   }
 }
 
@@ -1701,43 +1636,6 @@ object GraftV2Table {
   val BucketValKey = "__graft_bucket_id"
   /** The metadata columns synthesized as per-file constants. */
   val ConstColNames: Set[String] = Set(FileCol, PartCol, BucketCol)
-}
-
-/** S44: appends the per-file constant metadata columns (`_file`,
-  * `_partition`, `_bucket` — in requested order) to every row of a
-  * single-file partition. Row-based by design (a per-batch constant
-  * column vector would also work, but provenance scans are
-  * metadata/forensics-shaped, not throughput-shaped). */
-final class FileColFactory(delegate: PartitionReaderFactory, metaNames: Array[String])
-    extends PartitionReaderFactory {
-  override def supportColumnarReads(p: InputPartition): Boolean = false
-  override def createColumnarReader(p: InputPartition): PartitionReader[org.apache.spark.sql.vectorized.ColumnarBatch] =
-    throw new UnsupportedOperationException("_file/_partition/_bucket scans are row-based")
-  override def createReader(p: InputPartition): PartitionReader[InternalRow] = {
-    val fp = p.asInstanceOf[FilePartition]
-    require(fp.files.length == 1, s"_file partitions hold exactly one file, got ${fp.files.length}")
-    val pf = fp.files.head
-    val abs = pf.filePath.toString
-    // files live under <root>/data/ — recover the root-relative path the
-    // manifest records, robust to scheme qualification of the root
-    val cut = abs.lastIndexOf("/data/")
-    val rel = if (cut >= 0) abs.substring(cut + 1) else abs
-    val consts = pf.otherConstantMetadataColumnValues
-    val vals: Array[Any] = metaNames.map {
-      case GraftV2Table.FileCol => UTF8String.fromString(rel)
-      case GraftV2Table.PartCol =>
-        UTF8String.fromString(consts(GraftV2Table.PartValKey).toString)
-      case GraftV2Table.BucketCol => consts(GraftV2Table.BucketValKey)
-    }
-    val metaRow = InternalRow.fromSeq(vals.toSeq)
-    val inner = delegate.createReader(p)
-    val joined = new org.apache.spark.sql.catalyst.expressions.JoinedRow
-    new PartitionReader[InternalRow] {
-      override def next(): Boolean = inner.next()
-      override def get(): InternalRow = joined(inner.get(), metaRow)
-      override def close(): Unit = inner.close()
-    }
-  }
 }
 
 /** A FilePartition tagged with its bucket id — the partition key Spark

@@ -3,13 +3,9 @@ package graft.sources
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{GenericInternalRow, JoinedRow}
-import org.apache.spark.sql.connector.read.{InputPartition, PartitionReader, PartitionReaderFactory}
 import org.apache.spark.sql.connector.write._
-import org.apache.spark.sql.execution.datasources.FilePartition
-import org.apache.spark.sql.sources.Filter
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
-import org.apache.spark.unsafe.types.UTF8String
 import org.apache.spark.util.SerializableConfiguration
 import org.apache.hadoop.fs.Path
 
@@ -31,7 +27,7 @@ import org.apache.hadoop.fs.Path
   * ([[org.apache.spark.sql.connector.write.SupportsDelta]]): the
   * operation declares `rowId = (_file, _pos)` (physical identity) and
   * `requiredMetadataAttributes = (_row_id, _sequence_number)`, all four
-  * served as DSv2 METADATA COLUMNS by [[LineageReaderFactory]]; the
+  * served as DSv2 METADATA COLUMNS by [[PositionalReaderFactory]]; the
   * analyzer's rewrite then delivers per-row callbacks —
   * `delete(meta, id)`, `update(meta, id, row)`, `insert(row)` — to
   * [[GraftDeltaWriter]]. Write amplification is O(changed rows), not
@@ -82,120 +78,6 @@ object RowLineage {
     * id range (absent for lineage-materialized compacted files). */
   val FirstRowIdKey = "__graft_first_row_id"
   val RowSeqKey = "__graft_row_seq"
-}
-
-/** Serves the lineage metadata columns for one-file row-based
-  * partitions: counts PHYSICAL positions (the inner factory must read
-  * unsplit with no pushdown — row-group skipping would desync the
-  * counter), computes `_row_id`/`_sequence_number` as stored-column
-  * `__row_id`/`__row_seq` (compacted files) coalesced over positional
-  * derivation `firstRowId + pos`, and applies the dv mask (and any
-  * claimed bitmap keep-mask) AFTER the position is taken — survivors'
-  * ids are stable under deletes by construction.
-  *
-  * Inner rows arrive as [data…, __row_id, __row_seq, part…]; output is
-  * [data…, part…, meta…] per the scan's readSchema. */
-final class LineageReaderFactory(
-    inner: PartitionReaderFactory,
-    dataTypes: Array[DataType],
-    partTypes: Array[DataType],
-    metaNames: Array[String],
-    claimed: Seq[Filter],
-    tableRoot: String,
-    conf: SerializableConfiguration)
-    extends PartitionReaderFactory {
-
-  override def supportColumnarReads(p: InputPartition): Boolean = false
-
-  override def createReader(p: InputPartition): PartitionReader[InternalRow] = {
-    val fp = p.asInstanceOf[FilePartition]
-    require(fp.files.length == 1,
-      s"lineage partitions hold exactly one file, got ${fp.files.length}")
-    val pf = fp.files.head
-    val consts = pf.otherConstantMetadataColumnValues
-    val firstRowId: Long = consts.get(RowLineage.FirstRowIdKey)
-      .map(_.asInstanceOf[Long]).getOrElse(-1L)
-    val rowSeq: Long = consts.get(RowLineage.RowSeqKey)
-      .map(_.asInstanceOf[Long]).getOrElse(-1L)
-    val abs = pf.filePath.toString
-    val cut = abs.lastIndexOf("/data/")
-    val rel = if (cut >= 0) abs.substring(cut + 1) else abs
-    val fileVal = UTF8String.fromString(rel)
-    val dv: Array[Long] = consts.get(DvReaderFactory.DvKey)
-      .map(d => DeletionVector.read(conf.value, tableRoot, d.toString))
-      .getOrElse(Array.empty[Long])
-    // claimed index filters (S55 bitmap / S66 BSI) compose positionally,
-    // exactly like ClaimMaskReaderFactory — the claim was reported fully
-    // pushed, so it MUST be enforced here too
-    val keep: Array[Long] =
-      if (claimed.isEmpty) null
-      else {
-        val dataPath = new Path(abs)
-        val fs = dataPath.getFileSystem(conf.value)
-        IndexClaims.keepFor(fs, dataPath, claimed)
-      }
-
-    val r = inner.createReader(p)
-    val nData = dataTypes.length
-    val nPart = partTypes.length
-    val out = new GenericInternalRow(nData + nPart + metaNames.length)
-    new PartitionReader[InternalRow] {
-      private var pos = -1L
-      private var dvI = 0
-      private var keepI = 0
-      override def next(): Boolean = {
-        while (r.next()) {
-          pos += 1
-          var kill = false
-          while (dvI < dv.length && dv(dvI) < pos) dvI += 1
-          if (dvI < dv.length && dv(dvI) == pos) kill = true
-          if (!kill && keep != null) {
-            while (keepI < keep.length && keep(keepI) < pos) keepI += 1
-            if (keepI >= keep.length || keep(keepI) != pos) kill = true
-          }
-          if (!kill) return true
-        }
-        false
-      }
-      override def get(): InternalRow = {
-        val in = r.get()
-        var i = 0
-        while (i < nData) { out.update(i, in.get(i, dataTypes(i))); i += 1 }
-        var j = 0
-        while (j < nPart) { out.update(nData + j, in.get(nData + 2 + j, partTypes(j))); j += 1 }
-        val storedId = !in.isNullAt(nData)
-        val storedSeq = !in.isNullAt(nData + 1)
-        var m = 0
-        while (m < metaNames.length) {
-          val v: Any = metaNames(m) match {
-            case RowLineage.IdCol =>
-              if (storedId) in.getLong(nData)
-              else if (firstRowId >= 0) firstRowId + pos
-              else throw new IllegalStateException(
-                s"file $rel carries neither a materialized __row_id nor a " +
-                  "commit-assigned firstRowId — pre-tracking vintage?")
-            case RowLineage.SeqCol =>
-              if (storedSeq) in.getLong(nData + 1)
-              else if (rowSeq >= 0) rowSeq
-              else throw new IllegalStateException(
-                s"file $rel carries neither a materialized __row_seq nor a " +
-                  "commit-assigned rowSeq — pre-tracking vintage?")
-            case RowLineage.PosCol => pos
-            case GraftV2Table.FileCol => fileVal
-            // per-file constants when _partition/_bucket ride a lineage
-            // scan (both piggybacked by toPartitionedFile on request)
-            case GraftV2Table.PartCol =>
-              UTF8String.fromString(consts(GraftV2Table.PartValKey).toString)
-            case GraftV2Table.BucketCol => consts(GraftV2Table.BucketValKey)
-          }
-          out.update(nData + nPart + m, v)
-          m += 1
-        }
-        out
-      }
-      override def close(): Unit = r.close()
-    }
-  }
 }
 
 /** The delta-based row-level operation for row-tracking tables — see

@@ -61,16 +61,6 @@ object Bridge {
     org.apache.spark.sql.catalyst.expressions.BindReferences.bindReference(resolved, rel.output)
   }
 
-  /** Clone a session: an isolated copy of the SQLConf (and session state)
-    * sharing the SparkContext — re-exposes the private[sql] cloneSession.
-    * Used to build row-based reader factories without flipping
-    * enableVectorizedReader on the LIVE conf (which races concurrent
-    * scans — a streaming micro-batch planning columnar during the flip
-    * window fails with `UnsafeRow cannot be cast to ColumnarBatch`). */
-  def cloneSession(spark: org.apache.spark.sql.SparkSession)
-      : org.apache.spark.sql.SparkSession =
-    spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession].cloneSession()
-
   /** Persisted frames behind the frames [[stage]] returned, keyed by the
     * staged frame's RDD, so [[release]] can drop the CacheManager entry.
     * Weak keys: a staged frame nobody releases (a per-call intermediate

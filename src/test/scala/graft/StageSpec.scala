@@ -111,4 +111,30 @@ class StageSpec extends AnyFunSuite {
     // a frame derived after release reads the same rows too
     assert(staged.groupBy("d1").agg(sum("d2").as("s")).orderBy("d1").collect().toSeq == first)
   }
+
+  test("a session keeps one directory's staged frames") {
+    // two small corpora, each a directory holding documents.parquet
+    def corpus(name: String, n: Int): String = {
+      val d = TestSpark.tmpDir(name)
+      import spark.implicits._
+      (0 until n).map { i =>
+        val text = (0 until 12).map(j => s"w${(i * 7 + j * j) % 31}").mkString(" ")
+        (i.toLong, text, "en", "web", text.length.toLong)
+      }.toDF("doc_id", "text", "lang", "source", "n_chars")
+        .write.parquet(s"$d/documents.parquet")
+      d
+    }
+    val (small, large) = (corpus("stage-a", 200), corpus("stage-b", 600))
+    // a session of its own: the shared one's frames of earlier suites
+    // would be released by the first directory switch
+    val session = spark.newSession()
+    val sc = spark.sparkContext
+    val before = sc.getPersistentRDDs.size
+    val held = Seq(small, large, small).map { d =>
+      SparkEntry.queries("q_dedup_minhash")(session, d).collect()
+      sc.getPersistentRDDs.size - before
+    }
+    // the shingle stage and the minhash candidates of ONE directory
+    assert(held == Seq(2, 2, 2), s"persisted RDDs after each run: $held")
+  }
 }

@@ -356,13 +356,22 @@ class V2ScanSpec extends AnyFunSuite {
     t.upsert((1L to 100L by 10).map(i => (i, s"b-$i")).toDF("id", "v"))
     val df = spark.read.format("graft").load(path).filter($"id".isin(11L, 12L))
     val scan = graftScan(df)
-    // one vectorized factory for the whole merge: no row-based twin, so
-    // no session clone to disable the vectorized reader
+    // one vectorized factory for the whole merge: no row-based twin
     val f0 = GraftScan.fileFactoriesBuilt.get()
-    val c0 = GraftScan.sessionClones.get()
     scan.toBatch.createReaderFactory()
     assert(GraftScan.fileFactoriesBuilt.get() - f0 == 1)
-    assert(GraftScan.sessionClones.get() == c0)
+    // a positional scan (`_file` + a claimed filter) builds at most two:
+    // the filtered and the unfiltered one
+    val bm = TestSpark.tmpDir("v2mormetricsbm")
+    GraftTable.create(spark, bm,
+      StructType(Seq(StructField("id", LongType), StructField("lang", StringType))),
+      options = Map("file-index.bitmap.columns" -> "lang"))
+      .append(Seq((1L, "en"), (2L, "de")).toDF("id", "lang"))
+    val posScan = graftScan(spark.read.format("graft").option("bitmap.claim-filters", "true")
+      .load(bm).filter($"lang" === "de").select($"id", $"_file"))
+    val f1 = GraftScan.fileFactoriesBuilt.get()
+    posScan.toBatch.createReaderFactory()
+    assert(GraftScan.fileFactoriesBuilt.get() - f1 <= 2)
 
     assert(df.collect().map(r => (r.getLong(0), r.getString(1))).sortBy(_._1).toSeq ==
       Seq((11L, "b-11"), (12L, "a-12")))
