@@ -87,11 +87,11 @@ object Dedup {
     * pair, the star join), and unstaged they would each recompute the
     * signature aggregation upstream (measured 1.5× on the sf0.1 bench
     * when the star branch grew the consumer count from 2 to 4). The
-    * returned candidate frame is staged as `name` of `d` ([[DirFrames]])
-    * before the bands stage is released, so no consumer ever recomputes
-    * the subtree. */
-  private[operators] def bandCandidates(
-      s: SparkSession, d: String, name: String, bands0: DataFrame): DataFrame = {
+    * returned candidate frame is staged by `stage` (a [[DirFrames]]
+    * holder) before the bands stage is released, so no consumer ever
+    * recomputes the subtree. */
+  private[operators] def bandCandidates(bands0: DataFrame)(
+      stage: DataFrame => DataFrame): DataFrame = {
     val bands = Bridge.stage(bands0)
     try {
       val stats = bands.groupBy("band")
@@ -108,7 +108,7 @@ object Dedup {
         Seq("band"))
         .filter(col("doc_id") > col("rep"))
         .select(col("rep").as("d1"), col("doc_id").as("d2"))
-      DirFrames.replace(s, d, name, small.union(star).distinct())
+      stage(small.union(star).distinct())
     } finally Bridge.release(bands)
   }
 
@@ -389,7 +389,7 @@ object Dedup {
     // linear star to the bucket representative (see the val doc);
     // bandCandidates stages the returned frame as this directory's
     // "minhash" frame
-    verifyJaccard(bandCandidates(s, d, "minhash", bands), docs)
+    verifyJaccard(bandCandidates(bands)(DirFrames.replace(s, d, "minhash", _)), docs)
   }
 
   private[operators] def minhashOracle: String = {
@@ -439,7 +439,7 @@ object Dedup {
       explode(array((0 until 4).map(c =>
         concat_ws("_", lit(c), shiftright(col("sim"), 16 * c).bitwiseAND(0xFFFFL))): _*))
         .as("band"))
-    val cand = bandCandidates(s, d, "simhash", chunks)
+    val cand = bandCandidates(chunks)(DirFrames.replace(s, d, "simhash", _))
     cand
       .join(docs.select(col("doc_id").as("d1"), col("sim").as("s1")), Seq("d1"))
       .join(docs.select(col("doc_id").as("d2"), col("sim").as("s2")), Seq("d2"))

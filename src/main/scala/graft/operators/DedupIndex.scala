@@ -125,11 +125,11 @@ object DedupIndex {
     // the oracle is verbatim the L3 oracle, so the crowded-bucket rule
     // must match — and the index path has the same quadratic
     // family-bucket exposure. bandCandidates STAGES the candidate frame
-    // as the index root's "index" frame (DirFrames.replace), so repeated
+    // in the session's "index" slot (DirFrames.replaceSlot), so repeated
     // pairs() calls (verify-after-every-refresh in a long-lived session)
     // release the previous invocation's staged blocks instead of leaking
-    // them (ADVICE r15)
-    val cand = Dedup.bandCandidates(s, root, "index", bands)
+    // them (ADVICE r15), and the corpus directory's frames stay held
+    val cand = Dedup.bandCandidates(bands)(DirFrames.replaceSlot(s, "index", _))
     val docs = source.read()
       .select(col("doc_id"), ShingleExpr.shingles3(Text.words(col("text"))).as("sh"))
       .filter(size(col("sh")) > 0)

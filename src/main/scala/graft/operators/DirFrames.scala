@@ -13,13 +13,15 @@ import org.apache.spark.sql.graft.Bridge
   * directory first releases every frame of the previous one, so a session
   * that curates shard after shard keeps one shard's blocks on the heap,
   * not all of them. A released frame that a lazy result still plans over
-  * recomputes from its lineage, never misreads. */
+  * recomputes from its lineage, never misreads. A session's last
+  * directory stays held until the application ends. */
 private[graft] object DirFrames {
 
   private final class Held(val dir: String) {
     val frames = scala.collection.mutable.HashMap.empty[String, DataFrame]
   }
   private val bySession = scala.collection.mutable.HashMap.empty[String, Held]
+  private val slots = scala.collection.mutable.HashMap.empty[String, DataFrame]
 
   /** Application id + session identity + directory. The app id keeps a
     * restarted SparkContext from colliding with a dead session's entries. */
@@ -27,6 +29,8 @@ private[graft] object DirFrames {
   private def sessionKey(s: SparkSession): String =
     s"${s.sparkContext.applicationId}:${System.identityHashCode(s)}"
 
+  /** The held frames of `d`, switching the session to it (call under the
+    * lock; release only unpersists without blocking). */
   private def held(s: SparkSession, d: String): Held = {
     val session = sessionKey(s)
     bySession.get(session) match {
@@ -39,25 +43,39 @@ private[graft] object DirFrames {
     }
   }
 
-  /** The frame `name` of directory `d`, staged from `build` on first use. */
+  /** The frame `name` of directory `d`, staged from `build` on first use.
+    * The stage (a whole Spark job) runs outside the lock, so one session's
+    * staging never waits on another's; of two threads that stage the same
+    * name at once, the first to finish is kept and the other released. */
   def staged(s: SparkSession, d: String, name: String)(build: => DataFrame): DataFrame =
-    synchronized {
-      val h = held(s, d)
-      h.frames.getOrElse(name, {
-        val f = Bridge.stage(build)
-        h.frames(name) = f
-        f
-      })
+    synchronized(held(s, d).frames.get(name)).getOrElse {
+      val f = Bridge.stage(build)
+      synchronized {
+        val h = held(s, d)
+        h.frames.get(name) match {
+          case Some(first) => Bridge.release(f); first
+          case None => h.frames(name) = f; f
+        }
+      }
     }
 
   /** Stages `frame` as `name` of directory `d` and releases the frame it
-    * replaces: a caller that re-stages per invocation (DedupIndex.pairs
-    * after every index refresh) holds one block set per name. */
-  def replace(s: SparkSession, d: String, name: String, frame: DataFrame): DataFrame =
-    synchronized {
-      val h = held(s, d)
-      val f = Bridge.stage(frame)
-      h.frames.put(name, f).foreach(Bridge.release)
-      f
-    }
+    * replaces: a caller that re-stages per invocation holds one block set
+    * per name. */
+  def replace(s: SparkSession, d: String, name: String, frame: DataFrame): DataFrame = {
+    val f = Bridge.stage(frame)
+    synchronized(held(s, d).frames.put(name, f)).foreach(Bridge.release)
+    f
+  }
+
+  /** Stages `frame` in the session's slot `name`, outside the
+    * one-directory rule: it releases the slot's previous frame and no
+    * directory's frames. DedupIndex.pairs stages its candidates here —
+    * its index root is fresh per query, and counting it as a directory
+    * would evict the corpus frames the session's next query reads. */
+  def replaceSlot(s: SparkSession, name: String, frame: DataFrame): DataFrame = {
+    val f = Bridge.stage(frame)
+    synchronized(slots.put(s"${sessionKey(s)}:$name", f)).foreach(Bridge.release)
+    f
+  }
 }

@@ -1567,9 +1567,11 @@ final class GraftScan(
   }
 
   /** S37/S44/S55/S65/S66: the per-file positional read. Files that need
-    * every physical position (dv files, every file of a claimed or
-    * lineage scan) read through a factory with no pushed filters; the
-    * rest keep the filtered one. A scan builds at most these two. */
+    * every physical position read through a factory with no pushed
+    * filters: dv files (the reader picks those per file) and, decided
+    * here, every file of a claimed or lineage scan, which gets that
+    * factory for both roles. The rest keep the filtered one. A scan
+    * builds at most these two. */
   private def positionalFactory(): PartitionReaderFactory = {
     // `_pos`/`_file` alone (the delta write's row identity on a plain
     // dv-append table) need only the positional read; id/seq
@@ -1593,7 +1595,7 @@ final class GraftScan(
     val unfiltered =
       if (positional || !plannedFiles.exists(_.hasDv)) filtered else files(Array.empty[Filter])
     new PositionalReaderFactory(filtered, unfiltered,
-      readDataFields.map(_.dataType), readPartFields.map(_.dataType),
+      readDataFields.map(_.dataType), readPartFields.map(_.dataType), stored.nonEmpty,
       metaFields.map(_.name), claimed.toSeq, table.root, serializableConf)
   }
 }

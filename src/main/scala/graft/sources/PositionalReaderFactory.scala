@@ -17,15 +17,16 @@ import org.apache.spark.util.SerializableConfiguration
   *
   * A partition is read file by file (sequential single-file sub-readers:
   * the interleaved-reader hazard documented on GraftMorReaderFactory only
-  * bites concurrently open readers). A file is read POSITIONALLY when it
-  * carries a deletion vector, or when the scan has claimed filters or asks
-  * for `_pos`/`_row_id`/`_sequence_number`: such a file streams through
-  * `unfiltered`, the scan's factory with no pushed filters, because
-  * parquet row-group skipping would desynchronize the physical row counter
-  * the masks and ids are keyed on (Spark re-applies every pushed predicate
-  * above the scan, so dropping the pushdown costs only I/O). Every other
-  * file reads through `filtered`, and a partition with neither a
-  * positional file nor a metadata column is handed to `filtered` whole.
+  * bites concurrently open readers). A file with a deletion vector reads
+  * through `unfiltered`, the scan's factory with no pushed filters,
+  * because parquet row-group skipping would desynchronize the physical
+  * row counter the masks and ids are keyed on (Spark re-applies every
+  * pushed predicate above the scan, so dropping the pushdown costs only
+  * I/O); every other file reads through `filtered`. The caller decides
+  * which scans need every position of every file (claimed filters,
+  * `_pos`/`_row_id`/`_sequence_number`) and hands such a scan the
+  * unfiltered factory as `filtered` too. A partition with no dv file, no
+  * claim and no metadata column is handed to `filtered` whole.
   * The position is taken BEFORE the masks apply — the dv skip, then the
   * claim keep-mask — so survivors' positions and derived ids are stable
   * under deletes by construction. A missing claim is an invariant breach
@@ -34,9 +35,9 @@ import org.apache.spark.util.SerializableConfiguration
   * `_row_id`/`_sequence_number` are the stored `__row_id`/`__row_seq`
   * columns (compacted files) coalesced over the commit-assigned
   * `firstRowId + pos` / `rowSeq`. Input rows are [data…, part…], with
-  * the two stored columns between the halves when a lineage column is
-  * requested; output rows are [data…, part…, meta…] per the scan's
-  * readSchema, metadata columns in `metaNames` order.
+  * the two stored columns between the halves when `stored` is set (the
+  * caller's lineage read schema); output rows are [data…, part…, meta…]
+  * per the scan's readSchema, metadata columns in `metaNames` order.
   *
   * Row-based for every partition: Spark requires one columnar answer for
   * the whole scan, so a dv'd file anywhere in the snapshot makes the scan
@@ -48,25 +49,22 @@ final class PositionalReaderFactory(
     unfiltered: PartitionReaderFactory,
     dataTypes: Array[DataType],
     partTypes: Array[DataType],
+    stored: Boolean,
     metaNames: Array[String],
     claimed: Seq[Filter],
     tableRoot: String,
     conf: SerializableConfiguration)
     extends PartitionReaderFactory {
 
-  // a lineage column needs every position of every file, and its rows
-  // carry the stored __row_id/__row_seq columns
-  private val lineage = metaNames.exists(RowLineage.MetaColNames)
-  private val allPositional = lineage || claimed.nonEmpty
-
-  private def positional(pf: PartitionedFile): Boolean =
-    allPositional || pf.otherConstantMetadataColumnValues.contains(DeletionVector.DvKey)
+  private def hasDv(pf: PartitionedFile): Boolean =
+    pf.otherConstantMetadataColumnValues.contains(DeletionVector.DvKey)
 
   override def supportColumnarReads(p: InputPartition): Boolean = false
 
   override def createReader(p: InputPartition): PartitionReader[InternalRow] = {
     val fp = p.asInstanceOf[FilePartition]
-    if (metaNames.isEmpty && !fp.files.exists(positional)) return filtered.createReader(p)
+    if (metaNames.isEmpty && claimed.isEmpty && !fp.files.exists(hasDv))
+      return filtered.createReader(p)
     new PartitionReader[InternalRow] {
       private var i = 0
       private var cur: FileRows = _
@@ -102,7 +100,7 @@ final class PositionalReaderFactory(
         val dataPath = new Path(abs)
         IndexClaims.keepFor(dataPath.getFileSystem(conf.value), dataPath, claimed)
       }
-    private val rows = (if (positional(pf)) unfiltered else filtered)
+    private val rows = (if (hasDv(pf)) unfiltered else filtered)
       .createReader(FilePartition(index, Array(pf)))
 
     private val nData = dataTypes.length
@@ -117,7 +115,7 @@ final class PositionalReaderFactory(
       }
     }
     private val dataPart =
-      if (lineage) new GenericInternalRow(nData + partTypes.length) else null
+      if (stored) new GenericInternalRow(nData + partTypes.length) else null
     private val joined = new JoinedRow
 
     private var pos = -1L
@@ -160,15 +158,20 @@ final class PositionalReaderFactory(
         }
         m += 1
       }
-      if (!lineage) return joined(in, meta)
+      if (!stored) return joined(in, meta)
+      // cut the stored columns out, nulls copied as nulls: `get` on a
+      // columnar row reads the column buffer without a null check (the
+      // file factories hand out projected UnsafeRows, but the copy must
+      // not depend on the row class)
       var j = 0
-      while (j < nData) { dataPart.update(j, in.get(j, dataTypes(j))); j += 1 }
+      while (j < nData) { copy(in, j, j, dataTypes(j)); j += 1 }
       var k = 0
-      while (k < partTypes.length) {
-        dataPart.update(nData + k, in.get(nData + 2 + k, partTypes(k))); k += 1
-      }
+      while (k < partTypes.length) { copy(in, nData + 2 + k, nData + k, partTypes(k)); k += 1 }
       joined(dataPart, meta)
     }
+
+    private def copy(in: InternalRow, from: Int, to: Int, dt: DataType): Unit =
+      if (in.isNullAt(from)) dataPart.setNullAt(to) else dataPart.update(to, in.get(from, dt))
 
     def close(): Unit = rows.close()
   }

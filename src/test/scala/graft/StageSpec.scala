@@ -136,5 +136,15 @@ class StageSpec extends AnyFunSuite {
     }
     // the shingle stage and the minhash candidates of ONE directory
     assert(held == Seq(2, 2, 2), s"persisted RDDs after each run: $held")
+    // the index verify stages its candidates in a slot of its own: it
+    // releases no corpus frame and replaces its previous candidates
+    val corpusRdds = sc.getPersistentRDDs.keySet
+    val withIndex = Seq(1, 2).map { _ =>
+      SparkEntry.queries("q_dedup_index")(session, small).collect()
+      assert(corpusRdds.subsetOf(sc.getPersistentRDDs.keySet),
+        "the index verify released corpus frames")
+      sc.getPersistentRDDs.size - before
+    }
+    assert(withIndex == Seq(3, 3), s"persisted RDDs after each index verify: $withIndex")
   }
 }
