@@ -220,9 +220,9 @@ final case class GraftRelation(
   override def schema: StructType = table.schema
 
   /** Filters on partition keys prune at the manifest; everything is also
-    * left to Spark (`unhandledFilters` = all) so the parquet scan pushes
-    * them again — manifest pruning is an optimization, not a correctness
-    * gate. */
+    * left to Spark (`unhandledFilters` = all) so the V2 scan `read`
+    * returns pushes them again — manifest pruning is an optimization, not
+    * a correctness gate. */
   override def unhandledFilters(filters: Array[Filter]): Array[Filter] = filters
 
   override def buildScan(requiredColumns: Array[String], filters: Array[Filter]): RDD[Row] = {

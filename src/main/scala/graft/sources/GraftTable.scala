@@ -273,8 +273,8 @@ class GraftTable private (
     * zero-write-cost / compaction-latency trade. */
   /** S64 row tracking (Paimon's row-tracking.enabled): APPEND tables
     * only (a PK table's MOR fold re-homes row versions — ids would not
-    * be stable), parquet only (the lineage read derives positions from
-    * parquet's native `_metadata.row_index`). */
+    * be stable), parquet only (the lineage read derives ids from the
+    * scan's `_pos`, a metadata column declared for parquet). */
   private[sources] def rowTracking: Boolean = {
     val on = options.get("row-tracking.enabled").exists(_.toBoolean)
     if (on) {
@@ -305,13 +305,17 @@ class GraftTable private (
   /** `deletion-vectors.enabled` (S37): row-predicate DELETE on an APPEND
     * table writes per-file position sidecars instead of a group rewrite.
     * PK tables already have a cheaper delete (RowKind tombstones through
-    * the LSM merge), so the option targets append tables. Parquet-only
-    * (position collection needs `_metadata.row_index`): an ORC table
-    * with the option set reports NOT dv-enabled, so SQL DELETE falls
-    * back to the group rewrite instead of failing in dvDelete. */
+    * the LSM merge), so the option targets append tables. Positions are
+    * collected as the V2 scan's `_file`/`_pos` row identity, so the
+    * table must be parquet (the format `_pos` is declared for) and no
+    * data column may shadow those names (Spark would bind the identity
+    * to user data). A table failing either reports NOT dv-enabled, so
+    * SQL DELETE/UPDATE/MERGE fall back to the group rewrite instead of
+    * failing in dvDelete. */
   private[sources] def dvEnabled: Boolean =
     !isPkTable && fileFormat == "parquet" &&
-      options.getOrElse("deletion-vectors.enabled", "false").toBoolean
+      options.getOrElse("deletion-vectors.enabled", "false").toBoolean &&
+      !schema.fieldNames.exists(GraftTable.isReservedLineage)
 
   /** Paimon's `merge-engine` table option: how multiple versions of one
     * primary key resolve at read time.
@@ -936,15 +940,17 @@ class GraftTable private (
     * path's cost is a scan of the STATS-PRUNED candidate files plus
     * sidecars sized by the match count.
     *
-    * Shape: one distributed job reads the candidate files with
-    * `_metadata.row_index`, filters by the predicate, and groups
-    * positions BY FILE on the executors — each group writes its sidecar
-    * (unioned with the file's prior vector; vectors are immutable, a
-    * repeat delete writes a NEW sidecar and the commit swaps the
-    * pointer). Only (file, sidecar-path, count) triples return to the
-    * driver, so driver memory is O(affected files), never O(deleted
-    * rows). A file whose vector reaches rowCount is dropped from the
-    * manifest outright. Commit kind OVERWRITE: incremental/streaming
+    * Shape: one distributed job reads the candidate files through the V2
+    * scan with their `_file`/`_pos` row identity (the identity the SQL
+    * delta DELETE uses), filters by the predicate, and groups positions
+    * BY FILE on the executors — each group writes its sidecar (unioned
+    * with the file's prior vector; vectors are immutable, a repeat
+    * delete writes a NEW sidecar and the commit swaps the pointer). The
+    * scan already masks the prior vector's rows, so the union adds
+    * exactly the new matches. Only (file, sidecar-path, count) triples
+    * return to the driver, so driver memory is O(affected files), never
+    * O(deleted rows). A file whose vector reaches rowCount is dropped
+    * from the manifest outright. Commit kind OVERWRITE: incremental/streaming
     * readers do not re-emit it (append-table deletes carry no
     * retractions, matching Paimon), and time travel / rollback see the
     * pre-delete FileMeta — the vectors are versioned metadata.
@@ -953,31 +959,21 @@ class GraftTable private (
     * prune candidates via manifest stats + bloom sidecars before any
     * file is opened. */
   def dvDelete(cond: Column, dataFilters: Seq[org.apache.spark.sql.sources.Filter] = Seq.empty): Long = {
-    require(dvEnabled, "dvDelete requires deletion-vectors.enabled on an append table")
-    require(fileFormat == "parquet",
-      "deletion vectors require parquet data files (_metadata.row_index)")
+    require(dvEnabled, "dvDelete requires deletion-vectors.enabled on a parquet append " +
+      "table with no data column named like a metadata column")
     val base = latestSnapshotId.getOrElse(0L)
     val candidates = planFiles(Some(base).filter(_ > 0), dataFilters = dataFilters)
     if (candidates.isEmpty) return base
-    // filenames are uuid-unique within the table — a stable join key that
-    // sidesteps URI-form mismatches between _metadata.file_path and root
-    def nameOf(rel: String): String = rel.substring(rel.lastIndexOf('/') + 1)
-    val byName: Map[String, FileMeta] = candidates.map(f => nameOf(f.path) -> f).toMap
+    val byPath: Map[String, FileMeta] = candidates.map(f => f.path -> f).toMap
     val priorDv: Map[String, String] =
-      candidates.filter(_.hasDv).map(f => nameOf(f.path) -> f.dvPath).toMap
-    val paths = candidates.map(f => s"${root.stripSuffix("/")}/${f.path}")
-    val matches = spark.read
-      .option("basePath", s"${root.stripSuffix("/")}/data")
-      .schema(fileSchema)
-      .format(fileFormat).load(paths: _*)
+      candidates.filter(_.hasDv).map(f => f.path -> f.dvPath).toMap
+    val matches = scanV2(Some(base).filter(_ > 0), Some(candidates))
       .filter(cond)
-      .select(
-        substring_index(col("_metadata.file_path"), "/", -1).as("__gfile"),
-        col("_metadata.row_index").as("__gpos"))
+      .select(col(GraftV2Table.FileCol), col(RowLineage.PosCol))
     val rootStr = root
     val serConf = new org.apache.spark.util.SerializableConfiguration(hadoopConf)
-    val rowCountByName: Map[String, Long] =
-      candidates.flatMap(f => f.rowCountOpt.map(nameOf(f.path) -> _)).toMap
+    val rowCountByPath: Map[String, Long] =
+      candidates.flatMap(f => f.rowCountOpt.map(f.path -> _)).toMap
     import spark.implicits._
     // executor-side sidecar writes: each file's positions sort, union
     // with the prior vector, and persist WHERE they were computed. A
@@ -985,30 +981,30 @@ class GraftTable private (
     // file leaves the manifest instead.
     val written: Array[(String, String, Long)] = matches.as[(String, Long)]
       .groupByKey(_._1)
-      .mapGroups { (fname, it) =>
+      .mapGroups { (path, it) =>
         val positions = it.map(_._2).toArray
         java.util.Arrays.sort(positions)
-        val merged = priorDv.get(fname) match {
+        val merged = priorDv.get(path) match {
           case Some(prior) =>
             DeletionVector.union(
               DeletionVector.read(serConf.value, rootStr, prior), positions)
           case None => positions
         }
         val rel =
-          if (rowCountByName.get(fname).contains(merged.length.toLong)) ""
+          if (rowCountByPath.get(path).contains(merged.length.toLong)) ""
           else DeletionVector.write(serConf.value, rootStr, merged)
-        (fname, rel, merged.length.toLong)
+        (path, rel, merged.length.toLong)
       }
       .collect()
     if (written.isEmpty) return base
     // a fully-deleted file leaves the manifest entirely (its bytes are
     // reclaimed by snapshot expiry, like any overwritten file)
     val (gone, keptRaw) = written.partition(_._2.isEmpty)
-    val kept = keptRaw.map { case (fname, rel, cnt) =>
-      byName(fname).copy(dvPath = rel, dvCount = cnt)
+    val kept = keptRaw.map { case (path, rel, cnt) =>
+      byPath(path).copy(dvPath = rel, dvCount = cnt)
     }
     try commitAt(base + 1, "OVERWRITE", added = kept.toSeq,
-      deleted = gone.toSeq.map { case (fname, _, _) => byName(fname) })
+      deleted = gone.toSeq.map { case (path, _, _) => byPath(path) })
     catch {
       case e: Throwable =>
         // losing an optimistic-concurrency race must not strand sidecars
@@ -2677,57 +2673,82 @@ class GraftTable private (
   }
 
   /** Read the table: latest (or time-travel) snapshot, manifest-pruned,
-    * merge-on-read for PK tables. PK tables (and dv-carrying append
-    * tables) read through the V2 scan, which merges versions inside each
-    * co-located (partition, bucket) split — zero Exchange in the plan; a
-    * `bucket`/`dataFilters` read plans its file set here and pins the
-    * scan to it. Other append tables read as plain parquet, so downstream
-    * filters/projections still push into the file scan. */
+    * through the V2 scan ([[scanV2]]) — merge-on-read for PK tables,
+    * deletion vectors masked per file for append tables. A
+    * `partitionFilter`/`bucket`/`dataFilters` read plans its file set
+    * here and pins the scan to it (an arbitrary partition Column prunes
+    * the manifest); filters and projections applied to the returned
+    * frame still push into the scan. `Dataset.inputFiles` of this frame
+    * (and of the `readWithLineage`/`readIncrement` frames) is empty:
+    * Spark lists input files only for its own file relations, not for a
+    * V2 table. `system("files")` lists the live files, and the `_file`
+    * metadata column names each row's file. */
   def read(
       snapshotId: Option[Long] = None,
       partitionFilter: Option[Column] = None,
       bucket: Option[Int] = None,
       dataFilters: Seq[org.apache.spark.sql.sources.Filter] = Seq.empty): DataFrame = {
-    val pruned = bucket.isDefined || dataFilters.nonEmpty
-    var df =
-      if (isPkTable || (!pruned && currentFiles(snapshotId).exists(_.hasDv)))
-        scanV2(snapshotId,
-          if (pruned) Some(planFiles(snapshotId, partitionFilter, bucket, dataFilters))
-          else None)
-      else {
-        val files = planFiles(snapshotId, partitionFilter, bucket, dataFilters)
-        if (files.isEmpty)
-          return spark.createDataFrame(new java.util.ArrayList[Row](), schema)
-        val paths = files.map(f => s"${root.stripSuffix("/")}/${f.path}")
-        val raw = spark.read
-          .option("basePath", s"${root.stripSuffix("/")}/data")
-          .schema(fileSchema)
-          .format(fileFormat).load(paths: _*)
-        // rare fallback (bucket/dataFilters read of a dv table): mask
-        // deleted positions with an anti-join on (filename, row position)
-        // against the sidecars, read in a parallelized executor job —
-        // never collected
-        maskByDv(raw, files.filter(_.hasDv)).select(schema.fieldNames.map(col).toSeq: _*)
-      }
+    val pinned =
+      if (partitionFilter.isEmpty && bucket.isEmpty && dataFilters.isEmpty) None
+      else Some(planFiles(snapshotId, partitionFilter, bucket, dataFilters))
+    val df = scanV2(snapshotId, pinned)
     // POST-merge row filter keeps partitionFilter semantics exact even
     // when file-level pruning was skipped as version-unsafe (see
     // partitionPruneSafe); when pruning did apply this is a no-op the
     // reader absorbs
-    partitionFilter.foreach(f => df = df.filter(f))
-    df
+    partitionFilter.fold(df)(df.filter)
   }
 
   /** This table through the V2 scan ([[GraftScan]]) as a DataFrame —
-    * the one merge-on-read path: PK versions resolve in the per-bucket
-    * reader ([[GraftMorReaderFactory]]). `pinned` hands the scan a file
-    * set the caller already planned. */
+    * the one row reader of every library read: PK versions resolve in
+    * the per-bucket reader ([[GraftMorReaderFactory]]), append files
+    * with a deletion vector, claimed filters or metadata columns read
+    * through [[PositionalReaderFactory]]. `pinned` hands the scan a
+    * file set the caller already planned. An append scan declares this
+    * handle's columns, so a stream's batches keep the schema its source
+    * declared while another handle adds or drops a column; the PK merge
+    * resolves its columns against the latest file schema. */
   private def scanV2(snapshotId: Option[Long], pinned: Option[Seq[FileMeta]]): DataFrame =
     org.apache.spark.sql.graft.Bridge.v2Frame(spark,
-      new GraftV2Table(root, GraftTable.load(spark, root).schema, pinnedFiles = pinned),
+      new GraftV2Table(root, if (isPkTable) GraftTable.load(spark, root).schema else schema,
+        pinnedFiles = pinned),
       // the V2 table loads the ROOT table — a branch view must forward
       // its ref or the scan would silently read main's log
       snapshotId.map(id => "snapshotId" -> id.toString).toMap ++
         branchName.map(b => "branch" -> b))
+
+  /** S64 row lineage read (Paimon's row-tracking metadata): the table's
+    * rows plus `_row_id` (stable id = the file's firstRowId + the row's
+    * physical position) and `_sequence_number` (the snapshot whose
+    * commit wrote the row) — the V2 scan's lineage metadata columns,
+    * pinned to the `partitionFilter`-planned files. Compacted files
+    * serve their stored `__row_id`/`__row_seq` columns instead.
+    * DV deletes keep survivors' positions — ids are stable under them —
+    * and whole-file ops (partition drop, expiry of superseded state)
+    * never renumber; the rewriting maintenance paths are refused on
+    * row-tracking tables. `Dataset.inputFiles` is empty (see [[read]]). */
+  def readWithLineage(snapshotId: Option[Long] = None,
+      partitionFilter: Option[Column] = None): DataFrame = {
+    require(rowTracking, "row lineage requires row-tracking.enabled")
+    val files = planFiles(snapshotId, partitionFilter)
+    require(files.forall(f =>
+      (f.firstRowId != null && f.rowSeq != null) || f.isCompacted),
+      "file(s) predate row tracking — enable row-tracking.enabled at table creation")
+    scanV2(snapshotId, Some(files)).select(schema.fieldNames.map(col).toSeq :+
+      col(RowLineage.IdCol) :+ col(RowLineage.SeqCol): _*)
+  }
+
+  /** The raw row versions of `files` (hidden __seq/__kind included) as
+    * plain files — for the reads that must not merge: the changelog
+    * views and `$ro`. An empty file set yields an empty `outSchema`
+    * frame without touching storage. */
+  private def rawVersions(files: Seq[FileMeta], outSchema: StructType)(
+      shape: DataFrame => DataFrame): DataFrame =
+    if (files.isEmpty) spark.createDataFrame(new java.util.ArrayList[Row](), outSchema)
+    else shape(spark.read
+      .option("basePath", s"${root.stripSuffix("/")}/data")
+      .schema(fileSchema)
+      .format(fileFormat).load(files.map(f => s"${root.stripSuffix("/")}/${f.path}"): _*))
 
   /** S60 read-optimized view (Paimon's `$ro` system table / ReadOptimized
     * Table): serve a PK table WITHOUT paying the merge-on-read by reading
@@ -2742,100 +2763,10 @@ class GraftTable private (
     * cheap-and-stale leg of a lambda read (batch analytics off `$ro`,
     * exact reads off the merging scan). Non-PK tables are already
     * merge-free: `$ro` = the plain read. */
-  /** S64 row lineage read (Paimon's row-tracking metadata): the table's
-    * rows plus `_row_id` (stable id = the file's firstRowId + the row's
-    * physical position, from parquet's native `_metadata.row_index`) and
-    * `_sequence_number` (the snapshot whose commit wrote the row).
-    * DV deletes keep survivors' positions — ids are stable under them —
-    * and whole-file ops (partition drop, expiry of superseded state)
-    * never renumber; the rewriting maintenance paths are refused on
-    * row-tracking tables. Per-file bases join in via one broadcast of
-    * O(files) rows — zero extra shuffle at any scale. */
-  def readWithLineage(snapshotId: Option[Long] = None,
-      partitionFilter: Option[Column] = None): DataFrame = {
-    require(rowTracking, "row lineage requires row-tracking.enabled")
-    val files = planFiles(snapshotId, partitionFilter)
-    val lineageSchema = StructType(schema.fields ++ Seq(
-      StructField("_row_id", LongType), StructField("_sequence_number", LongType)))
-    if (files.isEmpty)
-      return spark.createDataFrame(new java.util.ArrayList[Row](), lineageSchema)
-    require(files.forall(f =>
-      (f.firstRowId != null && f.rowSeq != null) || f.isCompacted),
-      "file(s) predate row tracking — enable row-tracking.enabled at table creation")
-    import spark.implicits._
-    def nameOf(rel: String) = rel.substring(rel.lastIndexOf('/') + 1)
-    // appended files derive ids positionally from their (firstRowId,
-    // rowSeq); COMPACTED files read their materialized __row_id/__row_seq
-    // columns instead (null bases; parquet returns null for the absent
-    // physical columns of appended files — coalesce picks the right leg
-    // per file without per-file branching)
-    val lkRows = files.map(f => Row(nameOf(f.path),
-      Option(f.firstRowId).map(_.longValue).orNull,
-      Option(f.rowSeq).map(_.longValue).orNull))
-    val lkDf = broadcast(spark.createDataFrame(
-      new java.util.ArrayList[Row](scala.jdk.CollectionConverters.SeqHasAsJava(lkRows).asJava),
-      StructType(Seq(StructField("__gfile", StringType),
-        StructField("__gbase", LongType), StructField("__gseq", LongType)))))
-    val readSchema = StructType(fileSchema.fields ++ Seq(
-      StructField(RowIdCol, LongType), StructField(RowSeqCol, LongType)))
-    val paths = files.map(f => s"${root.stripSuffix("/")}/${f.path}")
-    var raw = spark.read
-      .option("basePath", s"${root.stripSuffix("/")}/data")
-      .schema(readSchema).format(fileFormat).load(paths: _*)
-      .withColumn("__gfile", substring_index(col("_metadata.file_path"), "/", -1))
-      .withColumn("__gpos", col("_metadata.row_index"))
-    val dvFiles = files.filter(_.hasDv)
-    if (dvFiles.nonEmpty)
-      // not maskByDv: __gfile must SURVIVE for the lineage-base join below
-      raw = raw.join(dvPositionsDf(dvFiles), Seq("__gfile", "__gpos"), "left_anti")
-    raw.join(lkDf, Seq("__gfile"))
-      .withColumn("_row_id", coalesce(col(RowIdCol), col("__gbase") + col("__gpos")))
-      .withColumn("_sequence_number", coalesce(col(RowSeqCol), col("__gseq")))
-      .select(schema.fieldNames.map(col).toSeq :+ col("_row_id") :+ col("_sequence_number"): _*)
-  }
-
-  def readOptimized(): DataFrame = {
-    if (!isPkTable) return read()
-    val files = currentFiles(None).filter(_.isCompacted)
-    if (files.isEmpty)
-      return spark.createDataFrame(new java.util.ArrayList[Row](), schema)
-    val paths = files.map(f => s"${root.stripSuffix("/")}/${f.path}")
-    spark.read
-      .option("basePath", s"${root.stripSuffix("/")}/data")
-      .schema(fileSchema)
-      .format(fileFormat).load(paths: _*)
-      .select(schema.fieldNames.map(col).toSeq: _*)
-  }
-
-  /** Mask `dvFiles`' sidecar positions out of `raw` (which must carry
-    * `_metadata`) with an anti-join on (filename, row position); the
-    * sidecars are read in a parallelized executor job, never collected.
-    * Filenames are uuid-unique within the table, sidestepping URI-form
-    * mismatches between `_metadata.file_path` and root. */
-  /** (filename, deleted position) rows of these files' dv sidecars,
-    * read in a parallelized executor job (never collected) — the
-    * anti-join side of every dv-masked read. */
-  private def dvPositionsDf(dvFiles: Seq[FileMeta]): DataFrame = {
-    import spark.implicits._
-    val rootStr = root
-    val serConf = new org.apache.spark.util.SerializableConfiguration(hadoopConf)
-    val dvInfo = dvFiles.map(f =>
-      (f.path.substring(f.path.lastIndexOf('/') + 1), f.dvPath))
-    spark.createDataset(dvInfo)
-      .flatMap { case (fname, dv) =>
-        DeletionVector.read(serConf.value, rootStr, dv).map(p => (fname, p))
-      }
-      .toDF("__gfile", "__gpos")
-  }
-
-  private def maskByDv(raw: DataFrame, dvFiles: Seq[FileMeta]): DataFrame = {
-    if (dvFiles.isEmpty) return raw
-    raw
-      .withColumn("__gfile", substring_index(col("_metadata.file_path"), "/", -1))
-      .withColumn("__gpos", col("_metadata.row_index"))
-      .join(dvPositionsDf(dvFiles), Seq("__gfile", "__gpos"), "left_anti")
-      .drop("__gfile", "__gpos")
-  }
+  def readOptimized(): DataFrame =
+    if (!isPkTable) read()
+    else rawVersions(currentFiles(None).filter(_.isCompacted), schema)(
+      _.select(schema.fieldNames.map(col).toSeq: _*))
 
   /** The schema of changelog-shaped outputs (auditLog, changelog
     * streams): rowkind + commit_seq prepended to the table schema. ONE
@@ -2849,23 +2780,19 @@ class GraftTable private (
     * `$audit_log` of the reference format. */
   def auditLog(snapshotId: Option[Long] = None): DataFrame = {
     require(isPkTable, "audit_log requires a PK table")
-    val files = currentFiles(snapshotId)
-    if (files.isEmpty)
-      return spark.createDataFrame(new java.util.ArrayList[Row](), changelogSchema)
-    val paths = files.map(f => s"${root.stripSuffix("/")}/${f.path}")
-    spark.read
-      .option("basePath", s"${root.stripSuffix("/")}/data")
-      .schema(fileSchema)
-      .format(fileFormat).load(paths: _*)
-      .select((col(KindCol).as("rowkind") +: col(SeqCol).as("commit_seq") +: schema.fieldNames.map(col).toSeq): _*)
+    rawVersions(currentFiles(snapshotId), changelogSchema)(_.select((col(KindCol).as("rowkind") +:
+      col(SeqCol).as("commit_seq") +: schema.fieldNames.map(col).toSeq): _*))
   }
 
   /** Incremental read: rows in the files ADDED between snapshot
     * `fromExclusive` and `toInclusive` (path-set diff, so OVERWRITE /
     * COMPACT rewrites are not re-emitted as inserts of old data — same
-    * restriction Paimon places on streaming reads). For PK tables rows
-    * additionally filter on the hidden commit sequence, and
-    * `changelog=true` exposes rowkind/commit_seq. */
+    * restriction Paimon places on streaming reads). Append tables read
+    * the emitted files through the V2 scan, deletion vectors as of
+    * `toInclusive` applied (`Dataset.inputFiles` of that frame is
+    * empty, see [[read]]). PK tables read their raw row versions,
+    * filtered on the hidden commit sequence, and `changelog=true`
+    * exposes rowkind/commit_seq. */
   def readIncrement(
       fromExclusive: Long,
       toInclusive: Long,
@@ -2919,50 +2846,32 @@ class GraftTable private (
       }
       prev = live.map(_.path).toSet
     }
-    val outCols =
-      if (changelog && isPkTable)
-        col(KindCol).as("rowkind") +: col(SeqCol).as("commit_seq") +:
-          schema.fieldNames.map(col).toSeq
-      else schema.fieldNames.map(col).toSeq
-    if (added.isEmpty) {
-      val outSchema =
-        if (changelog && isPkTable) changelogSchema
-        else schema
-      return spark.createDataFrame(new java.util.ArrayList[Row](), outSchema)
+    // S37: the V2 scan pinned to the emitted files, each still live at
+    // `to` carrying its meta from that snapshot — its deletion vector
+    // masks exactly what a batch read masks (append tables carry no
+    // retractions to replay). Files the `to` snapshot no longer lists
+    // (fully-deleted, or compacted away) replay unmasked: after a
+    // COMPACT rebase the original appends are the stream's only copy
+    // of the rows, the same history-rewrite caveat Paimon's
+    // incremental reads document. snaps.last IS the `to` snapshot —
+    // no extra metadata read.
+    if (!isPkTable) {
+      val to = snaps.lastOption
+      val atTo = to.toSeq.flatMap(filesOf).map(f => f.path -> f).toMap
+      return scanV2(to.map(_.id), Some(added.toSeq.map(f => atTo.getOrElse(f.path, f))))
     }
-    val paths = added.map(f => s"${root.stripSuffix("/")}/${f.path}")
-    var raw = spark.read
-      .option("basePath", s"${root.stripSuffix("/")}/data")
-      .schema(fileSchema)
-      .format(fileFormat).load(paths.toSeq: _*)
-    if (isPkTable) {
-      raw = raw.filter(col(SeqCol) > fromExclusive && col(SeqCol) <= toInclusive)
-      // without the changelog columns a consumer can't interpret delete
-      // or pre-image markers — suppress them instead of resurrecting
-      // deleted keys / double-counting updates
-      if (!changelog)
-        raw = raw.filter(col(KindCol).isin(RowKind.Insert, RowKind.UpdateAfter))
-    } else {
-      // S37: mask rows the `to` snapshot's deletion vectors exclude, by
-      // the emitted files' CURRENT metas — a backfill over a dv table
-      // must match what a batch read returns (append tables carry no
-      // retractions to replay). Gated on ACTUAL sidecar presence (like
-      // the batch route), not the table option — vectors outlive an
-      // option flip. Files the current snapshot no longer lists
-      // (fully-deleted, or compacted away) replay unmasked: after a
-      // COMPACT rebase the original appends are the stream's only copy
-      // of the rows, the same history-rewrite caveat Paimon's
-      // incremental reads document. snaps.last IS the `to` snapshot —
-      // no extra metadata read.
-      val dvByName = filesOf(snaps.last).filter(_.hasDv)
-        .map(f => f.path.substring(f.path.lastIndexOf('/') + 1) -> f).toMap
-      if (dvByName.nonEmpty) {
-        val emittedDv = added.toSeq.flatMap(f =>
-          dvByName.get(f.path.substring(f.path.lastIndexOf('/') + 1)))
-        raw = maskByDv(raw, emittedDv)
-      }
+    val schemaCols = schema.fieldNames.map(col).toSeq
+    rawVersions(added.toSeq, if (changelog) changelogSchema else schema) { raw =>
+      val inRange = raw.filter(col(SeqCol) > fromExclusive && col(SeqCol) <= toInclusive)
+      if (changelog)
+        inRange.select(col(KindCol).as("rowkind") +: col(SeqCol).as("commit_seq") +: schemaCols: _*)
+      else
+        // without the changelog columns a consumer can't interpret delete
+        // or pre-image markers — suppress them instead of resurrecting
+        // deleted keys / double-counting updates
+        inRange.filter(col(KindCol).isin(RowKind.Insert, RowKind.UpdateAfter))
+          .select(schemaCols: _*)
     }
-    raw.select(outCols: _*)
   }
 
   // ---- system tables (ref: TestPrestoITCase.testSystemTable) ----------
@@ -4087,8 +3996,8 @@ object GraftTable {
     // but RENAMING each file to a table-unique name: raw Spark writes
     // reuse one basename (part-00000-<jobUUID>...) across every
     // partition dir a task touched, while graft's own invariant — which
-    // deletion-vector masking (maskByDv's basename join) and the S47
-    // index rebuild rely on — is that basenames are unique TABLE-WIDE.
+    // the S47 index rebuild (rewriteFileIndex keys its rows by basename)
+    // relies on — is that basenames are unique TABLE-WIDE.
     val migId = UUID.randomUUID().toString.take(8)
     var seq = 0
     if (fs.exists(src)) walk(fs.getFileStatus(src)).foreach { st =>

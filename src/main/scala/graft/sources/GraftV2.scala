@@ -111,12 +111,9 @@ final class GraftV2Table(
     // row identity to user data and the dv positions would mask
     // arbitrary rows. Tracking tables refuse such schemas at the source
     // (GraftTable.rowTracking); plain dv tables may carry them
-    // legitimately and fall back to the CoW rewrite.
-    val deltaShadowed =
-      loaded.schema.fieldNames.exists(GraftTable.isReservedLineage)
-    if (loaded.rowTracking ||
-        (loaded.dvEnabled && !loaded.isPkTable && loaded.fileFormat == "parquet" &&
-          !deltaShadowed))
+    // legitimately, report not dv-enabled (GraftTable.dvEnabled) and
+    // fall back to the CoW rewrite.
+    if (loaded.rowTracking || loaded.dvEnabled)
       return () => new GraftDeltaRowLevelOperation(loaded, info.command())
     () => new GraftRowLevelOperation(loaded, info.command())
   }
@@ -499,23 +496,24 @@ final class GraftScanBuilder(
     * integral columns claim through the same masked-read machinery. */
   private val bsiClaim = Option(options.get("bsi.claim-filters")).exists(_.toBoolean)
 
-  private lazy val claimFiles: Seq[FileMeta] = table.planFiles(snapshotId)
+  /** The files this builder's scan can read: the caller's pinned set, or
+    * the snapshot's (pushed filters only ever prune it). */
+  private lazy val scopeFiles: Seq[FileMeta] = pinnedFiles.getOrElse(table.planFiles(snapshotId))
   private val claimColCache = scala.collection.mutable.HashMap[String, Boolean]()
-  /** Column claimable iff EVERY file of the scanned snapshot carries a
-    * sidecar with the column present (value-complete) and no deletion
-    * vector (a masked row may be a dv'd row; don't compose the masks). */
+  /** Column claimable iff EVERY file in scope carries a sidecar with the
+    * column present (value-complete). A file's deletion vector composes
+    * with the claim: the positional reader applies the dv skip and the
+    * keep-mask together, per file. */
   private def colClaimable(c: String): Boolean = claimColCache.getOrElseUpdate(c, {
     table.bitmapIndexCols.contains(c) &&
-      claimFiles.forall(f =>
-        !f.hasDv && table.bitmapKeysOf(f).exists(_._2.contains(c)))
+      scopeFiles.forall(f => table.bitmapKeysOf(f).exists(_._2.contains(c)))
   })
   private val bsiColCache = scala.collection.mutable.HashMap[String, Boolean]()
   /** Same completeness contract for the BSI sidecar (S66): present on
-    * every planned file (header-only reads), no deletion vectors. */
+    * every file in scope (header-only reads). */
   private def bsiColClaimable(c: String): Boolean = bsiColCache.getOrElseUpdate(c, {
     table.bsiIndexCols.contains(c) &&
-      claimFiles.forall(f =>
-        !f.hasDv && table.bsiColsOf(f).exists(_._2.contains(c)))
+      scopeFiles.forall(f => table.bsiColsOf(f).exists(_._2.contains(c)))
   })
   private def claimable(fl: Filter): Boolean = claimableBm(fl) || claimableBsi(fl)
   private def claimableBm(fl: Filter): Boolean = bitmapClaim && (fl match {
@@ -655,7 +653,7 @@ final class GraftScanBuilder(
     val defs = defsOpt.getOrElse(return None)
     if (defs.isEmpty) return None
 
-    val files = table.planFiles(snapshotId)
+    val files = scopeFiles
     if (files.exists(_.rowCountOpt.isEmpty)) return None // legacy manifest: no counts
     // deletion vectors (S37): COUNT stays manifest-exact (dvCount is the
     // sidecar's exact cardinality), but a masked row may have BEEN the
@@ -664,9 +662,10 @@ final class GraftScanBuilder(
     // S55 filtered COUNT: under claimed filters only COUNT(*) is
     // answerable (a masked-away row may have been the min/max), each
     // file's contribution being |∩ claimed match positions| from its
-    // sidecar. Eligibility at claim time guarantees sidecar coverage
-    // and no dv; re-verify per file and abort (fall back to the masked
-    // row scan) rather than guess.
+    // sidecar. Eligibility at claim time guarantees sidecar coverage;
+    // re-verify per file and abort (fall back to the masked row scan)
+    // rather than guess. A dv'd file declines: its keep set still
+    // counts the rows the vector masks.
     val claimedCounts: Map[String, Long] =
       if (claimed.isEmpty) Map.empty
       else {
@@ -1524,7 +1523,7 @@ final class GraftScan(
   }
 
   override def supportedCustomMetrics(): Array[CustomMetric] =
-    if (!table.isPkTable) Array.empty
+    if (!table.isPkTable) Array(new DvRowsSkippedMetric, new ClaimRowsDroppedMetric)
     else Array(new MergeRowsDecodedMetric, new MergeRowsKeyFilteredMetric,
       new MergeVersionsMergedMetric)
 
@@ -1680,19 +1679,28 @@ object GraftMorReaderFactory {
   val VersionsMerged = "mergeVersionsMerged"
 }
 
-/** The streaming merge's scan metrics. Spark re-creates a metric from
-  * its class name to aggregate it, so each is a concrete no-arg class. */
-sealed abstract class MergeMetric(metricName: String, desc: String)
+/** graft's scan metrics: the streaming merge's here, the positional
+  * reader's next to [[PositionalReaderFactory]]. Spark re-creates a
+  * metric from its class name to aggregate it, so each is a concrete
+  * no-arg class. */
+abstract class ScanMetric(metricName: String, desc: String)
     extends org.apache.spark.sql.connector.metric.CustomSumMetric {
   override def name(): String = metricName
   override def description(): String = desc
 }
+object ScanMetric {
+  /** One reader's value of the metric named `n`. */
+  def task(n: String, v: Long): CustomTaskMetric = new CustomTaskMetric {
+    override def name(): String = n
+    override def value(): Long = v
+  }
+}
 final class MergeRowsDecodedMetric
-    extends MergeMetric(GraftMorReaderFactory.RowsDecoded, "merge: rows decoded")
+    extends ScanMetric(GraftMorReaderFactory.RowsDecoded, "merge: rows decoded")
 final class MergeRowsKeyFilteredMetric
-    extends MergeMetric(GraftMorReaderFactory.RowsKeyFiltered, "merge: rows dropped by key filter")
+    extends ScanMetric(GraftMorReaderFactory.RowsKeyFiltered, "merge: rows dropped by key filter")
 final class MergeVersionsMergedMetric
-    extends MergeMetric(GraftMorReaderFactory.VersionsMerged, "merge: versions merged away")
+    extends ScanMetric(GraftMorReaderFactory.VersionsMerged, "merge: versions merged away")
 
 /** Executor-side merge-on-read: consume every row version of one
   * co-located file group, keep the winner per primary key (greatest
@@ -1841,14 +1849,10 @@ final class GraftMorReaderFactory(
     var decoded = 0L
     var keyFiltered = 0L
     var merged = 0L
-    private def metric(n: String, v: Long): CustomTaskMetric = new CustomTaskMetric {
-      override def name(): String = n
-      override def value(): Long = v
-    }
     def values: Array[CustomTaskMetric] = Array(
-      metric(GraftMorReaderFactory.RowsDecoded, decoded),
-      metric(GraftMorReaderFactory.RowsKeyFiltered, keyFiltered),
-      metric(GraftMorReaderFactory.VersionsMerged, merged))
+      ScanMetric.task(GraftMorReaderFactory.RowsDecoded, decoded),
+      ScanMetric.task(GraftMorReaderFactory.RowsKeyFiltered, keyFiltered),
+      ScanMetric.task(GraftMorReaderFactory.VersionsMerged, merged))
   }
 
   /** One open sub-reader per run with its head: the next row that is

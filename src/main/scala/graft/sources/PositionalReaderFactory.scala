@@ -1,8 +1,8 @@
 package graft.sources
 
-import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{GenericInternalRow, JoinedRow}
+import org.apache.spark.sql.connector.metric.CustomTaskMetric
 import org.apache.spark.sql.connector.read.{InputPartition, PartitionReader, PartitionReaderFactory}
 import org.apache.spark.sql.execution.datasources.{FilePartition, PartitionedFile}
 import org.apache.spark.sql.sources.Filter
@@ -43,7 +43,12 @@ import org.apache.spark.util.SerializableConfiguration
   * the whole scan, so a dv'd file anywhere in the snapshot makes the scan
   * row-based (compaction, which purges vectors, restores the columnar
   * path). Rows come from `createReader` on the scan's vectorized file
-  * factories. */
+  * factories.
+  *
+  * Each reader reports what it masked as task metrics: the rows a
+  * deletion vector skipped and the rows a claim keep-mask dropped, out
+  * of the rows it decoded (a row both masks drop counts as dv-skipped;
+  * a file's rows past its last kept position are never decoded). */
 final class PositionalReaderFactory(
     filtered: PartitionReaderFactory,
     unfiltered: PartitionReaderFactory,
@@ -66,25 +71,39 @@ final class PositionalReaderFactory(
     if (metaNames.isEmpty && claimed.isEmpty && !fp.files.exists(hasDv))
       return filtered.createReader(p)
     new PartitionReader[InternalRow] {
+      private val counts = new MaskCounts
       private var i = 0
       private var cur: FileRows = _
       override def next(): Boolean = {
         while (cur != null || i < fp.files.length) {
-          if (cur == null) { cur = new FileRows(fp.index, fp.files(i)); i += 1 }
+          if (cur == null) { cur = new FileRows(fp.index, fp.files(i), counts); i += 1 }
           if (cur.next()) return true
           cur.close(); cur = null
         }
         false
       }
       override def get(): InternalRow = cur.get()
+      override def currentMetricsValues(): Array[CustomTaskMetric] = counts.values
       override def close(): Unit = if (cur != null) { cur.close(); cur = null }
     }
   }
 
+  /** The rows one reader's masks dropped, reported as task metrics. */
+  private final class MaskCounts {
+    var dvSkipped = 0L
+    var claimDropped = 0L
+    def values: Array[CustomTaskMetric] = Array(
+      ScanMetric.task(PositionalReaderFactory.DvRowsSkipped, dvSkipped),
+      ScanMetric.task(PositionalReaderFactory.ClaimRowsDropped, claimDropped))
+  }
+
   /** The rows of one whole data file, masked and extended. */
-  private final class FileRows(index: Int, pf: PartitionedFile) {
+  private final class FileRows(index: Int, pf: PartitionedFile, counts: MaskCounts) {
     private val consts = pf.otherConstantMetadataColumnValues
-    private val abs = pf.filePath.toString
+    // the decoded path: `filePath.toString` is the URI form, where a
+    // partition directory `city=New York` reads `New%20York`
+    private val path = pf.filePath.toPath
+    private val abs = path.toString
     // files live under <root>/data/ — recover the root-relative path the
     // manifest records, robust to scheme qualification of the root
     private val rel = abs.substring(abs.lastIndexOf("/data/") + 1)
@@ -96,10 +115,7 @@ final class PositionalReaderFactory(
       .map(d => DeletionVector.read(conf.value, tableRoot, d.toString)).orNull
     private val keep: Array[Long] =
       if (claimed.isEmpty) null
-      else {
-        val dataPath = new Path(abs)
-        IndexClaims.keepFor(dataPath.getFileSystem(conf.value), dataPath, claimed)
-      }
+      else IndexClaims.keepFor(path.getFileSystem(conf.value), path, claimed)
     private val rows = (if (hasDv(pf)) unfiltered else filtered)
       .createReader(FilePartition(index, Array(pf)))
 
@@ -128,7 +144,9 @@ final class PositionalReaderFactory(
         if (dv != null) while (dvI < dv.length && dv(dvI) < pos) dvI += 1
         val deleted = dv != null && dvI < dv.length && dv(dvI) == pos
         val kept = keep == null || (keep(keepI) == pos && { keepI += 1; true })
-        if (!deleted && kept) return true
+        if (deleted) counts.dvSkipped += 1
+        else if (kept) return true
+        else counts.claimDropped += 1
       }
       false
     }
@@ -176,3 +194,15 @@ final class PositionalReaderFactory(
     def close(): Unit = rows.close()
   }
 }
+
+object PositionalReaderFactory {
+  /** Names of the positional reader's task metrics, declared by
+    * [[GraftScan.supportedCustomMetrics]] on non-PK scans. */
+  val DvRowsSkipped = "dvRowsSkipped"
+  val ClaimRowsDropped = "claimRowsDropped"
+}
+
+final class DvRowsSkippedMetric extends ScanMetric(
+  PositionalReaderFactory.DvRowsSkipped, "rows skipped by deletion vectors")
+final class ClaimRowsDroppedMetric extends ScanMetric(
+  PositionalReaderFactory.ClaimRowsDropped, "rows dropped by claim keep-masks")

@@ -1,5 +1,6 @@
 package graft
 
+import graft.sources.ScanTestAccess.inputFiles
 import graft.sources.{BitmapIndex, GraftScan, GraftTable}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
@@ -391,7 +392,7 @@ class BitmapIndexSpec extends AnyFunSuite {
     // rebuilt index prunes like the original
     val t2 = GraftTable.load(spark, path)
     import org.apache.spark.sql.sources.EqualTo
-    assert(t2.read(dataFilters = Seq(EqualTo("lang", "ja"))).inputFiles.nonEmpty)
+    assert(inputFiles(t2.read(dataFilters = Seq(EqualTo("lang", "ja")))).nonEmpty)
   }
 
   test("S55m: streaming appends write bitmap sidecars (shared task writer)") {

@@ -1,5 +1,6 @@
 package graft
 
+import graft.sources.ScanTestAccess.inputFiles
 import graft.sources.{BloomIndex, GraftScan, GraftTable}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
@@ -56,7 +57,7 @@ class BloomIndexSpec extends AnyFunSuite {
     // hints — the row predicate is still the caller's to apply)
     import org.apache.spark.sql.sources.EqualTo
     val lib = t.read(dataFilters = Seq(EqualTo("u", "u-14-1")))
-    assert(lib.inputFiles.length == 1, "library path should open only the matching file")
+    assert(inputFiles(lib).length == 1, "library path should open only the matching file")
     assert(lib.filter($"u" === "u-14-1").collect().map(_.getLong(0)).toSeq == Seq(1002L))
   }
 
@@ -241,8 +242,8 @@ class BloomIndexSpec extends AnyFunSuite {
     // pruning now engages exactly as on a written-with-index table
     val fresh = GraftTable.load(spark, path) // bloom cache is per-instance
     import org.apache.spark.sql.sources.EqualTo
-    assert(fresh.read(dataFilters = Seq(EqualTo("u", "u-14-2"))).inputFiles.length == 1)
-    assert(fresh.read(dataFilters = Seq(EqualTo("u", "nope"))).inputFiles.isEmpty)
+    assert(inputFiles(fresh.read(dataFilters = Seq(EqualTo("u", "u-14-2")))).length == 1)
+    assert(inputFiles(fresh.read(dataFilters = Seq(EqualTo("u", "nope")))).isEmpty)
     // ... including the range half of subscript pruning and the variant
     // shreds, whose entry stats the rebuild computes like the writer
     val key = "spark.graft.subscriptFilters.enabled"

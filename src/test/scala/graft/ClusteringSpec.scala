@@ -1,6 +1,7 @@
 package graft
 
 import graft.sources.GraftTable
+import graft.sources.ScanTestAccess.inputFiles
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.sources.{EqualTo, GreaterThan, LessThan}
 import org.apache.spark.sql.types._
@@ -20,13 +21,13 @@ class ClusteringSpec extends AnyFunSuite {
     (0 until 4).foreach { b =>
       t.append((0L until 400L by 4L).map(i => (i + b, s"v${i + b}")).toDF("id", "v").coalesce(1))
     }
-    assert(t.read(dataFilters = Seq(EqualTo("id", 250L))).inputFiles.length == 4)
+    assert(inputFiles(t.read(dataFilters = Seq(EqualTo("id", 250L)))).length == 4)
     t.compact(sortBy = Seq("id"), partitions = 4)
     // after the sorted rewrite the same point lookup touches ONE file
-    assert(t.read(dataFilters = Seq(EqualTo("id", 250L))).inputFiles.length == 1)
+    assert(inputFiles(t.read(dataFilters = Seq(EqualTo("id", 250L)))).length == 1)
     assert(t.read().count() == 400)
     val range = t.read(dataFilters = Seq(GreaterThan("id", 100L), LessThan("id", 200L)))
-    assert(range.inputFiles.length <= 2)
+    assert(inputFiles(range).length <= 2)
     assert(range.filter(col("id") > 100L && col("id") < 200L).count() == 99)
   }
 
@@ -40,11 +41,11 @@ class ClusteringSpec extends AnyFunSuite {
         .toDF("a", "b").coalesce(1))
     }
     // before: b-filters touch every file
-    assert(t.read(dataFilters = Seq(LessThan("b", 8))).inputFiles.length == 4)
+    assert(inputFiles(t.read(dataFilters = Seq(LessThan("b", 8)))).length == 4)
     t.compact(zorderBy = Seq("a", "b"), partitions = 16)
-    val total = t.read().inputFiles.length
-    val aHit = t.read(dataFilters = Seq(GreaterThan("a", 55))).inputFiles.length
-    val bHit = t.read(dataFilters = Seq(LessThan("b", 8))).inputFiles.length
+    val total = inputFiles(t.read()).length
+    val aHit = inputFiles(t.read(dataFilters = Seq(GreaterThan("a", 55)))).length
+    val bHit = inputFiles(t.read(dataFilters = Seq(LessThan("b", 8)))).length
     // z-clustering bounds each file in BOTH dims: each single-dim filter
     // must now skip at least half the files
     assert(aHit <= total / 2, s"a-filter read $aHit of $total files")

@@ -198,6 +198,36 @@ class DeletionVectorSpec extends AnyFunSuite {
     assert(dvParts == Set("pt=p1"))
   }
 
+  test("S37q: dv deletes and a delta UPDATE on partitions whose directory names need escaping") {
+    // `New York` is a legal path character but URI-encodes (%20); `a:b`
+    // is escaped in the directory name itself (a%3Ab) and URI-encodes a
+    // second time (%253A): the `_file` the deletes and the delta commit
+    // key on must be the path the manifest records, not its URI form
+    val wh = TestSpark.tmpDir("dv-esc-wh")
+    spark.conf.set("spark.sql.catalog.gdvq", "graft.sources.GraftSparkCatalog")
+    spark.conf.set("spark.sql.catalog.gdvq.warehouse", wh)
+    spark.sql("CREATE NAMESPACE IF NOT EXISTS gdvq.ns")
+    spark.sql("""CREATE TABLE gdvq.ns.t (id BIGINT, v STRING, city STRING)
+                |PARTITIONED BY (city)
+                |TBLPROPERTIES ('deletion-vectors.enabled'='true')""".stripMargin)
+    val cities = Seq("New York", "a:b", "plain")
+    (0 until 60).map(i => (i.toLong, s"v$i", cities(i % 3))).toDF("id", "v", "city")
+      .createOrReplaceTempView("dv_esc_src")
+    spark.sql("INSERT INTO gdvq.ns.t SELECT * FROM dv_esc_src")
+    val t = GraftTable.load(spark, s"$wh/ns.db/t")
+    val before = filePaths(t)
+    t.dvDelete($"id" < 6) // library path: 0..5, two rows per city
+    spark.sql("DELETE FROM gdvq.ns.t WHERE id >= 54") // SQL path: 54..59
+    spark.sql("UPDATE gdvq.ns.t SET v = 'upd' WHERE id = 30 OR id = 31") // delta commit
+    assert(before.subsetOf(filePaths(t))) // masked in place, no rewrite
+    val expected = (6 until 54).map(i =>
+      (i.toLong, if (i == 30 || i == 31) "upd" else s"v$i", cities(i % 3)))
+    val got = t.read().select("id", "v", "city").as[(Long, String, String)].collect()
+      .sortBy(_._1).toSeq
+    assert(got == expected)
+    assert(t.system("files").agg(sum("delete_row_count")).first().getLong(0) == 14L)
+  }
+
   test("S37m: incremental/streaming backfill masks dv rows like a batch read") {
     val t = mkTable("dv-incr")
     t.dvDelete($"id" % 10 === 3)

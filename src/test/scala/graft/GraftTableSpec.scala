@@ -1,6 +1,7 @@
 package graft
 
 import graft.sources.GraftTable
+import graft.sources.ScanTestAccess.inputFiles
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import org.scalatest.funsuite.AnyFunSuite
@@ -31,7 +32,7 @@ class GraftTableSpec extends AnyFunSuite {
     val all = t.read()
     assert(all.count() == 4)
     val pruned = t.read(partitionFilter = Some(col("pt") === "2"))
-    assert(pruned.inputFiles.length < all.inputFiles.length)
+    assert(inputFiles(pruned).length < inputFiles(all).length)
     assert(pruned.collect().map(_.getInt(1)).toSeq == Seq(3))
     // pruning to nothing yields an empty, correctly-typed frame
     val none = t.read(partitionFilter = Some(col("pt") === "99"))
@@ -120,7 +121,7 @@ class GraftTableSpec extends AnyFunSuite {
       """SELECT 3 i32, CAST(4 AS BIGINT) i64, CAST(2.5 AS DOUBLE) f64,
         |CAST('12345.678' AS DECIMAL(20,3)) dec, 'str' s, DATE'2024-01-02' dt,
         |array(1,2,3) arr, map('k','v') map""".stripMargin))
-    assert(t.read().inputFiles.forall(_.endsWith(".orc")))
+    assert(inputFiles(t.read()).forall(_.endsWith(".orc")))
     val r = t.read().collect()(0)
     assert(r.getInt(0) == 3 && r.getLong(1) == 4L && r.getDouble(2) == 2.5)
     assert(r.getDecimal(3).toPlainString == "12345.678" && r.getString(4) == "str")
@@ -135,7 +136,7 @@ class GraftTableSpec extends AnyFunSuite {
     for (base <- Seq(0L, 100L, 200L))
       s.append((base until base + 10L).map(i => (i, s"v$i")).toDF("id", "v").coalesce(1))
     val skipped = s.read(dataFilters = Seq(EqualTo("id", 105L)))
-    assert(skipped.inputFiles.length == 1)
+    assert(inputFiles(skipped).length == 1)
     assert(skipped.filter(col("v") === "v105").count() == 1)
 
     // PK merge-on-read through the V2 scan works on ORC files too
@@ -163,7 +164,7 @@ class GraftTableSpec extends AnyFunSuite {
     val hit = t.read(bucket = Some(b)).filter(col("id") === 42L)
     assert(hit.count() == 1)
     // the pruned read touches only that bucket's files
-    assert(hit.inputFiles.length < t.read().inputFiles.length)
+    assert(inputFiles(hit).length < inputFiles(t.read()).length)
   }
 
   test("S10b: char/varchar/time/timestamp_ntz lattice round-trip (ref PrestoTypeUtils.java:39-100)") {
@@ -213,20 +214,20 @@ class GraftTableSpec extends AnyFunSuite {
         .coalesce(1))
     }
     val all = t.read()
-    assert(all.inputFiles.length == 4)
+    assert(inputFiles(all).length == 4)
     val skipped = t.read(dataFilters = Seq(EqualTo("id", 250L)))
-    assert(skipped.inputFiles.length == 1)
+    assert(inputFiles(skipped).length == 1)
     assert(skipped.filter(col("id") === 250L).count() == 1)
     // files [100,199], [200,299], [300,399] overlap (150, 320) ⇒ 3 of 4 kept
     val range = t.read(dataFilters = Seq(GreaterThan("id", 150L), LessThan("id", 320L)))
-    assert(range.inputFiles.length == 3)
+    assert(inputFiles(range).length == 3)
     assert(range.filter(col("id") > 150L && col("id") < 320L).count() == 169)
     // predicates that match nothing read nothing
-    assert(t.read(dataFilters = Seq(GreaterThan("id", 5000L))).inputFiles.isEmpty)
+    assert(inputFiles(t.read(dataFilters = Seq(GreaterThan("id", 5000L)))).isEmpty)
     // string stats prune on LEXICOGRAPHIC ranges: "v250" falls inside
     // ["v0","v99"] as well as ["v200","v299"] ⇒ 2 of 4 files kept
     val sv = t.read(dataFilters = Seq(EqualTo("v", "v250")))
-    assert(sv.inputFiles.length == 2)
+    assert(inputFiles(sv).length == 2)
     assert(sv.filter(col("v") === "v250").count() == 1)
   }
 
@@ -239,25 +240,25 @@ class GraftTableSpec extends AnyFunSuite {
     t.append(Seq((3L, "c"), (4L, null)).toDF("id", "v").coalesce(1))
     t.append(Seq((5L, null), (6L, null)).toDF("id", "v")
       .select(col("id"), col("v").cast("string")).coalesce(1))
-    assert(t.read().inputFiles.length == 3)
+    assert(inputFiles(t.read()).length == 3)
     // IS NULL: the provably null-free file drops
     val isNull = t.read(dataFilters = Seq(IsNull("v")))
-    assert(isNull.inputFiles.length == 2)
+    assert(inputFiles(isNull).length == 2)
     assert(isNull.filter(col("v").isNull).count() == 3)
     // IS NOT NULL: only the all-null file drops
     val notNull = t.read(dataFilters = Seq(IsNotNull("v")))
-    assert(notNull.inputFiles.length == 2)
+    assert(inputFiles(notNull).length == 2)
     assert(notNull.filter(col("v").isNotNull).count() == 3)
     // a value predicate on the all-null column drops that file too
     // ("z" is above every stats range, so only the all-null skip differs
     // from plain min/max pruning on the other two)
     val eq = t.read(dataFilters = Seq(EqualTo("v", "a")))
-    assert(eq.inputFiles.length == 1)
+    assert(inputFiles(eq).length == 1)
     assert(eq.filter(col("v") === "a").count() == 1)
     // composite with an IS NULL branch must NOT blanket-prune on the
     // all-null column (the null branch matches its rows)
     val or = t.read(dataFilters = Seq(Or(IsNull("v"), GreaterThan("id", 100L))))
-    assert(or.inputFiles.length == 2)
+    assert(inputFiles(or).length == 2)
     assert(or.filter(col("v").isNull || col("id") > 100L).count() == 3)
   }
 
@@ -280,12 +281,12 @@ class GraftTableSpec extends AnyFunSuite {
         .coalesce(1))
     }
     val eq = t.read(dataFilters = Seq(EqualTo("amt", new java.math.BigDecimal("20.25"))))
-    assert(eq.inputFiles.length == 1)
+    assert(inputFiles(eq).length == 1)
     assert(eq.filter(col("amt") === 20.25).count() == 1)
     val gt = t.read(dataFilters = Seq(GreaterThan("big", new java.math.BigDecimal("15000.0000"))))
-    assert(gt.inputFiles.length == 2) // files 2 [20000..] and 3 [30000..]
-    assert(t.read(dataFilters = Seq(GreaterThan("amt", new java.math.BigDecimal("999.99"))))
-      .inputFiles.isEmpty)
+    assert(inputFiles(gt).length == 2) // files 2 [20000..] and 3 [30000..]
+    assert(inputFiles(
+      t.read(dataFilters = Seq(GreaterThan("amt", new java.math.BigDecimal("999.99"))))).isEmpty)
     // writes must conform to the table's types: a default-precision
     // Scala BigDecimal batch (38,18) cannot silently land in (9,2)
     intercept[IllegalArgumentException] {
@@ -444,7 +445,7 @@ class GraftTableSpec extends AnyFunSuite {
     try {
       // metadata-only planning: prune the manifest and build the frame
       val df = t.read(partitionFilter = Some(col("pt") === "2"))
-      assert(df.inputFiles.length == 1)
+      assert(inputFiles(df).length == 1)
       // fence: listener events are async but FIFO — once the sentinel
       // job's start event lands, any earlier job event would be counted
       // (an RDD count is exactly ONE job; a SQL count under AQE is not)

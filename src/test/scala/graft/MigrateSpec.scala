@@ -1,6 +1,7 @@
 package graft
 
 import graft.sources.GraftTable
+import graft.sources.ScanTestAccess.inputFiles
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -51,9 +52,9 @@ class MigrateSpec extends AnyFunSuite {
     }, s"adopted names must be mig-<id>-<seq>-<original>: ${after.map(_._1)}")
     assert(parquetsUnder(src).isEmpty, "source directory should be drained")
     // footer stats adopted: min/max data skipping prunes to one range file
-    assert(t.read().inputFiles.length == 3)
-    assert(t.read(dataFilters =
-      Seq(org.apache.spark.sql.sources.EqualTo("k", 5L))).inputFiles.length == 1)
+    assert(inputFiles(t.read()).length == 3)
+    assert(inputFiles(t.read(dataFilters =
+      Seq(org.apache.spark.sql.sources.EqualTo("k", 5L)))).length == 1)
     // row counts adopted: $files reports them (manifest-exact COUNT inputs)
     val counts = t.system("files").select("record_count").collect().map(_.getLong(0))
     assert(counts.sum == 90 && counts.forall(_ > 0))
@@ -67,9 +68,9 @@ class MigrateSpec extends AnyFunSuite {
 
     assert(t.partitionKeys == Seq("m"))
     assert(t.read().count() == 90)
-    val total = t.read().inputFiles.length
+    val total = inputFiles(t.read()).length
     val pruned = t.read(partitionFilter = Some(col("m") === 1))
-    assert(pruned.inputFiles.length * 3 <= total + 2,
+    assert(inputFiles(pruned).length * 3 <= total + 2,
       s"partition filter should prune to ~1/3 of $total files")
     assert(pruned.count() == 30)
     assert(pruned.agg(sum("k")).head.getLong(0) ==

@@ -1,10 +1,13 @@
 package graft
 
-import graft.sources.{GraftScan, GraftTable}
+import graft.sources.{GraftScan, GraftTable, PositionalReaderFactory}
+import graft.sources.ScanTestAccess.plainRows
 import org.apache.spark.sql.{DataFrame, Row}
-import org.apache.spark.sql.execution.FilterExec
+import org.apache.spark.sql.execution.{FilterExec, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, AdaptiveSparkPlanHelper, QueryStageExec}
 import org.apache.spark.sql.execution.datasources.FilePartition
 import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
+import org.apache.spark.sql.execution.joins.BaseJoinExec
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.sources
 import org.apache.spark.sql.types._
@@ -14,11 +17,17 @@ import org.scalatest.funsuite.AnyFunSuite
   * vectors, claimed index filters, row lineage and the per-file metadata
   * columns — in combinations the feature specs do not cover. Every case
   * compares against a reference that does not take the positional path:
-  * the library reads (masked through parquet's `_metadata.row_index`),
-  * plain parquet, or the same query with claims off. */
+  * rows the case generated, plain parquet read with `_metadata.row_index`
+  * ([[graft.sources.ScanTestAccess.plainRows]]), or the same query with
+  * claims off. Also pins that every library read of a table plans the
+  * V2 scan alone, and the masked-row metrics the positional reader
+  * reports. */
 class PositionalReadSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
   import spark.implicits._
+
+  /** Plan walks that descend into adaptive query stages. */
+  private object Plans extends AdaptiveSparkPlanHelper
 
   private def scanOf(df: DataFrame): GraftScan =
     df.queryExecution.executedPlan.collectFirst {
@@ -30,6 +39,26 @@ class PositionalReadSpec extends AnyFunSuite {
 
   private def sorted(df: DataFrame): Seq[Row] = df.collect().toSeq.sortBy(_.toString)
 
+  /** `df` plans exactly one leaf — a BatchScanExec over a GraftScan —
+    * and no join. */
+  private def assertOneGraftScan(df: DataFrame): Unit = {
+    val plan = df.queryExecution.executedPlan
+    val leaves = Plans.collect(plan) {
+      case p: SparkPlan if p.children.isEmpty &&
+        !p.isInstanceOf[AdaptiveSparkPlanExec] && !p.isInstanceOf[QueryStageExec] => p
+    }
+    assert(leaves.size == 1 && (leaves.head match {
+      case b: BatchScanExec => b.scan.isInstanceOf[GraftScan]
+      case _ => false
+    }), s"not one GraftScan leaf:\n$plan")
+    assert(Plans.collect(plan) { case j: BaseJoinExec => j }.isEmpty, s"join planned:\n$plan")
+  }
+
+  /** The value of scan metric `name` after `df` ran. */
+  private def scanMetric(df: DataFrame, name: String): Long =
+    Plans.collect(df.queryExecution.executedPlan) { case b: BatchScanExec => b.metrics(name).value }
+      .sum
+
   /** (id → absolute file path) of every parquet data file under the
     * table, read as plain parquet. */
   private def filePathById(root: String): Map[Long, String] =
@@ -38,7 +67,7 @@ class PositionalReadSpec extends AnyFunSuite {
       .select(col("id"), col("_metadata.file_path")).collect()
       .map(r => r.getLong(0) -> r.getString(1)).toMap
 
-  test("_file on a dv table matches the row_index-masked library read") {
+  test("_file on a dv table matches the plain-parquet rows") {
     val path = TestSpark.tmpDir("posdvfile")
     val df = (0 until 300).map(i => (i.toLong, s"r$i", i % 7)).toDF("id", "name", "grp")
     val t = GraftTable.create(spark, path, df.schema,
@@ -48,8 +77,7 @@ class PositionalReadSpec extends AnyFunSuite {
     val pred = $"id" >= 40L
     val got = spark.read.format("graft").load(path).filter(pred)
       .select($"id", $"name", $"grp", $"_file")
-    val ref = t.read(dataFilters = Seq(sources.GreaterThanOrEqual("id", 40L))).filter(pred)
-    assert(sorted(got.drop("_file")) == sorted(ref))
+    assert(sorted(got.drop("_file")) == sorted(plainRows(t).filter(pred)))
     val files = filePathById(path)
     got.collect().foreach { r =>
       assert(files(r.getLong(0)).endsWith("/" + r.getString(3)),
@@ -79,10 +107,37 @@ class PositionalReadSpec extends AnyFunSuite {
       assert(!claimEngaged(plain))
       assert(sorted(claimed) == sorted(plain), option)
       assert(claimed.count() > 0 && claimed.select("_file").distinct().count() == 3)
+      assert(sorted(claimed.drop("_file")) == sorted(plainRows(t).filter(pred)), option)
     }
   }
 
-  test("lineage columns on a row-tracking dv table with a claimed filter match readWithLineage") {
+  test("a claimed BSI range on a dv table matches claims off and the plain-parquet rows") {
+    val path = TestSpark.tmpDir("posbsidv")
+    val t = GraftTable.create(spark, path,
+      StructType(Seq(StructField("id", LongType), StructField("qty", LongType))),
+      options = Map("file-index.bsi.columns" -> "qty", "deletion-vectors.enabled" -> "true"))
+    for (c <- 0 until 3)
+      t.append((0 until 200).map(i => (c * 1000L + i, (i * 37L + c) % 101)).toDF("id", "qty")
+        .coalesce(1))
+    t.dvDelete($"id" % 5 === 0 && $"id" < 2000L) // vectors on two of the three files
+    assert(t.system("files").filter($"dv_path".isNotNull).count() == 2)
+    val pred = $"qty".between(20L, 60L)
+    def q(claims: Boolean) = spark.read.format("graft").option("bsi.claim-filters", claims.toString)
+      .load(path).filter(pred).select($"id", $"qty")
+    val claimed = q(claims = true)
+    assert(claimEngaged(claimed), s"the range did not claim:\n${claimed.queryExecution}")
+    assert(!claimEngaged(q(claims = false)))
+    val want = for {
+      c <- 0 until 3; i <- 0 until 200
+      id = c * 1000L + i; qty = (i * 37L + c) % 101
+      if qty >= 20 && qty <= 60 && !(id % 5 == 0 && id < 2000)
+    } yield Row(id, qty)
+    assert(sorted(claimed) == want.sortBy(_.toString))
+    assert(sorted(claimed) == sorted(q(claims = false)))
+    assert(sorted(claimed) == sorted(plainRows(t).filter(pred)))
+  }
+
+  test("lineage columns on a row-tracking dv table with a claimed filter match plain parquet") {
     val path = TestSpark.tmpDir("poslineage")
     val t = GraftTable.create(spark, path,
       StructType(Seq(StructField("id", LongType), StructField("lang", StringType))),
@@ -92,20 +147,20 @@ class PositionalReadSpec extends AnyFunSuite {
     for (c <- 0 until 2)
       t.append((0 until 150).map(i => (c * 1000L + i, langs(i % 3))).toDF("id", "lang")
         .coalesce(1))
-    def check(expectClaim: Boolean): Unit = {
+    def check(): Unit = {
       val got = spark.read.format("graft").option("bitmap.claim-filters", "true").load(path)
         .filter($"lang" === "de")
         .select($"id", $"lang", $"_row_id", $"_sequence_number")
-      // claims stand down once a file carries a deletion vector
-      assert(claimEngaged(got) == expectClaim, got.queryExecution.executedPlan.toString)
-      val ref = t.readWithLineage().filter($"lang" === "de")
+      // a deletion vector composes with the claim, file by file
+      assert(claimEngaged(got), got.queryExecution.executedPlan.toString)
+      val ref = plainRows(t, lineage = true).filter($"lang" === "de")
         .select($"id", $"lang", $"_row_id", $"_sequence_number")
       assert(sorted(got) == sorted(ref))
       assert(got.count() > 0)
     }
-    check(expectClaim = true)
+    check()
     t.dvDelete($"id" % 4 === 0)
-    check(expectClaim = false)
+    check()
   }
 
   test("a dv scan with a pushed filter reads a partition holding dv and plain files") {
@@ -154,7 +209,7 @@ class PositionalReadSpec extends AnyFunSuite {
     val cols = Seq("k", "n", "x", "dt", "p", "_row_id", "_sequence_number")
     def check(expect: Seq[Row]): Unit = {
       val got = spark.sql(s"SELECT ${cols.mkString(", ")} FROM gpos.db.nulls")
-      assert(sorted(got) == sorted(t.readWithLineage().select(cols.map(col): _*)))
+      assert(sorted(got) == sorted(plainRows(t, lineage = true).select(cols.map(col): _*)))
       assert(sorted(got.select("k", "n", "x", "dt", "p")) == expect.sortBy(_.toString))
     }
     check((0L until 60L).map(row))
@@ -165,6 +220,67 @@ class PositionalReadSpec extends AnyFunSuite {
       val r = row(k)
       if (k % 2 == 0) Row((k + 1000) +: r.toSeq.tail: _*) else r
     })
+  }
+
+  test("library reads, incremental reads and lineage reads of dv tables plan the V2 scan alone") {
+    val path = TestSpark.tmpDir("posplan")
+    val df = (0 until 300).map(i => (i.toLong, s"r$i")).toDF("id", "name")
+    val t = GraftTable.create(spark, path, df.schema,
+      options = Map("row-tracking.enabled" -> "true", "deletion-vectors.enabled" -> "true"))
+    for (c <- 0 until 3) t.append(df.filter($"id" % 3 === c).coalesce(1))
+    t.dvDelete($"id" % 7 === 0)
+    val live = (0L until 300L).filter(_ % 7 != 0)
+    val read = t.read(dataFilters = Seq(sources.GreaterThanOrEqual("id", 40L)))
+    assertOneGraftScan(read)
+    assert(read.filter($"id" >= 40L).select("id").as[Long].collect().sorted.toSeq ==
+      live.filter(_ >= 40L))
+    val incr = t.readIncrement(0L, t.latestSnapshotId.get)
+    assertOneGraftScan(incr)
+    assert(incr.select("id").as[Long].collect().sorted.toSeq == live)
+    val lineage = t.readWithLineage()
+    assertOneGraftScan(lineage)
+    assert(sorted(lineage) == sorted(plainRows(t, lineage = true)))
+    assert(lineage.count() == live.size)
+  }
+
+  test("a pinned library read answers COUNT over its own file set") {
+    val path = TestSpark.tmpDir("pospincount")
+    val t = GraftTable.create(spark, path,
+      StructType(Seq(StructField("id", LongType), StructField("v", StringType))),
+      options = Map("bucket" -> "2", "bucket-key" -> "id", "deletion-vectors.enabled" -> "true"))
+    t.append((0L until 200L).map(i => (i, s"v$i")).toDF("id", "v"))
+    t.dvDelete($"id" % 10 === 0)
+    val files = t.system("files").select("bucket", "record_count", "delete_row_count")
+      .as[(Int, Long, Long)].collect()
+    assert(files.map(_._1).distinct.length == 2)
+    for (b <- 0 until 2) {
+      val want = files.filter(_._1 == b).map(f => f._2 - f._3).sum
+      assert(t.read(bucket = Some(b)).count() == want, s"bucket $b")
+      assert(t.read(bucket = Some(b)).collect().length == want, s"bucket $b rows")
+    }
+  }
+
+  test("the positional reader reports the rows deletion vectors and claims masked") {
+    val path = TestSpark.tmpDir("posmetrics")
+    val t = GraftTable.create(spark, path,
+      StructType(Seq(StructField("id", LongType), StructField("lang", StringType))),
+      options = Map("file-index.bitmap.columns" -> "lang", "deletion-vectors.enabled" -> "true"))
+    val langs = Seq("en", "de", "fr", "ja")
+    // the last row of every file is `ja`, so a `ja` claim decodes whole files
+    for (c <- 0 until 2)
+      t.append((0 until 200).map(i => (c * 1000L + i, langs(i % 4))).toDF("id", "lang")
+        .coalesce(1))
+    val claimed = spark.read.format("graft").option("bitmap.claim-filters", "true").load(path)
+      .filter($"lang" === "ja").select("id")
+    assert(claimEngaged(claimed))
+    assert(claimed.collect().length == 100)
+    assert(scanMetric(claimed, PositionalReaderFactory.ClaimRowsDropped) == 300)
+    assert(scanMetric(claimed, PositionalReaderFactory.DvRowsSkipped) == 0)
+    t.dvDelete($"id" % 10 === 3) // 20 rows of each file
+    val masked = t.read().select("id")
+    assert(masked.collect().length == 360)
+    assert(scanMetric(masked, PositionalReaderFactory.DvRowsSkipped) == 40)
+    assert(scanMetric(masked, PositionalReaderFactory.ClaimRowsDropped) == 0)
   }
 
   private def checkMixed(path: String, dvFiles: Set[String]): Unit = {

@@ -1,6 +1,7 @@
 package graft
 
 import graft.sources.GraftTable
+import graft.sources.ScanTestAccess.inputFiles
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import org.scalatest.funsuite.AnyFunSuite
@@ -395,7 +396,7 @@ class ReferenceParitySpec extends AnyFunSuite {
     assert(p1.orderBy("i2").collect().map(_.getInt(2)).toSeq == Seq(1, 2))
     // ... and i2 = 1 → exactly one file scanned, one row
     val p2 = t.read(partitionFilter = Some(upper(col("i1")) === "20241103" && col("i2") === 1))
-    assert(p2.inputFiles.length == 1 && p2.count() == 1)
+    assert(inputFiles(p2).length == 1 && p2.count() == 1)
     // no matching partition → empty scan (partitions=Optional[[]])
     val p3 = t.read(partitionFilter = Some(upper(col("i1")) === "20241105"))
     assert(p3.count() == 0)

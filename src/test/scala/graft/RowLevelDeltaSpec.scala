@@ -1,6 +1,7 @@
 package graft
 
 import graft.sources.GraftTable
+import graft.sources.ScanTestAccess.plainRows
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import org.scalatest.funsuite.AnyFunSuite
@@ -11,7 +12,9 @@ import org.scalatest.funsuite.AnyFunSuite
   * source files, updates append id-materialized rows with a bumped
   * `_sequence_number`, inserts take fresh commit-assigned ids. Also the
   * lineage METADATA COLUMNS (`_row_id`, `_sequence_number`, `_pos`,
-  * with S44's `_file`) — the SQL twin of readWithLineage. */
+  * with S44's `_file`) — the SQL twin of readWithLineage, checked
+  * against lineage derived from plain parquet where no generated
+  * expectation pins it. */
 class RowLevelDeltaSpec extends AnyFunSuite {
   lazy val spark = {
     val s = TestSpark.spark
@@ -43,16 +46,22 @@ class RowLevelDeltaSpec extends AnyFunSuite {
       .map(r => (r.getLong(0), r.getString(1), r.getLong(2), r.getLong(3)))
       .sortBy(_._3).toSeq
 
-  test("S65a: lineage metadata columns match readWithLineage through dv + compact") {
+  /** (k, v, _row_id, _sequence_number) of `t` derived from plain parquet
+    * (`_metadata.row_index` and the stored lineage columns), by id. */
+  private def lineagePlain(t: GraftTable, snap: Option[Long] = None)
+      : Seq[(Long, String, Long, Long)] =
+    plainRows(t, snap, lineage = true).collect()
+      .map(r => (r.getLong(0), r.getString(1), r.getLong(2), r.getLong(3)))
+      .sortBy(_._3).toSeq
+
+  test("S65a: lineage metadata columns match plain parquet through dv + compact") {
     val (name, t) = mkSql(extra = ", 'deletion-vectors.enabled'='true'")
     t.dvDelete(col("k") === 1L) // positional vintage + a dv mask
     t.compact() // materialized vintage (stored __row_id/__row_seq)
     t.append(Seq((8L, "v8")).toDF("k", "v").coalesce(1)) // positional again
     val viaSql = lineageSql(name)
-    val viaLib = t.readWithLineage().collect()
-      .map(r => (r.getLong(0), r.getString(1), r.getLong(2), r.getLong(3)))
-      .sortBy(_._3).toSeq
-    assert(viaSql == viaLib, s"SQL $viaSql != library $viaLib")
+    val plain = lineagePlain(t)
+    assert(viaSql == plain, s"SQL $viaSql != plain parquet $plain")
     assert(viaSql.map(_._3) == Seq(0L, 2L, 3L, 4L, 5L, 6L, 7L, 8L))
     // _pos and _file: physical positions within the named file
     val posFile = sql(s"SELECT _file, _pos, _row_id FROM $name ORDER BY _row_id")
@@ -161,6 +170,7 @@ class RowLevelDeltaSpec extends AnyFunSuite {
     sql(s"UPDATE $name SET v = 'u' WHERE k = 1")
     val preTravel = t.readWithLineage(Some(2L)).collect()
       .map(r => (r.getLong(0), r.getString(1), r.getLong(2), r.getLong(3))).sortBy(_._3).toSeq
+    assert(pre == lineagePlain(t, Some(2L)))
     assert(preTravel == pre, "time travel must replay the pre-op lineage")
     t.rollbackTo(2L)
     assert(lineageSql(name) == pre)

@@ -1,6 +1,8 @@
 package graft
 
 import graft.sources.GraftTable
+import graft.sources.ScanTestAccess.plainRows
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import org.scalatest.funsuite.AnyFunSuite
@@ -24,10 +26,21 @@ class RowTrackingSpec extends AnyFunSuite {
     GraftTable.create(spark, TestSpark.tmpDir(name), schema,
       options = Map("row-tracking.enabled" -> "true") ++ extra)
 
+  /** `readWithLineage` rows, checked against the lineage derived from
+    * plain parquet (`_metadata.row_index`, stored lineage columns) — the
+    * before/after comparisons below would otherwise hold the read up
+    * against itself. */
+  private def lineageRows(t: GraftTable, snap: Option[Long] = None): Seq[Row] = {
+    def rows(df: DataFrame) = df.collect().toSeq.sortBy(_.toString)
+    val got = rows(t.readWithLineage(snap))
+    assert(got == rows(plainRows(t, snap, lineage = true)), "lineage read != plain parquet")
+    got
+  }
+
   private def lineage(t: GraftTable, snap: Option[Long] = None): Seq[(Long, String, Long, Long)] =
-    t.readWithLineage(snap).collect()
+    lineageRows(t, snap)
       .map(r => (r.getLong(0), r.getString(1), r.getLong(2), r.getLong(3)))
-      .sortBy(_._3).toSeq
+      .sortBy(_._3)
 
   test("S64a: appends assign dense, unique, stable ids; nextRowId advances") {
     val t = mk("rt-basic")
@@ -120,11 +133,11 @@ class RowTrackingSpec extends AnyFunSuite {
     for (c <- 0 until 3)
       t.append(Seq((c * 10L, s"a$c", "a"), (c * 10L + 1, s"b$c", "b"))
         .toDF("id", "v", "pt").coalesce(1))
-    val before = t.readWithLineage().collect()
-      .map(r => (r.getLong(0), r.getLong(3), r.getLong(4))).sortBy(_._1).toSeq
+    val before = lineageRows(t)
+      .map(r => (r.getLong(0), r.getLong(3), r.getLong(4))).sortBy(_._1)
     t.compactPartitions(col("pt") === "a")
-    val after = t.readWithLineage().collect()
-      .map(r => (r.getLong(0), r.getLong(3), r.getLong(4))).sortBy(_._1).toSeq
+    val after = lineageRows(t)
+      .map(r => (r.getLong(0), r.getLong(3), r.getLong(4))).sortBy(_._1)
     assert(after == before, s"targeted fold renumbered rows: $after vs $before")
     // partition a folded (one compacted file), b untouched (3 files)
     val files = graft.sources.GraftTable.load(spark, t.root).system("files").collect()
@@ -194,8 +207,7 @@ class RowTrackingSpec extends AnyFunSuite {
     var observed = Map.empty[Long, Long] // data key -> row id (keys are never re-added)
     var retired = Set.empty[Long]        // ids whose rows were deleted
     def observe(): Unit = {
-      val cur = t.readWithLineage().collect()
-        .map(r => (r.getLong(0), r.getLong(2))).toMap
+      val cur = lineage(t).map(r => (r._1, r._3)).toMap
       cur.foreach { case (k, id) =>
         observed.get(k).foreach(p => assert(p == id, s"row $k renumbered $p -> $id")) }
       assert(cur.values.toSeq.distinct.size == cur.size, "duplicate live ids")

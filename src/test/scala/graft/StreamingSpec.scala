@@ -86,6 +86,29 @@ class StreamingSpec extends AnyFunSuite {
     } finally q.stop()
   }
 
+  test("T4f: a running stream keeps its declared columns while another handle evolves the schema") {
+    val path = TestSpark.tmpDir("streamevolve")
+    val t = GraftTable.create(spark, path,
+      StructType(Seq(StructField("k", IntegerType), StructField("v", StringType))))
+    t.append(Seq((1, "a")).toDF("k", "v"))
+    val q = spark.readStream.format("graft").load(path)
+      .writeStream.outputMode("append").format("memory").queryName("graft_evolve").start()
+    try {
+      q.processAllAvailable()
+      val other = GraftTable.load(spark, path)
+      other.addColumn("w", StringType)
+      other.append(Seq((2, "b", "x")).toDF("k", "v", "w"))
+      q.processAllAvailable()
+      GraftTable.load(spark, path).dropColumn("v")
+      GraftTable.load(spark, path).append(Seq((3, "y")).toDF("k", "w"))
+      q.processAllAvailable()
+      val sink = spark.table("graft_evolve")
+      assert(sink.columns.toSeq == Seq("k", "v"))
+      val got = sink.orderBy("k").collect().map(r => (r.getInt(0), r.getString(1))).toSeq
+      assert(got == Seq((1, "a"), (2, "b"), (3, null)), s"got $got")
+    } finally q.stop()
+  }
+
   test("T4e: a running stream sees MERGE's NOT-MATCHED inserts, not its retractions") {
     // S65q's streaming half: the source rides readIncrement, so the
     // append-visible component of a delta MERGE commit (snapshot
