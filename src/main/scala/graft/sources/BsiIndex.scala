@@ -207,7 +207,7 @@ object BsiIndex {
     * the S55 contract (BitmapIndex.keepPositions), answered by slices. */
   def keepPositions(sc: Sidecar, claimed: Seq[org.apache.spark.sql.sources.Filter])
       : Option[Array[Long]] = {
-    // See IndexClaims.tryKeepFor: an empty conjunction must never silently
+    // See FileIndex.tryKeepFor: an empty conjunction must never silently
     // render as "keep no rows".
     require(claimed.nonEmpty, "empty claimed-filter conjunction")
     claimed.foldLeft(Some(null: Array[Long]): Option[Array[Long]]) { (acc, fl) => // null seed = "all rows"
@@ -358,43 +358,4 @@ object BsiIndex {
       Some(BsiCol(mn, width, nonNull, slices))
     }
   }
-}
-
-/** Per-file keep-position resolution for CLAIMED filters, answered per
-  * filter by the data file's bitmap sidecar (S55) first, then its BSI
-  * sidecar (S66) — the one contract shared by the masked read, the
-  * lineage reader's mask and the filtered COUNT pushdown. Plan-time
-  * eligibility guarantees one of the two answers every claimed filter
-  * on every planned file. */
-object IndexClaims {
-
-  /** None when some filter is answered by NEITHER sidecar (callers fall
-    * back or fail loudly per their contract). */
-  def tryKeepFor(fs: FileSystem, dataPath: Path,
-      claimed: Seq[org.apache.spark.sql.sources.Filter]): Option[Array[Long]] = {
-    // An empty conjunction means "no constraint" = ALL rows; the null-seeded
-    // fold below would render it as Array.empty = "NO rows". Fail loudly
-    // instead of silently dropping every row for a caller that forgot to
-    // guard (all current call sites pass nonEmpty by construction).
-    require(claimed.nonEmpty, s"empty claimed-filter conjunction for $dataPath")
-    lazy val bm = BitmapIndex.read(fs, new Path(dataPath.toString + BitmapIndex.Suffix))
-    lazy val bsi = BsiIndex.read(fs, new Path(dataPath.toString + BsiIndex.Suffix))
-    // Some(null) seed = "all rows" (Option(null) would silently be None)
-    claimed.foldLeft(Some(null: Array[Long]): Option[Array[Long]]) { (acc, fl) =>
-      acc.flatMap { prev =>
-        val matched = bm.flatMap(sc => BitmapIndex.keepPositions(sc, Seq(fl)))
-          .orElse(bsi.flatMap(sc => BsiIndex.keepPositions(sc, Seq(fl))))
-        matched.map(p => if (prev == null) p else BitmapIndex.intersect(prev, p))
-      }
-    }.map(p => if (p == null) Array.empty[Long] else p)
-  }
-
-  /** Throwing form for the executor mask paths: a missing claim there is
-    * an invariant breach (e.g. a sidecar reclaimed mid-query) and must
-    * fail loudly rather than return unfiltered rows. */
-  def keepFor(fs: FileSystem, dataPath: Path,
-      claimed: Seq[org.apache.spark.sql.sources.Filter]): Array[Long] =
-    tryKeepFor(fs, dataPath, claimed).getOrElse(
-      throw new IllegalStateException(
-        s"no index sidecar answers the claimed filters for $dataPath"))
 }

@@ -2410,23 +2410,6 @@ class GraftTable private (
     options.get("file-index.bitmap.columns")
       .map(_.split(",").toSeq.map(_.trim).filter(_.nonEmpty)).getOrElse(Seq.empty)
 
-  // KEYS-ONLY cache (rowCount + per-column value-key sets): file-skip
-  // pruning and claim eligibility touch every file of a snapshot
-  // driver-side, so the memoized form must not pin position arrays —
-  // that would grow O(corpus rows) driver memory for the table's
-  // lifetime. Positions are decoded on demand and never cached.
-  private val bitmapKeysCache =
-    scala.collection.concurrent.TrieMap[String, Option[(Long, Map[String, Set[String]])]]()
-  private[sources] def bitmapKeysOf(f: FileMeta): Option[(Long, Map[String, Set[String]])] =
-    bitmapKeysCache.getOrElseUpdate(f.path,
-      BitmapIndex.readKeys(fs, new Path(root, f.path + BitmapIndex.Suffix)))
-
-  /** Full sidecar (positions included) — UNCACHED: used by the filtered
-    * COUNT pushdown, which computes per-file cardinalities and discards
-    * the arrays. */
-  private[sources] def bitmapSidecarOf(f: FileMeta): Option[BitmapIndex.Sidecar] =
-    BitmapIndex.read(fs, new Path(root, f.path + BitmapIndex.Suffix))
-
   /** Columns with a per-file bit-slice sidecar index (S66,
     * `file-index.bsi.columns` — Paimon's BSI file index for RANGE
     * predicates on high-cardinality integral columns). Exact both ways,
@@ -2444,8 +2427,8 @@ class GraftTable private (
     * `file-index.variant.columns = props` +
     * `file-index.variant.<col>.paths = $.k,$.tag` (root-level `$.name`
     * paths). The shred rides the S34 subscript machinery end to end
-    * (SubscriptFilterRule carries the claims; subscriptMayMatch answers
-    * them), with one extra soundness rule enforced at write time: a
+    * (SubscriptFilterRule carries the claims; FileIndex's bloom kind
+    * answers them), with one extra soundness rule enforced at write time: a
     * non-null extracted value that does not parse as a plain integral
     * token widens that path's per-file bounds to the full Long range
     * (claims nothing), so a stats prune can never disagree with
@@ -2473,124 +2456,26 @@ class GraftTable private (
       c -> paths
     }
 
-  // header-only cache (rowCount + present column names): claim
-  // eligibility sweeps every file of a snapshot driver-side; the slice
-  // bitmaps are decoded on demand and never cached (O(rows) driver
-  // memory otherwise — the bitmapKeysCache discipline)
-  private val bsiColsCache =
-    scala.collection.concurrent.TrieMap[String, Option[(Long, Set[String])]]()
-  private[sources] def bsiColsOf(f: FileMeta): Option[(Long, Set[String])] =
-    bsiColsCache.getOrElseUpdate(f.path,
-      BsiIndex.readCols(fs, new Path(root, f.path + BsiIndex.Suffix)))
-
-  /** Claimed-filter keep positions of one file, answered by its bitmap
-    * and/or BSI sidecars (IndexClaims) — UNCACHED, used by the filtered
-    * COUNT pushdown which keeps only the lengths. */
-  private[sources] def claimedKeepOf(
-      f: FileMeta, claimed: Seq[org.apache.spark.sql.sources.Filter])
-      : Option[Array[Long]] =
-    IndexClaims.tryKeepFor(fs, new Path(root, f.path), claimed)
-
-  /** BSI pruning of a filter CONJUNCTION against one file — exact: an
-    * empty intersection of the answerable filters' position sets proves
-    * no row satisfies them together. Conjunction-level (not per-filter)
-    * because a range's two halves each match some row while their
-    * intersection is empty — the min/max-straddling gap case file stats
-    * cannot skip. Missing sidecars/columns (legacy files, declined
-    * range) and unrenderable literals contribute no constraint;
-    * residual-safe either way (the Filters stay in the plan). The
-    * VERDICT is memoized per (file, conjunction) — files are immutable,
-    * so a cached answer never goes stale — because the full O(rows)
-    * sidecar decode would otherwise repeat per query on large
-    * snapshots; the memo is booleans only (never the decoded bitmaps)
-    * and resets past a size cap to bound driver memory. */
-  private val bsiPruneMemo =
-    scala.collection.concurrent.TrieMap[(String, String), Boolean]()
-  private val BsiPruneMemoCap = 131072
-  private def bsiMayMatchAll(
-      fls: Seq[org.apache.spark.sql.sources.Filter], f: FileMeta): Boolean = {
-    val cols = bsiIndexCols.toSet
-    val relevant = fls.filter { fl =>
-      fl match {
-        case org.apache.spark.sql.sources.IsNotNull(c) => cols(c)
-        case _ =>
-          BitmapIndex.filterValues(fl).map(_._1).orElse(
-            BitmapIndex.filterRange(fl).map(_._1)).exists(cols)
-      }
-    }
-    if (relevant.isEmpty) return true
-    val memoKey = (f.path, relevant.map(_.toString).sorted.mkString("&"))
-    bsiPruneMemo.get(memoKey) match {
-      case Some(v) => v
-      case None =>
-        if (bsiPruneMemo.size >= BsiPruneMemoCap) bsiPruneMemo.clear()
-        val v = bsiMayMatchAllUncached(relevant, f)
-        bsiPruneMemo.putIfAbsent(memoKey, v)
-        v
+  // the read side of the file indexes, rebuilt when the options or the
+  // schema change; its caches key immutable data files
+  @volatile private var fileIndexAt: (SchemaMeta, FileIndex) = _
+  private[sources] def fileIndex: FileIndex = {
+    val meta = schemaMeta
+    val cur = fileIndexAt
+    if (cur != null && (cur._1 eq meta)) cur._2
+    else {
+      val fresh = new FileIndex(fs, root, schema, FileIndexBuilder.spec(this, _ => true))
+      fileIndexAt = (meta, fresh)
+      fresh
     }
   }
-  private def bsiMayMatchAllUncached(
-      relevant: Seq[org.apache.spark.sql.sources.Filter], f: FileMeta): Boolean = {
-    BsiIndex.read(fs, new Path(root, f.path + BsiIndex.Suffix)) match {
-      case None => true
-      case Some(sc) =>
-        var acc: Array[Long] = null
-        relevant.foreach { fl =>
-          // per-filter answer; unanswerable filters add no constraint
-          BsiIndex.keepPositions(sc, Seq(fl)).foreach { p =>
-            acc = if (acc == null) p else BitmapIndex.intersect(acc, p)
-            if (acc.isEmpty) return false
-          }
-        }
-        true
-    }
-  }
-
-  /** Bitmap pruning of one filter against one file — exact: a key
-    * absent from a PRESENT column map proves no row matches. Missing
-    * sidecars/columns (legacy files, overflowed cardinality) and
-    * unrenderable literals keep the file; non-equality shapes and
-    * all-NULL IN lists make no claim. Residual-safe either way (the
-    * Filter stays in the plan). */
-  private def bitmapMayMatch(fl: org.apache.spark.sql.sources.Filter, f: FileMeta): Boolean =
-    BitmapIndex.filterValues(fl) match {
-      case Some((c, values)) if values.nonEmpty && bitmapIndexCols.contains(c) =>
-        bitmapKeysOf(f).flatMap { case (_, cols) =>
-          val rendered = values.map(BitmapIndex.render)
-          if (rendered.exists(_.isEmpty)) None // unrenderable literal: no claim
-          else cols.get(c).map(keys => rendered.flatten.exists(keys.contains))
-        }.getOrElse(true)
-      case _ => true
-    }
-
-  // sidecar (blooms + entry stats) memoized per data-file path (files
-  // are immutable)
-  private val bloomCache =
-    scala.collection.concurrent.TrieMap[String, Option[BloomIndex.Sidecar]]()
-  private def sidecarOf(f: FileMeta): Option[BloomIndex.Sidecar] =
-    bloomCache.getOrElseUpdate(f.path,
-      BloomIndex.read(fs, new Path(root, f.path + BloomIndex.Suffix)))
-
-  /** Bloom pruning of one filter against one file: false ONLY when the
-    * sidecar proves no stored value hashes to the literal (blooms have
-    * no false negatives). Missing sidecars, entry-hashed blooms (a
-    * whole-value probe would false-negative), non-equality shapes and
-    * all-NULL IN lists keep the file. */
-  private def bloomMayMatch(fl: org.apache.spark.sql.sources.Filter, f: FileMeta): Boolean =
-    BitmapIndex.filterValues(fl) match {
-      case Some((c, values)) if values.nonEmpty && bloomIndexCols.contains(c) =>
-        sidecarOf(f) match {
-          case Some(sc) if !sc.entryCols.contains(c) => sc.blooms.get(c).forall(b =>
-            values.exists(v => BloomIndex.hashLiteral(v, schema(c).dataType).forall(b.mightContain)))
-          case _ => true
-        }
-      case _ => true
-    }
 
   /** Manifest planning shared by the library read path and the V2 scan:
-    * partition prune → bucket prune → min/max data skipping → bloom
-    * file-index skipping (PK tables skip only on `skipSafeCols`; the
-    * partition prune applies only when `partitionPruneSafe`). */
+    * live files → partition prune (only when `partitionPruneSafe`) →
+    * bucket → one fold over the table's file indexes ([[FileIndex]]).
+    * PK tables skip only on `skipSafeCols`, and prune no file on map
+    * subscripts: a map column's entries change across row versions, so
+    * pruning on them could resurrect an older version through the merge. */
   private[sources] def planFiles(
       snapshotId: Option[Long] = None,
       partitionFilter: Option[Column] = None,
@@ -2603,73 +2488,8 @@ class GraftTable private (
     val skipSafe =
       if (!isPkTable) dataFilters
       else dataFilters.filter(_.references.forall(skipSafeCols))
-    if (skipSafe.nonEmpty)
-      files = files.filter(f =>
-        skipSafe.forall(fl => FileStats.mayMatch(fl, f.statsOrEmpty, schema)))
-    if (skipSafe.nonEmpty && bloomIndexCols.nonEmpty)
-      files = files.filter(f => skipSafe.forall(fl => bloomMayMatch(fl, f)))
-    if (skipSafe.nonEmpty && bitmapIndexCols.nonEmpty)
-      files = files.filter(f => skipSafe.forall(fl => bitmapMayMatch(fl, f)))
-    if (skipSafe.nonEmpty && bsiIndexCols.nonEmpty)
-      files = files.filter(f => bsiMayMatchAll(skipSafe, f))
-    // map-subscript pruning (`props['k'] = 'v'` via bloom entry hashes,
-    // `props['k'] > 5` via per-entry min/max stats, ref
-    // range_filters_on_subscripts_enabled): both live in the same
-    // sidecars. Non-PK tables only — a map column's entries change
-    // across row versions, so file pruning on them could resurrect an
-    // older version through the merge (same rule as skipSafeCols).
-    if (subscriptFilters.nonEmpty && !isPkTable &&
-        (bloomIndexCols.nonEmpty || variantIndexCols.nonEmpty))
-      files = files.filter { f =>
-        subscriptFilters.forall(p => subscriptMayMatch(p, f))
-      }
-    files
-  }
-
-  /** One subscript predicate against one file's sidecar: false ONLY when
-    * the sidecar PROVES no row can satisfy it. Equality probes the bloom
-    * entry hashes (no false negatives). Ranges consult the per-entry
-    * min/max stats; a column's stats map is file-complete by
-    * construction (BloomIndex.Sidecar), so a key ABSENT from a present
-    * map means `m['k']` is null on every row — no range predicate can
-    * match. Missing sidecars / columns / unparseable values keep the
-    * file (residual-safe either way: the Filter stays in the plan). */
-  private def subscriptMayMatch(p: SubscriptPredicate, f: FileMeta): Boolean = {
-    if (!bloomIndexCols.contains(p.col) && !variantIndexCols.contains(p.col))
-      return true
-    sidecarOf(f) match {
-      case None => true // file without a (readable) sidecar
-      case Some(sc) =>
-        // only claim when the sidecar declares this column's bloom
-        // ENTRY-hashed: an entry probe against whole-value hashes would
-        // false-negative and prune a matching file
-        if (!sc.entryCols.contains(p.col)) true
-        // S68: a variant claim is answerable ONLY for a path THIS sidecar
-        // shredded — never by the current path list, which may have grown
-        // since the file was written. An unshredded path was never hashed
-        // or bounded, so its absence from the sidecar proves nothing.
-        else if (variantIndexCols.contains(p.col) &&
-            !sc.variantPaths.get(p.col).exists(_.contains(p.key))) true
-        else if (p.op == "=")
-          sc.blooms.get(p.col).forall(
-            _.mightContain(graft.functions.MapEntryHashesImpl.hashEntry(p.key, p.value)))
-        else sc.entryStats.get(p.col) match {
-          case None => true // no stats claim (key-cap overflow / non-integral)
-          case Some(stats) => stats.get(p.key) match {
-            case None => false // key never present in this file
-            case Some((mn, mx)) =>
-              p.value.toLongOption.forall { v =>
-                p.op match {
-                  case ">" => mx > v
-                  case ">=" => mx >= v
-                  case "<" => mn < v
-                  case "<=" => mn <= v
-                  case _ => true
-                }
-              }
-          }
-        }
-    }
+    val subs = if (isPkTable) Seq.empty else subscriptFilters
+    if (skipSafe.isEmpty && subs.isEmpty) files else fileIndex.prune(files, skipSafe, subs)
   }
 
   /** Read the table: latest (or time-travel) snapshot, manifest-pruned,

@@ -499,55 +499,11 @@ final class GraftScanBuilder(
   /** The files this builder's scan can read: the caller's pinned set, or
     * the snapshot's (pushed filters only ever prune it). */
   private lazy val scopeFiles: Seq[FileMeta] = pinnedFiles.getOrElse(table.planFiles(snapshotId))
-  private val claimColCache = scala.collection.mutable.HashMap[String, Boolean]()
-  /** Column claimable iff EVERY file in scope carries a sidecar with the
-    * column present (value-complete). A file's deletion vector composes
-    * with the claim: the positional reader applies the dv skip and the
-    * keep-mask together, per file. */
-  private def colClaimable(c: String): Boolean = claimColCache.getOrElseUpdate(c, {
-    table.bitmapIndexCols.contains(c) &&
-      scopeFiles.forall(f => table.bitmapKeysOf(f).exists(_._2.contains(c)))
-  })
-  private val bsiColCache = scala.collection.mutable.HashMap[String, Boolean]()
-  /** Same completeness contract for the BSI sidecar (S66): present on
-    * every file in scope (header-only reads). */
-  private def bsiColClaimable(c: String): Boolean = bsiColCache.getOrElseUpdate(c, {
-    table.bsiIndexCols.contains(c) &&
-      scopeFiles.forall(f => table.bsiColsOf(f).exists(_._2.contains(c)))
-  })
-  private def claimable(fl: Filter): Boolean = claimableBm(fl) || claimableBsi(fl)
-  private def claimableBm(fl: Filter): Boolean = bitmapClaim && (fl match {
-    // IsNotNull rides along with every derived equality; the union of a
-    // present column's value lists is exactly its non-null set
-    case org.apache.spark.sql.sources.IsNotNull(c) => colClaimable(c)
-    case _ =>
-      BitmapIndex.filterValues(fl) match {
-        case Some((c, vs)) =>
-          vs.forall(v => BitmapIndex.render(v).isDefined) && colClaimable(c)
-        case None =>
-          // ranges (</<=/>/>= and BETWEEN's two halves): the value→positions
-          // map answers them exactly — union of the in-range keys' lists
-          BitmapIndex.filterRange(fl) match {
-            case Some((c, lo, _, hi, _)) =>
-              (lo ++ hi).forall(v => BitmapIndex.render(v).isDefined) && colClaimable(c)
-            case None => false
-          }
-      }
-  })
-  private def claimableBsi(fl: Filter): Boolean = bsiClaim && (fl match {
-    case org.apache.spark.sql.sources.IsNotNull(c) => bsiColClaimable(c)
-    case _ =>
-      BitmapIndex.filterValues(fl) match {
-        case Some((c, vs)) =>
-          vs.forall(v => BsiIndex.renderLong(v).isDefined) && bsiColClaimable(c)
-        case None =>
-          BitmapIndex.filterRange(fl) match {
-            case Some((c, lo, _, hi, _)) =>
-              (lo ++ hi).forall(v => BsiIndex.renderLong(v).isDefined) && bsiColClaimable(c)
-            case None => false
-          }
-      }
-  })
+  /** A filter is claimable when a position-exact index whose claim
+    * option is on answers it on every file in scope (FileIndex). */
+  private lazy val claimable: Filter => Boolean =
+    table.fileIndex.claimable(scopeFiles,
+      Map(FileIndex.BitmapRules -> bitmapClaim, FileIndex.BsiRules -> bsiClaim))
 
   override def pushFilters(filters: Array[Filter]): Array[Filter] = {
     val known = table.schema.fieldNames.toSet
@@ -671,7 +627,7 @@ final class GraftScanBuilder(
       else {
         if (defs.exists(_ != CountStarDef) || files.exists(_.hasDv)) return None
         files.map { f =>
-          val n = table.claimedKeepOf(f, claimed.toSeq)
+          val n = table.fileIndex.keepOf(f, claimed.toSeq)
             .map(_.length.toLong)
             .getOrElse(return None)
           f.path -> n

@@ -115,7 +115,7 @@ final class PositionalReaderFactory(
       .map(d => DeletionVector.read(conf.value, tableRoot, d.toString)).orNull
     private val keep: Array[Long] =
       if (claimed.isEmpty) null
-      else IndexClaims.keepFor(path.getFileSystem(conf.value), path, claimed)
+      else FileIndex.keepFor(path.getFileSystem(conf.value), path, claimed)
     private val rows = (if (hasDv(pf)) unfiltered else filtered)
       .createReader(FilePartition(index, Array(pf)))
 
