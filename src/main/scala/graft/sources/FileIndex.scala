@@ -37,10 +37,18 @@ final class FileIndex(fs: FileSystem, root: String, schema: StructType, spec: Fi
     (if (spec.bsiCols.nonEmpty) Seq(Bsis) else Nil)
 
   /** The files of `files` every kind says may hold a row satisfying the
-    * conjunction of `filters` and `subs`. */
+    * conjunction of `filters` and `subs`, and per kind name the files it
+    * dropped (each counted by the first kind that drops it). */
   def prune(files: Seq[FileMeta], filters: Seq[Filter],
-      subs: Seq[SubscriptPredicate]): Seq[FileMeta] =
-    files.filter(f => kinds.forall(_.mayMatch(f, filters, subs)))
+      subs: Seq[SubscriptPredicate]): (Seq[FileMeta], Map[String, Int]) = {
+    val dropped = new Array[Int](kinds.size)
+    val kept = files.filter { f =>
+      val i = kinds.indexWhere(!_.mayMatch(f, filters, subs))
+      if (i >= 0) dropped(i) += 1
+      i < 0
+    }
+    (kept, kinds.map(_.name).zip(dropped).toMap)
+  }
 
   /** Whether a filter is claimable over `scope`: some position-exact
     * kind whose rules `enabled` admits renders its literals, and every file of
@@ -61,6 +69,7 @@ final class FileIndex(fs: FileSystem, root: String, schema: StructType, spec: Fi
 
   /** Manifest min/max and null-count stats (S39). */
   object Stats extends Kind {
+    val name = "stats"
     def mayMatch(f: FileMeta, filters: Seq[Filter], subs: Seq[SubscriptPredicate]): Boolean =
       filters.forall(fl => FileStats.mayMatch(fl, f.statsOrEmpty, schema))
   }
@@ -71,6 +80,7 @@ final class FileIndex(fs: FileSystem, root: String, schema: StructType, spec: Fi
     * be a false negative, so each answers only for the kind the sidecar
     * declares (`entryCols`). */
   object Blooms extends Kind {
+    val name = "bloom"
     private val cols = spec.bloomCols.toSet
     private val variantCols = spec.variantSpecs.map(_._1).toSet
     private val cache = TrieMap[String, Option[BloomIndex.Sidecar]]()
@@ -125,6 +135,7 @@ final class FileIndex(fs: FileSystem, root: String, schema: StructType, spec: Fi
   /** The bitmap sidecar (S55): a present column's value map is
     * file-complete, so a literal absent from it proves no row matches. */
   object Bitmaps extends Positional {
+    val name = "bitmap"
     val rules: PositionRules = BitmapRules
     private val cols = spec.bitmapCols.toSet
     private val cache = TrieMap[String, Option[(Long, Map[String, Set[String]])]]()
@@ -153,6 +164,7 @@ final class FileIndex(fs: FileSystem, root: String, schema: StructType, spec: Fi
     * memoized per (file, conjunction); the slices are decoded per
     * verdict and never cached. */
   object Bsis extends Positional {
+    val name = "bsi"
     val rules: PositionRules = BsiRules
     private val cols = spec.bsiCols.toSet
     private val cache = TrieMap[String, Option[(Long, Set[String])]]()
@@ -184,6 +196,8 @@ object FileIndex {
 
   /** One index kind's read rules. */
   sealed trait Kind {
+    /** The planning step whose dropped files this kind counts. */
+    def name: String
     /** False only when what this kind recorded for `f` proves no row
       * satisfies the conjunction of `filters` and `subs`. */
     def mayMatch(f: FileMeta, filters: Seq[Filter], subs: Seq[SubscriptPredicate]): Boolean
@@ -245,4 +259,16 @@ object FileIndex {
     tryKeepFor(fs, dataPath, claimed).getOrElse(
       throw new IllegalStateException(
         s"no index sidecar answers the claimed filters for $dataPath"))
+}
+
+/** What planning kept of a scan's `considered` live files, and per step
+  * ([[FilePlan.Steps]]) the files it dropped. */
+final case class FilePlan(files: Seq[FileMeta], considered: Int,
+    dropped: Map[String, Int] = Map.empty)
+
+object FilePlan {
+  val Partition = "partition"
+  val Sample = "sample"
+  /** Partition pruning, each file index kind in fold order, TABLESAMPLE. */
+  val Steps: Seq[String] = Seq(Partition, "stats", "bloom", "bitmap", "bsi", Sample)
 }

@@ -231,13 +231,10 @@ final case class GraftRelation(
       return (if (requiredColumns.isEmpty) df
               else df.select(requiredColumns.map(col).toSeq: _*)).rdd
     }
-    val partCols = table.partitionKeys.toSet
-    val partFilter =
-      if (!partitionPruneEnabled) None
-      else filters.toSeq.flatMap(GraftFilters.toColumn(_, partCols)).reduceOption(_ && _)
-    // non-partition filters prune files on min/max stats (data skipping)
+    val (partFilter, dataFilters) = GraftFilters.planning(filters.toSeq,
+      table.partitionKeys.toSet, partitionPruneEnabled, dataSkipEnabled)
     val df = table.read(snapshotId = snapshotId, partitionFilter = partFilter,
-      dataFilters = if (dataSkipEnabled) filters.toSeq else Seq.empty)
+      dataFilters = dataFilters)
     val projected =
       if (requiredColumns.isEmpty) df else df.select(requiredColumns.map(col).toSeq: _*)
     projected.rdd
@@ -248,6 +245,16 @@ final case class GraftRelation(
 /** Source-filter → Column translation shared by the V1 relation and the
   * V2 scan builder. */
 private[sources] object GraftFilters {
+
+  /** The manifest planning a scan's pushed filters ask for: the
+    * partition-key filters as one Column when `partitionPrune` is on, and
+    * every filter for data skipping (file stats and indexes) when
+    * `dataSkip` is on. One translation for the V1 relation and the V2
+    * scan. */
+  def planning(filters: Seq[Filter], partCols: Set[String], partitionPrune: Boolean,
+      dataSkip: Boolean): (Option[org.apache.spark.sql.Column], Seq[Filter]) =
+    (if (partitionPrune) filters.flatMap(toColumn(_, partCols)).reduceOption(_ && _) else None,
+      if (dataSkip) filters else Seq.empty)
 
   /** Translate the pushed-down source filters that touch ONLY partition
     * keys into Columns for manifest pruning (ref: the TupleDomain →

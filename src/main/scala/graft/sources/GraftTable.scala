@@ -2470,26 +2470,42 @@ class GraftTable private (
     }
   }
 
-  /** Manifest planning shared by the library read path and the V2 scan:
-    * live files → partition prune (only when `partitionPruneSafe`) →
-    * bucket → one fold over the table's file indexes ([[FileIndex]]).
-    * PK tables skip only on `skipSafeCols`, and prune no file on map
-    * subscripts: a map column's entries change across row versions, so
-    * pruning on them could resurrect an older version through the merge. */
+  /** The live files at `snapshotId` (None = latest): the snapshot's,
+    * and on a latest scan of main the fallback branch's for partitions
+    * main lacks (S50). */
+  private[sources] def liveFiles(snapshotId: Option[Long]): Seq[FileMeta] =
+    withFallbackBranch(currentFiles(snapshotId), snapshotId)
+
   private[sources] def planFiles(
       snapshotId: Option[Long] = None,
       partitionFilter: Option[Column] = None,
       bucket: Option[Int] = None,
+      dataFilters: Seq[org.apache.spark.sql.sources.Filter] = Seq.empty): Seq[FileMeta] =
+    plan(liveFiles(snapshotId), partitionFilter, bucket, dataFilters).files
+
+  /** Manifest planning shared by the library read path and the V2 scan:
+    * `live` → partition prune (only when `partitionPruneSafe`) → bucket
+    * → one fold over the table's file indexes ([[FileIndex]]), counting
+    * what each step dropped. PK tables skip only on `skipSafeCols`, and
+    * prune no file on map subscripts: a map column's entries change
+    * across row versions, so pruning on them could resurrect an older
+    * version through the merge. */
+  private[sources] def plan(
+      live: Seq[FileMeta],
+      partitionFilter: Option[Column],
+      bucket: Option[Int] = None,
       dataFilters: Seq[org.apache.spark.sql.sources.Filter] = Seq.empty,
-      subscriptFilters: Seq[SubscriptPredicate] = Seq.empty): Seq[FileMeta] = {
-    var files = pruneFiles(withFallbackBranch(currentFiles(snapshotId), snapshotId),
-      if (partitionPruneSafe) partitionFilter else None)
-    bucket.foreach(b => files = files.filter(_.bucket == b))
+      subscriptFilters: Seq[SubscriptPredicate] = Seq.empty): FilePlan = {
+    val parts = pruneFiles(live, if (partitionPruneSafe) partitionFilter else None)
+    val files = bucket.fold(parts)(b => parts.filter(_.bucket == b))
     val skipSafe =
       if (!isPkTable) dataFilters
       else dataFilters.filter(_.references.forall(skipSafeCols))
     val subs = if (isPkTable) Seq.empty else subscriptFilters
-    if (skipSafe.isEmpty && subs.isEmpty) files else fileIndex.prune(files, skipSafe, subs)
+    val (kept, dropped) =
+      if (skipSafe.isEmpty && subs.isEmpty) (files, Map.empty[String, Int])
+      else fileIndex.prune(files, skipSafe, subs)
+    FilePlan(kept, live.size, dropped + (FilePlan.Partition -> (live.size - parts.size)))
   }
 
   /** Read the table: latest (or time-travel) snapshot, manifest-pruned,

@@ -496,9 +496,12 @@ final class GraftScanBuilder(
     * integral columns claim through the same masked-read machinery. */
   private val bsiClaim = Option(options.get("bsi.claim-filters")).exists(_.toBoolean)
 
-  /** The files this builder's scan can read: the caller's pinned set, or
-    * the snapshot's (pushed filters only ever prune it). */
-  private lazy val scopeFiles: Seq[FileMeta] = pinnedFiles.getOrElse(table.planFiles(snapshotId))
+  /** The files this builder's scan can read, resolved once: the caller's
+    * pinned set, or the snapshot's live files ("latest" is listed here,
+    * and only here). Claim scope, the scan's plan and description and a
+    * runtime filter's re-plan all prune this one list, so a commit that
+    * lands mid-planning is never half seen. */
+  private val scopeFiles: Seq[FileMeta] = pinnedFiles.getOrElse(table.liveFiles(snapshotId))
   /** A filter is claimable when a position-exact index whose claim
     * option is on answers it on every file in scope (FileIndex). */
   private lazy val claimable: Filter => Boolean =
@@ -705,7 +708,7 @@ final class GraftScanBuilder(
   override def build(): Scan = aggScan.getOrElse {
     val s = new GraftScan(spark, table, snapshotId, requiredSchema, pushed,
       partitionPrune, dataSkip, rowLevelReplace, subscriptFilters, claimed,
-      sampleBps, sampleKeyMode, pinnedFiles)
+      sampleBps, sampleKeyMode, scopeFiles, pinnedFiles.isDefined)
     onBuild(s)
     s
   }
@@ -953,9 +956,11 @@ final class GraftScan(
     // and the sample-key mode ("path" | "partition")
     sampleBps: Int = 10000,
     sampleKeyMode: String = "path",
-    // a file set the caller already planned: scanned as given — no
-    // manifest planning, no runtime filtering
-    pinnedFiles: Option[Seq[FileMeta]] = None)
+    // the live files the builder resolved: every plan of this scan prunes
+    // them, unless `pinned` (the caller already planned them: scanned as
+    // given, no manifest planning, no runtime filtering)
+    live: Seq[FileMeta],
+    pinned: Boolean)
     extends Scan with Batch with SupportsReportStatistics with SupportsReportPartitioning
     with SupportsRuntimeFiltering {
 
@@ -971,7 +976,7 @@ final class GraftScan(
   def withSubscriptFilters(subs: Seq[SubscriptPredicate]): GraftScan =
     new GraftScan(spark, table, snapshotId, requiredSchema, pushed,
       partitionPrune, dataSkip, rowLevelReplace, subs, claimed,
-      sampleBps, sampleKeyMode, pinnedFiles)
+      sampleBps, sampleKeyMode, live, pinned)
 
   private val partKeySet = table.partitionKeys.toSet
   // S44/S65: metadata columns (`_file`, and on row-tracking tables
@@ -1018,20 +1023,21 @@ final class GraftScan(
 
   override def toBatch: Batch = this
 
-  private lazy val totalFiles = table.planFiles(snapshotId).size
-
-  private def planWith(filters: Seq[Filter]): Seq[FileMeta] = {
-    val partFilter =
-      if (!partitionPrune) None
-      else filters.flatMap(GraftFilters.toColumn(_, partKeySet)).reduceOption(_ && _)
-    val planned = table.planFiles(snapshotId, partFilter,
-      dataFilters = if (dataSkip) filters else Seq.empty,
+  private def planWith(filters: Seq[Filter]): FilePlan = {
+    val (partFilter, dataFilters) =
+      GraftFilters.planning(filters, partKeySet, partitionPrune, dataSkip)
+    val planned = table.plan(live, partFilter, dataFilters = dataFilters,
       subscriptFilters = if (dataSkip) subscriptFilters else Seq.empty)
     if (sampleBps >= 10000) planned
-    else planned.filter(f => GraftScan.sampleKeep(table, f, sampleBps, sampleKeyMode))
+    else {
+      val kept = planned.files.filter(f => GraftScan.sampleKeep(table, f, sampleBps, sampleKeyMode))
+      planned.copy(files = kept,
+        dropped = planned.dropped + (FilePlan.Sample -> (planned.files.size - kept.size)))
+    }
   }
 
-  private lazy val basePlanned: Seq[FileMeta] = pinnedFiles.getOrElse(planWith(pushed.toSeq))
+  private lazy val basePlan: FilePlan =
+    if (pinned) FilePlan(live, live.size) else planWith(pushed.toSeq)
 
   // ---- runtime filtering (join-driven dynamic pruning) -----------------
 
@@ -1040,13 +1046,14 @@ final class GraftScan(
     * V2 form of dynamic partition pruning, extended to min/max data
     * skipping. Sound by construction: pruning only drops files that
     * cannot match, and the join above still applies the exact predicate. */
-  @volatile private var runtimePlanned: Seq[FileMeta] = _
+  @volatile private var runtimePlan: FilePlan = _
 
-  private def plannedFiles: Seq[FileMeta] = {
-    val r = runtimePlanned
-    val base = if (r != null) r else basePlanned
-    if (rowLevelReplace && table.isPkTable) completeGroups(base) else base
-  }
+  /** The plan this scan reads: the runtime-filtered one once a runtime
+    * filter ran. */
+  private def plan: FilePlan = { val r = runtimePlan; if (r != null) r else basePlan }
+
+  private def plannedFiles: Seq[FileMeta] =
+    if (rowLevelReplace && table.isPkTable) completeGroups(plan.files) else plan.files
 
   /** Row-level rewrites on PK tables must fold COMPLETE key histories:
     * file-granularity pruning (pk min/max stats, bloom sidecars, runtime
@@ -1059,11 +1066,9 @@ final class GraftScan(
     * groups (partition/bucket keys ⊆ primary key), so a group-complete
     * fold is history-complete. Coarsens to partition-only or whole-table
     * when the layout keys are not key-contained. */
-  private lazy val allLiveFiles: Seq[FileMeta] = table.planFiles(snapshotId)
-
   private def completeGroups(pruned: Seq[FileMeta]): Seq[FileMeta] = {
     if (pruned.isEmpty) return pruned
-    val all = allLiveFiles
+    val all = live
     if (pruned.size == all.size) return pruned
     val pk = table.primaryKeys.toSet
     val partCo = table.partitionKeys.forall(pk)
@@ -1079,7 +1084,7 @@ final class GraftScan(
 
   override def filterAttributes(): Array[org.apache.spark.sql.connector.expressions.NamedReference] = {
     val cols =
-      if (pinnedFiles.isDefined) Seq.empty[String]
+      if (pinned) Seq.empty[String]
       else if (!table.isPkTable) table.schema.fieldNames.toSeq
       else (table.primaryKeys ++
         (if (table.partitionPruneSafe) table.partitionKeys else Seq.empty)).distinct
@@ -1095,7 +1100,7 @@ final class GraftScan(
   override def filter(filters: Array[Filter]): Unit = {
     val known = table.schema.fieldNames.toSet
     val usable = filters.filter(_.references.forall(known))
-    if (usable.nonEmpty) runtimePlanned = planWith((pushed ++ usable).toSeq)
+    if (usable.nonEmpty) runtimePlan = planWith((pushed ++ usable).toSeq)
   }
 
   /** Filters safe to hand the file reader for row-group pruning. On a PK
@@ -1209,7 +1214,7 @@ final class GraftScan(
   }
 
   override def description(): String =
-    s"GraftTable files=${plannedFiles.size}/$totalFiles root=${table.root} " +
+    s"GraftTable files=${plannedFiles.size}/${plan.considered} root=${table.root} " +
       s"PushedFilters: [${pushed.mkString(", ")}], " +
       (if (claimed.nonEmpty) s"ClaimedFilters: [${claimed.mkString(", ")}], " else "") +
       s"ReadSchema: ${readSchema().catalogString}"
@@ -1479,9 +1484,17 @@ final class GraftScan(
   }
 
   override def supportedCustomMetrics(): Array[CustomMetric] =
-    if (!table.isPkTable) Array(new DvRowsSkippedMetric, new ClaimRowsDroppedMetric)
-    else Array(new MergeRowsDecodedMetric, new MergeRowsKeyFilteredMetric,
-      new MergeVersionsMergedMetric)
+    PlanMetric.all ++ (
+      if (!table.isPkTable) Array(new DvRowsSkippedMetric, new ClaimRowsDroppedMetric)
+      else Array(new MergeRowsDecodedMetric, new MergeRowsKeyFilteredMetric,
+        new MergeVersionsMergedMetric))
+
+  /** What planning pruned (see [[PlanMetric]]). */
+  override def reportDriverMetrics(): Array[CustomTaskMetric] = {
+    val p = plan
+    (ScanMetric.task(PlanMetric.Considered, p.considered) +: FilePlan.Steps.map(s =>
+      ScanMetric.task(PlanMetric.name(s), p.dropped.getOrElse(s, 0).toLong))).toArray
+  }
 
   override def createReaderFactory(): PartitionReaderFactory = {
     val inner =
@@ -1651,6 +1664,25 @@ object ScanMetric {
     override def value(): Long = v
   }
 }
+/** Driver metrics of a scan's planning ([[FilePlan]]): the live files
+  * it considered, and per step the files it dropped. */
+abstract class PlanMetric(step: String, desc: String)
+    extends ScanMetric(PlanMetric.name(step), s"planning: $desc")
+object PlanMetric {
+  def name(step: String): String = s"plannedFiles.$step"
+  val Considered: String = name("considered")
+  def all: Array[CustomMetric] = Array(new FilesConsideredMetric, new FilesPartitionPrunedMetric,
+    new FilesStatsPrunedMetric, new FilesBloomPrunedMetric, new FilesBitmapPrunedMetric,
+    new FilesBsiPrunedMetric, new FilesSampledOutMetric)
+}
+final class FilesConsideredMetric extends PlanMetric("considered", "files considered")
+final class FilesPartitionPrunedMetric
+    extends PlanMetric(FilePlan.Partition, "files pruned by partition")
+final class FilesStatsPrunedMetric extends PlanMetric("stats", "files skipped by min/max stats")
+final class FilesBloomPrunedMetric extends PlanMetric("bloom", "files skipped by the bloom index")
+final class FilesBitmapPrunedMetric extends PlanMetric("bitmap", "files skipped by the bitmap index")
+final class FilesBsiPrunedMetric extends PlanMetric("bsi", "files skipped by the BSI index")
+final class FilesSampledOutMetric extends PlanMetric(FilePlan.Sample, "files sampled out by TABLESAMPLE")
 final class MergeRowsDecodedMetric
     extends ScanMetric(GraftMorReaderFactory.RowsDecoded, "merge: rows decoded")
 final class MergeRowsKeyFilteredMetric

@@ -2,7 +2,10 @@ package graft
 
 import graft.functions.{HashExpr, ShingleExpr, SimHash64Impl, Text}
 import graft.functions.KmvSketch
+import graft.sources.{GraftTable, ScanTestAccess}
+import org.apache.spark.sql.Row
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
 import org.scalacheck.Gen
 import org.scalacheck.rng.Seed
 import org.scalatest.funsuite.AnyFunSuite
@@ -67,6 +70,84 @@ class PropertySpec extends AnyFunSuite {
           .select(xxhash64(col("id")).as("h"))
         val est = df.agg(KmvSketch.kmvDistinct(col("h"), 256)).first().getLong(0)
         assert(est == n.toLong) // below k the k-min set holds every hash
+    }
+  }
+
+  test("file pruning never changes a query's rows: defaults, no data skipping, claims, plain Spark") {
+    val schema = StructType(Seq(StructField("id", IntegerType), StructField("k", IntegerType),
+      StructField("b", StringType), StructField("m", MapType(StringType, IntegerType)),
+      StructField("js", StringType), StructField("c", StringType), StructField("n", IntegerType)))
+    val colors = Seq("red", "green", "blue", "black", "white")
+    // file f: k and m['a'] around 10f and 5f (neighbours overlap), n in two
+    // clusters 200 apart (range gaps), two of the five colors, sparse nulls
+    def fileRows(r: scala.util.Random, f: Int): Seq[Row] = (0 until 12).map { i =>
+      def orNull[A](a: => A): Any = if (r.nextInt(10) == 0) null else a
+      Row(f * 100 + i, orNull(f * 10 + r.nextInt(15)), orNull(s"w${r.nextInt(30)}"),
+        Map("a" -> (f * 5 + r.nextInt(6))) ++
+          (if (r.nextBoolean()) Map("b" -> (f + r.nextInt(40))) else Map.empty),
+        orNull(if (r.nextInt(6) == 0) "{}" else s"""{"v": ${f * 7 + r.nextInt(8)}}"""),
+        colors((f + r.nextInt(2)) % colors.size),
+        orNull(f * 20 + r.nextInt(5) + (if (r.nextBoolean()) 200 else 0)))
+    }
+    def cmp(r: scala.util.Random) = Seq("<", "<=", ">", ">=")(r.nextInt(4))
+    def atom(r: scala.util.Random): String = r.nextInt(13) match {
+      case 0 => s"k = ${r.nextInt(70)}"
+      case 1 => s"k IN (${r.nextInt(70)}, ${r.nextInt(70)})"
+      case 2 => s"k ${cmp(r)} ${r.nextInt(70)}"
+      case 3 => val lo = r.nextInt(70); s"k BETWEEN $lo AND ${lo + r.nextInt(10)}"
+      case 4 => s"b = 'w${r.nextInt(40)}'"
+      case 5 => s"b IN ('w${r.nextInt(40)}', 'w${r.nextInt(40)}')"
+      case 6 => s"c IN ('${colors(r.nextInt(5))}', '${colors(r.nextInt(5))}')"
+      case 7 => val lo = r.nextInt(340); s"n BETWEEN $lo AND ${lo + r.nextInt(30)}"
+      case 8 => s"n ${cmp(r)} ${r.nextInt(340)}"
+      case 9 => s"${Seq("k", "b", "js", "n")(r.nextInt(4))} IS NULL"
+      case 10 => val op = if (r.nextBoolean()) "=" else cmp(r)
+        s"m['${if (r.nextBoolean()) "a" else "b"}'] $op ${r.nextInt(50)}"
+      case 11 => s"variant_get(parse_json(js), '$$.v', 'bigint') ${cmp(r)} ${r.nextInt(50)}"
+      case _ => s"get_json_object(js, '$$.v') = '${r.nextInt(50)}'"
+    }
+    val key = "spark.graft.subscriptFilters.enabled"
+    spark.experimental.extraOptimizations =
+      spark.experimental.extraOptimizations :+ graft.plans.SubscriptFilterRule(() =>
+        spark.conf.get(key, "false").toBoolean)
+    val dropped = scala.collection.mutable.Map[String, Long]().withDefaultValue(0L)
+    try {
+      spark.conf.set(key, "true")
+      for (seed <- 1L to 3L) {
+        val r = new scala.util.Random(seed)
+        val path = TestSpark.tmpDir("pruneprop")
+        val t = GraftTable.create(spark, path, schema, options = Map(
+          "file-index.bloom-filter.columns" -> "b,m",
+          "file-index.variant.columns" -> "js", "file-index.variant.js.paths" -> "$.v",
+          "file-index.bitmap.columns" -> "c", "file-index.bsi.columns" -> "n"))
+        val rows = (0 until 6).flatMap { f =>
+          val fr = fileRows(r, f)
+          t.append(spark.createDataFrame(java.util.Arrays.asList(fr: _*), schema).repartition(1))
+          fr
+        }
+        val plain = spark.createDataFrame(java.util.Arrays.asList(rows: _*), schema)
+        def graftRead(opts: (String, String)*) = spark.read.format("graft").options(opts.toMap).load(path)
+        def sorted(df: org.apache.spark.sql.DataFrame) = df.collect().toSeq.sortBy(_.getInt(0))
+        (0 until 15).foreach { _ =>
+          val q = Seq.fill(1 + r.nextInt(3))(atom(r)).mkString(" AND ")
+          val pruned = graftRead().filter(q)
+          val want = sorted(plain.filter(q))
+          assert(sorted(pruned) == want, s"seed $seed: $q (every index on)")
+          ScanTestAccess.planMetrics(pruned).foreach { case (s, v) => dropped(s) += v }
+          assert(sorted(graftRead("dataSkip" -> "false").filter(q)) == want,
+            s"seed $seed: $q (dataSkip=false)")
+          assert(sorted(graftRead("bitmap.claim-filters" -> "true",
+            "bsi.claim-filters" -> "true").filter(q)) == want, s"seed $seed: $q (claims on)")
+        }
+      }
+    } finally {
+      spark.conf.unset(key)
+      spark.experimental.extraOptimizations =
+        spark.experimental.extraOptimizations
+          .filterNot(_.isInstanceOf[graft.plans.SubscriptFilterRule])
+    }
+    Seq("stats", "bloom", "bitmap", "bsi").foreach { s =>
+      assert(dropped(s) > 0, s"no query's files were dropped by $s: $dropped")
     }
   }
 }

@@ -1,6 +1,6 @@
 package graft
 
-import graft.sources.{GraftScan, GraftTable}
+import graft.sources.{GraftScan, GraftTable, ScanTestAccess}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
 import org.apache.spark.sql.functions._
@@ -543,5 +543,51 @@ class V2ScanSpec extends AnyFunSuite {
         spark.experimental.extraOptimizations
           .filterNot(_.isInstanceOf[graft.plans.SubscriptFilterRule])
     }
+  }
+
+  test("a scan reports the files planning considered and dropped per step") {
+    val path = TestSpark.tmpDir("v2planmetrics")
+    GraftTable.create(spark, path,
+      StructType(Seq(StructField("p", StringType), StructField("k", IntegerType),
+        StructField("b", StringType), StructField("m", StringType), StructField("n", IntegerType))),
+      partitionKeys = Seq("p"),
+      options = Map("file-index.bloom-filter.columns" -> "b",
+        "file-index.bitmap.columns" -> "m", "file-index.bsi.columns" -> "n"))
+    def file(p: String, rows: (Int, String, String, Int)*): Unit =
+      GraftTable.load(spark, path).append(rows.map { case (k, b, m, n) => (p, k, b, m, n) }
+        .toDF("p", "k", "b", "m", "n").repartition(1))
+    // each file but the last fails the query below at exactly one step,
+    // and passes every step before it
+    file("x", (1, "needle", "red", 11)) // partition
+    file("y", (100, "needle", "red", 11), (200, "needle", "red", 11)) // stats: k in [100, 200]
+    file("y", (1, "a1", "red", 11), (2, "z1", "red", 11)) // bloom: no needle in [a1, z1]
+    file("y", (1, "needle", "blue", 11), (2, "needle", "yellow", 11)) // bitmap: no red in [blue, yellow]
+    file("y", (1, "needle", "red", 0), (2, "needle", "red", 100)) // bsi: no n in [10, 12] in [0, 100]
+    file("y", (3, "needle", "red", 11))
+    spark.read.format("graft").load(path).createOrReplaceTempView("plan_metrics")
+    val df = spark.sql("SELECT k FROM plan_metrics WHERE p = 'y' AND k < 50 AND " +
+      "b = 'needle' AND m = 'red' AND n BETWEEN 10 AND 12")
+    assert(df.collect().map(_.getInt(0)).toSeq == Seq(3))
+    assert(ScanTestAccess.planMetrics(df) == Map("considered" -> 6L, "partition" -> 1L,
+      "stats" -> 1L, "bloom" -> 1L, "bitmap" -> 1L, "bsi" -> 1L, "sample" -> 0L))
+    assert(plannedOfTotal(df) == ((1, 6)))
+
+    val sampled = spark.read.format("graft").option("sample-system", "0").load(path)
+      .filter(col("p") === "y")
+    assert(sampled.collect().isEmpty)
+    assert(ScanTestAccess.planMetrics(sampled) == Map("considered" -> 6L, "partition" -> 1L,
+      "stats" -> 0L, "bloom" -> 0L, "bitmap" -> 0L, "bsi" -> 0L, "sample" -> 5L))
+  }
+
+  test("a latest scan plans the live files its builder resolved, not a later commit's") {
+    val path = TestSpark.tmpDir("v2resolveonce")
+    val t = GraftTable.create(spark, path, StructType(Seq(StructField("id", IntegerType))))
+    t.append(Seq(1, 2).toDF("id").repartition(1))
+    val first = ScanTestAccess.inputFiles(spark.read.format("graft").load(path)).toSet
+    val scan = ScanTestAccess.latestScan(t)
+    GraftTable.load(spark, path).append(Seq(3).toDF("id").repartition(1))
+    assert(ScanTestAccess.inputFiles(spark.read.format("graft").load(path)).length == 2)
+    assert(ScanTestAccess.partitionFiles(scan).toSet == first)
+    assert(scan.description().contains("files=1/1"), scan.description())
   }
 }

@@ -1,7 +1,9 @@
 package graft.sources
 
 import org.apache.spark.sql.{DataFrame, Row}
-import org.apache.spark.sql.execution.datasources.v2.DataSourceV2ScanRelation
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+import org.apache.spark.sql.execution.datasources.FilePartition
+import org.apache.spark.sql.execution.datasources.v2.{BatchScanExec, DataSourceV2ScanRelation}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
@@ -18,6 +20,35 @@ object ScanTestAccess {
       case r: DataSourceV2ScanRelation if r.scan.isInstanceOf[GraftScan] =>
         r.scan.asInstanceOf[GraftScan].scannedFiles.map(_.path)
     }.flatten).distinct
+
+  /** A scan of `t`'s latest snapshot with no pushed filter, built the way
+    * Spark builds one (builder, then `build`). */
+  def latestScan(t: GraftTable): GraftScan =
+    new GraftScanBuilder(t.spark, t,
+      org.apache.spark.sql.util.CaseInsensitiveStringMap.empty()).build().asInstanceOf[GraftScan]
+
+  /** Root-relative paths of the data files `scan`'s input partitions read. */
+  def partitionFiles(scan: GraftScan): Seq[String] =
+    scan.planInputPartitions().toSeq.flatMap { case fp: FilePartition =>
+      fp.files.toSeq.map { pf =>
+        val abs = pf.filePath.toPath.toString
+        abs.substring(abs.lastIndexOf("/data/") + 1)
+      }
+    }.distinct
+
+  /** The planning metrics of the graft scans of `df`'s executed plan, by
+    * step ("considered" and each of `FilePlan.Steps`), summed over scans.
+    * Spark sets them when the scan runs, so run an action first. */
+  def planMetrics(df: DataFrame): Map[String, Long] = {
+    val plan = df.queryExecution.executedPlan match {
+      case a: AdaptiveSparkPlanExec => a.executedPlan
+      case p => p
+    }
+    val scans = plan.collect { case b: BatchScanExec if b.scan.isInstanceOf[GraftScan] => b }
+    ("considered" +: FilePlan.Steps).map { s =>
+      s -> scans.map(_.metrics(PlanMetric.name(s)).value).sum
+    }.toMap
+  }
 
   /** The live rows of `t` at `snapshotId` read as plain parquet: each
     * planned file with `_metadata.row_index`, minus the positions its
