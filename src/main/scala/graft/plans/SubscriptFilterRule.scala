@@ -25,7 +25,7 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
   * still evaluates the exact predicate row by row. Soundness of the
   * file-level claim additionally requires a non-PK table and
   * plan-replayable key/value rendering — both enforced at planFiles
-  * time (GraftTable) and at write time (entry blooms are only built for
+  * time (GraftTable.plan, FileIndex) and at write time (entry blooms are only built for
   * MapEntryHashesImpl.subscriptSafe map types).
   *
   * Toggle: `spark.graft.subscriptFilters.enabled`, default false like
@@ -174,9 +174,10 @@ case class SubscriptFilterRule(enabled: () => Boolean)
     *    bound (or nulls) — pruning can neither contradict variant_get's
     *    cast nor suppress its error.
     *
-    * Whether the column actually carries a shred (and whether the path
-    * is configured) is verified scan-side (GraftTable.subscriptMayMatch)
-    * — an unconfigured claim is answered "may match". */
+    * Whether the column actually carries a shred (and whether this
+    * file's sidecar recorded the path) is verified scan-side, by the
+    * bloom kind of `FileIndex` — an unrecorded claim is answered "may
+    * match". */
   private def extractVariant(e: Expression): Seq[SubscriptPredicate] = {
     import org.apache.spark.sql.catalyst.expressions.variant.VariantGet
     import org.apache.spark.sql.catalyst.expressions.objects.StaticInvoke

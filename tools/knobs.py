@@ -6,7 +6,8 @@
 Counts (distinct keys; `--list` prints them too):
   read options   keys the DataSource sources read from a reader's or
                  writer's option map (`options`/`parameters` lookups with a
-                 literal key in GraftV2.scala, GraftSource.scala and
+                 literal key, or with a string constant defined in one of
+                 them, in GraftV2.scala, GraftSource.scala and
                  GraftStreamSource.scala)
   table options  keys GraftTable reads from its table options (literal or
                  `s"..."`-templated lookups in GraftTable.scala, lookups by
@@ -38,10 +39,17 @@ def read(path):
 
 LOOKUP = r"\.(?:get|getOrElse|contains|containsKey)\("
 
+READ_FILES = ["GraftV2.scala", "GraftSource.scala", "GraftStreamSource.scala"]
+READ_LOOKUP = r"\b(?:options|parameters)" + LOOKUP
+read_texts = [read(os.path.join(sources, name)) for name in READ_FILES]
+read_constants = {}
+for text in read_texts:
+    read_constants.update(re.findall(r'\bval (\w+)\s*=\s*"([^"]+)"', text))
 read_keys = set()
-for name in ["GraftV2.scala", "GraftSource.scala", "GraftStreamSource.scala"]:
-    text = read(os.path.join(sources, name))
-    read_keys |= set(re.findall(r"\b(?:options|parameters)" + LOOKUP + r'"([^"$]+)"', text))
+for text in read_texts:
+    read_keys |= set(re.findall(READ_LOOKUP + r'"([^"$]+)"', text))
+    read_keys |= {read_constants[c] for c in re.findall(
+        READ_LOOKUP + r"(?:\w+\.)?(\w+)[,)]", text) if c in read_constants}
 
 
 def template(key):
