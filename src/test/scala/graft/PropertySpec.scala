@@ -78,33 +78,36 @@ class PropertySpec extends AnyFunSuite {
       StructField("b", StringType), StructField("m", MapType(StringType, IntegerType)),
       StructField("js", StringType), StructField("c", StringType), StructField("n", IntegerType)))
     val colors = Seq("red", "green", "blue", "black", "white")
-    // file f: k and m['a'] around 10f and 5f (neighbours overlap), n in two
+    // file f: k, m['a'] and $.v around 10f, 2f and 3f (neighbours overlap), n in two
     // clusters 200 apart (range gaps), two of the five colors, sparse nulls
     def fileRows(r: scala.util.Random, f: Int): Seq[Row] = (0 until 12).map { i =>
       def orNull[A](a: => A): Any = if (r.nextInt(10) == 0) null else a
       Row(f * 100 + i, orNull(f * 10 + r.nextInt(15)), orNull(s"w${r.nextInt(30)}"),
-        Map("a" -> (f * 5 + r.nextInt(6))) ++
+        Map("a" -> (f * 2 + r.nextInt(3))) ++
           (if (r.nextBoolean()) Map("b" -> (f + r.nextInt(40))) else Map.empty),
-        orNull(if (r.nextInt(6) == 0) "{}" else s"""{"v": ${f * 7 + r.nextInt(8)}}"""),
+        orNull(if (r.nextInt(6) == 0) "{}" else s"""{"v": ${f * 3 + r.nextInt(4)}}"""),
         colors((f + r.nextInt(2)) % colors.size),
         orNull(f * 20 + r.nextInt(5) + (if (r.nextBoolean()) 200 else 0)))
     }
     def cmp(r: scala.util.Random) = Seq("<", "<=", ">", ">=")(r.nextInt(4))
-    def atom(r: scala.util.Random): String = r.nextInt(13) match {
-      case 0 => s"k = ${r.nextInt(70)}"
-      case 1 => s"k IN (${r.nextInt(70)}, ${r.nextInt(70)})"
-      case 2 => s"k ${cmp(r)} ${r.nextInt(70)}"
-      case 3 => val lo = r.nextInt(70); s"k BETWEEN $lo AND ${lo + r.nextInt(10)}"
+    def eqOrCmp(r: scala.util.Random) = if (r.nextBoolean()) "=" else cmp(r)
+    // `lit(c, bound)`: a literal for column (or map key / variant path) c,
+    // mostly a generated value or its neighbour, so range bounds hit file edges
+    def atom(r: scala.util.Random, lit: (String, Int) => Int): String = r.nextInt(13) match {
+      case 0 => s"k = ${lit("k", 70)}"
+      case 1 => s"k IN (${lit("k", 70)}, ${lit("k", 70)})"
+      case 2 => s"k ${cmp(r)} ${lit("k", 70)}"
+      case 3 => val lo = lit("k", 70); s"k BETWEEN $lo AND ${lo + r.nextInt(10)}"
       case 4 => s"b = 'w${r.nextInt(40)}'"
       case 5 => s"b IN ('w${r.nextInt(40)}', 'w${r.nextInt(40)}')"
       case 6 => s"c IN ('${colors(r.nextInt(5))}', '${colors(r.nextInt(5))}')"
-      case 7 => val lo = r.nextInt(340); s"n BETWEEN $lo AND ${lo + r.nextInt(30)}"
-      case 8 => s"n ${cmp(r)} ${r.nextInt(340)}"
+      case 7 => val lo = lit("n", 340); s"n BETWEEN $lo AND ${lo + r.nextInt(30)}"
+      case 8 => s"n ${cmp(r)} ${lit("n", 340)}"
       case 9 => s"${Seq("k", "b", "js", "n")(r.nextInt(4))} IS NULL"
-      case 10 => val op = if (r.nextBoolean()) "=" else cmp(r)
-        s"m['${if (r.nextBoolean()) "a" else "b"}'] $op ${r.nextInt(50)}"
-      case 11 => s"variant_get(parse_json(js), '$$.v', 'bigint') ${cmp(r)} ${r.nextInt(50)}"
-      case _ => s"get_json_object(js, '$$.v') = '${r.nextInt(50)}'"
+      case 10 => val key = if (r.nextBoolean()) "a" else "b"
+        s"m['$key'] ${eqOrCmp(r)} ${lit(key, 50)}"
+      case 11 => s"variant_get(parse_json(js), '$$.v', 'bigint') ${eqOrCmp(r)} ${lit("v", 50)}"
+      case _ => s"get_json_object(js, '$$.v') = '${lit("v", 50)}'"
     }
     val key = "spark.graft.subscriptFilters.enabled"
     spark.experimental.extraOptimizations =
@@ -126,10 +129,22 @@ class PropertySpec extends AnyFunSuite {
           fr
         }
         val plain = spark.createDataFrame(java.util.Arrays.asList(rows: _*), schema)
+        def ints(vs: Seq[Any]): IndexedSeq[Int] = vs.collect { case i: Int => i }.toIndexedSeq
+        val vals = Map(
+          "k" -> ints(rows.map(_.get(1))), "n" -> ints(rows.map(_.get(6))),
+          "a" -> ints(rows.flatMap(_.getMap[String, Int](3).get("a"))),
+          "b" -> ints(rows.flatMap(_.getMap[String, Int](3).get("b"))),
+          "v" -> ints(rows.flatMap(row =>
+            Option(row.getString(4)).flatMap("\\d+".r.findFirstIn).map(_.toInt))))
+        def lit(c: String, bound: Int): Int = r.nextInt(4) match {
+          case 0 => r.nextInt(bound)
+          case 1 => vals(c)(r.nextInt(vals(c).size)) + (if (r.nextBoolean()) 1 else -1)
+          case _ => vals(c)(r.nextInt(vals(c).size))
+        }
         def graftRead(opts: (String, String)*) = spark.read.format("graft").options(opts.toMap).load(path)
         def sorted(df: org.apache.spark.sql.DataFrame) = df.collect().toSeq.sortBy(_.getInt(0))
-        (0 until 15).foreach { _ =>
-          val q = Seq.fill(1 + r.nextInt(3))(atom(r)).mkString(" AND ")
+        (0 until 25).foreach { _ =>
+          val q = Seq.fill(1 + r.nextInt(3))(atom(r, lit)).mkString(" AND ")
           val pruned = graftRead().filter(q)
           val want = sorted(plain.filter(q))
           assert(sorted(pruned) == want, s"seed $seed: $q (every index on)")
